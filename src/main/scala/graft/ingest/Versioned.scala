@@ -1624,7 +1624,16 @@ object Versioned {
   def readAsOf(spark: SparkSession, path: String, version: Long): DataFrame = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = activeAt(fs, root, path, version)
+    readListed(spark, fs, root, path, version, listLog(fs, root))
+  }
+
+  /** [[readAsOf]] over a log listing the caller already holds: every
+    * version at or below the listed head is immutable, so one listing
+    * serves the head lookup, the version check and the state fold. */
+  private def readListed(spark: SparkSession, fs: FileSystem, root: Path,
+                         path: String, version: Long, log: LogListing)
+      : DataFrame = {
+    val st = activeAt(fs, root, path, version, log)
     readFilesDF(spark, root, st.active, st.schema, st.partitionCols,
       dvFiles = st.dvs, colMap = st.colMap)
   }
@@ -1632,8 +1641,11 @@ object Versioned {
   /** Replayed [[TableState]] at `version` — from the newest checkpoint
     * at or before it plus the tail records after. */
   private def activeAt(fs: FileSystem, root: Path, path: String, version: Long)
-      : TableState = {
-    val versions = listVersions(fs, root)
+      : TableState = activeAt(fs, root, path, version, listLog(fs, root))
+
+  private def activeAt(fs: FileSystem, root: Path, path: String, version: Long,
+                       log: LogListing): TableState = {
+    val versions = log.versions
     require(versions.contains(version),
       s"version $version does not exist at $path (have: ${versions.mkString(", ")})")
     val hz = readHorizon(fs, root)
@@ -1646,7 +1658,7 @@ object Versioned {
     // a restore carries the target version's accumulated list, so
     // rolled-back MoR deletes stay applied — and a rewrite that left
     // none of a vector's covered files active PURGES it via dvRemove)
-    val st = stateAt(fs, root, version)
+    val st = stateAt(fs, root, version, log)
     if (st.schemaJson.isEmpty)
       throw new IllegalStateException(s"no schema at $path v$version")
     TableState(st.active,
@@ -3187,8 +3199,12 @@ object Versioned {
   }
 
   /** The table at its current head. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    readAsOf(spark, path, latestVersion(spark, path))
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val log = listLog(fs, root)
+    readListed(spark, fs, root, path, log.versions.lastOption.getOrElse(0L), log)
+  }
 
   /** The commit records in `(fromVersion, toVersion]` — metadata only,
     * horizon-checked (the streaming source's window planner). */
@@ -4114,7 +4130,12 @@ object Versioned {
     * match (the OPTIMIZE-WHERE move: compact yesterday's partition
     * while the rest of a 100 TB table is untouched — the rewrite cost
     * is O(matching partitions), and non-matching files stay shared
-    * with every version). Returns None on an empty selection. */
+    * with every version). Returns None on an empty selection.
+    *
+    * Bound: a z-ordered optimize routes through a probe table of
+    * `numFiles` longs that the driver searches for and every task's plan
+    * carries as a literal, so it refuses more than [[MaxZOrderFiles]]
+    * output files before touching the log or starting a Spark job. */
   def optimize(spark: SparkSession, path: String, numFiles: Int,
                sortBy: Seq[String] = Nil,
                zorderBy: Option[(String, String)] = None,
@@ -4138,6 +4159,9 @@ object Versioned {
     require(zCols.isEmpty || zCols.size * zBits <= 63,
       s"${zCols.size} z-order dims x $zBits bits exceed a positive long " +
         "(n*bits <= 63) — lower zBits")
+    require(zCols.isEmpty || numFiles <= MaxZOrderFiles,
+      s"z-order optimize of $path into $numFiles files exceeds the " +
+        s"$MaxZOrderFiles-file bound of its bucket probe table — lower numFiles")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val head = latestCommit(fs, root).getOrElse(
@@ -4261,6 +4285,10 @@ object Versioned {
     Some(rewriteCommit(spark, root, fs, head, laid, active,
       requireContentPreserved = true))
   }
+
+  /** Most output files a z-ordered [[optimize]] may request: its probe
+    * table holds one long per file and rides every task's plan. */
+  final val MaxZOrderFiles = 100000
 
   /** CONVERT an existing parquet directory into a versioned table IN
     * PLACE (Delta's `CONVERT TO DELTA`): the discovered data files are
@@ -4437,13 +4465,8 @@ object Versioned {
   private final class LegacyCheckpointStateException(msg: String)
     extends RuntimeException(msg)
 
-  private def listCheckpoints(fs: FileSystem, root: Path): Seq[Long] = {
-    val dir = new Path(root, LogDir)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("ckpt-") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("ckpt-").stripSuffix(".json").toLong).sorted
-  }
+  private def listCheckpoints(fs: FileSystem, root: Path): Seq[Long] =
+    listLog(fs, root).checkpoints
 
   /** COMPLETE table state at one version — what a checkpoint records
     * and what [[stateAt]] folds: everything any planner, reader or
@@ -4523,7 +4546,11 @@ object Versioned {
     * table plans its reads, rewrites, compactions and stream batches
     * from ~10 record reads (VERDICT r12 #1 — previously dvCoverage and
     * the constraint folds replayed the whole log on every rewrite). */
-  private def stateAt(fs: FileSystem, root: Path, version: Long): CkptState = {
+  private def stateAt(fs: FileSystem, root: Path, version: Long): CkptState =
+    stateAt(fs, root, version, listLog(fs, root))
+
+  private def stateAt(fs: FileSystem, root: Path, version: Long,
+                      log: LogListing): CkptState = {
     // checkpoints are DERIVED data: a corrupt or torn record falls
     // back to the next-older checkpoint (ultimately the raw log, which
     // is always complete) instead of bricking every read and commit —
@@ -4532,7 +4559,7 @@ object Versioned {
     // because silently replaying records the checkpoint was meant to
     // summarize is exactly what the refusal exists to prevent... and
     // the records themselves re-refuse anyway.
-    val ckpt = listCheckpoints(fs, root).filter(_ <= version).reverse.view
+    val ckpt = log.checkpoints.filter(_ <= version).reverse.view
       .map { cv =>
         try Some(readCheckpoint(fs, root, cv))
         catch {
@@ -4548,7 +4575,7 @@ object Versioned {
     val fromV = ckpt.map(_.version).getOrElse(0L)
     val base = ckpt.getOrElse(
       CkptState(0L, Nil, "", Nil, Nil, Nil, Nil))
-    listVersions(fs, root).filter(v => v > fromV && v <= version)
+    log.versions.filter(v => v > fromV && v <= version)
       .foldLeft(base)((st, v) => foldState(st, readCommit(fs, root, v)))
   }
 
@@ -4731,13 +4758,29 @@ object Versioned {
         sizes, stats, dvCov, pairs("constraints"), pairs("generated"), txns))
   }
 
-  private def listVersions(fs: FileSystem, root: Path): Seq[Long] = {
+  /** Commit versions and checkpoint versions (both ascending) from ONE
+    * listing of the log directory. */
+  private final case class LogListing(versions: Seq[Long], checkpoints: Seq[Long])
+
+  private def listLog(fs: FileSystem, root: Path): LogListing = {
     val dir = new Path(root, LogDir)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong).sorted
+    if (!fs.exists(dir)) LogListing(Nil, Nil)
+    else {
+      logListings.incrementAndGet()
+      val names = fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      def numbered(prefix: String) = names
+        .filter(n => n.startsWith(prefix) && n.endsWith(".json"))
+        .map(n => n.stripPrefix(prefix).stripSuffix(".json").toLong).sorted
+      LogListing(numbered("v"), numbered("ckpt-"))
+    }
   }
+
+  private def listVersions(fs: FileSystem, root: Path): Seq[Long] =
+    listLog(fs, root).versions
+
+  /** Listings of a table's log directory (test hook): a head read
+    * lists the log once. */
+  private[graft] val logListings = new java.util.concurrent.atomic.AtomicLong
 
   private def latestCommit(fs: FileSystem, root: Path): Option[Commit] =
     listVersions(fs, root).lastOption.map(v => readCommit(fs, root, v))

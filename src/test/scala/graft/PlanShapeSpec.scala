@@ -436,6 +436,39 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
+  test("recommendSym scores in one aggregate: one hash exchange, no merge join, lazy build") {
+    import graft.recommend.Recommender
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.window.WindowExec
+    val sim = (1L to 40L).flatMap(a => Seq((a, a % 7 + 1, 2L), (a, a % 5 + 20, 1L)))
+      .toDF("track_id_1", "track_id_2", "score")
+    val likes = (1L to 30L).map(i => (i % 4, i)).toDF("user_id", "track_id")
+    val follows = Seq((1L, 2L), (1L, 3L), (2L, 1L)).toDF("user_id_a", "user_id_b")
+    val trending = (1L to 40L).map(i => (i, i % 9)).toDF("track_id", "play_count")
+    // size-based broadcasting off: every broadcast in the plan must be
+    // one the scorer asks for, so the four-way full-outer merge would
+    // show up as sort-merge joins here
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val (df, jobs) = org.apache.spark.sql.graftshim.JobProbe.jobsStarted(spark) {
+        Recommender.recommendSym(sim, sim, trending, follows, likes, userId = 1L, k = 5)
+      }
+      assert(jobs == 0, s"building the request must start no Spark job, saw $jobs")
+      val nodes = executedPlanNodes(df)
+      val hashShuffles = nodes.collect {
+        case s: ShuffleExchangeLike if s.outputPartitioning.isInstanceOf[HashPartitioning] => s
+      }
+      assert(hashShuffles.size == 1,
+        s"expected the per-track aggregate's exchange only, got ${hashShuffles.size}")
+      assert(!nodes.exists(_.nodeName.contains("SortMergeJoin")),
+        "no candidate source may be sort-merge joined")
+      assert(!nodes.exists { case w: WindowExec => w.partitionSpec.isEmpty; case _ => false },
+        "the trending max must not funnel through an unpartitioned window")
+      assert(df.collect().length == 5)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+  }
+
   test("merge-on-read scan anti-joins the deletion vector as the BROADCAST side") {
     import graft.ingest.Versioned
     val tbl = java.nio.file.Files.createTempDirectory("graft_plan_mor")

@@ -186,6 +186,20 @@ class VersionedLayoutSpec extends SparkTestBase {
     assert(scanned2 < total2, s"sorted layout: scanned $scanned2 of $total2")
   }
 
+  test("z-order optimize refuses more files than its probe bound, before any job") {
+    val tbl = tmp()
+    Versioned.overwrite(Seq((1L, 2L, 3L, "a")).toDF("id", "x", "y", "t"), tbl)
+    val head = Versioned.latestVersion(spark, tbl)
+    val (err, jobs) = org.apache.spark.sql.graftshim.JobProbe.jobsStarted(spark) {
+      intercept[IllegalArgumentException](Versioned.optimize(spark, tbl,
+        numFiles = Versioned.MaxZOrderFiles + 1, zorderBy = Some(("x", "y"))))
+    }
+    assert(err.getMessage.contains(s"${Versioned.MaxZOrderFiles}-file bound"),
+      err.getMessage)
+    assert(jobs == 0, s"the bound must fire before any Spark job, saw $jobs")
+    assert(Versioned.latestVersion(spark, tbl) == head)
+  }
+
   test("disjoint-file retry: upserts absorb concurrent appends, never abort") {
     val tbl = tmp()
     Versioned.overwrite(df16(tbl), tbl)

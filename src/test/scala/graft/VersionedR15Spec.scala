@@ -9,7 +9,8 @@ import graft.ingest.{Fingerprint, Versioned}
   * re-validation, parent-ts read and auto-checkpoint fold all re-parsed
   * the same immutable records every commit), and the bounded overlapped
   * footer-read wait (ADVICE r14 — Await(Inf) on the shared pool could
-  * hang a commit forever; now a timeout falls back to serial reads).
+  * hang a commit forever; now a timeout falls back to serial reads), and
+  * the single log listing behind a head read.
   */
 class VersionedR15Spec extends SparkTestBase {
   import spark.implicits._
@@ -77,6 +78,19 @@ class VersionedR15Spec extends SparkTestBase {
     assert(Versioned.read(spark, tbl).count() == 2L)
     assert(Versioned.commitRecordParses.get() > p2,
       "a record whose on-disk nonce changed must miss the memo and re-parse")
+  }
+
+  test("a head read lists the log once, over a checkpoint and its tail") {
+    val tbl = tmp("listing") + "/tbl"
+    Versioned.overwrite(df((1L, "a")), tbl)
+    Versioned.append(df((2L, "b")), tbl)
+    Versioned.checkpoint(spark, tbl)
+    Versioned.append(df((3L, "c")), tbl)
+    val l0 = Versioned.logListings.get()
+    val head = Versioned.read(spark, tbl)
+    assert(Versioned.logListings.get() - l0 == 1L,
+      s"expected one log listing, saw ${Versioned.logListings.get() - l0}")
+    assert(rowSet(head) == Set(Seq(1L, "a"), Seq(2L, "b"), Seq(3L, "c")))
   }
 
   test("a cache hit is indistinguishable from a re-parse across the state surface") {
