@@ -1,424 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.silver.Pipelines
 
-/** Dev-only scratch main for plan/perf experiments. Not part of the API. */
+/** Dev-only main for plan audits. Not part of the API.
+  *
+  * {{{
+  *   runMain graft.Explore entry                  # flagship query, rows > 0
+  *   runMain graft.Explore q15_hybrid_recommend   # time each named query
+  * }}}
+  * `EXPLORE_EXPLAIN=1` prints each named query's formatted plan before
+  * timing it. Tables come from `SPARK_GRAFT_SF_DIR`, the session size
+  * from `SPARK_GRAFT_CPUS`. Recorded plan-audit measurements live in
+  * PLAN_AUDIT.md, OPTIMIZATION_r14.md, OPTIMIZATION_r15.md and plans/. */
 object Explore {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.getOrCreate(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"[explore] $name%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
-    }
     if (args.headOption.contains("entry")) {
       // driver-style smoke check: flagship query on sf0.001, rows > 0
       val n = SparkEntry.entry(spark).count()
       println(s"[explore] entry rows=$n")
       require(n > 0, "entry smoke check failed")
-    } else if (args.headOption.contains("q12parts")) {
-      import graft.silver.Pipelines
-      val likes = Pipelines.likes(Tables.orders(spark, dir), Tables.lineitem(spark, dir))
-      time("likes build")(likes.count())
-      val grouped = likes.groupBy(col("user_id"))
-        .agg(slice(sort_array(collect_set(col("track_id"))), 1, 10000).as("its"))
-      time("grouped arrays")(grouped.count())
-      val pairs = grouped
-        .select(col("its"), posexplode(col("its")).as(Seq("i", "t1")))
-        .select(col("t1"), explode(expr("slice(its, i + 2, size(its))")).as("t2"))
-      time("raw pair stream")(pairs.count())
-      time("pair aggregate")(pairs.groupBy("t1", "t2").count().count())
-      time("full q12")(SparkEntry.queries("q12_collab_pairs")(spark, dir).count())
-    } else if (args.headOption.contains("q26parts")) {
-      import graft.text.Dedup
-      import graft.functions.minhash_sig_ngrams
-      val docs = Tables.documents(spark, dir)
-      time("warm docs scan")(docs.count())
-      val sigs = docs.select(col("doc_id"),
-        minhash_sig_ngrams(Dedup.tokens(col("text")), 3, 64).as("sig"))
-        .filter(col("sig").isNotNull)
-      time("fused signatures")(sigs.count())
-      val bandKeys = sigs.select(col("doc_id"),
-        posexplode(expr(
-          "transform(sequence(0, 31), j -> hash(slice(sig, j * 2 + 1, 2)))"))
-          .as(Seq("band", "bh")))
-        .select(col("doc_id"), concat_ws(":", col("band"), col("bh")).as("band_key"))
-      val cand = Pipelines.cooccurrence(bandKeys, "band_key", "doc_id")
-      time("candidates (sig+band+cooccur)")(cand.count())
-      time("full q26")(SparkEntry.queries("q26_minhash_lsh")(spark, dir).count())
-      time("full q26 again")(SparkEntry.queries("q26_minhash_lsh")(spark, dir).count())
-      time("full q25")(SparkEntry.queries("q25_ngram_jaccard")(spark, dir).count())
-      time("full q27")(SparkEntry.queries("q27_simhash")(spark, dir).count())
-    } else if (args.headOption.contains("preguardAB")) {
-      // overhead of the in-buffer fail-loud cap (bounded_collect_set,
-      // r6) vs plain collect_set + post-hoc guard: interleaved on/off
-      // repetitions in one warm JVM. (The rejected two-pass COUNT
-      // pre-guard measured +70–130% on q11/q25/q26/q79 in this harness.)
-      val qs = Seq("q11_cooccurrence", "q12_collab_pairs", "q25_ngram_jaccard",
-        "q26_minhash_lsh", "q27_simhash", "q79_editdist_pairs")
-      try
-        for (round <- 1 to 4; q <- qs;
-             on <- if (round % 2 == 0) Seq(true, false) else Seq(false, true)) {
-          if (on) sys.props -= "graft.boundedcollect.off"
-          else sys.props += ("graft.boundedcollect.off" -> "1")
-          time(f"$q bounded=$on r$round")(SparkEntry.queries(q)(spark, dir).count())
-        }
-      // finally, not fall-through: a thrown query must not leak the
-      // JVM-global switch into whatever runs next in this process
-      finally sys.props -= "graft.boundedcollect.off"
-    } else if (args.headOption.contains("boundedMicro")) {
-      // isolate the aggregation: same cached input, only the collector
-      // differs — any consistent delta here is true per-row overhead
-      import graft.functions.bounded_collect_set
-      val pt = Pipelines.playlistTracks(Tables.lineitem(spark, dir)).cache()
-      time("cache fill")(pt.count())
-      def agg(c: org.apache.spark.sql.Column): Long =
-        pt.groupBy(col("playlist_id")).agg(sort_array(c).as("its"))
-          .agg(sum(size(col("its")))).collect().length.toLong
-      for (r <- 1 to 4;
-           on <- if (r % 2 == 0) Seq(true, false) else Seq(false, true)) {
-        val c = if (on) bounded_collect_set(col("track_id"), 10000, "micro")
-                else collect_set(col("track_id"))
-        time(s"agg bounded=$on r$r")(agg(c))
-      }
-      pt.unpersist()
-    } else if (args.headOption.contains("exciseAB")) {
-      // single-tokenize exciseRepeats (r6) vs the r5 twice-tokenizing
-      // composition, both forced through the full rebuild (a bare count()
-      // lets the optimizer eliminate the unique-keyed left join and skip
-      // the rebuild entirely — the r5 bench number measured nothing)
-      import graft.text.Dedup
-      val docs = Tables.documents(spark, dir)
-      time("warm docs")(docs.count())
-      def force(df: org.apache.spark.sql.DataFrame): Long =
-        df.agg(sum(length(col("clean_text"))), sum(col("n_tokens_after")))
-          .collect().length.toLong
-      def oldExcise() = {
-        val cuts = Dedup.repeatedSpans(docs, 10).groupBy("doc_id")
-          .agg(collect_list(struct(col("span_start"), col("span_end"))).as("cuts"))
-        docs.select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
-          .join(cuts, Seq("doc_id"), "left")
-          .withColumn("kept", when(col("cuts").isNull, col("toks")).otherwise(expr(
-            "filter(transform(toks, (t, i) -> " +
-              "IF(exists(cuts, c -> i >= c.span_start AND i < c.span_end), NULL, t)), " +
-              "x -> x IS NOT NULL)")))
-          .select(col("doc_id"),
-            size(col("toks")).cast("long").as("n_tokens_before"),
-            size(col("kept")).cast("long").as("n_tokens_after"),
-            concat_ws(" ", col("kept")).as("clean_text"))
-      }
-      for (r <- 1 to 3) {
-        time(s"old twice-tokenize r$r")(force(oldExcise()))
-        time(s"new single-tokenize r$r")(force(Dedup.exciseRepeats(docs, 10)))
-      }
-    } else if (args.headOption.contains("commitParts")) {
-      // r14 opt: where does a versioned commit's wall go at gate scale?
-      // Replicates the q252 fixture slice (~6k rows, coalesce(1)) and
-      // apportions: raw parquet write job, digest-shaped read job
-      // (read + per-file agg + collect), trivial-job floor, full append.
-      import graft.ingest.{Versioned, Fingerprint}
-      val o = Tables.orders(spark, dir).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-      o.count() // warm scan
-      val base = "/tmp/graft_explore_commit"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      time("trivial job floor x10")((1 to 10).map(_ => spark.range(1).count()).sum)
-      for (r <- 1 to 2) {
-        val w = s"$base/w$r"
-        time(s"raw write coalesce(1) x5 r$r")({
-          (1 to 5).foreach(i => o.filter(col("k") % 25 === i)
-            .coalesce(1).write.parquet(s"$w/d$i")); 5L })
-        time(s"digest-shaped read x5 r$r")({
-          (1 to 5).foreach { i =>
-            spark.read.parquet(s"$w/d$i")
-              .groupBy(expr("_metadata.file_path").as("__f"))
-              .agg(count(lit(1)), sum(Fingerprint.rowDigest(
-                  Seq(col("k"), col("c"), col("cents")))),
-                min(col("k")), max(col("k")), min(col("c")), max(col("c")),
-                min(col("cents")), max(col("cents")))
-              .collect() }; 5L })
-        val tbl = s"$base/tbl$r"
-        time(s"overwrite v1 r$r")({ Versioned.overwrite(
-          o.filter(col("k") % 25 === 0).coalesce(1), tbl); 1L })
-        time(s"append x24 r$r")({ (1L to 24L).foreach(m => Versioned.append(
-          o.filter(col("k") % 25 === m).coalesce(1), tbl)); 24L })
-        time(s"read head r$r")(Versioned.read(spark, tbl).count())
-      }
-    } else if (args.headOption.contains("appendParts")) {
-      // r14 opt: decompose the residual per-append overhead after the
-      // one-pass commit — stage+digest vs log/claim/state bookkeeping
-      import graft.ingest.Versioned
-      import org.apache.hadoop.fs.Path
-      val o = Tables.orders(spark, dir).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-      o.count()
-      val base = "/tmp/graft_explore_append"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      val tbl = s"$base/tbl"
-      Versioned.overwrite(o.filter(col("k") % 25 === 0).coalesce(1), tbl)
-      (1L to 5L).foreach(m => Versioned.append(
-        o.filter(col("k") % 25 === m).coalesce(1), tbl)) // warm
-      val root = new Path(tbl)
-      val fs2 = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      for (r <- 1 to 2) {
-        time(s"append x5 r$r")({ (6L to 10L).foreach(m => Versioned.append(
-          o.filter(col("k") % 25 === (m + 5 * r) % 25).coalesce(1), tbl)); 5L })
-        time(s"stageAndDigest only x5 r$r")({
-          (1 to 5).foreach { i =>
-            val dn = s"d-probe$r$i"
-            val df = o.filter(col("k") % 25 === i).coalesce(1)
-            Versioned.stageAndDigest(df, root, fs2, new Path(root, dn), dn,
-              df.schema, Nil)
-          }; 5L })
-        time(s"footerStats x20 r$r")({
-          val dn = s"d-probe${r}1"
-          val files = fs2.listStatus(new Path(root, dn))
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map(s => s"$dn/${s.getPath.getName}").toSeq
-          val df = o.filter(col("k") % 25 === 1)
-          (1 to 20).foreach { _ =>
-            Versioned.footerStats(spark.sparkContext.hadoopConfiguration,
-              root, files, df.schema, Nil, Nil) }; 20L })
-        time(s"plain write x5 r$r")({
-          (1 to 5).foreach(i => o.filter(col("k") % 25 === i)
-            .coalesce(1).write.parquet(s"$base/w$r$i")); 5L })
-      }
-    } else if (args.headOption.contains("q250debug")) {
-      import graft.ingest.Versioned
-      val tbl = "/tmp/graft_q250dbg/tbl"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/tmp/graft_q250dbg"))
-      val orders = Tables.orders(spark, dir).select(col("o_orderkey"),
-          col("o_custkey"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .withColumn("kmod", pmod(col("o_custkey"), lit(16L)))
-        .withColumn("cmod", pmod(col("cents"), lit(16L)))
-        .withColumn("dmod", pmod(col("o_orderkey"), lit(16L)))
-      Versioned.overwrite(orders.filter(col("o_orderkey") % 4 === 0)
-        .coalesce(1), tbl)
-      (1 to 3).foreach(m => Versioned.append(
-        orders.filter(col("o_orderkey") % 4 === m).coalesce(1), tbl))
-      val c = Versioned.optimize(spark, tbl, numFiles = 8,
-        zorderByN = Seq("kmod", "cmod", "dmod"), zBits = 4).get
-      println(s"[explore] optimize v${c.version} files=${c.add.size}")
-      c.stats.toSeq.sortBy(_._1).foreach { case (f, m) =>
-        println(s"[explore]  $f kmod=${m.get("kmod")} cmod=${m.get("cmod")} " +
-          s"dmod=${m.get("dmod")} rows=${m.get("\u0000rows")}")
-      }
-      val (_, scanned, total) =
-        Versioned.readAsOfPruned(spark, tbl, c.version, "kmod", 0L, 7L)
-      println(s"[explore] kmod probe scanned=$scanned total=$total")
-    } else if (args.headOption.contains("footerProbe")) {
-      // r14 opt feasibility: (a) does observe() fire on a parquet write?
-      // (b) do footers carry exact stats for long/int/short/date/ts/
-      //     string (incl. long text) under the session's write configs?
-      println("[explore] outputTimestampType=" +
-        spark.conf.get("spark.sql.parquet.outputTimestampType"))
-      val out = "/tmp/graft_footer_probe"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val df = spark.range(0, 1000, 1, 2).toDF("id")
-        .withColumn("i", (col("id") % 97).cast("int"))
-        .withColumn("sh", (col("id") % 31).cast("short"))
-        .withColumn("dt", date_add(lit(java.sql.Date.valueOf("2024-01-01")),
-          (col("id") % 50).cast("int")))
-        .withColumn("ts", timestamp_micros(
-          lit(1709251200000000L) + col("id") * 1000000L))
-        .withColumn("s", concat(lit("doc-"), lpad(col("id").cast("string"), 5, "0"),
-          lit("-"), expr("repeat('x', 200)")))
-        .withColumn("nul", when(col("id") % 3 === 0, col("id")))
-      val obs = new org.apache.spark.sql.Observation("probe")
-      df.observe(obs, count(lit(1)).as("n"), sum(col("id")).as("s"))
-        .write.parquet(out)
-      println("[explore] observed=" + obs.get)
-      val outP = new org.apache.hadoop.fs.Path(out)
-      val fs2 = outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs2.listStatus(outP).filter(_.getPath.getName.endsWith(".parquet"))
-      for (f <- st) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(f.getPath, spark.sparkContext.hadoopConfiguration)
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val md = rd.getFooter
-        println(s"[explore] file=${f.getPath.getName} rowgroups=${md.getBlocks.size}")
-        md.getBlocks.forEach { b =>
-          println(s"[explore]  rg rows=${b.getRowCount}")
-          b.getColumns.forEach { c =>
-            val stt: org.apache.parquet.column.statistics.Statistics[_] =
-              c.getStatistics
-            println(s"[explore]   col=${c.getPath} type=${c.getPrimitiveType} " +
-              s"stats=${if (stt == null) "null" else stt.toString.take(120)} " +
-              s"nullsSet=${if (stt == null) "-" else stt.isNumNullsSet}")
-          }
-        }
-        rd.close()
-      }
-    } else if (args.headOption.contains("q48parts")) {
-      // stage breakdown of embeddingNearDup at the current SF
-      import graft.vector.Similarity
-      import graft.functions.vector_dot
-      val emb = Tables.embeddings(spark, dir).select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-      val data = Similarity.prep(emb).cache()
-      time("prep+cache")(data.count())
-      val n = data.count()
-      val (b, r) = Similarity.sizeBands(n, 8, 8, 0.95, 16)
-      println(s"[explore] geometry n=$n bands=$b rows=$r")
-      val dim = data.select(size(col("v")).as("d")).head().getInt(0)
-      val nbits = b * r
-      def planeMicroD(p: Int): Array[Double] = {
-        import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-        import org.apache.spark.sql.types.IntegerType
-        Array.tabulate(dim) { j =>
-          val h = XxHash64Function.hash(j, IntegerType,
-            XxHash64Function.hash(p, IntegerType, 42L)) % 1000L
-          (h + 1000L) % 1000L // keep in lockstep with Similarity.planeMicro
-        }.map(_.toDouble / 1000.0 - 0.5)
-      }
-      val withBits = data.withColumn("bits",
-        array((0 until nbits).map(p =>
-          (vector_dot(col("v"), typedLit(planeMicroD(p))) > 0).cast("int")): _*))
-      time("signature bits")(withBits.select(sum(expr("bits[0]"))).count())
-      val bandKeys = withBits.select(col("vec_id"),
-        posexplode(expr(s"transform(sequence(0, ${b - 1}), j -> " +
-          s"slice(bits, j * $r + 1, $r))")).as(Seq("band", "bh")))
-        .select(col("vec_id"),
-          concat_ws(":", col("band") +: (0 until r).map(i =>
-            expr(s"bh[$i]")): _*).as("band_key"))
-        .distinct()
-      time("band keys")(bandKeys.count())
-      // diagnostics: bit balance per plane + bucket occupancy histogram
-      val balance = withBits.select((0 until nbits).map(i =>
-        avg(expr(s"bits[$i]")).as(s"b$i")): _*).head()
-      val fracs = (0 until nbits).map(i => balance.getDouble(i))
-      println(f"[explore] bit balance min=${fracs.min}%.3f max=${fracs.max}%.3f " +
-        f"mean=${fracs.sum / nbits}%.3f")
-      val occ = bandKeys.groupBy("band_key").count()
-      occ.select(max(col("count")), avg(col("count")),
-          sum(col("count") * (col("count") - 1) / 2).as("pairs"))
-        .collect().foreach(r => println(s"[explore] occupancy max=${r.get(0)} " +
-          s"avg=${r.get(1)} candidate_pairs(pre-dedup)=${r.get(2)}"))
-      val cand = Pipelines.cooccurrence(bandKeys, "band_key", "vec_id",
-          maxGroupSize = 10000, failOnOverflow = true)
-        .select(col("track_id_1").as("vec_id_1"), col("track_id_2").as("vec_id_2"))
-      time("candidates")(cand.count())
-      val verified = cand
-        .join(data.select(col("vec_id").as("vec_id_1"), col("v").as("v1"),
-          col("norm").as("n1")), Seq("vec_id_1"))
-        .join(data.select(col("vec_id").as("vec_id_2"), col("v").as("v2"),
-          col("norm").as("n2")), Seq("vec_id_2"))
-        .withColumn("cosine", round(Similarity.dot("v1", "v2") / (col("n1") * col("n2")), 6))
-        .filter(col("cosine") >= 0.95)
-      time("verify")(verified.count())
-      data.unpersist()
-      time("full q48")(SparkEntry.queries("q48_embedding_neardup")(spark, dir).count())
-    } else if (args.headOption.contains("crossAB")) {
-      // q99 candidate generation: banded-LSH crossNearDup vs the
-      // brute-force cosine cross join over the same split (records the
-      // local-SF crossover honestly — brute force is |train|·|test|
-      // cosines and wins while that product is small; the LSH path's
-      // candidate count stays ~|planted| at every SF)
-      import graft.vector.Similarity
-      val emb = Tables.embeddings(spark, dir).select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-      val assigned = graft.text.Splits.assign(emb, "vec_id")
-      val test = assigned.filter(col("split") === "test").drop("split")
-      val train = assigned.filter(col("split") === "train").drop("split")
-      for (r <- 1 to 3) {
-        time(s"lsh crossNearDup r$r")(
-          Similarity.crossNearDup(train, test, threshold = 0.95).count())
-        val lt = Similarity.prep(train)
-        val rt = Similarity.prep(test).select(col("vec_id").as("pid"),
-          col("v").as("v2"), col("norm").as("n2"))
-        time(s"brute cross join r$r")(
-          lt.crossJoin(broadcast(rt))
-            .filter(round(Similarity.dot("v", "v2") /
-              (col("norm") * col("n2")), 6) >= 0.95).count())
-      }
-    } else if (args.headOption.contains("shingleAB")) {
-      import graft.text.Dedup
-      val docs = Tables.documents(spark, dir)
-      time("warm docs scan")(docs.count())
-      val sqlForm = expr(
-        """CASE WHEN size(toks) >= 3
-          |  THEN array_distinct(transform(sequence(0, size(toks) - 3),
-          |       i -> concat_ws(' ', toks[i], toks[i + 1], toks[i + 2])))
-          |  ELSE array()
-          |END""".stripMargin)
-      def toks = docs.select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
-      for (_ <- 1 to 3) {
-        time("sql-form shingle explode")(
-          toks.select(col("doc_id"), explode(sqlForm).as("sh")).count())
-        time("ngrams shingle explode")(
-          toks.select(col("doc_id"),
-            explode(graft.functions.ngrams(col("toks"), 3)).as("sh")).count())
-      }
-    } else if (args.isEmpty) {
-      import graft.recommend.Recommender
-      // warm the JVM/scans
-      Tables.lineitem(spark, dir).count(); Tables.orders(spark, dir).count()
-      def q15(cacheLikes: Boolean, cacheSims: Boolean): Long = {
-        val li = Tables.lineitem(spark, dir)
-        val likes0 = Pipelines.likes(Tables.orders(spark, dir), li)
-        val likes = if (cacheLikes) likes0.cache() else likes0
-        def c(df: org.apache.spark.sql.DataFrame) = if (cacheSims) df.cache() else df
-        val n = Recommender.recommend(
-          playlistSim = c(Pipelines.playlistSimilarity(li)),
-          cfSim = c(Pipelines.collaborativeFiltering(likes)),
-          trendingDf = Pipelines.trending(li, Tables.part(spark, dir), 30),
-          followsDf = Pipelines.follows(Tables.customer(spark, dir)),
-          likesDf = likes, userId = SparkEntry.DemoUser, k = 5).count()
-        spark.catalog.clearCache()
-        n
-      }
-      time("q15 nocache")(q15(false, false))
-      time("q15 likes only")(q15(true, false))
-      time("q15 likes+sims")(q15(true, true))
-      time("q15 nocache again")(q15(false, false))
-    } else if (args.headOption.contains("zjobs")) {
-      // r15 opt evidence: Spark jobs fired by ONE z-order optimize —
-      // exact __zb probe routing must drop RangePartitioner's sampling
-      // job (one fewer pass over the rewrite input) vs repartitionByRange
-      import graft.ingest.Versioned
-      val jobs = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      val orders = Tables.orders(spark, dir).select(col("o_orderkey"),
-          col("o_custkey"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .withColumn("kmod", pmod(col("o_custkey"), lit(64L)))
-        .withColumn("cmod", pmod(col("cents"), lit(64L)))
-      orders.count() // warm
-      for (r <- 1 to 2) {
-        val tbl = s"/tmp/graft_zjobs/t$r"
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"/tmp/graft_zjobs/t$r"))
-        Versioned.overwrite(
-          orders.filter(col("o_orderkey") % 4 === 0).coalesce(1), tbl)
-        (1 to 3).foreach(m => Versioned.append(
-          orders.filter(col("o_orderkey") % 4 === m).coalesce(1), tbl))
-        spark.sparkContext.addSparkListener(listener)
-        Thread.sleep(500) // drain queued events from the fixture commits
-        val before = jobs.get()
-        val t0 = System.nanoTime()
-        val c = Versioned.optimize(spark, tbl, numFiles = 4,
-          zorderBy = Some(("kmod", "cmod")), zBits = 6).get
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(2000) // listener events are async
-        spark.sparkContext.removeSparkListener(listener)
-        println(f"[explore] zjobs r$r: optimize jobs=${jobs.get() - before} " +
-          f"wall=$wall%.2f s files=${c.add.size}")
-      }
     } else for (q <- args) {
       if (sys.env.contains("EXPLORE_EXPLAIN"))
         SparkEntry.queries(q)(spark, dir).explain("formatted")
-      time(q)(SparkEntry.queries(q)(spark, dir).count())
+      val t0 = System.nanoTime()
+      val n = SparkEntry.queries(q)(spark, dir).count()
+      println(f"[explore] $q%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
     }
     spark.stop()
   }

@@ -3537,7 +3537,7 @@ object SparkEntry {
       val preHead = Versioned.latestVersion(s, tbl)
       val (preRows, preFp) = Versioned.archivedFingerprint(s, tbl, preHead)
       val c = Versioned.optimize(s, tbl, numFiles = 4,
-        zorderBy = Some(("kmod", "cmod")), zBits = 6).get
+        zorderBy = Seq("kmod", "cmod"), zBits = 6).get
       val (_, scanned, totalFiles) =
         Versioned.readAsOfPruned(s, tbl, c.version, "kmod", 0L, 15L)
       val band = Versioned.read(s, tbl).filter(col("kmod") <= 15L)
@@ -4431,7 +4431,7 @@ object SparkEntry {
       versionedReport(s, tbl).crossJoin(inv)
     }),
 
-    // N-DIMENSIONAL Z-ORDER (ingest/Versioned.optimize zorderByN, r12 —
+    // N-DIMENSIONAL Z-ORDER (ingest/Versioned.optimize zorderBy, r12 —
     // Delta's `OPTIMIZE ZORDER BY (a, b, c)` shape, q223 generalized):
     // the 3-d Morton layout gives every dimension tight per-file zone
     // maps at once, so a half-range filter on ANY of the three prunes
@@ -4453,7 +4453,7 @@ object SparkEntry {
       val preHead = Versioned.latestVersion(s, tbl)
       val (preRows, preFp) = Versioned.archivedFingerprint(s, tbl, preHead)
       val c = Versioned.optimize(s, tbl, numFiles = 8,
-        zorderByN = Seq("kmod", "cmod", "dmod"), zBits = 4).get
+        zorderBy = Seq("kmod", "cmod", "dmod"), zBits = 4).get
       def pruned(dim: String): Boolean = {
         val (_, scanned, total) =
           Versioned.readAsOfPruned(s, tbl, c.version, dim, 0L, 7L)

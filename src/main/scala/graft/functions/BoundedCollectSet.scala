@@ -21,11 +21,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * after `collect_set` has built the whole over-cap array, so a
   * pathological group OOMs an executor before it errors. A
   * pre-aggregation COUNT pass was built and measured first (r6,
-  * Explore `preguardAB`): +70–130% on q11/q25/q26/q79 — mostly-unique
-  * grouping keys defeat map-side combine and the extra pass re-pays the
-  * generator's input lineage, the same failure mode as the r5 q95
-  * count-gate — and was rejected. Moving the bound into the buffer
-  * costs one integer compare per new element and nothing else: the plan
+  * PLAN_AUDIT.md "r6 measured experiments"): +70–130% on
+  * q11/q25/q26/q79 — mostly-unique grouping keys defeat map-side
+  * combine and the extra pass re-pays the generator's input lineage,
+  * the same failure mode as the r5 q95 count-gate — and was rejected.
+  * Moving the bound into the buffer costs one integer compare per new
+  * element and nothing else: the plan
   * is byte-identical to plain `collect_set` apart from this function.
   *
   * Buffer layout, serialization, and element copying mirror Spark's own

@@ -27,13 +27,18 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * written FIRST under a fresh uuid directory — invisible to every
   * reader until a log record references them — then the writer claims
   * the next version number by ATOMICALLY creating
-  * `_graft_log/v<n+1>.json` with create-if-absent semantics
-  * (`O_EXCL`/`CREATE_NEW` locally, `FileSystem.create(overwrite=false)`
-  * on HDFS, where it is an atomic namenode op). Exactly one contender
-  * wins a version; losers re-read the log, re-validate against the new
-  * head (schema pin, snapshot totals) and retry with the next number.
-  * A crash between data write and log claim leaves an orphaned data dir
-  * that no reader ever sees ([[vacuum]] reclaims it).
+  * `_graft_log/v<n+1>.json` with create-if-absent semantics (a fully
+  * written temp record hard-linked into place locally, renamed without
+  * overwrite on HDFS — both atomic, see [[atomicCreate]]). Exactly one
+  * contender wins a version. Every commit path claims through ONE loop,
+  * [[claimCommit]]: the first claim is built against the head the
+  * writer staged against (a claim of v(h+1) wins only while h is still
+  * the head); a loser re-reads the head, checks the intervening records
+  * against the path's conflict rule (or re-validates schema pin, rule
+  * set and snapshot totals against the new head) and retries, at most
+  * [[MaxClaimAttempts]] times. Any exit but a win deletes the staged
+  * data; a crash between data write and log claim leaves an orphaned
+  * data dir that no reader ever sees ([[vacuum]] reclaims it).
   *
   * Each record carries the ADDED files plus the running snapshot totals
   * (`snapshotRows`, `snapshotFp`): because the content fingerprint
@@ -242,12 +247,8 @@ object Versioned {
     * snapshot digest stay stable. On a PARTITIONED table the append
     * inherits the table's partition layout automatically. Returns the
     * commit. */
-  def append(df: DataFrame, path: String, maxRetries: Int = 20): Commit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val pcols = latestCommit(fs, root).map(_.partitionCols).getOrElse(Nil)
-    commit(df, path, "append", maxRetries, None, pcols)
-  }
+  def append(df: DataFrame, path: String): Commit =
+    commit(df, path, "append")
 
   /** Replace the table content as a new version (readers of older
     * versions are unaffected — old files are never touched).
@@ -262,10 +263,10 @@ object Versioned {
     * time travel. Partition columns must be integral, date or string
     * typed; values needing hive %-escaping are rejected at read time
     * (restrict values to `[A-Za-z0-9._ :-]`). */
-  def overwrite(df: DataFrame, path: String, maxRetries: Int = 20,
+  def overwrite(df: DataFrame, path: String,
                 partitionBy: Seq[String] = Nil): Commit = {
     validatePartitionCols(df.schema, partitionBy)
-    commit(df, path, "overwrite", maxRetries, None, partitionBy)
+    commit(df, path, "overwrite", partitionBy = partitionBy)
   }
 
   /** Partition columns must exist, have path-representable types, and
@@ -300,12 +301,13 @@ object Versioned {
     * schema — the documented price of a schema change (rare by
     * construction), after which appends are additive again. With no
     * new columns this is exactly [[append]]. */
-  def appendEvolve(df: DataFrame, path: String, maxRetries: Int = 20): Commit = {
+  def appendEvolve(df: DataFrame, path: String): Commit = {
     val spark = df.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val headOpt = latestCommit(fs, root)
-    if (headOpt.isEmpty) return commit(df, path, "overwrite", maxRetries)
+    val log = listLog(fs, root)
+    val headOpt = log.versions.lastOption.map(readCommit(fs, root, _))
+    if (headOpt.isEmpty) return commit(df, path, "overwrite", listed = Some(log))
     val head = headOpt.get
     val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
     val incomingTypes = df.schema.map(f => f.name -> f.dataType).toMap
@@ -328,7 +330,8 @@ object Versioned {
           "are supported")
     }
     val newCols = df.schema.filterNot(f => headSchema.fieldNames.contains(f.name))
-    if (newCols.isEmpty && widened.isEmpty) return append(df, path, maxRetries)
+    if (newCols.isEmpty && widened.isEmpty)
+      return commit(df, path, "append", listed = Some(log))
     val widenedSet = widened.toSet
     val evolved = StructType(headSchema.fields.map(f =>
       if (widenedSet(f.name)) f.copy(dataType = incomingTypes(f.name))
@@ -342,7 +345,7 @@ object Versioned {
     // column's physical name claims it; then a fresh epoch-suffixed one
     val evolvedMap = evolvedColMap(head, headSchema, newCols.toSeq)
 
-    val cons = checksOf(fs, root, head.version)
+    val cons = checksFrom(stateAt(fs, root, head.version, log))
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val dataDirName = s"d-$uuid"
     val dataDir = new Path(root, dataDirName)
@@ -352,38 +355,29 @@ object Versioned {
       catch { case e: Throwable => fs.delete(dataDir, true); throw e }
     val files = sized.map(_._1)
 
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val h = latestCommit(fs, root).get
+    claimCommit(fs, root, s"appendEvolve at $path", headOpt, Seq(dataDir),
+        conflicts = None) { b =>
+      val h = b.get
       // a CONCURRENT evolution (or constraint change) would make this
       // commit's precomputed schema / validation stale — fail loudly
       // like the COW rewrites do
-      if (checksOf(fs, root, h.version) != cons) {
-        fs.delete(dataDir, true)
+      if (h.version != head.version && checksOf(fs, root, h.version) != cons)
         throw new java.util.ConcurrentModificationException(
           s"appendEvolve at $path: constraints changed concurrently — restage")
-      }
-      if (h.schemaJson != head.schemaJson || h.colMap != head.colMap) {
-        fs.delete(dataDir, true)
+      if (h.schemaJson != head.schemaJson || h.colMap != head.colMap)
         throw new java.util.ConcurrentModificationException(
           s"appendEvolve at $path: the table schema changed concurrently " +
             s"(planned against v${head.version}, head is v${h.version}) — re-plan")
-      }
       // the epoch recompute: prior content digested under the EVOLVED
       // schema (missing columns read as null -> the 'N' sentinel)
       val prev = activeAt(fs, root, path, h.version)
       val pr = digestFiles(spark, root, prev.active, evolved, pcols,
         prev.dvs, evolvedMap)
-      val c = Commit(h.version + 1L, "append", files, evolved.json, nRows,
+      Commit(h.version + 1L, "append", files, evolved.json, nRows,
         addFp, pr._1 + nRows, pr._2 + addFp, Nil, None, stats, pcols,
         colMap = evolvedMap, droppedPhys = head.droppedPhys,
         widenedCols = widened, addSizes = sized.map(_._2))
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1
     }
-    fs.delete(dataDir, true)
-    throw new IllegalStateException(
-      s"appendEvolve to $path lost the version race $maxRetries times")
   }
 
   /** Row-level DELETE as a COPY-ON-WRITE commit: only the files that
@@ -514,27 +508,11 @@ object Versioned {
         col("__file") === col("__affected_file"), "left_semi")
     }
 
-  /** Row-level DELETE as a MERGE-ON-READ commit — the write-cheap
-    * twin of the copy-on-write [[deleteWhere]]: instead of rewriting
-    * every affected file, the matching rows' POSITIONS land in a
-    * position-delete file (`dv-<uuid>/`, rows of (file_rel, pos) —
-    * the deletion-vector design the reference's table format and
-    * Iceberg v2 use) and every reader anti-joins them inside the same
-    * scan. At 100 TB this turns "delete one user from 10k hot files"
-    * from a 10k-file rewrite into an O(matched rows) write — the read
-    * side pays one (usually broadcast) anti-join until a later
-    * OPTIMIZE/compaction rewrites the files clean. Snapshot totals
-    * stay exactly certified: the commit subtracts the deleted rows'
-    * digests (computed on the same planning scan). Returns None when
-    * nothing matches. Concurrency: conflicts with any intervening
-    * overwrite/schema/layout/constraint change, rewrite touching a
-    * covered file, or ANY other MoR delete (two DVs could cover the
-    * same position and double-subtract — disjointness is not worth
-    * proving); disjoint appends and rewrites retry through. */
   /** Does an intervening commit invalidate a staged commit planned
     * against `headSchemaJson`/`headColMap`/`pcols` that tombstones or
-    * removes rows in `touched` files? Shared by the MoR claim loops and
-    * [[rewriteCommit]] — WRITE-SERIALIZABLE with the DISJOINT-FILE rule
+    * removes rows in `touched` files? The [[claimCommit]] conflict
+    * predicate of the MoR commits and [[rewriteCommit]] —
+    * WRITE-SERIALIZABLE with the DISJOINT-FILE rule
     * extended to MoR commits: an intervening MoR delete/upsert
     * conflicts only when its archived `dvCovered` set intersects this
     * commit's touched files (two MoR deletes on disjoint files both
@@ -555,6 +533,73 @@ object Versioned {
         (ic.dvCovered.isEmpty || ic.dvCovered.exists(touched.contains))) ||
       ic.remove.exists(touched.contains)
 
+  /** Most claims one commit makes before giving up on the race. */
+  private[graft] final val MaxClaimAttempts = 20
+
+  /** THE CLAIM LOOP — the one place a staged commit becomes a version.
+    * `build` renders the record against a head (None = empty table).
+    * The first attempt builds against `planned`, the head the caller
+    * staged against: a create-if-absent claim of v(h+1) wins only while
+    * h is still the head, so a winning claim needs no fresh head read.
+    * A lost claim re-reads the head. With a `conflicts` predicate every
+    * intervening record is checked and the first hit aborts with
+    * ConcurrentModificationException (the disjoint-file rule of the
+    * rewrite and MoR paths, or "any commit" for schema-evolving
+    * merges); with None, `build` re-validates against the new head
+    * itself (append, overwrite, the alters). After [[MaxClaimAttempts]]
+    * lost claims the commit gives up with IllegalStateException. Every
+    * exit but a win — conflict, exhaustion, or a throw from `build` —
+    * deletes the `staged` dirs, so a failed commit leaves no orphan for
+    * [[vacuum]]. Only NonFatal throws clean up: a control-flow throw
+    * escaping `build` must never delete a winner's data. */
+  private[graft] def claimCommit(fs: FileSystem, root: Path, what: String,
+                                 planned: Option[Commit], staged: Seq[Path],
+                                 conflicts: Option[Commit => Boolean])
+                                (build: Option[Commit] => Commit): Commit = {
+    @annotation.tailrec
+    def attempt(n: Int, base: Option[Commit]): Commit =
+      if (n == MaxClaimAttempts)
+        throw new IllegalStateException(
+          s"$what lost the version race $MaxClaimAttempts times")
+      else claimStamped(fs, root, build(base)) match {
+        case Some(won) => won
+        case None =>
+          val head = latestCommit(fs, root)
+          for (conflict <- conflicts; h <- head) {
+            ((base.fold(0L)(_.version) + 1L) to h.version).iterator
+              .map(readCommit(fs, root, _)).find(conflict).foreach { ic =>
+                throw new java.util.ConcurrentModificationException(
+                  s"$what planned against v${planned.fold(0L)(_.version)} " +
+                    s"conflicts with concurrent v${ic.version} (${ic.action}) " +
+                    "— re-plan")
+              }
+          }
+          attempt(n + 1, head)
+      }
+    try attempt(0, planned)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        staged.foreach(fs.delete(_, true))
+        throw e
+    }
+  }
+
+  /** Row-level DELETE as a MERGE-ON-READ commit — the write-cheap
+    * twin of the copy-on-write [[deleteWhere]]: instead of rewriting
+    * every affected file, the matching rows' POSITIONS land in a
+    * position-delete file (`dv-<uuid>/`, rows of (file_rel, pos) —
+    * the deletion-vector design the reference's table format and
+    * Iceberg v2 use) and every reader anti-joins them inside the same
+    * scan. At 100 TB this turns "delete one user from 10k hot files"
+    * from a 10k-file rewrite into an O(matched rows) write — the read
+    * side pays one (usually broadcast) anti-join until a later
+    * OPTIMIZE/compaction rewrites the files clean. Snapshot totals
+    * stay exactly certified: the commit subtracts the deleted rows'
+    * digests (computed on the same planning scan). Returns None when
+    * nothing matches. Concurrency: conflicts with any intervening
+    * overwrite/schema/layout/constraint change, or a rewrite or MoR
+    * commit touching a covered file ([[commitConflicts]]); disjoint
+    * appends, rewrites and MoR commits retry through. */
   def deleteWhereMoR(spark: SparkSession, path: String,
                      pred: org.apache.spark.sql.Column): Option[Commit] = {
     val root = new Path(path)
@@ -583,32 +628,15 @@ object Versioned {
       matched.select(col("__rel").as("file_rel"), col("__pos").as("pos"))
         .write.parquet(dvDir.toString)
       val dvFiles = listDataFiles(fs, dvDir, dvDirName).map(_._1)
-      var base = head
-      var attempt = 0
-      while (attempt < 20) {
-        val c = Commit(base.version + 1L, "delete_mor", Nil, head.schemaJson,
+      Some(claimCommit(fs, root, s"MoR delete at $path", Some(head), Seq(dvDir),
+          Some(commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))) { b =>
+        val base = b.get
+        Commit(base.version + 1L, "delete_mor", Nil, head.schemaJson,
           0L, 0L, base.snapshotRows - delRows, base.snapshotFp - delFp,
           Nil, None, Map.empty, pcols, None, None, dvFiles,
           dvCovered = covered.toSeq.sorted,
           colMap = head.colMap, droppedPhys = head.droppedPhys)
-        claimStamped(fs, root, c).foreach(cc => return Some(cc))
-        val newHead = latestCommit(fs, root).get
-        val intervening = (base.version + 1L to newHead.version)
-          .map(v => readCommit(fs, root, v))
-        val conflict = intervening.find(
-          commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))
-        conflict.foreach { ic =>
-          fs.delete(dvDir, true)
-          throw new java.util.ConcurrentModificationException(
-            s"MoR delete at $path planned against v${head.version} conflicts " +
-              s"with concurrent v${ic.version} (${ic.action}) — re-plan")
-        }
-        base = newHead
-        attempt += 1
-      }
-      fs.delete(dvDir, true)
-      throw new IllegalStateException(
-        s"MoR delete at $path lost the version race 20 times")
+      })
     } finally matched.unpersist()
   }
 
@@ -668,36 +696,19 @@ object Versioned {
           pcols, cons, st.colMap)
         catch { case e: Throwable =>
           fs.delete(dataDir, true); fs.delete(dvDir, true); throw e }
-      val files = sized.map(_._1)
-      var base = head
-      var attempt = 0
-      while (attempt < 20) {
-        val c = Commit(base.version + 1L, "upsert_mor", files, head.schemaJson,
-          addRows, addFp,
+      claimCommit(fs, root, s"MoR upsert at $path", Some(head),
+          Seq(dataDir, dvDir),
+          Some(commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))) { b =>
+        val base = b.get
+        Commit(base.version + 1L, "upsert_mor", sized.map(_._1),
+          head.schemaJson, addRows, addFp,
           base.snapshotRows - delRows + addRows,
           base.snapshotFp - delFp + addFp,
           Nil, None, stats, pcols, None, None, dvFiles,
           dvCovered = covered.toSeq.sorted,
           colMap = head.colMap, droppedPhys = head.droppedPhys,
           addSizes = sized.map(_._2))
-        claimStamped(fs, root, c).foreach(cc => return cc)
-        val newHead = latestCommit(fs, root).get
-        val intervening = (base.version + 1L to newHead.version)
-          .map(v => readCommit(fs, root, v))
-        val conflict = intervening.find(
-          commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))
-        conflict.foreach { ic =>
-          fs.delete(dataDir, true); fs.delete(dvDir, true)
-          throw new java.util.ConcurrentModificationException(
-            s"MoR upsert at $path planned against v${head.version} conflicts " +
-              s"with concurrent v${ic.version} (${ic.action}) — re-plan")
-        }
-        base = newHead
-        attempt += 1
       }
-      fs.delete(dataDir, true); fs.delete(dvDir, true)
-      throw new IllegalStateException(
-        s"MoR upsert at $path lost the version race 20 times")
     } finally matched.unpersist()
   }
 
@@ -896,67 +907,35 @@ object Versioned {
           catch { case e: Throwable =>
             fs.delete(dataDir, true); fs.delete(dvDir, true); throw e }
         }
-      val files = sized.map(_._1)
-      if (evolving) {
-        // ---- schema-evolving MoR commit: epoch recompute of the
-        // TOTALS only (data movement stays O(matched + inserted)) —
-        // the live contribution of every active file under the evolved
-        // schema with the in-force vectors PLUS this merge's new
-        // tombstones applied, then the appends. Aborts on any race
-        // (evolution commits never merge with concurrent writes).
-        var attempt = 0
-        while (attempt < 20) {
-          val h = latestCommit(fs, root).get
-          if (h.version != head.version) {
-            fs.delete(dataDir, true); fs.delete(dvDir, true)
-            throw new java.util.ConcurrentModificationException(
-              s"schema-evolving MoR merge at $path planned against " +
-                s"v${head.version} but head is v${h.version} — re-plan")
-          }
-          val (liveRows, liveFp) = digestFiles(spark, root, st.active,
-            outSchema, pcols, st.dvs ++ dvFiles, outMap)
-          val c = Commit(h.version + 1L, "merge_mor", files, outSchema.json,
-            addRows, addFp, liveRows + addRows, liveFp + addFp,
-            Nil, None, stats, pcols, None, None, dvFiles,
-            dvCovered = covered.toSeq.sorted,
-            colMap = outMap, droppedPhys = head.droppedPhys,
-            widenedCols = widened, addSizes = sized.map(_._2))
-          claimStamped(fs, root, c).foreach(cc => return cc)
-          attempt += 1
-        }
-        fs.delete(dataDir, true); fs.delete(dvDir, true)
-        throw new IllegalStateException(
-          s"schema-evolving MoR merge at $path lost the version race 20 times")
-      }
-      var base = head
-      var attempt = 0
-      while (attempt < 20) {
-        val c = Commit(base.version + 1L, "merge_mor", files, head.schemaJson,
-          addRows, addFp,
-          base.snapshotRows - delRows + addRows,
-          base.snapshotFp - delFp + addFp,
+      // a schema-evolving merge pays the epoch recompute of its TOTALS
+      // only (data movement stays O(matched + inserted)) — the live
+      // contribution of every active file under the evolved schema with
+      // the in-force vectors PLUS this merge's new tombstones applied,
+      // then the appends — and aborts on any race (evolution commits
+      // never merge with concurrent writes)
+      val conflicts: Commit => Boolean =
+        if (evolving) _ => true
+        else commitConflicts(_, covered, head.schemaJson, head.colMap, pcols)
+      claimCommit(fs, root,
+          s"${if (evolving) "schema-evolving " else ""}MoR merge at $path",
+          Some(head), Seq(dataDir, dvDir), Some(conflicts)) { b =>
+        val base = b.get
+        val (snapRows, snapFp) =
+          if (evolving) {
+            val (liveRows, liveFp) = digestFiles(spark, root, st.active,
+              outSchema, pcols, st.dvs ++ dvFiles, outMap)
+            (liveRows + addRows, liveFp + addFp)
+          } else (base.snapshotRows - delRows + addRows,
+            base.snapshotFp - delFp + addFp)
+        Commit(base.version + 1L, "merge_mor", sized.map(_._1),
+          if (evolving) outSchema.json else head.schemaJson,
+          addRows, addFp, snapRows, snapFp,
           Nil, None, stats, pcols, None, None, dvFiles,
           dvCovered = covered.toSeq.sorted,
-          colMap = head.colMap, droppedPhys = head.droppedPhys,
-          addSizes = sized.map(_._2))
-        claimStamped(fs, root, c).foreach(cc => return cc)
-        val newHead = latestCommit(fs, root).get
-        val intervening = (base.version + 1L to newHead.version)
-          .map(v => readCommit(fs, root, v))
-        val conflict = intervening.find(
-          commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))
-        conflict.foreach { ic =>
-          fs.delete(dataDir, true); fs.delete(dvDir, true)
-          throw new java.util.ConcurrentModificationException(
-            s"MoR merge at $path planned against v${head.version} conflicts " +
-              s"with concurrent v${ic.version} (${ic.action}) — re-plan")
-        }
-        base = newHead
-        attempt += 1
+          colMap = if (evolving) outMap else head.colMap,
+          droppedPhys = head.droppedPhys,
+          widenedCols = widened, addSizes = sized.map(_._2))
       }
-      fs.delete(dataDir, true); fs.delete(dvDir, true)
-      throw new IllegalStateException(
-        s"MoR merge at $path lost the version race 20 times")
     } finally claimed.unpersist()
   }
 
@@ -1210,16 +1189,11 @@ object Versioned {
       catch { case e: Throwable => fs.delete(dataDir, true); throw e }
     val files = sized.map(_._1)
     val removedSet = affected.toSet
-    var attempt = 0
-    while (attempt < 20) {
-      val h = latestCommit(fs, root).get
-      if (h.version != head.version) {
-        fs.delete(dataDir, true)
-        throw new java.util.ConcurrentModificationException(
-          s"schema-evolving merge at $path planned against " +
-            s"v${head.version} but head is v${h.version} — re-plan " +
-            "(evolution commits never merge with concurrent writes)")
-      }
+    // evolution commits never merge with concurrent writes: any
+    // intervening commit aborts
+    claimCommit(fs, root, s"schema-evolving merge at $path", Some(head),
+        Seq(dataDir), Some(_ => true)) { b =>
+      val h = b.get
       // the epoch recompute: untouched files digested under the
       // EVOLVED schema (missing columns read null -> the 'N' sentinel;
       // widened columns promote natively), with IN-FORCE DELETION
@@ -1237,17 +1211,12 @@ object Versioned {
       val purgedDvs = stH.dvs.filter { d =>
         cov.get(d).exists(s => s.nonEmpty && !s.exists(newActive.contains))
       }
-      val c = Commit(h.version + 1L, "merge", files, outSchema.json,
+      Commit(h.version + 1L, "merge", files, outSchema.json,
         addRows, addFp, remRows + addRows, remFp + addFp, affected, None,
         stats, pcols, dvRemove = purgedDvs,
         colMap = evolvedMap, droppedPhys = head.droppedPhys,
         widenedCols = widened, addSizes = sized.map(_._2))
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1
     }
-    fs.delete(dataDir, true)
-    throw new IllegalStateException(
-      s"schema-evolving merge at $path lost the version race 20 times")
   }
 
   /** Coverage of every deletion-vector file ever committed (metadata
@@ -1319,7 +1288,6 @@ object Versioned {
   private def rewriteCommit(spark: SparkSession, root: Path, fs: FileSystem,
                             head: Commit, rebuilt: DataFrame,
                             removed: Seq[String], action: String = "rewrite",
-                            maxRetries: Int = 20,
                             requireContentPreserved: Boolean = false): Commit = {
     val pcols = head.partitionCols
     val cons = checksOf(fs, root, head.version)
@@ -1362,9 +1330,14 @@ object Versioned {
           "maintenance must never change table content; staging deleted")
     }
     val removedSet = removed.toSet
-    var base = head
-    var attempt = 0
-    while (attempt < maxRetries) {
+    // a lost claim runs the disjoint-file recheck: an intervening MoR
+    // delete/upsert conflicts only when its archived coverage touches
+    // this rewrite's removed files (the survivors were computed before
+    // it and would resurrect its deleted rows)
+    claimCommit(fs, root, s"rewrite of $root", Some(head), Seq(dataDir),
+        Some(commitConflicts(_, removedSet, head.schemaJson, head.colMap,
+          pcols))) { b =>
+      val base = b.get
       // PURGE deletion vectors this rewrite strands: a dv file none of
       // whose covered data files stays active is dead weight — every
       // read pays its anti-join and retention must keep it. Decided
@@ -1376,36 +1349,14 @@ object Versioned {
       val purgedDvs = baseState.dvs.filter { d =>
         cov.get(d).exists(s => s.nonEmpty && !s.exists(newActive.contains))
       }
-      val c = Commit(base.version + 1L, action, files, head.schemaJson,
+      Commit(base.version + 1L, action, files, head.schemaJson,
         addRows, addFp,
         base.snapshotRows - remRows + addRows,
         base.snapshotFp - remFp + addFp, removed, None, stats, pcols,
         dvRemove = purgedDvs,
         colMap = head.colMap, droppedPhys = head.droppedPhys,
         addSizes = sized.map(_._2))
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      // lost the claim: the disjoint-file recheck — an intervening MoR
-      // delete/upsert conflicts only when its archived coverage touches
-      // this rewrite's removed files (the survivors were computed
-      // before it and would resurrect its deleted rows)
-      val newHead = latestCommit(fs, root).get
-      val intervening = (base.version + 1L to newHead.version)
-        .map(v => readCommit(fs, root, v))
-      val conflict = intervening.find(
-        commitConflicts(_, removedSet, head.schemaJson, head.colMap, pcols))
-      conflict.foreach { ic =>
-        fs.delete(dataDir, true)
-        throw new java.util.ConcurrentModificationException(
-          s"rewrite of $root planned against v${head.version} conflicts " +
-            s"with concurrent v${ic.version} (${ic.action}) — re-plan " +
-            "against the new head")
-      }
-      base = newHead
-      attempt += 1
     }
-    fs.delete(dataDir, true)
-    throw new IllegalStateException(
-      s"rewrite of $root lost the version race $maxRetries times")
   }
 
   /** Transactionally-tagged append for exactly-once streaming sinks:
@@ -1422,17 +1373,15 @@ object Versioned {
     * txnApp (foreachBatch's model — a batch is retried only after
     * failure, never concurrently). */
   def idempotentAppend(df: DataFrame, path: String, txnApp: String,
-                       txnBatch: Long, maxRetries: Int = 20): Option[Commit] = {
-    val spark = df.sparkSession
+                       txnBatch: Long): Option[Commit] = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val seen = listVersions(fs, root).lastOption.exists(head =>
-      stateAt(fs, root, head).txns.get(txnApp).exists(_ >= txnBatch))
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    // one listing serves the dedup check and the commit's stage-time reads
+    val log = listLog(fs, root)
+    val seen = log.versions.lastOption.exists(head =>
+      stateAt(fs, root, head, log).txns.get(txnApp).exists(_ >= txnBatch))
     if (seen) None
-    else {
-      val pcols = latestCommit(fs, root).map(_.partitionCols).getOrElse(Nil)
-      Some(commit(df, path, "append", maxRetries, Some((txnApp, txnBatch)), pcols))
-    }
+    else Some(commit(df, path, "append", Some((txnApp, txnBatch)), listed = Some(log)))
   }
 
   /** Exactly-once STREAMING SINK into a versioned table: every
@@ -1466,21 +1415,29 @@ object Versioned {
   private def orderedFields(s: StructType): Seq[(String, String)] =
     s.map(f => f.name -> f.dataType.simpleString)
 
+  /** Stage `df1` and claim it as an `append` or `overwrite` version.
+    * `listed` is a log listing the caller already holds (a stale one
+    * only costs a lost claim); an append inherits the head's partition
+    * layout, an overwrite takes `partitionBy`. */
   private def commit(df1: DataFrame, path: String, action: String,
-                     maxRetries: Int, txn: Option[(String, Long)] = None,
-                     partitionCols: Seq[String] = Nil): Commit = {
+                     txn: Option[(String, Long)] = None,
+                     partitionBy: Seq[String] = Nil,
+                     listed: Option[LogListing] = None): Commit = {
     val spark = df1.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // ONE stage-time read of the head record and ONE state fold feed
-    // everything below (r14: these were four latestCommit reads and
-    // three stateAt folds — the dominant metadata cost of a small
-    // commit); the claim loop still re-reads and re-validates against
-    // whatever head it actually serializes after, as the protocol
-    // requires
-    val head0 = latestCommit(fs, root)
-    val rules0 = head0.map(h => stateAt(fs, root, h.version))
+    // ONE log listing, ONE stage-time read of the head record and ONE
+    // state fold feed everything below (r14: these were four
+    // latestCommit reads and three stateAt folds — the dominant
+    // metadata cost of a small commit); only a lost claim re-reads and
+    // re-validates against the head it then serializes after
+    val log = listed.getOrElse(listLog(fs, root))
+    val head0 = log.versions.lastOption.map(readCommit(fs, root, _))
+    val rules0 = head0.map(h => stateAt(fs, root, h.version, log))
+    val partitionCols =
+      if (action == "append") head0.map(_.partitionCols).getOrElse(Nil)
+      else partitionBy
 
     // GENERATED COLUMNS: a frame that omits a generated column gets it
     // computed here (the write-path convenience the definitions buy);
@@ -1539,55 +1496,47 @@ object Versioned {
       catch { case e: Throwable => fs.delete(dataDir, true); throw e }
     val files = sized.map(_._1)
 
-    // 2. claim loop: validate against the CURRENT head, try to create
-    // the next version's record exclusively, retry on loss
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestCommit(fs, root)
-      head.foreach { h =>
+    // 2. claim: the first attempt builds against the staged-against
+    // head, which every check below already passed; after a lost claim
+    // they re-validate against the head the claim then serializes after
+    claimCommit(fs, root, s"versioned commit to $path", head0, Seq(dataDir),
+        conflicts = None) { head =>
+      for (h <- head if !head0.exists(_.version == h.version)) {
         if (action == "append") {
           // ORDER-SENSITIVE re-check against the head the claim actually
           // serializes after: a concurrent overwrite/evolution may have
           // changed the field order the staged data was digested under
           val headFields = orderedFields(
             DataType.fromJson(h.schemaJson).asInstanceOf[StructType])
-          if (headFields != orderedFields(df.schema)) {
-            fs.delete(dataDir, true)
+          if (headFields != orderedFields(df.schema))
             throw new IllegalStateException(
               s"versioned append schema mismatch at $path v${h.version} " +
                 s"(mergeSchema is pinned false):\n" +
                 s"  table:    ${headFields.mkString(", ")}\n" +
                 s"  incoming: ${orderedFields(df.schema).mkString(", ")}")
-          }
-          if (h.partitionCols != partitionCols) {
-            fs.delete(dataDir, true)
+          if (h.partitionCols != partitionCols)
             throw new IllegalStateException(
               s"versioned append partition-layout mismatch at $path " +
                 s"v${h.version}: table is partitioned by " +
                 s"[${h.partitionCols.mkString(", ")}], append staged " +
                 s"[${partitionCols.mkString(", ")}]")
-          }
           // the staged files were written under the column mapping read
           // at stage time — a concurrent rename (or an overwrite that
           // reset the map) makes their PHYSICAL names stale
-          if (h.colMap != cmap) {
-            fs.delete(dataDir, true)
+          if (h.colMap != cmap)
             throw new java.util.ConcurrentModificationException(
               s"column mapping at $path changed concurrently — restage")
-          }
         }
         // the staged data was validated against the rule set read at
         // stage time — a concurrently added/dropped constraint or
         // generated column makes that validation stale (the rule set
         // rides the checkpoint state, so this re-check is O(tail))
         val cur = checksOf(fs, root, h.version)
-        if (cur != cons) {
-          fs.delete(dataDir, true)
+        if (cur != cons)
           throw new java.util.ConcurrentModificationException(
             s"constraints at $path changed concurrently " +
               s"(staged against ${cons.map(_._1)}, head has " +
               s"${cur.map(_._1)}) — restage")
-        }
       }
       val version = head.map(_.version).getOrElse(0L) + 1L
       val (snapRows, snapFp) = action match {
@@ -1595,15 +1544,10 @@ object Versioned {
           head.map(_.snapshotFp).getOrElse(0L) + addFp)
         case _ => (nRows, addFp)
       }
-      val c = Commit(version, action, files, df.schema.json, nRows, addFp,
+      Commit(version, action, files, df.schema.json, nRows, addFp,
         snapRows, snapFp, Nil, txn, stats, partitionCols,
         colMap = cmap, droppedPhys = dropped, addSizes = sized.map(_._2))
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1 // lost the race: another writer claimed this version
     }
-    fs.delete(dataDir, true)
-    throw new IllegalStateException(
-      s"versioned commit to $path lost the version race $maxRetries times")
   }
 
   // ---------- public read surface ----------
@@ -3586,15 +3530,16 @@ object Versioned {
     * (great_expectations/ in the reference repo), enforced by the
     * storage layer itself. */
   def addConstraint(spark: SparkSession, path: String, name: String,
-                    predicateSql: String, maxRetries: Int = 20): Commit = {
+                    predicateSql: String): Commit = {
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name `$name` must match [A-Za-z0-9_]+")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestCommit(fs, root).getOrElse(
-        throw new IllegalStateException(s"no commits at $path"))
+    val planned = latestCommit(fs, root).getOrElse(
+      throw new IllegalStateException(s"no commits at $path"))
+    claimCommit(fs, root, s"addConstraint at $path", Some(planned), Nil,
+        conflicts = None) { b =>
+      val head = b.get
       val existing = constraintsOf(fs, root, head.version)
       require(!existing.exists(_._1 == name),
         s"constraint `$name` already exists at $path")
@@ -3606,15 +3551,11 @@ object Versioned {
       require(bad == 0L,
         s"cannot add CHECK constraint `$name` at $path: existing rows " +
           s"violate ($predicateSql)")
-      val c = Commit(head.version + 1L, "alter", Nil, head.schemaJson,
+      Commit(head.version + 1L, "alter", Nil, head.schemaJson,
         0L, 0L, head.snapshotRows, head.snapshotFp, Nil, None, Map.empty,
         head.partitionCols, Some((name, predicateSql)), None,
         colMap = head.colMap, droppedPhys = head.droppedPhys)
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1 // lost the race: revalidate against the new head
     }
-    throw new IllegalStateException(
-      s"addConstraint at $path lost the version race $maxRetries times")
   }
 
   /** Declare an existing column GENERATED (metadata commit): from this
@@ -3628,15 +3569,16 @@ object Versioned {
     * hand again). The column must already exist in the schema and the
     * CURRENT content must satisfy the equality (validated here). */
   def addGeneratedColumn(spark: SparkSession, path: String, name: String,
-                         exprSql: String, maxRetries: Int = 20): Commit = {
+                         exprSql: String): Commit = {
     require(name.matches("[A-Za-z0-9_]+"),
       s"generated column name `$name` must match [A-Za-z0-9_]+")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestCommit(fs, root).getOrElse(
-        throw new IllegalStateException(s"no commits at $path"))
+    val planned = latestCommit(fs, root).getOrElse(
+      throw new IllegalStateException(s"no commits at $path"))
+    claimCommit(fs, root, s"addGeneratedColumn at $path", Some(planned), Nil,
+        conflicts = None) { b =>
+      val head = b.get
       val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
       require(headSchema.fieldNames.contains(name),
         s"generated column `$name` must already exist in the schema at $path " +
@@ -3648,60 +3590,48 @@ object Versioned {
       require(bad == 0L,
         s"cannot declare `$name` generated at $path: existing rows do not " +
           s"equal ($exprSql)")
-      val c = Commit(head.version + 1L, "alter", Nil, head.schemaJson,
+      Commit(head.version + 1L, "alter", Nil, head.schemaJson,
         0L, 0L, head.snapshotRows, head.snapshotFp, Nil, None, Map.empty,
         head.partitionCols, None, None, Nil, Some((name, exprSql)), None,
         colMap = head.colMap, droppedPhys = head.droppedPhys)
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"addGeneratedColumn at $path lost the version race $maxRetries times")
   }
 
   /** Remove a generated-column definition (metadata commit) — the
     * column stays, writers must provide it again. */
-  def dropGeneratedColumn(spark: SparkSession, path: String, name: String,
-                          maxRetries: Int = 20): Commit = {
+  def dropGeneratedColumn(spark: SparkSession, path: String, name: String): Commit = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestCommit(fs, root).getOrElse(
-        throw new IllegalStateException(s"no commits at $path"))
+    val planned = latestCommit(fs, root).getOrElse(
+      throw new IllegalStateException(s"no commits at $path"))
+    claimCommit(fs, root, s"dropGeneratedColumn at $path", Some(planned), Nil,
+        conflicts = None) { b =>
+      val head = b.get
       require(generatedOf(fs, root, head.version).exists(_._1 == name),
         s"column `$name` is not generated at $path")
-      val c = Commit(head.version + 1L, "alter", Nil, head.schemaJson,
+      Commit(head.version + 1L, "alter", Nil, head.schemaJson,
         0L, 0L, head.snapshotRows, head.snapshotFp, Nil, None, Map.empty,
         head.partitionCols, None, None, Nil, None, Some(name),
         colMap = head.colMap, droppedPhys = head.droppedPhys)
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"dropGeneratedColumn at $path lost the version race $maxRetries times")
   }
 
   /** DROP a CHECK constraint (metadata commit). */
-  def dropConstraint(spark: SparkSession, path: String, name: String,
-                     maxRetries: Int = 20): Commit = {
+  def dropConstraint(spark: SparkSession, path: String, name: String): Commit = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestCommit(fs, root).getOrElse(
-        throw new IllegalStateException(s"no commits at $path"))
+    val planned = latestCommit(fs, root).getOrElse(
+      throw new IllegalStateException(s"no commits at $path"))
+    claimCommit(fs, root, s"dropConstraint at $path", Some(planned), Nil,
+        conflicts = None) { b =>
+      val head = b.get
       require(constraintsOf(fs, root, head.version).exists(_._1 == name),
         s"constraint `$name` does not exist at $path")
-      val c = Commit(head.version + 1L, "alter", Nil, head.schemaJson,
+      Commit(head.version + 1L, "alter", Nil, head.schemaJson,
         0L, 0L, head.snapshotRows, head.snapshotFp, Nil, None, Map.empty,
         head.partitionCols, None, Some(name),
         colMap = head.colMap, droppedPhys = head.droppedPhys)
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"dropConstraint at $path lost the version race $maxRetries times")
   }
 
   /** Conservative "does this SQL expression mention the identifier"
@@ -3724,15 +3654,16 @@ object Versioned {
     * CHECK-constraint / generated-column expressions (the archived SQL
     * would silently dangle). */
   def renameColumn(spark: SparkSession, path: String, oldName: String,
-                   newName: String, maxRetries: Int = 20): Commit = {
+                   newName: String): Commit = {
     require(newName.matches("[A-Za-z0-9_]+"),
       s"column name `$newName` must match [A-Za-z0-9_]+")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestCommit(fs, root).getOrElse(
-        throw new IllegalStateException(s"no commits at $path"))
+    val planned = latestCommit(fs, root).getOrElse(
+      throw new IllegalStateException(s"no commits at $path"))
+    claimCommit(fs, root, s"renameColumn at $path", Some(planned), Nil,
+        conflicts = None) { b =>
+      val head = b.get
       val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
       require(headSchema.fieldNames.contains(oldName),
         s"cannot rename `$oldName` at $path: no such column " +
@@ -3758,15 +3689,11 @@ object Versioned {
         .sortBy(_._1)
       val newSchema = StructType(headSchema.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f))
-      val c = Commit(head.version + 1L, "alter", Nil, newSchema.json,
+      Commit(head.version + 1L, "alter", Nil, newSchema.json,
         0L, 0L, head.snapshotRows, head.snapshotFp, Nil, None, Map.empty,
         head.partitionCols, None, None, Nil, None, None, Nil, Nil,
         newMap, head.droppedPhys)
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"renameColumn at $path lost the version race $maxRetries times")
   }
 
   /** DROP a column as a METADATA-ONLY commit: no file is rewritten —
@@ -3779,14 +3706,14 @@ object Versioned {
     * same documented epoch price as [[appendEvolve]] — after which
     * appends are additive again. Refused for partition columns,
     * generated columns, referenced columns and the last column. */
-  def dropColumn(spark: SparkSession, path: String, name: String,
-                 maxRetries: Int = 20): Commit = {
+  def dropColumn(spark: SparkSession, path: String, name: String): Commit = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestCommit(fs, root).getOrElse(
-        throw new IllegalStateException(s"no commits at $path"))
+    val planned = latestCommit(fs, root).getOrElse(
+      throw new IllegalStateException(s"no commits at $path"))
+    claimCommit(fs, root, s"dropColumn at $path", Some(planned), Nil,
+        conflicts = None) { b =>
+      val head = b.get
       val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
       require(headSchema.fieldNames.contains(name),
         s"cannot drop `$name` at $path: no such column")
@@ -3813,15 +3740,11 @@ object Versioned {
       val st = activeAt(fs, root, path, head.version)
       val (rows, fp) = digestFiles(spark, root, st.active, newSchema,
         st.partitionCols, st.dvs, newMap)
-      val c = Commit(head.version + 1L, "alter", Nil, newSchema.json,
+      Commit(head.version + 1L, "alter", Nil, newSchema.json,
         0L, 0L, rows, fp, Nil, None, Map.empty,
         head.partitionCols, None, None, Nil, None, None, Nil, Nil,
         newMap, newDropped)
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"dropColumn at $path lost the version race $maxRetries times")
   }
 
   /** RESTORE the table to the content of `toVersion` as a NEW commit —
@@ -3833,8 +3756,7 @@ object Versioned {
     * change feed across the restore shows exactly the rows that came
     * back / vanished (the overwrite diff). The roll-back-a-bad-deploy
     * move at O(1 log record) cost, whatever the table size. */
-  def restore(spark: SparkSession, path: String, toVersion: Long,
-              maxRetries: Int = 20): Commit = {
+  def restore(spark: SparkSession, path: String, toVersion: Long): Commit = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tState = activeAt(fs, root, path, toVersion)
@@ -3850,9 +3772,9 @@ object Versioned {
       val sz = active.map(tFold.sizes.get)
       if (sz.nonEmpty && sz.forall(_.isDefined)) sz.map(_.get) else Nil
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = latestCommit(fs, root).get
+    claimCommit(fs, root, s"restore of $path", latestCommit(fs, root), Nil,
+        conflicts = None) { b =>
+      val head = b.get
       // the restored content must satisfy constraints and generated
       // definitions added AFTER toVersion — a rollback is not a bypass
       val cons = checksOf(fs, root, head.version)
@@ -3865,16 +3787,12 @@ object Versioned {
               s"constraint `$n` ($p) added since")
         }
       }
-      val c = Commit(head.version + 1L, "overwrite", active, tc.schemaJson,
+      Commit(head.version + 1L, "overwrite", active, tc.schemaJson,
         tc.snapshotRows, tc.snapshotFp, tc.snapshotRows, tc.snapshotFp,
         Nil, None, tFold.stats, tc.partitionCols, None, None, dvs,
         colMap = tc.colMap, droppedPhys = tc.droppedPhys,
         addSizes = restoredSizes)
-      claimStamped(fs, root, c).foreach(cc => return cc)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"restore of $path lost the version race $maxRetries times")
   }
 
   /** SHALLOW CLONE: a new table at `dstPath` whose v1 references the
@@ -4119,8 +4037,9 @@ object Versioned {
     * removed files' (rows, fp) or the optimize aborts and deletes its
     * staging — a maintenance job can never silently corrupt the table.
     *
-    * `zorderBy` sorts by the fused Morton code of two non-negative
-    * integral dimensions (see [[graft.functions.ZValue]] and
+    * `zorderBy` sorts by the fused Morton code of two or more
+    * (`n * zBits <= 63`) distinct non-negative integral dimensions
+    * (see [[graft.functions.ZValue]] and
     * [[Ingest.writeZOrdered]] for the skipping math); `sortBy` gives a
     * 1-d linear layout; neither = pure compaction (bin-packing small
     * files, no shuffle). At 100 TB the rewrite cost is O(active data)
@@ -4138,28 +4057,20 @@ object Versioned {
     * output files before touching the log or starting a Spark job. */
   def optimize(spark: SparkSession, path: String, numFiles: Int,
                sortBy: Seq[String] = Nil,
-               zorderBy: Option[(String, String)] = None,
+               zorderBy: Seq[String] = Nil,
                zBits: Int = 16,
-               where: Option[Map[String, Option[String]] => Boolean] = None,
-               zorderByN: Seq[String] = Nil)
+               where: Option[Map[String, Option[String]] => Boolean] = None)
       : Option[Commit] = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    // zorderBy (the 2-d pair) and zorderByN (any >= 2 column list) are
-    // the same layout — n = 2 interleaves bit-identically — kept as two
-    // spellings for source compatibility; give at most one of the three
-    val zCols: Seq[String] =
-      zorderBy.map(t => Seq(t._1, t._2)).getOrElse(zorderByN)
-    require(zorderBy.isEmpty || zorderByN.isEmpty,
-      "give zorderBy OR zorderByN, not both")
-    require(sortBy.isEmpty || zCols.isEmpty,
+    require(sortBy.isEmpty || zorderBy.isEmpty,
       "give sortBy OR a z-order column list, not both")
-    require(zCols.isEmpty || zCols.size >= 2,
-      s"z-ordering needs >= 2 columns, got $zCols (use sortBy for 1-d)")
-    require(zCols.distinct == zCols, s"duplicate z-order columns: $zCols")
-    require(zCols.isEmpty || zCols.size * zBits <= 63,
-      s"${zCols.size} z-order dims x $zBits bits exceed a positive long " +
+    require(zorderBy.isEmpty || zorderBy.size >= 2,
+      s"z-ordering needs >= 2 columns, got $zorderBy (use sortBy for 1-d)")
+    require(zorderBy.distinct == zorderBy, s"duplicate z-order columns: $zorderBy")
+    require(zorderBy.isEmpty || zorderBy.size * zBits <= 63,
+      s"${zorderBy.size} z-order dims x $zBits bits exceed a positive long " +
         "(n*bits <= 63) — lower zBits")
-    require(zCols.isEmpty || numFiles <= MaxZOrderFiles,
+    require(zorderBy.isEmpty || numFiles <= MaxZOrderFiles,
       s"z-order optimize of $path into $numFiles files exceeds the " +
         s"$MaxZOrderFiles-file bound of its bucket probe table — lower numFiles")
     val root = new Path(path)
@@ -4179,7 +4090,7 @@ object Versioned {
     val cur = readFilesDF(spark, root, active, schema, pcols,
       dvFiles = st.dvs, colMap = st.colMap)
     val laid =
-      if (zCols.nonEmpty) {
+      if (zorderBy.nonEmpty) {
         // domain-checked like Ingest.checkedZ: an out-of-range value
         // would silently collapse onto an unrelated z-code and quietly
         // void the skipping contract (the r5 lesson)
@@ -4209,11 +4120,11 @@ object Versioned {
         // what the reader prunes on (span boundaries are width-based,
         // not power-of-two aligned — the stats, not the spans, carry
         // the per-dimension guarantee).
-        val zMax = 1L << (zCols.size * zBits)
+        val zMax = 1L << (zorderBy.size * zBits)
         val fullSt = stateAt(fs, root, head.version)
         val physZ = st.colMap.toMap
         val envFromStats: Option[Seq[(Long, Long)]] = {
-          val per = zCols.map { c =>
+          val per = zorderBy.map { c =>
             val p = physZ.getOrElse(c, c)
             val perFile = active.map(f => fullSt.stats.get(f).flatMap(_.get(p)))
             if (perFile.exists(_.isEmpty)) None
@@ -4223,11 +4134,11 @@ object Versioned {
           if (per.exists(_.isEmpty)) None else Some(per.map(_.get))
         }
         val env = envFromStats.getOrElse {
-          val aggs = zCols.flatMap(c =>
+          val aggs = zorderBy.flatMap(c =>
             Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
           val r = cur.agg(aggs.head, aggs.tail: _*).head()
           // an all-null dimension nulls every z anyway — any envelope works
-          zCols.indices.map(i =>
+          zorderBy.indices.map(i =>
             if (r.isNullAt(2 * i)) (0L, 0L)
             else (r.getLong(2 * i), r.getLong(2 * i + 1)))
         }
@@ -4269,7 +4180,7 @@ object Versioned {
           out.toSeq
         }
         cur.withColumn("__z",
-            graft.functions.z_value_n(zCols.map(checked), zBits))
+            graft.functions.z_value_n(zorderBy.map(checked), zBits))
           .withColumn("__zb",
             expr(s"least(greatest((__z - $zLo) div $bucketWidth, 0), " +
               s"${numFiles - 1})"))
@@ -5037,31 +4948,37 @@ object Versioned {
     * O(history) replay degradation (ADVICE r12). */
   private[graft] val autoCheckpointFailures = new java.util.concurrent.atomic.AtomicLong
 
-  /** The atomic version claim. `file://`: NIO `CREATE_NEW` is an O_EXCL
-    * open — kernel-atomic, no check-then-create window (Hadoop's
+  /** The atomic version claim: the LogStore TEMP-THEN-PUBLISH pattern —
+    * the record is fully written to a dot-prefixed temp name (invisible
+    * to [[listVersions]]) and then published under its version name in
+    * one atomic step, so a reader (a loser re-reading the head, a
+    * winner reading its parent's ts) can never observe a torn or
+    * zero-length record, and a failure while WRITING throws (my write
+    * failed) instead of being misreported as a lost race that would
+    * leave a poisoned record occupying the claimed version. The publish
+    * step is the claim arbiter. `file://`: a hard link, which link(2)
+    * refuses atomically when the name exists (Hadoop's
     * LocalFileSystem.create(overwrite=false) only CHECKS first, a race
-    * hole). Other schemes: the LogStore TEMP-THEN-RENAME pattern — the
-    * record is fully written to a dot-prefixed temp name (invisible to
-    * [[listVersions]]) and atomically renamed into place, so a reader
-    * can never observe a torn or zero-length record, and a failure
-    * while WRITING throws (my write failed) instead of being
-    * misreported as a lost race that would leave a poisoned record
-    * occupying the claimed version. `rename` refusing an existing
-    * destination (HDFS semantics) is the claim arbiter. Returns false
+    * hole; a plain `CREATE_NEW` write is exclusive but exposes the
+    * record empty until its bytes land). Other schemes: `rename`
+    * refusing an existing destination (HDFS semantics). Returns false
     * only when another writer holds the version. */
   private def atomicCreate(fs: FileSystem, p: Path, bytes: Array[Byte]): Boolean = {
     fs.mkdirs(p.getParent)
+    val tmpName =
+      s".tmp-${p.getName}-${java.util.UUID.randomUUID().toString.take(8)}"
     if ("file" == fs.getScheme) {
       val local = java.nio.file.Paths.get(p.toUri.getPath)
-      try {
-        java.nio.file.Files.write(local, bytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      val tmp = local.resolveSibling(tmpName)
+      java.nio.file.Files.write(tmp, bytes,
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+      // the temp unlink never throws: a won claim must not read as failed
+      try { java.nio.file.Files.createLink(local, tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally tmp.toFile.delete()
     } else {
       if (fs.exists(p)) return false // cheap fast-path; rename still arbitrates
-      val tmp = new Path(p.getParent,
-        s".tmp-${p.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+      val tmp = new Path(p.getParent, tmpName)
       // a failure HERE propagates: the version is not claimed and the
       // caller must not treat it as a lost race
       val out = fs.create(tmp, true)

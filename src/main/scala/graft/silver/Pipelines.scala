@@ -220,39 +220,22 @@ object Pipelines {
     * `collect_set` (one integer compare per new element).
     *
     * A pre-aggregation COUNT guard was built and measured first (r6,
-    * Explore `preguardAB` at sf0.1): +70–130% on q11/q25/q26/q79 —
-    * mostly-unique grouping keys defeat map-side combine and the extra
-    * pass re-pays the generator's input lineage (the r5 q95 count-gate
-    * failure mode) — and was rejected for this in-buffer bound.
+    * sf0.1, PLAN_AUDIT.md "r6 measured experiments"): +70–130% on
+    * q11/q25/q26/q79 — mostly-unique grouping keys defeat map-side
+    * combine and the extra pass re-pays the generator's input lineage
+    * (the r5 q95 count-gate failure mode) — and was rejected for this
+    * in-buffer bound.
     *
     * Truncating paths keep the built-in `collect_set`: truncation must
     * deterministically keep the `maxGroupSize` SMALLEST items
     * ([[capGroups]] sort+slice), which a bounded buffer that refuses
     * arbitrary late arrivals cannot honor.
     */
-  /** Warn-once latch for the `graft.boundedcollect.off` A/B switch: the
-    * property exists ONLY so Explore `preguardAB` can interleave the two
-    * collectors in one JVM. Setting it in production keeps correctness
-    * (the [[capGroups]] post-aggregation `raise_error` still fires) but
-    * silently-no-more drops the in-buffer MEMORY bound — hence the loud
-    * warning the first time a plan is built with it active. */
-  private val warnedBoundedOff = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def boundedCollectOff: Boolean = {
-    val off = sys.props.contains("graft.boundedcollect.off")
-    if (off && warnedBoundedOff.compareAndSet(false, true))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        "graft.boundedcollect.off is set: fail-loud caps fall back to plain " +
-          "collect_set + post-aggregation guard. This is the Explore A/B " +
-          "switch — correctness is preserved, but the in-buffer memory bound " +
-          "is OFF; do not set it in production.")
-    off
-  }
-
   private def groupedItems(pairs: DataFrame, groupCol: String, itemCol: String,
                            cap: Int, failOnOverflow: Boolean,
                            opName: String): DataFrame = {
     val collector =
-      if (failOnOverflow && !boundedCollectOff)
+      if (failOnOverflow)
         graft.functions.bounded_collect_set(col(itemCol), cap, opName)
       else collect_set(col(itemCol))
     pairs.groupBy(col(groupCol).as("g"))

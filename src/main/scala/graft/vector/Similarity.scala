@@ -275,12 +275,13 @@ object Similarity {
     * recall for genuine near-dups (cosine ≥ 0.99) is 1 − ~10⁻¹¹ at the
     * defaults — see the [[embeddingNearDup]] recall analysis.
     *
-    * Regime note (measured, Explore `crossAB`): while |corpus|·|probes|
-    * is small enough to brute-force (≲10⁸ cosines), a broadcast cross
-    * join is FASTER than this operator's fixed cost (two band-key
-    * generates + three shuffles) — prefer [[cosineTopK]]'s shape there.
-    * This operator is for the corpus-scale regime where the product is
-    * impossible and only the linear-in-|corpus| LSH path survives.
+    * Regime note (measured, PLAN_AUDIT.md "r6 measured experiments"):
+    * while |corpus|·|probes| is small enough to brute-force (≲10⁸
+    * cosines), a broadcast cross join is FASTER than this operator's
+    * fixed cost (two band-key generates + three shuffles) — prefer
+    * [[cosineTopK]]'s shape there. This operator is for the
+    * corpus-scale regime where the product is impossible and only the
+    * linear-in-|corpus| LSH path survives.
     *
     * Geometry auto-sizes by the PROBE count ([[sizeBands]]): expected
     * candidates are b · n_corpus · (n_probes / 2^r) on decorrelated

@@ -81,7 +81,7 @@ class PlanShapeSpec extends SparkTestBase {
     // the r6 contract: bounded_collect_set enforces the cap during
     // accumulation, so the fail-loud variant's plan is exchange-for-
     // exchange identical to the truncating one. A regression back to a
-    // pre-pass guard (measured +70–130% at sf0.1, Explore preguardAB)
+    // pre-pass guard (measured +70–130% at sf0.1, PLAN_AUDIT.md r6)
     // would show up here as extra exchanges.
     val pt = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L), (2L, 11L))
       .toDF("playlist_id", "track_id")

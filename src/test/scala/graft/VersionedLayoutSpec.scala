@@ -171,7 +171,7 @@ class VersionedLayoutSpec extends SparkTestBase {
       Versioned.readAsOfPruned(spark, tbl, v0, "x", 0L, 3L)
     assert(scanned0 == total0, "arrival order: zone maps prune nothing")
     val c = Versioned.optimize(spark, tbl, numFiles = 4,
-      zorderBy = Some(("x", "y")), zBits = 8).get
+      zorderBy = Seq("x", "y"), zBits = 8).get
     val (pruned, scanned1, total1) =
       Versioned.readAsOfPruned(spark, tbl, c.version, "x", 0L, 3L)
     assert(total1 == 4 && scanned1 < total1,
@@ -192,7 +192,7 @@ class VersionedLayoutSpec extends SparkTestBase {
     val head = Versioned.latestVersion(spark, tbl)
     val (err, jobs) = org.apache.spark.sql.graftshim.JobProbe.jobsStarted(spark) {
       intercept[IllegalArgumentException](Versioned.optimize(spark, tbl,
-        numFiles = Versioned.MaxZOrderFiles + 1, zorderBy = Some(("x", "y"))))
+        numFiles = Versioned.MaxZOrderFiles + 1, zorderBy = Seq("x", "y")))
     }
     assert(err.getMessage.contains(s"${Versioned.MaxZOrderFiles}-file bound"),
       err.getMessage)

@@ -384,7 +384,7 @@ class VersionedModelSpec extends SparkTestBase {
         case 14 => // Z-ORDERED optimize (content-preserving layout; ids
           // and v both stay far inside the 2^16 z-domain)
           Versioned.optimize(spark, root, numFiles = 1 + rnd.nextInt(2),
-            zorderByN = Seq("id", "v"))
+            zorderBy = Seq("id", "v"))
         case 15 => // CHECK-constraint toggle (metadata commit; every
           // generated row satisfies it, so writes keep landing) —
           // constraints are table properties: they survive overwrites

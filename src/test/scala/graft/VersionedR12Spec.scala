@@ -304,7 +304,7 @@ class VersionedR12Spec extends SparkTestBase {
     }.toDF("id", "a", "b", "c")
     Versioned.overwrite(rows, tbl)
     val c = Versioned.optimize(spark, tbl, numFiles = 8,
-      zorderByN = Seq("a", "b", "c"), zBits = 4).get
+      zorderBy = Seq("a", "b", "c"), zBits = 4).get
     // content identity is certified at commit time (the additive
     // fingerprint aborts a corrupting rewrite) — and replays green
     assert(certified(tbl, c.version))
@@ -318,12 +318,12 @@ class VersionedR12Spec extends SparkTestBase {
         s"zone-map pruning on `$dim` must skip files: $scanned/$total")
     }
     val e = intercept[IllegalArgumentException] {
-      Versioned.optimize(spark, tbl, 4, zorderByN = Seq("a"))
+      Versioned.optimize(spark, tbl, 4, zorderBy = Seq("a"))
     }
     assert(e.getMessage.contains(">= 2"))
     val e2 = intercept[IllegalArgumentException] {
       Versioned.optimize(spark, tbl, 4,
-        zorderByN = Seq("a", "b", "c"), zBits = 30)
+        zorderBy = Seq("a", "b", "c"), zBits = 30)
     }
     assert(e2.getMessage.contains("n*bits"))
   }

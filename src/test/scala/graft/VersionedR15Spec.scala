@@ -10,7 +10,7 @@ import graft.ingest.{Fingerprint, Versioned}
   * the same immutable records every commit), and the bounded overlapped
   * footer-read wait (ADVICE r14 — Await(Inf) on the shared pool could
   * hang a commit forever; now a timeout falls back to serial reads), and
-  * the single log listing behind a head read.
+  * the single log listing behind a head read and an uncontended commit.
   */
 class VersionedR15Spec extends SparkTestBase {
   import spark.implicits._
@@ -91,6 +91,25 @@ class VersionedR15Spec extends SparkTestBase {
     assert(Versioned.logListings.get() - l0 == 1L,
       s"expected one log listing, saw ${Versioned.logListings.get() - l0}")
     assert(rowSet(head) == Set(Seq(1L, "a"), Seq(2L, "b"), Seq(3L, "c")))
+  }
+
+  test("an uncontended append, overwrite and idempotentAppend list the log at most twice") {
+    val tbl = tmp("budget") + "/tbl"
+    Versioned.overwrite(df((1L, "a")), tbl)
+    def listings(commit: => Any): Long = {
+      val l0 = Versioned.logListings.get()
+      commit
+      Versioned.logListings.get() - l0
+    }
+    val appended = listings(Versioned.append(df((2L, "b")), tbl))
+    val overwritten = listings(Versioned.overwrite(df((3L, "c")), tbl))
+    val tagged = listings(Versioned.idempotentAppend(df((4L, "d")), tbl, "app", 1L))
+    // v2..v4: no auto-checkpoint cadence hit adds its own listings
+    assert((2L to 4L).forall(_ % Versioned.autoCheckpointInterval != 0L))
+    assert(Versioned.latestVersion(spark, tbl) == 4L)
+    assert(appended <= 2L && overwritten <= 2L && tagged <= 2L,
+      s"listings: append $appended, overwrite $overwritten, " +
+        s"idempotentAppend $tagged")
   }
 
   test("a cache hit is indistinguishable from a re-parse across the state surface") {

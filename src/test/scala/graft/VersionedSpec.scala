@@ -113,6 +113,75 @@ class VersionedSpec extends SparkTestBase {
     } finally pool.shutdownNow()
   }
 
+  // ---------------------------------------------- the one claim loop
+
+  /** A table at v1 plus rows staged (invisible) under a fresh data dir,
+    * and a `build` that appends the staged files on top of any head. */
+  private def staged(rows: (Long, String)*) = {
+    val tbl = tmp()
+    val head = Some(Versioned.overwrite(df(1L -> "a"), tbl))
+    val root = new org.apache.hadoop.fs.Path(tbl)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = new org.apache.hadoop.fs.Path(root, "d-claimspec")
+    val frame = df(rows: _*)
+    val (sized, n, fp, stats) =
+      Versioned.stageAndDigest(frame, root, fs, dir, dir.getName, frame.schema, Nil)
+    def build(b: Option[Versioned.Commit]): Versioned.Commit = {
+      val h = b.get
+      Versioned.Commit(h.version + 1L, "append", sized.map(_._1),
+        frame.schema.json, n, fp, h.snapshotRows + n, h.snapshotFp + fp,
+        stats = stats, addSizes = sized.map(_._2))
+    }
+    (tbl, root, fs, dir, head, build _)
+  }
+
+  test("claim loop: a build pinned to a claimed version exhausts and drops its staging") {
+    val (tbl, root, fs, dir, head, build) = staged(2L -> "b")
+    val e = intercept[IllegalStateException](
+      Versioned.claimCommit(fs, root, s"pinned commit to $tbl", head, Seq(dir),
+        conflicts = None)(_ => build(head).copy(version = 1L)))
+    assert(e.getMessage.endsWith(
+      s"lost the version race ${Versioned.MaxClaimAttempts} times"), e.getMessage)
+    assert(Versioned.MaxClaimAttempts == 20)
+    assert(!fs.exists(dir), "exhaustion must delete the staged dir")
+    assert(Versioned.latestVersion(spark, tbl) == 1L)
+  }
+
+  test("claim loop: a conflicting intervening commit aborts and drops its staging") {
+    val (tbl, root, fs, dir, head, build) = staged(2L -> "b")
+    Versioned.append(df(3L -> "c"), tbl) // lands v2 after `head` was read
+    intercept[java.util.ConcurrentModificationException](
+      Versioned.claimCommit(fs, root, s"test commit to $tbl", head, Seq(dir),
+        Some(_.action == "append"))(build))
+    assert(!fs.exists(dir), "a conflict must delete the staged dir")
+    assert(rowSet(Versioned.read(spark, tbl)) == Set(Seq(1L, "a"), Seq(3L, "c")))
+  }
+
+  test("claim loop: a throwing build rethrows the same exception and drops its staging") {
+    val (_, root, fs, dir, head, _) = staged(2L -> "b")
+    val boom = new java.io.IOException("record read failed")
+    val e = intercept[java.io.IOException](
+      Versioned.claimCommit(fs, root, "failing commit", head, Seq(dir),
+        conflicts = None)(_ => throw boom))
+    assert(e eq boom)
+    assert(!fs.exists(dir), "a throwing build must delete the staged dir")
+  }
+
+  test("claim loop: a winning claim keeps its staged files readable") {
+    val (tbl, root, fs, dir, head, build) = staged(2L -> "b", 3L -> "c")
+    Versioned.append(df(4L -> "d"), tbl) // non-conflicting: lose once, rebase
+    val c = Versioned.claimCommit(fs, root, s"test commit to $tbl", head,
+      Seq(dir), Some(_ => false))(build)
+    assert(c.version == 3L)
+    assert(fs.exists(dir))
+    assert(rowSet(Versioned.read(spark, tbl)) ==
+      Set(Seq(1L, "a"), Seq(2L, "b"), Seq(3L, "c"), Seq(4L, "d")))
+    val (n, fp) = Versioned.archivedFingerprint(spark, tbl, 3L)
+    val r = Versioned.read(spark, tbl).agg(count(lit(1)),
+      sum(Fingerprint.rowDigest(Seq(col("id"), col("t"))))).head()
+    assert((r.getLong(0), r.getLong(1)) == ((n, fp)))
+  }
+
   test("vacuum removes only unreferenced (crashed-writer) data dirs") {
     val tbl = tmp()
     Versioned.overwrite(df(1L -> "a"), tbl)
