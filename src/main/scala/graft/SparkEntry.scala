@@ -4170,7 +4170,7 @@ object SparkEntry {
           col("p_brand").as("artist"), col("p_type").as("genre")),
         userId = DemoUser, k = 10)),
 
-    // TIMESTAMP AS OF time travel (ingest/Versioned.claimStamped /
+    // TIMESTAMP AS OF time travel (ingest/TableLog.claimStamped, Versioned.
     // versionAsOfTimestamp / readAsOfTimestamp): every commit record
     // is stamped max(wall clock, parent ts + 1) — the Delta rule — so
     // version order and timestamp order always agree and wall-clock

@@ -22,22 +22,20 @@ class StageDigestParitySpec extends SparkTestBase {
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_parity_$name").toString
 
-  private def fsOf(p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def logOf(dir: String) = graft.ingest.TableLog(spark, dir)
 
   /** Stage with the one-pass path AND re-digest the same staged dir with
     * the legacy read-back; return ((rows, fp, stats), (rows, fp, stats)). */
   private def both(df: org.apache.spark.sql.DataFrame,
                    partitionCols: Seq[String] = Nil,
                    cons: Seq[(String, String)] = Nil) = {
-    val root = new Path(tmp("t"))
-    val fs = fsOf(root)
+    val log = logOf(tmp("t"))
     val dataDirName = "d-test0001"
-    val dataDir = new Path(root, dataDirName)
+    val dataDir = new Path(log.root, dataDirName)
     val (sized, n, fp, stats) = Versioned.stageAndDigest(
-      df, root, fs, dataDir, dataDirName, df.schema, partitionCols, cons)
+      df, log, dataDir, df.schema, partitionCols, cons)
     val (n2, fp2, stats2) = Versioned.digestDir(
-      spark, dataDir, dataDirName, df.schema, partitionCols, cons)
+      spark, log, dataDir, df.schema, partitionCols, cons)
     assert(sized.nonEmpty || n == 0L)
     ((n, fp, stats), (n2, fp2, stats2))
   }
@@ -91,12 +89,11 @@ class StageDigestParitySpec extends SparkTestBase {
   }
 
   test("CHECK constraints enforce during the write; staging is digest-refused") {
-    val root = new Path(tmp("ck"))
-    val fs = fsOf(root)
-    val dataDir = new Path(root, "d-ckfail01")
+    val log = logOf(tmp("ck"))
+    val dataDir = new Path(log.root, "d-ckfail01")
     val bad = Seq((1L, 5L), (2L, -1L)).toDF("k", "v")
     val e = intercept[Exception] {
-      Versioned.stageAndDigest(bad, root, fs, dataDir, "d-ckfail01",
+      Versioned.stageAndDigest(bad, log, dataDir,
         bad.schema, Nil, constraints = Seq(("v_nonneg", "v >= 0")))
     }
     assert(messages(e).exists(_.contains("CHECK constraint `v_nonneg` violated")),

@@ -1,0 +1,108 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.FaultFs
+
+import graft.ingest.Versioned
+
+/** The table log's storage seam, measured on the counting filesystem
+  * (`graftshim/FaultFs`): the metadata I/O an uncontended operation
+  * pays under `_graft_log`, and a time-travel horizon that survives a
+  * failed publish. */
+class TableLogSpec extends SparkTestBase {
+  import spark.implicits._
+
+  FaultFs.install(spark)
+
+  private def table(name: String): (String, java.io.File) = {
+    val local = java.nio.file.Files.createTempDirectory(s"graft_tlog_$name")
+      .toFile.getAbsolutePath + "/t"
+    (FaultFs.path(local), new java.io.File(local))
+  }
+
+  private def df(rows: (Long, String)*): DataFrame =
+    rows.toDF("id", "t").coalesce(1)
+
+  /** (list, open, create, rename) calls `body` makes under `_graft_log`. */
+  private def logIo(body: => Any): (Int, Int, Int, Int) = {
+    val (_, calls) = FaultFs.recorded(body)
+    val log = calls.filter(_.path.toString.contains("/_graft_log"))
+    def n(op: String) = log.count(_.op == op)
+    (n("list"), n("open"), n("create"), n("rename"))
+  }
+
+  test("uncontended append, overwrite, idempotentAppend and read stay in their metadata-I/O budget") {
+    val (tbl, _) = table("budget")
+    Versioned.overwrite(df(1L -> "a"), tbl)
+    Versioned.append(df(2L -> "b"), tbl)
+    val append = logIo(Versioned.append(df(3L -> "c"), tbl))
+    val overwrite = logIo(Versioned.overwrite(df(4L -> "d"), tbl))
+    val tagged = logIo(Versioned.idempotentAppend(df(5L -> "e"), tbl, "app", 1L))
+    val replay = logIo(Versioned.idempotentAppend(df(5L -> "e"), tbl, "app", 1L))
+    val read = logIo(Versioned.read(spark, tbl).collect())
+    // v3..v5: no auto-checkpoint cadence hit adds its own I/O
+    assert((3L to 5L).forall(_ % Versioned.autoCheckpointInterval != 0L))
+    assert(Versioned.latestVersion(spark, tbl) == 5L)
+    // no checkpoint yet, so a commit at head vH pays: one listing; one
+    // nonce-prefix read (memo hit) for the head record, one per record
+    // of the vH-record fold and one for the claim's parent record; one
+    // temp-record create and one publishing rename
+    assert(append == ((1, 4, 1, 1)), s"append at v2 $append")
+    assert(overwrite == ((1, 5, 1, 1)), s"overwrite at v3 $overwrite")
+    assert(tagged == ((1, 6, 1, 1)), s"idempotentAppend at v4 $tagged")
+    // a replayed batch stops at the watermark: no stage, no claim
+    assert(replay == ((1, 6, 0, 0)), s"replayed idempotentAppend $replay")
+    // a read folds the v5 state: no head read, no claim
+    assert(read == ((1, 5, 0, 0)), s"read $read")
+  }
+
+  test("the txn watermark check shares the commit's single state fold") {
+    val (tbl, _) = table("fold")
+    Versioned.overwrite(df(1L -> "a"), tbl)
+    Versioned.append(df(2L -> "b"), tbl)
+    Versioned.append(df(3L -> "c"), tbl)
+    val r0 = Versioned.commitRecordReads.get()
+    Versioned.idempotentAppend(df(4L -> "d"), tbl, "app", 1L)
+    // head read + the three-record fold + the claim's parent read
+    assert(Versioned.commitRecordReads.get() - r0 == 5L)
+  }
+
+  test("a failed horizon publish keeps the old horizon and every unswept file") {
+    val (tbl, _) = table("horizon")
+    (1L to 6L).foreach(i => Versioned.overwrite(df(i -> s"r$i"), tbl))
+    assert(Versioned.vacuumVersions(spark, tbl, retainLast = 4)._2 == 3L)
+    // the second sweep's publish fails: the rename of its temp horizon
+    val (fired, thrown) = FaultFs.failing(c =>
+      c.op == "rename" && c.path.getName.startsWith(".tmp-horizon"))(
+      Versioned.vacuumVersions(spark, tbl, retainLast = 1))
+    assert(fired && thrown.isDefined)
+    // below the old horizon: still the loud refusal, never a missing file
+    val e = intercept[IllegalArgumentException](Versioned.readAsOf(spark, tbl, 2L))
+    assert(e.getMessage.contains("horizon is 3"), e.getMessage)
+    // at and above it: whole, because nothing is deleted before the publish
+    (3L to 6L).foreach(v =>
+      assert(rowSet(Versioned.readAsOf(spark, tbl, v)) == Set(Seq(v, s"r$v"))))
+    // the retried sweep publishes and reclaims
+    assert(Versioned.vacuumVersions(spark, tbl, retainLast = 1)._2 == 6L)
+    intercept[IllegalArgumentException](Versioned.readAsOf(spark, tbl, 5L))
+    assert(rowSet(Versioned.read(spark, tbl)) == Set(Seq(6L, "r6")))
+  }
+
+  test("horizons are published as names, and a legacy horizon file is still honoured") {
+    val (tbl, root) = table("names")
+    (1L to 4L).foreach(i => Versioned.overwrite(df(i -> s"r$i"), tbl))
+    Versioned.vacuumVersions(spark, tbl, retainLast = 3)
+    Versioned.vacuumVersions(spark, tbl, retainLast = 2)
+    val log = new java.io.File(root, Versioned.LogDir)
+    assert(log.list().filter(_.startsWith("horizon-")).toSeq ==
+      Seq("horizon-00000003.json"), "one name per table: superseded ones go")
+    // a table vacuumed by an engine that wrote only the legacy file
+    val (legacy, lroot) = table("legacy")
+    (1L to 3L).foreach(i => Versioned.overwrite(df(i -> s"r$i"), legacy))
+    java.nio.file.Files.write(
+      new java.io.File(new java.io.File(lroot, Versioned.LogDir), "horizon").toPath,
+      """{"horizon":3}""".getBytes)
+    val e = intercept[IllegalArgumentException](Versioned.readAsOf(spark, legacy, 2L))
+    assert(e.getMessage.contains("horizon is 3"), e.getMessage)
+  }
+}

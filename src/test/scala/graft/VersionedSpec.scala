@@ -120,25 +120,25 @@ class VersionedSpec extends SparkTestBase {
   private def staged(rows: (Long, String)*) = {
     val tbl = tmp()
     val head = Some(Versioned.overwrite(df(1L -> "a"), tbl))
-    val root = new org.apache.hadoop.fs.Path(tbl)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(root, "d-claimspec")
+    val log = graft.ingest.TableLog(spark, tbl)
+    val fs = log.fs
+    val dir = new org.apache.hadoop.fs.Path(log.root, "d-claimspec")
     val frame = df(rows: _*)
     val (sized, n, fp, stats) =
-      Versioned.stageAndDigest(frame, root, fs, dir, dir.getName, frame.schema, Nil)
+      Versioned.stageAndDigest(frame, log, dir, frame.schema, Nil)
     def build(b: Option[Versioned.Commit]): Versioned.Commit = {
       val h = b.get
       Versioned.Commit(h.version + 1L, "append", sized.map(_._1),
         frame.schema.json, n, fp, h.snapshotRows + n, h.snapshotFp + fp,
         stats = stats, addSizes = sized.map(_._2))
     }
-    (tbl, root, fs, dir, head, build _)
+    (tbl, log, fs, dir, head, build _)
   }
 
   test("claim loop: a build pinned to a claimed version exhausts and drops its staging") {
-    val (tbl, root, fs, dir, head, build) = staged(2L -> "b")
+    val (tbl, log, fs, dir, head, build) = staged(2L -> "b")
     val e = intercept[IllegalStateException](
-      Versioned.claimCommit(fs, root, s"pinned commit to $tbl", head, Seq(dir),
+      log.claimCommit(s"pinned commit to $tbl", head, Seq(dir),
         conflicts = None)(_ => build(head).copy(version = 1L)))
     assert(e.getMessage.endsWith(
       s"lost the version race ${Versioned.MaxClaimAttempts} times"), e.getMessage)
@@ -148,29 +148,29 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("claim loop: a conflicting intervening commit aborts and drops its staging") {
-    val (tbl, root, fs, dir, head, build) = staged(2L -> "b")
+    val (tbl, log, fs, dir, head, build) = staged(2L -> "b")
     Versioned.append(df(3L -> "c"), tbl) // lands v2 after `head` was read
     intercept[java.util.ConcurrentModificationException](
-      Versioned.claimCommit(fs, root, s"test commit to $tbl", head, Seq(dir),
+      log.claimCommit(s"test commit to $tbl", head, Seq(dir),
         Some(_.action == "append"))(build))
     assert(!fs.exists(dir), "a conflict must delete the staged dir")
     assert(rowSet(Versioned.read(spark, tbl)) == Set(Seq(1L, "a"), Seq(3L, "c")))
   }
 
   test("claim loop: a throwing build rethrows the same exception and drops its staging") {
-    val (_, root, fs, dir, head, _) = staged(2L -> "b")
+    val (_, log, fs, dir, head, _) = staged(2L -> "b")
     val boom = new java.io.IOException("record read failed")
     val e = intercept[java.io.IOException](
-      Versioned.claimCommit(fs, root, "failing commit", head, Seq(dir),
+      log.claimCommit("failing commit", head, Seq(dir),
         conflicts = None)(_ => throw boom))
     assert(e eq boom)
     assert(!fs.exists(dir), "a throwing build must delete the staged dir")
   }
 
   test("claim loop: a winning claim keeps its staged files readable") {
-    val (tbl, root, fs, dir, head, build) = staged(2L -> "b", 3L -> "c")
+    val (tbl, log, fs, dir, head, build) = staged(2L -> "b", 3L -> "c")
     Versioned.append(df(4L -> "d"), tbl) // non-conflicting: lose once, rebase
-    val c = Versioned.claimCommit(fs, root, s"test commit to $tbl", head,
+    val c = log.claimCommit(s"test commit to $tbl", head,
       Seq(dir), Some(_ => false))(build)
     assert(c.version == 3L)
     assert(fs.exists(dir))
