@@ -41,7 +41,11 @@ import TableLog.{CkptState, LogListing, foldState}
   * crash between data write and log claim leaves an orphaned data dir
   * that no reader ever sees ([[vacuum]] reclaims it). This object is
   * the table semantics on top: what to stage, what a record says, and
-  * how a state folds into a read.
+  * how a state folds into a read. Each public call lists the log once
+  * and folds each version it reads once: the folded state
+  * ([[TableLog.CkptState]], resolved by [[TableLog.stateAt]]) is the
+  * one state value its planning, staging, claim and rebuild all read,
+  * and a lost claim folds it forward over the records that beat it.
   *
   * Each record carries the ADDED files plus the running snapshot totals
   * (`snapshotRows`, `snapshotFp`): because the content fingerprint
@@ -211,22 +215,6 @@ object Versioned {
     }
   }
 
-  /** Replayed table state at one version: active data files, logical
-    * schema, partition layout, in-force deletion-vector files, and the
-    * logical->physical COLUMN MAPPING of that epoch (empty until a
-    * RENAME/DROP commit introduces one — physical names never change
-    * after a file is written, so old files stay readable across
-    * renames, the Delta column-mapping design). */
-  private[ingest] final case class TableState(active: Seq[String],
-                                              schema: StructType,
-                                              partitionCols: Seq[String],
-                                              dvs: Seq[String],
-                                              colMap: Seq[(String, String)]) {
-    /** Physical (on-disk parquet) name of a logical column. */
-    def physOf(logical: String): String =
-      colMap.find(_._1 == logical).map(_._2).getOrElse(logical)
-  }
-
   // ---------- public write surface ----------
 
   /** Append `df` as a new version; schema must match the current head
@@ -338,18 +326,19 @@ object Versioned {
     // column's physical name claims it; then a fresh epoch-suffixed one
     val evolvedMap = evolvedColMap(head, headSchema, newCols.toSeq)
 
-    val cons = checksFrom(log.stateAt(head.version, listing))
+    val st = log.stateAt(head.version, listing)
+    val cons = checksFrom(st)
     log.staging { stage =>
       val (sized, nRows, addFp, stats) = stageAndDigest(ordered, log,
         stage.dir("d"), evolved, pcols, cons, evolvedMap)
       val files = sized.map(_._1)
 
-      stage.claim(s"appendEvolve at $path", headOpt, conflicts = None) { b =>
+      stage.claim(s"appendEvolve at $path", headOpt, st, conflicts = None) { (b, prev) =>
         val h = b.get
         // a CONCURRENT evolution (or constraint change) would make this
         // commit's precomputed schema / validation stale — fail loudly
         // like the COW rewrites do
-        if (h.version != head.version && checksFrom(log.stateAt(h.version)) != cons)
+        if (h.version != head.version && checksFrom(prev) != cons)
           throw new java.util.ConcurrentModificationException(
             s"appendEvolve at $path: constraints changed concurrently — restage")
         if (h.schemaJson != head.schemaJson || h.colMap != head.colMap)
@@ -358,7 +347,6 @@ object Versioned {
               s"(planned against v${head.version}, head is v${h.version}) — re-plan")
         // the epoch recompute: prior content digested under the EVOLVED
         // schema (missing columns read as null -> the 'N' sentinel)
-        val prev = activeAt(log, h.version)
         val pr = digestFiles(spark, log, prev.active, evolved, pcols,
           prev.dvs, evolvedMap)
         Commit(h.version + 1L, "append", files, evolved.json, nRows,
@@ -384,13 +372,13 @@ object Versioned {
     * schema/layout change aborts (ConcurrentModificationException). */
   def deleteWhere(spark: SparkSession, path: String,
                   pred: org.apache.spark.sql.Column): Option[Commit] = {
-    val (head, cur, log) = currentWithFiles(spark, path)
+    val (head, st, cur, log) = currentWithFiles(spark, path)
     val affected = cur.filter(pred).select(col("__file")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     if (affected.isEmpty) return None
     val survivors =
       restrictToFiles(cur, affected).filter(!pred).drop("__file")
-    Some(rewriteCommit(spark, log, head, survivors, affected))
+    Some(rewriteCommit(spark, log, head, st, survivors, affected))
   }
 
   /** COW planning threshold: up to this many affected files the
@@ -555,15 +543,12 @@ object Versioned {
   def deleteWhereMoR(spark: SparkSession, path: String,
                      pred: org.apache.spark.sql.Column): Option[Commit] = {
     val log = TableLog(spark, path)
-    val head = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    val st = activeAt(log, head.version)
+    val (head, st) = headOf(log)
     val schema = st.schema
     val pcols = st.partitionCols
     // the LIVE view (existing DVs already applied), keyed by (file, pos)
-    val matched = readFilesDF(spark, log, st.active, schema, pcols,
-      withRelCol = true, dvFiles = st.dvs, withPosCol = true,
-      colMap = st.colMap).filter(pred)
+    val matched = readState(spark, log, st, st.active, withRelCol = true,
+      withPosCol = true).filter(pred)
     matched.cache()
     try {
       val r = matched.agg(count(lit(1)).as("n"),
@@ -575,8 +560,8 @@ object Versioned {
         .collect().map(_.getString(0)).toSet
       Some(log.staging { stage =>
         val dvFiles = stageVector(log, stage, matched)
-        stage.claim(s"MoR delete at $path", Some(head),
-            Some(commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))) { b =>
+        stage.claim(s"MoR delete at $path", Some(head), st,
+            Some(commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))) { (b, _) =>
           val base = b.get
           Commit(base.version + 1L, "delete_mor", Nil, head.schemaJson,
             0L, 0L, base.snapshotRows - delRows, base.snapshotFp - delFp,
@@ -602,20 +587,16 @@ object Versioned {
                 keyCols: Seq[String]): Commit = {
     require(keyCols.nonEmpty, "upsertMoR needs at least one key column")
     val log = TableLog(spark, path)
-    val head = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-    require(orderedFields(headSchema).toMap == orderedFields(updates.schema).toMap,
-      s"upsertMoR schema mismatch at $path v${head.version}")
-    val upd = updates.select(headSchema.fieldNames.toSeq.map(col): _*)
-    val st = activeAt(log, head.version)
+    val (head, st) = headOf(log)
     val schema = st.schema
+    require(orderedFields(schema).toMap == orderedFields(updates.schema).toMap,
+      s"upsertMoR schema mismatch at $path v${head.version}")
+    val upd = updates.select(schema.fieldNames.toSeq.map(col): _*)
     val pcols = st.partitionCols
-    val cons = checksFrom(log.stateAt(head.version))
+    val cons = checksFrom(st)
     val keys = upd.select(keyCols.map(col): _*).distinct()
-    val matched = readFilesDF(spark, log, st.active, schema, pcols,
-        withRelCol = true, dvFiles = st.dvs, withPosCol = true,
-        colMap = st.colMap)
+    val matched = readState(spark, log, st, st.active, withRelCol = true,
+        withPosCol = true)
       .join(maybeBroadcast(keys), keyCols, "left_semi")
     matched.cache()
     try {
@@ -630,8 +611,8 @@ object Versioned {
         val dvFiles = if (delRows == 0L) Nil else stageVector(log, stage, matched)
         val (sized, addRows, addFp, stats) = stageAndDigest(upd, log,
           stage.dir("d"), schema, pcols, cons, st.colMap)
-        stage.claim(s"MoR upsert at $path", Some(head),
-            Some(commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))) { b =>
+        stage.claim(s"MoR upsert at $path", Some(head), st,
+            Some(commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))) { (b, _) =>
           val base = b.get
           Commit(base.version + 1L, "upsert_mor", sized.map(_._1),
             head.schemaJson, addRows, addFp,
@@ -684,13 +665,11 @@ object Versioned {
       case _ => ()
     }
     val log = TableLog(spark, path)
-    val head = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    val st = activeAt(log, head.version)
+    val (head, st) = headOf(log)
     val schema = st.schema
     val cols = schema.fieldNames.toSeq
     val pcols = st.partitionCols
-    val cons = checksFrom(log.stateAt(head.version))
+    val cons = checksFrom(st)
     val (newCols, widened) = evolutionOf(schema, source, evolveSchema,
       s"mergeMoR evolveSchema at $path")
     val outSchema = evolvedSchema(schema, source, newCols, widened)
@@ -720,8 +699,7 @@ object Versioned {
       val dupKeys = source.groupBy(keyCols.map(col): _*)
         .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
         .select(keyCols.map(col): _*)
-      lazy val probe = readFilesDF(spark, log, st.active, schema, pcols,
-        dvFiles = st.dvs, colMap = st.colMap)
+      lazy val probe = readState(spark, log, st, st.active)
       if (!dupKeys.isEmpty &&
           !probe.join(hinted(dupKeys, srcKeysOk), keyCols, "left_semi").isEmpty)
         throw new IllegalStateException(
@@ -732,9 +710,8 @@ object Versioned {
     val src = source
       .select(source.columns.toSeq.map(c => col(c).as(s"__src_$c")): _*)
     // ONE pass over the table: matched target rows with file+position
-    val tgtMatched = readFilesDF(spark, log, st.active, schema, pcols,
-        withRelCol = true, dvFiles = st.dvs, withPosCol = true,
-        colMap = st.colMap)
+    val tgtMatched = readState(spark, log, st, st.active, withRelCol = true,
+        withPosCol = true)
       .join(hinted(srcKeys, srcKeysOk), keyCols, "left_semi")
     val joinCond = keyCols.map(k => col(k) === col(s"__src_$k"))
       .reduce(_ && _)
@@ -836,7 +813,7 @@ object Versioned {
           else stageAndDigest(appends, log, stage.dir("d"), outSchema, pcols,
             cons, outMap)
         stage.claim(s"${if (evolving) "schema-evolving " else ""}MoR merge at $path",
-            Some(head), Some(conflicts)) { b =>
+            Some(head), st, Some(conflicts)) { (b, _) =>
           val base = b.get
           val (snapRows, snapFp) =
             if (evolving) {
@@ -867,8 +844,8 @@ object Versioned {
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
              keyCols: Seq[String]): Commit = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val (head, cur, log) = currentWithFiles(spark, path)
-    val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val (head, st, cur, log) = currentWithFiles(spark, path)
+    val headSchema = st.schema
     val headMap = orderedFields(headSchema).toMap
     val incoming = orderedFields(updates.schema).toMap
     require(headMap == incoming,
@@ -888,7 +865,7 @@ object Versioned {
       else restrictToFiles(cur, affected)
         .join(hinted(keys, keysOk), keyCols, "left_anti").drop("__file")
         .unionByName(upd)
-    rewriteCommit(spark, log, head, survivors, affected)
+    rewriteCommit(spark, log, head, st, survivors, affected)
   }
 
   // --------------------------------------------------------------- MERGE
@@ -971,8 +948,8 @@ object Versioned {
             evolveSchema: Boolean = false): Commit = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(clauses.nonEmpty, "merge needs at least one WHEN clause")
-    val (head, cur, log) = currentWithFiles(spark, path)
-    val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val (head, st, cur, log) = currentWithFiles(spark, path)
+    val headSchema = st.schema
     val (newCols, widened) =
       evolutionOf(headSchema, source, evolveSchema, s"merge evolveSchema at $path")
     val outSchema = evolvedSchema(headSchema, source, newCols, widened)
@@ -1092,13 +1069,13 @@ object Versioned {
     val survivors = withAction.filter(!dropCond)
       .select(outSchema.fields.toSeq.map(outCol): _*)
     if (newCols.isEmpty && widened.isEmpty)
-      return rewriteCommit(spark, log, head, survivors, affected,
+      return rewriteCommit(spark, log, head, st, survivors, affected,
         action = "merge")
 
     // ---- schema-evolving commit: epoch recompute, abort on any race
     val evolvedMap = evolvedColMap(head, headSchema, newCols)
     val pcols = head.partitionCols
-    val cons = checksFrom(log.stateAt(head.version))
+    val cons = checksFrom(st)
     val removedSet = affected.toSet
     log.staging { stage =>
       val (sized, addRows, addFp, stats) = stageAndDigest(survivors, log,
@@ -1106,8 +1083,8 @@ object Versioned {
       val files = sized.map(_._1)
       // evolution commits never merge with concurrent writes: any
       // intervening commit aborts
-      stage.claim(s"schema-evolving merge at $path", Some(head),
-          Some(_ => true)) { b =>
+      stage.claim(s"schema-evolving merge at $path", Some(head), st,
+          Some(_ => true)) { (b, stH) =>
         val h = b.get
         // the epoch recompute: untouched files digested under the
         // EVOLVED schema (missing columns read null -> the 'N' sentinel;
@@ -1115,39 +1092,44 @@ object Versioned {
         // VECTORS applied — the recompute digests each remaining file's
         // LIVE contribution, so evolving over a table with live DVs
         // needs no OPTIMIZE-first rewrite (VERDICT r11 #5)
-        val stH = activeAt(log, h.version)
         val remaining = stH.active.filterNot(removedSet)
         val (remRows, remFp) = digestFiles(spark, log, remaining, outSchema,
           pcols, stH.dvs, evolvedMap)
-        // vectors stranded by this merge's rewrite (none of their covered
-        // files stays active) are purged, same rule as rewriteCommit
-        val newActive = (remaining ++ files).toSet
-        val cov = log.stateAt(h.version).dvCoverage
-        val purgedDvs = stH.dvs.filter { d =>
-          cov.get(d).exists(s => s.nonEmpty && !s.exists(newActive.contains))
-        }
+        // vectors stranded by this merge's rewrite are purged, same rule
+        // as rewriteCommit
         Commit(h.version + 1L, "merge", files, outSchema.json,
           addRows, addFp, remRows + addRows, remFp + addFp, affected, None,
-          stats, pcols, dvRemove = purgedDvs,
+          stats, pcols, dvRemove = stranded(stH, (remaining ++ files).toSet),
           colMap = evolvedMap, droppedPhys = head.droppedPhys,
           widenedCols = widened, addSizes = sized.map(_._2))
       }
     }
   }
 
-  /** Head commit + the current table frame tagged with each row's
-    * RELATIVE file path (the copy-on-write planning scan). */
+  /** Head commit and state + the current table frame tagged with each
+    * row's RELATIVE file path (the copy-on-write planning scan). */
   private def currentWithFiles(spark: SparkSession, path: String)
-      : (Commit, DataFrame, TableLog) = {
+      : (Commit, CkptState, DataFrame, TableLog) = {
     val log = TableLog(spark, path)
-    val head = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    val st = activeAt(log, head.version)
-    val cur = readFilesDF(spark, log, st.active, st.schema, st.partitionCols,
-        withRelCol = true, dvFiles = st.dvs, colMap = st.colMap)
+    val (head, st) = headOf(log)
+    val cur = readState(spark, log, st, st.active, withRelCol = true)
       .withColumnRenamed("__rel", "__file")
-    (head, cur, log)
+    (head, st, cur, log)
   }
+
+  /** The head record and its folded state, from one listing of the log. */
+  private def headOf(log: TableLog): (Commit, CkptState) =
+    headStateOf(log).map(st => (log.readCommit(st.version), st)).getOrElse(
+      throw new IllegalStateException(s"no commits at ${log.path}"))
+
+  /** Deletion vectors in force in `st` that none of `active` needs: a
+    * vector none of whose covered data files stays active is dead
+    * weight — every read pays its anti-join and retention must keep it.
+    * Decided from log metadata alone (archived dvCovered); unknown
+    * coverage is kept conservatively (stale entries match nothing). */
+  private def stranded(st: CkptState, active: Set[String]): Seq[String] =
+    st.dvs.filter(d => st.dvCoverage.get(d)
+      .exists(s => s.nonEmpty && !s.exists(active.contains)))
 
   /** Digest scans actually launched (test hook): the certify-from-log
     * spec asserts a full-set rewrite consults the archived totals
@@ -1188,18 +1170,17 @@ object Versioned {
     * delete predicate — the documented WriteSerializable trade, not
     * full Serializable.) */
   private def rewriteCommit(spark: SparkSession, log: TableLog,
-                            head: Commit, rebuilt: DataFrame,
+                            head: Commit, st: CkptState, rebuilt: DataFrame,
                             removed: Seq[String], action: String = "rewrite",
                             requireContentPreserved: Boolean = false): Commit = {
     val pcols = head.partitionCols
-    val cons = checksFrom(log.stateAt(head.version))
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val cons = checksFrom(st)
+    val schema = st.schema
     val removedSet = removed.toSet
     log.staging { stage =>
       val (sized, addRows, addFp, stats) = stageAndDigest(rebuilt, log,
         stage.dir("d"), schema, pcols, cons, head.colMap)
       val files = sized.map(_._1)
-      val headState = activeAt(log, head.version)
       // CERTIFY FROM THE LOG where it is exact (r15, VERDICT r14 #4): a
       // rewrite that replaces the ENTIRE active set (optimize / full
       // compaction — the common maintenance shape) needs the removed
@@ -1214,11 +1195,10 @@ object Versioned {
       // (compactSmallFiles, optimize-where, CoW upsert/delete) still
       // digest exactly their removed subset — O(removed), never O(table).
       val (remRows, remFp) =
-        if (removed.nonEmpty && removedSet == headState.active.toSet)
+        if (removed.nonEmpty && removedSet == st.active.toSet)
           (head.snapshotRows, head.snapshotFp)
         else
-          digestFiles(spark, log, removed, schema, pcols, headState.dvs,
-            head.colMap)
+          digestFiles(spark, log, removed, schema, pcols, st.dvs, head.colMap)
       if (requireContentPreserved && (addRows != remRows || addFp != remFp))
         throw new IllegalStateException(
           s"content-preserving rewrite of ${log.path} is NOT content-identical: " +
@@ -1229,21 +1209,13 @@ object Versioned {
       // delete/upsert conflicts only when its archived coverage touches
       // this rewrite's removed files (the survivors were computed before
       // it and would resurrect its deleted rows)
-      stage.claim(s"rewrite of ${log.path}", Some(head),
+      stage.claim(s"rewrite of ${log.path}", Some(head), st,
           Some(commitConflicts(_, removedSet, head.schemaJson, head.colMap,
-            pcols))) { b =>
+            pcols))) { (b, baseSt) =>
         val base = b.get
-        // PURGE deletion vectors this rewrite strands: a dv file none of
-        // whose covered data files stays active is dead weight — every
-        // read pays its anti-join and retention must keep it. Decided
-        // from log metadata alone (archived dvCovered); unknown coverage
-        // is kept conservatively (stale entries match nothing).
-        val baseState = activeAt(log, base.version)
-        val newActive = (baseState.active.filterNot(removedSet) ++ files).toSet
-        val cov = log.stateAt(base.version).dvCoverage
-        val purgedDvs = baseState.dvs.filter { d =>
-          cov.get(d).exists(s => s.nonEmpty && !s.exists(newActive.contains))
-        }
+        // PURGE the deletion vectors this rewrite strands
+        val purgedDvs = stranded(baseSt,
+          (baseSt.active.filterNot(removedSet) ++ files).toSet)
         Commit(base.version + 1L, action, files, head.schemaJson,
           addRows, addFp,
           base.snapshotRows - remRows + addRows,
@@ -1323,11 +1295,10 @@ object Versioned {
     // re-validates against the head it then serializes after
     val listing = listed.getOrElse(log.list())
     val head0 = listing.versions.lastOption.map(log.readCommit)
-    val rules0 = head0.map(h => log.stateAt(h.version, listing))
+    val st0 = head0.fold(CkptState.Empty)(h => log.stateAt(h.version, listing))
     // the exactly-once sink's dedup, on the same fold: this app already
     // committed this batch or a later one
-    if (txn.exists { case (app, batch) =>
-          rules0.exists(_.txns.get(app).exists(_ >= batch)) })
+    if (txn.exists { case (app, batch) => st0.txns.get(app).exists(_ >= batch) })
       return None
     val partitionCols =
       if (action == "append") head0.map(_.partitionCols).getOrElse(Nil)
@@ -1336,8 +1307,7 @@ object Versioned {
     // GENERATED COLUMNS: a frame that omits a generated column gets it
     // computed here (the write-path convenience the definitions buy);
     // a frame that PROVIDES one is validated in the digest scan below
-    val gens = rules0.map(_.generated).getOrElse(Nil)
-    val df0 = gens.foldLeft(df1) { case (d, (n, e)) =>
+    val df0 = st0.generated.foldLeft(df1) { case (d, (n, e)) =>
       if (d.columns.contains(n)) d else d.withColumn(n, expr(e))
     }
 
@@ -1348,7 +1318,7 @@ object Versioned {
     // the additive snapshot digest stable across the table's life
     val df = head0 match {
       case Some(h) if action == "append" =>
-        val headSchema = DataType.fromJson(h.schemaJson).asInstanceOf[StructType]
+        val headSchema = st0.schema
         val headMap = orderedFields(headSchema).toMap
         val incoming = orderedFields(df0.schema).toMap
         if (headMap != incoming)
@@ -1364,7 +1334,7 @@ object Versioned {
     // active CHECK constraints + generated-column equalities at stage
     // time — enforced inside the digest scan; the claim loop
     // re-verifies the rule set did not change
-    val cons = rules0.map(checksFrom).getOrElse(Nil)
+    val cons = checksFrom(st0)
 
     // column mapping + dropped-physical ledger: an APPEND inherits the
     // head's (files must be written under the current physical names);
@@ -1390,14 +1360,13 @@ object Versioned {
       // 2. claim: the first attempt builds against the staged-against
       // head, which every check below already passed; after a lost claim
       // they re-validate against the head the claim then serializes after
-      stage.claim(s"versioned commit to $path", head0, conflicts = None) { head =>
+      stage.claim(s"versioned commit to $path", head0, st0, conflicts = None) { (head, st) =>
         for (h <- head if !head0.exists(_.version == h.version)) {
           if (action == "append") {
             // ORDER-SENSITIVE re-check against the head the claim actually
             // serializes after: a concurrent overwrite/evolution may have
             // changed the field order the staged data was digested under
-            val headFields = orderedFields(
-              DataType.fromJson(h.schemaJson).asInstanceOf[StructType])
+            val headFields = orderedFields(st.schema)
             if (headFields != orderedFields(df.schema))
               throw new IllegalStateException(
                 s"versioned append schema mismatch at $path v${h.version} " +
@@ -1420,8 +1389,8 @@ object Versioned {
           // the staged data was validated against the rule set read at
           // stage time — a concurrently added/dropped constraint or
           // generated column makes that validation stale (the rule set
-          // rides the checkpoint state, so this re-check is O(tail))
-          val cur = checksFrom(log.stateAt(h.version))
+          // rides the folded state, so this re-check reads nothing)
+          val cur = checksFrom(st)
           if (cur != cons)
             throw new java.util.ConcurrentModificationException(
               s"constraints at $path changed concurrently " +
@@ -1457,46 +1426,22 @@ object Versioned {
     * because data files are immutable. */
   def readAsOf(spark: SparkSession, path: String, version: Long): DataFrame = {
     val log = TableLog(spark, path)
-    readListed(spark, log, version, log.list())
+    val st = log.stateAt(version)
+    readState(spark, log, st, st.active)
   }
 
-  /** [[readAsOf]] over a log listing the caller already holds: every
-    * version at or below the listed head is immutable, so one listing
-    * serves the head lookup, the version check and the state fold. */
-  private def readListed(spark: SparkSession, log: TableLog, version: Long,
-                         listing: LogListing): DataFrame = {
-    val st = activeAt(log, version, listing)
-    readFilesDF(spark, log, st.active, st.schema, st.partitionCols,
-      dvFiles = st.dvs, colMap = st.colMap)
-  }
-
-  /** Replayed [[TableState]] at `version` — from the newest checkpoint
-    * at or before it plus the tail records after. */
-  private def activeAt(log: TableLog, version: Long): TableState =
-    activeAt(log, version, log.list())
-
-  private def activeAt(log: TableLog, version: Long,
-                       ls: LogListing): TableState = {
-    val path = log.path
-    require(ls.versions.contains(version),
-      s"version $version does not exist at $path (have: ${ls.versions.mkString(", ")})")
-    val hz = log.horizon(ls)
-    require(version >= hz,
-      s"version $version at $path was retention-vacuumed " +
-        s"(time-travel horizon is $hz) — its data files are gone")
-    // one checkpoint + tail fold (stateAt / foldState carry the
-    // active-set, deletion-vector and schema-epoch rules: dvs
-    // accumulate, an overwrite resets them to its own record's list —
-    // a restore carries the target version's accumulated list, so
-    // rolled-back MoR deletes stay applied — and a rewrite that left
-    // none of a vector's covered files active PURGES it via dvRemove)
-    val st = log.stateAt(version, ls)
-    if (st.schemaJson.isEmpty)
-      throw new IllegalStateException(s"no schema at $path v$version")
-    TableState(st.active,
-      DataType.fromJson(st.schemaJson).asInstanceOf[StructType],
-      st.partitionCols, st.dvs, st.colMap)
-  }
+  /** Scan `files` of a folded state — a subset of its active files —
+    * under that state's schema, partition layout, in-force deletion
+    * vectors and column mapping (foldState carries the rules: dvs
+    * accumulate, an overwrite resets them to its own record's list — a
+    * restore carries the target version's accumulated list, so
+    * rolled-back MoR deletes stay applied — and a rewrite that left
+    * none of a vector's covered files active PURGES it via dvRemove). */
+  private def readState(spark: SparkSession, log: TableLog, st: CkptState,
+                        files: Seq[String], withRelCol: Boolean = false,
+                        withPosCol: Boolean = false): DataFrame =
+    readFilesDF(spark, log, files, st.schema, st.partitionCols, withRelCol,
+      st.dvs, withPosCol, st.colMap)
 
   /** Stage `df` under `dataDir` — hive partition layout when
     * `partitionCols` is non-empty (Spark's writer drops the partition
@@ -2070,22 +2015,20 @@ object Versioned {
       : (DataFrame, Int, Int) = {
     require(lo <= hi, s"need lo <= hi, got $lo > $hi")
     val log = TableLog(spark, path)
-    val st = activeAt(log, version)
     // zone-map lookup from checkpoint + tail (checkpoints archive the
     // active files' stats, so the pruned read never replays the log;
     // a file whose record carried no stats scans conservatively);
     // archived stats are keyed by PHYSICAL column name — translate the
     // logical query column through the version's mapping
+    val st = log.stateAt(version)
     val physName = st.physOf(colName)
-    val stats = log.stateAt(version).stats
     val kept = st.active.filter { f =>
-      stats.get(f).flatMap(_.get(physName)) match {
+      st.stats.get(f).flatMap(_.get(physName)) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true // unknown stats -> conservative scan
       }
     }
-    (readFilesDF(spark, log, kept, st.schema, st.partitionCols,
-      dvFiles = st.dvs, colMap = st.colMap), kept.size, st.active.size)
+    (readState(spark, log, st, kept), kept.size, st.active.size)
   }
 
   /** [[readAsOf]] with PARTITION PRUNING decided entirely from LOG
@@ -2100,13 +2043,12 @@ object Versioned {
                         (keep: Map[String, Option[String]] => Boolean)
       : (DataFrame, Int, Int) = {
     val log = TableLog(spark, path)
-    val st = activeAt(log, version)
+    val st = log.stateAt(version)
     require(st.partitionCols.nonEmpty,
       s"table at $path is not partitioned as of v$version")
     val kept = st.active.filter(f =>
       keep(partitionValuesOf(f, st.partitionCols)))
-    (readFilesDF(spark, log, kept, st.schema, st.partitionCols,
-      dvFiles = st.dvs, colMap = st.colMap), kept.size, st.active.size)
+    (readState(spark, log, st, kept), kept.size, st.active.size)
   }
 
   // ===================================================== data skipping
@@ -2498,10 +2440,10 @@ object Versioned {
     * IS [NOT] NULL plus the all-null-column case (no comparison is
     * satisfiable on a column with zero non-null values in the
     * file — SQL three-valued logic). */
-  private def skipFileOk(st: TableState,
-                         stats: Map[String, Map[String, (Long, Long)]],
-                         f: String, c: SkipConjunct): Boolean = {
+  private def skipFileOk(st: CkptState, f: String,
+                         c: SkipConjunct): Boolean = {
     import org.apache.spark.sql.types.StringType
+    val stats = st.stats
     def colType(name: String) =
       st.schema.fields.find(_.name == name).map(_.dataType)
     def fileStat(name: String): Option[(Long, Long)] =
@@ -2545,7 +2487,7 @@ object Versioned {
     c match {
       case SkipOpaque(_) => true
       case SkipOr(branches, _) =>
-        branches.exists(_.forall(skipFileOk(st, stats, f, _)))
+        branches.exists(_.forall(skipFileOk(st, f, _)))
       case SkipNull(name, isNull, _) =>
         (fileNulls(name), fileRows) match {
           case (Some(nNull), Some(n)) => if (isNull) nNull > 0 else nNull < n
@@ -2613,15 +2555,14 @@ object Versioned {
   /** Shared pruning pass: the surviving files plus the per-conjunct
     * report. Each conjunct's `prunedFiles` counts what IT ALONE
     * excludes (overlaps between conjuncts are expected). */
-  private def skipPlan(st: TableState,
-                       stats: Map[String, Map[String, (Long, Long)]],
-                       conjs: Seq[SkipConjunct])
+  private def skipPlan(st: CkptState, conjs: Seq[SkipConjunct])
       : (Seq[String], SkipReport) = {
     val total = st.active.size
+    val stats = st.stats
     val perConj = conjs.map { c =>
       val pruned = c match {
         case SkipOpaque(_) => 0
-        case _ => st.active.count(f => !skipFileOk(st, stats, f, c))
+        case _ => st.active.count(f => !skipFileOk(st, f, c))
       }
       def noStats(name: String): Boolean = {
         val k = st.physOf(name)
@@ -2659,7 +2600,7 @@ object Versioned {
       }
       ConjunctReport(c.text, skippable, pruned, detail)
     }
-    val kept = st.active.filter(f => conjs.forall(skipFileOk(st, stats, f, _)))
+    val kept = st.active.filter(f => conjs.forall(skipFileOk(st, f, _)))
     (kept, SkipReport(kept.size, total, perConj))
   }
 
@@ -2704,12 +2645,9 @@ object Versioned {
   def readAsOfWhereReport(spark: SparkSession, path: String, version: Long,
                           predicate: Column): (DataFrame, SkipReport) = {
     val log = TableLog(spark, path)
-    val st = activeAt(log, version)
-    val stats = log.stateAt(version).stats
-    val (kept, report) = skipPlan(st, stats, skipConjunctsOf(predicate))
-    val df = readFilesDF(spark, log, kept, st.schema, st.partitionCols,
-      dvFiles = st.dvs, colMap = st.colMap).filter(predicate)
-    (df, report)
+    val st = log.stateAt(version)
+    val (kept, report) = skipPlan(st, skipConjunctsOf(predicate))
+    (readState(spark, log, st, kept).filter(predicate), report)
   }
 
   /** Files kept/total across relation-scan pruning passes — the test
@@ -2731,8 +2669,7 @@ object Versioned {
     * per-file state as a DataFrame folded with joins. */
   private[graft] def planningStateProbe(spark: SparkSession, path: String)
       : (Int, Long, Long) = {
-    val log = TableLog(spark, path)
-    val st = log.stateAt(log.list().versions.max)
+    val st = headStateOf(TableLog(spark, path)).get
     val statEntries = st.stats.valuesIterator.map(_.size.toLong).sum
     // structural estimate: JVM string ≈ 48B header + 2B/char (pre-
     // compact-strings worst case), map entry ≈ 48B, boxed-long pair
@@ -2750,10 +2687,8 @@ object Versioned {
   /** Logical schema of the table as of `version` (what the SQL
     * relation exposes). */
   private[graft] def schemaAt(spark: SparkSession, path: String,
-                              version: Long): StructType = {
-    val log = TableLog(spark, path)
-    activeAt(log, version).schema
-  }
+                              version: Long): StructType =
+    TableLog(spark, path).stateAt(version).schema
 
   /** The V1 relation scan behind [[graft.sources.VersionedRelation]]:
     * Catalyst pushes the query's filter conjuncts and required columns
@@ -2774,14 +2709,11 @@ object Versioned {
       filters: Array[org.apache.spark.sql.sources.Filter])
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
     val log = TableLog(spark, path)
-    val st = activeAt(log, version)
-    val stats = log.stateAt(version).stats
-    val (kept, rep) =
-      skipPlan(st, stats, filters.toSeq.map(skipConjunctOfFilter))
+    val st = log.stateAt(version)
+    val (kept, rep) = skipPlan(st, filters.toSeq.map(skipConjunctOfFilter))
     relationFilesKept.addAndGet(rep.filesKept.toLong)
     relationFilesTotal.addAndGet(rep.filesTotal.toLong)
-    val base = readFilesDF(spark, log, kept, st.schema, st.partitionCols,
-      dvFiles = st.dvs, colMap = st.colMap)
+    val base = readState(spark, log, st, kept)
     // re-expressible filters go into the frame for parquet row-group
     // pushdown; Spark re-applies everything above, so a filter we
     // can't translate is only a missed optimization
@@ -2875,6 +2807,14 @@ object Versioned {
     require(fromVersion >= hz || (fromVersion == 0L && hz == 0L),
       s"change feed from v$fromVersion at $path crosses the retention " +
         s"horizon ($hz) — those versions' files are gone")
+    // the state at v - 1: resolved for the first commit whose diff needs
+    // it, then folded forward commit by commit — an append-only range
+    // never folds, and no version is folded twice
+    var folded: Option[CkptState] = None
+    def stateBefore(v: Long): CkptState = {
+      if (folded.isEmpty) folded = Some(log.stateAt(v - 1L, listing))
+      folded.get
+    }
     val parts = versions.filter(v => v > fromVersion && v <= toVersion).map { v =>
       val c = log.readCommit(v)
       val schema = DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
@@ -2919,7 +2859,7 @@ object Versioned {
           // the removed side's LIVE rows: raw content minus the
           // deletion vectors in force at v-1 (rows a MoR delete already
           // removed must not resurface as rewrite-deletes)
-          val prev = activeAt(log, v - 1)
+          val prev = stateBefore(v)
           val sameShape =
             prev.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
               schema.fields.map(f => (f.name, f.dataType)).toSeq
@@ -2935,29 +2875,25 @@ object Versioned {
             // exactly like the scan promotes old files) — anything else
             // refuses loudly.
             val (removedA, addedA) = alignedEpochs(
-              readFilesDF(spark, log, c.remove, prev.schema,
-                prev.partitionCols, dvFiles = prev.dvs,
-                colMap = prev.colMap),
-              prev.schema, added, schema, v)
+              readState(spark, log, prev, c.remove), prev.schema, added,
+              schema, v)
             (addedA.exceptAll(removedA), removedA.exceptAll(addedA))
           }
         case _ => // overwrite: diff full before/after content
           val (before, after) =
             if (v == 1L) (readFiles(Nil, schema, c.partitionCols), added)
             else {
-              val prev = activeAt(log, v - 1)
-              val (prevActive, prevSchema, prevPcols, prevDvs) =
-                (prev.active, prev.schema, prev.partitionCols, prev.dvs)
-              val b = readFilesDF(spark, log, prevActive, prevSchema,
-                prevPcols, dvFiles = prevDvs, colMap = prev.colMap)
+              val prev = stateBefore(v)
               // ALIGN BY NAME across a schema epoch: exceptAll resolves
               // positionally, so an overwrite that changed arity would
               // throw and one that reordered columns would diff wrongly.
               // Same-name retypes align only as lossless widenings.
-              alignedEpochs(b, prevSchema, added, schema, v)
+              alignedEpochs(readState(spark, log, prev, prev.active),
+                prev.schema, added, schema, v)
             }
           (after.exceptAll(before), before.exceptAll(after))
       }
+      folded = folded.map(foldState(_, c))
       ins.withColumn("_change_type", lit("insert"))
         .unionByName(del.withColumn("_change_type", lit("delete")))
         .withColumn("_version", lit(v))
@@ -3005,7 +2941,8 @@ object Versioned {
   def read(spark: SparkSession, path: String): DataFrame = {
     val log = TableLog(spark, path)
     val listing = log.list()
-    readListed(spark, log, listing.versions.lastOption.getOrElse(0L), listing)
+    val st = log.stateAt(listing.versions.lastOption.getOrElse(0L), listing)
+    readState(spark, log, st, st.active)
   }
 
   /** The commit records in `(fromVersion, toVersion]` — metadata only,
@@ -3043,14 +2980,14 @@ object Versioned {
   def readCommitAddsWhere(spark: SparkSession, path: String, c: Commit,
                           predicate: Column): (DataFrame, Int, Int) = {
     val log = TableLog(spark, path)
-    val schema = DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
-    val st = TableState(c.add, schema, c.partitionCols, c.dv, c.colMap)
+    // the commit's own files, stats and layout as a state to prune over
+    val st = CkptState(c.version, c.add, c.schemaJson, c.partitionCols, Nil,
+      c.colMap, Nil, stats = c.stats)
     val conjs = skipConjunctsOf(predicate)
-    val kept = c.add.filter(f => conjs.forall(skipFileOk(st, c.stats, f, _)))
+    val kept = c.add.filter(f => conjs.forall(skipFileOk(st, f, _)))
     streamFilesKept.addAndGet(kept.size.toLong)
     streamFilesTotal.addAndGet(c.add.size.toLong)
-    (readFilesDF(spark, log, kept, schema, c.partitionCols,
-      colMap = c.colMap).filter(predicate), kept.size, c.add.size)
+    (readState(spark, log, st, kept).filter(predicate), kept.size, c.add.size)
   }
 
   /** Files kept/total across streaming-batch pruning passes (test
@@ -3193,18 +3130,18 @@ object Versioned {
   /** Active CHECK constraints as of `version`, insertion-ordered:
     * (name, SQL predicate). Folded from the records — constraints
     * survive overwrites (table property, not content). */
-  def constraints(spark: SparkSession, path: String): Seq[(String, String)] = {
-    val log = TableLog(spark, path)
-    log.list().versions.lastOption
-      .map(v => log.stateAt(v).constraints).getOrElse(Nil)
-  }
+  def constraints(spark: SparkSession, path: String): Seq[(String, String)] =
+    headStateOf(TableLog(spark, path)).fold(Seq.empty[(String, String)])(_.constraints)
 
   /** Active GENERATED-COLUMN definitions as of `version` (name ->
     * generation expression), folded like constraints. */
-  def generatedColumns(spark: SparkSession, path: String): Seq[(String, String)] = {
-    val log = TableLog(spark, path)
-    log.list().versions.lastOption
-      .map(v => log.stateAt(v).generated).getOrElse(Nil)
+  def generatedColumns(spark: SparkSession, path: String): Seq[(String, String)] =
+    headStateOf(TableLog(spark, path)).fold(Seq.empty[(String, String)])(_.generated)
+
+  /** The head's folded state (None: no commits), from one listing. */
+  private def headStateOf(log: TableLog): Option[CkptState] = {
+    val listing = log.list()
+    listing.versions.lastOption.map(log.stateAt(_, listing))
   }
 
   /** Everything a staged commit's digest scan must enforce: CHECK
@@ -3233,17 +3170,15 @@ object Versioned {
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name `$name` must match [A-Za-z0-9_]+")
     val log = TableLog(spark, path)
-    val planned = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    log.claimCommit(s"addConstraint at $path", Some(planned), Nil,
-        conflicts = None) { b =>
+    val (planned, st) = headOf(log)
+    log.claimCommit(s"addConstraint at $path", Some(planned), st, Nil,
+        conflicts = None) { (b, st) =>
       val head = b.get
-      val existing = log.stateAt(head.version).constraints
-      require(!existing.exists(_._1 == name),
+      require(!st.constraints.exists(_._1 == name),
         s"constraint `$name` already exists at $path")
       // current content must conform — otherwise the table could never
       // be rewritten under its own rules
-      val bad = readAsOf(spark, path, head.version)
+      val bad = readState(spark, log, st, st.active)
         .filter(coalesce(expr(predicateSql), lit(true)) === false)
         .limit(1).count()
       require(bad == 0L,
@@ -3271,18 +3206,16 @@ object Versioned {
     require(name.matches("[A-Za-z0-9_]+"),
       s"generated column name `$name` must match [A-Za-z0-9_]+")
     val log = TableLog(spark, path)
-    val planned = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    log.claimCommit(s"addGeneratedColumn at $path", Some(planned), Nil,
-        conflicts = None) { b =>
+    val (planned, st) = headOf(log)
+    log.claimCommit(s"addGeneratedColumn at $path", Some(planned), st, Nil,
+        conflicts = None) { (b, st) =>
       val head = b.get
-      val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-      require(headSchema.fieldNames.contains(name),
+      require(st.schema.fieldNames.contains(name),
         s"generated column `$name` must already exist in the schema at $path " +
-          s"(have: ${headSchema.fieldNames.mkString(", ")})")
-      require(!log.stateAt(head.version).generated.exists(_._1 == name),
+          s"(have: ${st.schema.fieldNames.mkString(", ")})")
+      require(!st.generated.exists(_._1 == name),
         s"column `$name` is already generated at $path")
-      val bad = readAsOf(spark, path, head.version)
+      val bad = readState(spark, log, st, st.active)
         .filter(!(col(name) <=> expr(exprSql))).limit(1).count()
       require(bad == 0L,
         s"cannot declare `$name` generated at $path: existing rows do not " +
@@ -3298,12 +3231,11 @@ object Versioned {
     * column stays, writers must provide it again. */
   def dropGeneratedColumn(spark: SparkSession, path: String, name: String): Commit = {
     val log = TableLog(spark, path)
-    val planned = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    log.claimCommit(s"dropGeneratedColumn at $path", Some(planned), Nil,
-        conflicts = None) { b =>
+    val (planned, st) = headOf(log)
+    log.claimCommit(s"dropGeneratedColumn at $path", Some(planned), st, Nil,
+        conflicts = None) { (b, st) =>
       val head = b.get
-      require(log.stateAt(head.version).generated.exists(_._1 == name),
+      require(st.generated.exists(_._1 == name),
         s"column `$name` is not generated at $path")
       Commit(head.version + 1L, "alter", Nil, head.schemaJson,
         0L, 0L, head.snapshotRows, head.snapshotFp, Nil, None, Map.empty,
@@ -3315,12 +3247,11 @@ object Versioned {
   /** DROP a CHECK constraint (metadata commit). */
   def dropConstraint(spark: SparkSession, path: String, name: String): Commit = {
     val log = TableLog(spark, path)
-    val planned = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    log.claimCommit(s"dropConstraint at $path", Some(planned), Nil,
-        conflicts = None) { b =>
+    val (planned, st) = headOf(log)
+    log.claimCommit(s"dropConstraint at $path", Some(planned), st, Nil,
+        conflicts = None) { (b, st) =>
       val head = b.get
-      require(log.stateAt(head.version).constraints.exists(_._1 == name),
+      require(st.constraints.exists(_._1 == name),
         s"constraint `$name` does not exist at $path")
       Commit(head.version + 1L, "alter", Nil, head.schemaJson,
         0L, 0L, head.snapshotRows, head.snapshotFp, Nil, None, Map.empty,
@@ -3353,12 +3284,11 @@ object Versioned {
     require(newName.matches("[A-Za-z0-9_]+"),
       s"column name `$newName` must match [A-Za-z0-9_]+")
     val log = TableLog(spark, path)
-    val planned = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    log.claimCommit(s"renameColumn at $path", Some(planned), Nil,
-        conflicts = None) { b =>
+    val (planned, st) = headOf(log)
+    log.claimCommit(s"renameColumn at $path", Some(planned), st, Nil,
+        conflicts = None) { (b, st) =>
       val head = b.get
-      val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+      val headSchema = st.schema
       require(headSchema.fieldNames.contains(oldName),
         s"cannot rename `$oldName` at $path: no such column " +
           s"(have: ${headSchema.fieldNames.mkString(", ")})")
@@ -3367,12 +3297,10 @@ object Versioned {
       require(!head.partitionCols.contains(oldName),
         s"cannot rename partition column `$oldName` at $path — the name " +
           "IS the directory layout; re-partition via overwrite instead")
-      require(!log.stateAt(head.version).generated.exists(_._1 == oldName),
+      require(!st.generated.exists(_._1 == oldName),
         s"cannot rename generated column `$oldName` at $path — drop the " +
           "generation rule first")
-      val refs = log.stateAt(head.version).constraints ++
-        log.stateAt(head.version).generated
-      refs.find { case (_, e) => mentionsIdent(e, oldName) }.foreach { case (n, e) =>
+      (st.constraints ++ st.generated).find { case (_, e) => mentionsIdent(e, oldName) }.foreach { case (n, e) =>
         throw new IllegalArgumentException(
           s"cannot rename `$oldName` at $path: expression of `$n` ($e) " +
             "references it — drop/re-add the rule around the rename")
@@ -3402,24 +3330,21 @@ object Versioned {
     * generated columns, referenced columns and the last column. */
   def dropColumn(spark: SparkSession, path: String, name: String): Commit = {
     val log = TableLog(spark, path)
-    val planned = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    log.claimCommit(s"dropColumn at $path", Some(planned), Nil,
-        conflicts = None) { b =>
+    val (planned, st) = headOf(log)
+    log.claimCommit(s"dropColumn at $path", Some(planned), st, Nil,
+        conflicts = None) { (b, st) =>
       val head = b.get
-      val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+      val headSchema = st.schema
       require(headSchema.fieldNames.contains(name),
         s"cannot drop `$name` at $path: no such column")
       require(headSchema.fields.length > 1,
         s"cannot drop `$name` at $path: it is the only column")
       require(!head.partitionCols.contains(name),
         s"cannot drop partition column `$name` at $path")
-      require(!log.stateAt(head.version).generated.exists(_._1 == name),
+      require(!st.generated.exists(_._1 == name),
         s"cannot drop generated column `$name` at $path — drop the " +
           "generation rule first")
-      val refs = log.stateAt(head.version).constraints ++
-        log.stateAt(head.version).generated
-      refs.find { case (_, e) => mentionsIdent(e, name) }.foreach { case (n, e) =>
+      (st.constraints ++ st.generated).find { case (_, e) => mentionsIdent(e, name) }.foreach { case (n, e) =>
         throw new IllegalArgumentException(
           s"cannot drop `$name` at $path: expression of `$n` ($e) " +
             "references it — drop the rule first")
@@ -3430,7 +3355,6 @@ object Versioned {
       val newDropped = (head.droppedPhys :+ physical).distinct
       // the epoch recompute: current content digested under the
       // narrowed schema (one scan; deletion vectors stay in force)
-      val st = activeAt(log, head.version)
       val (rows, fp) = digestFiles(spark, log, st.active, newSchema,
         st.partitionCols, st.dvs, newMap)
       Commit(head.version + 1L, "alter", Nil, newSchema.json,
@@ -3451,27 +3375,37 @@ object Versioned {
     * move at O(1 log record) cost, whatever the table size. */
   def restore(spark: SparkSession, path: String, toVersion: Long): Commit = {
     val log = TableLog(spark, path)
-    val tState = activeAt(log, toVersion)
-    val (active, dvs) = (tState.active, tState.dvs)
+    val listing = log.list()
+    val target = log.stateAt(toVersion, listing)
+    val active = target.active
     val tc = log.readCommit(toVersion)
+    // the head's state: the target's folded forward unless a newer
+    // checkpoint lies between them, so no record folds twice
+    val hv = listing.versions.last
+    val (planned, headSt) =
+      if (listing.checkpoints.exists(c => c > toVersion && c <= hv))
+        (log.readCommit(hv), log.stateAt(hv, listing))
+      else {
+        val since = listing.versions.filter(_ > toVersion).map(log.readCommit)
+        (since.lastOption.getOrElse(tc), since.foldLeft(target)(foldState))
+      }
     // the re-referenced files' sizes and zone-map stats travel WITH the
     // restore record (the folded state of the target version), so the
     // incremental checkpoint+tail folds keep resolving them without
     // ever walking back past this commit; a target with legacy
     // size-less records restores size-less (consumers fall back)
-    val tFold = log.stateAt(toVersion)
     val restoredSizes = {
-      val sz = active.map(tFold.sizes.get)
+      val sz = active.map(target.sizes.get)
       if (sz.nonEmpty && sz.forall(_.isDefined)) sz.map(_.get) else Nil
     }
-    log.claimCommit(s"restore of $path", log.latest(), Nil,
-        conflicts = None) { b =>
+    log.claimCommit(s"restore of $path", Some(planned), headSt, Nil,
+        conflicts = None) { (b, st) =>
       val head = b.get
       // the restored content must satisfy constraints and generated
       // definitions added AFTER toVersion — a rollback is not a bypass
-      val cons = checksFrom(log.stateAt(head.version))
+      val cons = checksFrom(st)
       if (cons.nonEmpty) {
-        val old = readAsOf(spark, path, toVersion)
+        val old = readState(spark, log, target, active)
         cons.foreach { case (n, p) =>
           require(old.filter(coalesce(expr(p), lit(true)) === false)
               .limit(1).count() == 0L,
@@ -3481,7 +3415,7 @@ object Versioned {
       }
       Commit(head.version + 1L, "overwrite", active, tc.schemaJson,
         tc.snapshotRows, tc.snapshotFp, tc.snapshotRows, tc.snapshotFp,
-        Nil, None, tFold.stats, tc.partitionCols, None, None, dvs,
+        Nil, None, target.stats, tc.partitionCols, None, None, target.dvs,
         colMap = tc.colMap, droppedPhys = tc.droppedPhys,
         addSizes = restoredSizes)
     }
@@ -3501,9 +3435,7 @@ object Versioned {
   def cloneShallow(spark: SparkSession, srcPath: String,
                    dstPath: String): Commit = {
     val src = TableLog(spark, srcPath)
-    val head = src.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $srcPath"))
-    val srcState = activeAt(src, head.version)
+    val (head, srcState) = headOf(src)
     val (active, srcDvs) = (srcState.active, srcState.dvs)
     def absolute(f: String): String =
       if (f.startsWith("/")) f // already foreign (clone of a clone)
@@ -3513,10 +3445,9 @@ object Versioned {
     // the absolute paths the clone's records use — resolved from the
     // source's checkpoint+tail state, so cloning a 100k-commit table
     // never replays its whole log
-    val srcFold = src.stateAt(head.version)
-    val stats = srcFold.stats.map { case (f, s) => absolute(f) -> s }
+    val stats = srcState.stats.map { case (f, s) => absolute(f) -> s }
     val cloneSizes = {
-      val sz = active.map(srcFold.sizes.get)
+      val sz = active.map(srcState.sizes.get)
       if (sz.nonEmpty && sz.forall(_.isDefined)) sz.map(_.get) else Nil
     }
     val dst = TableLog(spark, dstPath)
@@ -3563,7 +3494,8 @@ object Versioned {
       // carrying deletion vectors or a column mapping must refuse old
       // readers exactly like the commit that created them would); any
       // v1 a racing writer claimed first is a conflict
-      stage.claim(s"cloneShallow to $dstPath", None, Some(_ => true))(_ => c)
+      stage.claim(s"cloneShallow to $dstPath", None, CkptState.Empty,
+        Some(_ => true))((_, _) => c)
     }
   }
 
@@ -3628,15 +3560,15 @@ object Versioned {
     * versions stay O(tail) instead of falling back to a v1 fold. */
   private def vacuumToHorizon(log: TableLog, listing: LogListing,
                               rawHorizon: Long): (Long, Long) = {
-    val versions = listing.versions
     val horizon = math.max(log.horizon(listing), rawHorizon)
-    val retained = versions.filter(_ >= horizon)
-    val needed = retained.flatMap { v =>
-      val a = activeAt(log, v)
-      a.active ++ a.dvs // data files AND deletion vectors still in force
-    }.toSet
-    val candidates = versions.map(log.readCommit)
-      .flatMap(c => c.add ++ c.dv)
+    val records = listing.versions.map(log.readCommit)
+    // data files AND deletion vectors in force at any retained version:
+    // the first one's state, folded forward over the rest to the head
+    val retained = records.dropWhile(_.version < horizon)
+    val states = retained.tail
+      .scanLeft(log.stateAt(retained.head.version, listing))(foldState)
+    val needed = states.flatMap(st => st.active ++ st.dvs).toSet
+    val candidates = records.flatMap(c => c.add ++ c.dv)
       .filter(f => !f.startsWith("/")) // never delete foreign clone refs
       .filterNot(needed.contains).distinct
     log.publishHorizon(horizon, listing)
@@ -3648,8 +3580,9 @@ object Versioned {
     // re-checkpoint the head FIRST (records are all still present, so
     // the fold is exact), THEN drop the stale checkpoints — a reader
     // racing this pass always finds either the old or the new coverage
-    log.checkpoint()
-    log.dropCheckpointsBelow(horizon)
+    if (!listing.checkpoints.contains(states.last.version))
+      log.writeCheckpoint(states.last)
+    log.dropCheckpointsBelow(horizon, listing)
     (deleted, horizon)
   }
 
@@ -3727,20 +3660,17 @@ object Versioned {
       s"z-order optimize of $path into $numFiles files exceeds the " +
         s"$MaxZOrderFiles-file bound of its bucket probe table — lower numFiles")
     val log = TableLog(spark, path)
-    val head = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    val st = activeAt(log, head.version)
-    val (allActive, schema, pcols) = (st.active, st.schema, st.partitionCols)
+    val (head, st) = headOf(log)
+    val pcols = st.partitionCols
     val active = where match {
-      case None => allActive
+      case None => st.active
       case Some(keep) =>
         require(pcols.nonEmpty,
           s"optimize(where=...) needs a partitioned table; $path is not")
-        allActive.filter(f => keep(partitionValuesOf(f, pcols)))
+        st.active.filter(f => keep(partitionValuesOf(f, pcols)))
     }
     if (active.isEmpty) return None
-    val cur = readFilesDF(spark, log, active, schema, pcols,
-      dvFiles = st.dvs, colMap = st.colMap)
+    val cur = readState(spark, log, st, active)
     val laid =
       if (zorderBy.nonEmpty) {
         // domain-checked like Ingest.checkedZ: an out-of-range value
@@ -3773,12 +3703,10 @@ object Versioned {
         // not power-of-two aligned — the stats, not the spans, carry
         // the per-dimension guarantee).
         val zMax = 1L << (zorderBy.size * zBits)
-        val fullSt = log.stateAt(head.version)
-        val physZ = st.colMap.toMap
         val envFromStats: Option[Seq[(Long, Long)]] = {
           val per = zorderBy.map { c =>
-            val p = physZ.getOrElse(c, c)
-            val perFile = active.map(f => fullSt.stats.get(f).flatMap(_.get(p)))
+            val p = st.physOf(c)
+            val perFile = active.map(f => st.stats.get(f).flatMap(_.get(p)))
             if (perFile.exists(_.isEmpty)) None
             else Some((perFile.flatten.map(_._1).min,
                        perFile.flatten.map(_._2).max))
@@ -3845,7 +3773,7 @@ object Versioned {
         cur.repartitionByRange(numFiles, sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
       else cur.coalesce(numFiles)
-    Some(rewriteCommit(spark, log, head, laid, active,
+    Some(rewriteCommit(spark, log, head, st, laid, active,
       requireContentPreserved = true))
   }
 
@@ -3937,8 +3865,8 @@ object Versioned {
     val (nRows, fp) = digestFiles(spark, log, files, schema, pcols)
     val c = Commit(1L, "overwrite", files, schema.json, nRows, fp,
       nRows, fp, partitionCols = pcols, addSizes = sized.map(_._2))
-    log.claimCommit(s"convertInPlace at $path", None, Nil,
-      Some(_ => true))(_ => c)
+    log.claimCommit(s"convertInPlace at $path", None, CkptState.Empty, Nil,
+      Some(_ => true))((_, _) => c)
   }
 
   /** INCREMENTAL small-file compaction (Delta's auto-compaction shape):
@@ -3966,22 +3894,17 @@ object Versioned {
     require(targetNumFiles >= 1 && minInputFiles >= 2,
       s"need targetNumFiles >= 1 and minInputFiles >= 2")
     val log = TableLog(spark, path)
-    val head = log.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $path"))
-    val st = activeAt(log, head.version)
-    val sizes = log.stateAt(head.version).sizes
+    val (head, st) = headOf(log)
     val small = st.active.filter { f =>
-      sizes.getOrElse(f, {
+      st.sizes.getOrElse(f, {
         fileStatusProbes.incrementAndGet()
         val p = if (f.startsWith("/")) new Path(f) else new Path(log.root, f)
         log.fs.getFileStatus(p).getLen
       }) < maxFileBytes
     }
     if (small.size < minInputFiles) return None
-    val rebuilt = readFilesDF(spark, log, small, st.schema,
-        st.partitionCols, dvFiles = st.dvs, colMap = st.colMap)
-      .coalesce(targetNumFiles)
-    Some(rewriteCommit(spark, log, head, rebuilt, small,
+    val rebuilt = readState(spark, log, st, small).coalesce(targetNumFiles)
+    Some(rewriteCommit(spark, log, head, st, rebuilt, small,
       requireContentPreserved = true))
   }
 
@@ -4036,11 +3959,10 @@ object Versioned {
     * first-non-empty-wins on fold). */
   private[graft] def stateParity(spark: SparkSession, path: String): Boolean = {
     val log = TableLog(spark, path)
-    val versions = log.list().versions
-    if (versions.isEmpty) return true
-    val head = versions.last
-    val inc = log.stateAt(head)
-    val full = versions.filter(_ <= head)
+    val listing = log.list()
+    if (listing.versions.isEmpty) return true
+    val inc = log.stateAt(listing.versions.last, listing)
+    val full = listing.versions
       .foldLeft(CkptState.Empty)((st, v) => foldState(st, log.readCommit(v)))
     def norm(st: CkptState) = st.copy(
       features = st.features.sorted,

@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.FaultFs
 
 import graft.ingest.Versioned
+import graft.ingest.Versioned._
 
 /** The table log's storage seam, measured on the counting filesystem
   * (`graftshim/FaultFs`): the metadata I/O an uncontended operation
@@ -22,6 +24,44 @@ class TableLogSpec extends SparkTestBase {
 
   private def df(rows: (Long, String)*): DataFrame =
     rows.toDF("id", "t").coalesce(1)
+
+  /** A copy of the table at local dir `from`, as a fresh table path. */
+  private def copied(from: java.io.File, name: String): String = {
+    val (tbl, to) = table(name)
+    val walk = java.nio.file.Files.walk(from.toPath)
+    try walk.forEach(p => java.nio.file.Files.copy(p,
+      to.toPath.resolve(from.toPath.relativize(p))))
+    finally walk.close()
+    tbl
+  }
+
+  /** Every public operation the budget covers, run once on a table whose
+    * head is `v`: each resolves its state from one log listing. */
+  private def operations(v: Long): Seq[(String, String => Any)] = {
+    val clauses = Seq(WhenMatchedUpdate(Map("t" -> srcCol("t"))),
+      WhenNotMatchedInsert())
+    Seq(
+      "compactSmallFiles" -> (t => compactSmallFiles(spark, t, 1L << 20)),
+      "deleteWhere" -> (t => deleteWhere(spark, t, col("id") === 1L)),
+      "upsert" -> (t => upsert(spark, t, df(1L -> "u", 99L -> "n"), Seq("id"))),
+      "merge" -> (t => merge(spark, t, df(1L -> "m", 98L -> "n"), Seq("id"), clauses)),
+      "optimize" -> (t => optimize(spark, t, numFiles = 1)),
+      "dropColumn" -> (t => dropColumn(spark, t, "t")),
+      "renameColumn" -> (t => renameColumn(spark, t, "t", "u")),
+      "restore" -> (t => restore(spark, t, v - 2L)),
+      "upsertMoR" -> (t => upsertMoR(spark, t, df(1L -> "u"), Seq("id"))),
+      "mergeMoR" -> (t => mergeMoR(spark, t, df(1L -> "m", 98L -> "n"), Seq("id"),
+        clauses)),
+      "addConstraint" -> (t => addConstraint(spark, t, "pos", "id > 0")),
+      "checkpoint" -> (t => Versioned.checkpoint(spark, t)),
+      "deleteWhereMoR" -> (t => deleteWhereMoR(spark, t, col("id") === 1L)),
+      "readAsOfWhere" -> (t => readAsOfWhere(spark, t, v, col("id") > 1L)._1.collect()),
+      "readAsOfPruned" -> (t => readAsOfPruned(spark, t, v, "id", 1L, 2L)._1.collect()),
+      "read" -> (t => read(spark, t).collect()),
+      "append" -> (t => append(df(97L -> "a"), t)),
+      "changesBetween over appends" ->
+        (t => changesBetween(spark, t, v - 3L, v).collect()))
+  }
 
   /** (list, open, create, rename) calls `body` makes under `_graft_log`. */
   private def logIo(body: => Any): (Int, Int, Int, Int) = {
@@ -54,6 +94,26 @@ class TableLogSpec extends SparkTestBase {
     assert(replay == ((1, 6, 0, 0)), s"replayed idempotentAppend $replay")
     // a read folds the v5 state: no head read, no claim
     assert(read == ((1, 5, 0, 0)), s"read $read")
+
+    // every other public operation resolves its state from ONE listing
+    // too, with no checkpoint (head v4) and over a checkpoint plus its
+    // tail (head v13, checkpoint v10); each runs on its own copy
+    val budgets = Seq(4L, 13L).flatMap { head =>
+      val (tmpl, dir) = table(s"tmpl$head")
+      Versioned.overwrite(df(1L -> "a"), tmpl)
+      (2L to head).foreach(i => Versioned.append(df(i -> s"r$i"), tmpl))
+      assert(Versioned.checkpoints(spark, tmpl) ==
+        (if (head >= 10L) Seq(10L) else Nil))
+      operations(head).map { case (op, run) =>
+        val tbl = copied(dir, s"${op.takeWhile(_ != ' ')}$head")
+        val (list, open, _, _) = logIo(run(tbl))
+        (s"$op at v$head", list, open)
+      }
+    }
+    budgets.foreach { case (op, list, open) => info(s"$op: $list listing(s), $open open(s)") }
+    budgets.foreach { case (op, list, _) =>
+      assert(list == 1, s"$op listed _graft_log $list times")
+    }
   }
 
   test("the txn watermark check shares the commit's single state fold") {
@@ -68,7 +128,7 @@ class TableLogSpec extends SparkTestBase {
   }
 
   test("a failed horizon publish keeps the old horizon and every unswept file") {
-    val (tbl, _) = table("horizon")
+    val (tbl, root) = table("horizon")
     (1L to 6L).foreach(i => Versioned.overwrite(df(i -> s"r$i"), tbl))
     assert(Versioned.vacuumVersions(spark, tbl, retainLast = 4)._2 == 3L)
     // the second sweep's publish fails: the rename of its temp horizon
@@ -76,6 +136,10 @@ class TableLogSpec extends SparkTestBase {
       c.op == "rename" && c.path.getName.startsWith(".tmp-horizon"))(
       Versioned.vacuumVersions(spark, tbl, retainLast = 1))
     assert(fired && thrown.isDefined)
+    // the failed publish leaves no temp record behind
+    val logDir = new java.io.File(root, Versioned.LogDir)
+    assert(!logDir.list().exists(_.startsWith(".tmp-")),
+      s"leaked temp records: ${logDir.list().filter(_.startsWith(".tmp-")).toSeq}")
     // below the old horizon: still the loud refusal, never a missing file
     val e = intercept[IllegalArgumentException](Versioned.readAsOf(spark, tbl, 2L))
     assert(e.getMessage.contains("horizon is 3"), e.getMessage)

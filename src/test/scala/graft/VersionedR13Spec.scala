@@ -51,8 +51,8 @@ class VersionedR13Spec extends SparkTestBase {
     for (i <- 2 to 20)
       Versioned.append(df((100L + i, s"r$i")), tbl) // v2..v20 (ckpts 10, 20)
     Versioned.deleteWhereMoR(spark, tbl, col("id") === 2L) // v21: dv in force
-    // planning = latestCommit + activeAt + checksOf + dvCoverage +
-    // headDvs + claim-parent folds, each checkpoint+tail
+    // planning = the head record + ONE checkpoint+tail fold of the head
+    // state (every planner and the claim read it) + the claim's parent
     val (_, r0) = reads(Versioned.optimize(spark, tbl, numFiles = 2)) // v22
     for (i <- 23 to 42)
       Versioned.append(df((200L + i, s"s$i")), tbl) // v23..v42: history doubles

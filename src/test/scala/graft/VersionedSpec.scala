@@ -115,8 +115,9 @@ class VersionedSpec extends SparkTestBase {
 
   // ---------------------------------------------- the one claim loop
 
-  /** A table at v1 plus rows staged (invisible) under a fresh data dir,
-    * and a `build` that appends the staged files on top of any head. */
+  /** A table at v1 and its state, plus rows staged (invisible) under a
+    * fresh data dir, and a `build` that appends the staged files on top
+    * of any head. */
   private def staged(rows: (Long, String)*) = {
     val tbl = tmp()
     val head = Some(Versioned.overwrite(df(1L -> "a"), tbl))
@@ -126,20 +127,21 @@ class VersionedSpec extends SparkTestBase {
     val frame = df(rows: _*)
     val (sized, n, fp, stats) =
       Versioned.stageAndDigest(frame, log, dir, frame.schema, Nil)
-    def build(b: Option[Versioned.Commit]): Versioned.Commit = {
+    def build(b: Option[Versioned.Commit],
+              st: graft.ingest.TableLog.CkptState): Versioned.Commit = {
       val h = b.get
       Versioned.Commit(h.version + 1L, "append", sized.map(_._1),
         frame.schema.json, n, fp, h.snapshotRows + n, h.snapshotFp + fp,
         stats = stats, addSizes = sized.map(_._2))
     }
-    (tbl, log, fs, dir, head, build _)
+    (tbl, log, fs, dir, head, log.stateAt(1L), build _)
   }
 
   test("claim loop: a build pinned to a claimed version exhausts and drops its staging") {
-    val (tbl, log, fs, dir, head, build) = staged(2L -> "b")
+    val (tbl, log, fs, dir, head, st, build) = staged(2L -> "b")
     val e = intercept[IllegalStateException](
-      log.claimCommit(s"pinned commit to $tbl", head, Seq(dir),
-        conflicts = None)(_ => build(head).copy(version = 1L)))
+      log.claimCommit(s"pinned commit to $tbl", head, st, Seq(dir),
+        conflicts = None)((_, _) => build(head, st).copy(version = 1L)))
     assert(e.getMessage.endsWith(
       s"lost the version race ${Versioned.MaxClaimAttempts} times"), e.getMessage)
     assert(Versioned.MaxClaimAttempts == 20)
@@ -148,29 +150,29 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("claim loop: a conflicting intervening commit aborts and drops its staging") {
-    val (tbl, log, fs, dir, head, build) = staged(2L -> "b")
+    val (tbl, log, fs, dir, head, st, build) = staged(2L -> "b")
     Versioned.append(df(3L -> "c"), tbl) // lands v2 after `head` was read
     intercept[java.util.ConcurrentModificationException](
-      log.claimCommit(s"test commit to $tbl", head, Seq(dir),
+      log.claimCommit(s"test commit to $tbl", head, st, Seq(dir),
         Some(_.action == "append"))(build))
     assert(!fs.exists(dir), "a conflict must delete the staged dir")
     assert(rowSet(Versioned.read(spark, tbl)) == Set(Seq(1L, "a"), Seq(3L, "c")))
   }
 
   test("claim loop: a throwing build rethrows the same exception and drops its staging") {
-    val (_, log, fs, dir, head, _) = staged(2L -> "b")
+    val (_, log, fs, dir, head, st, _) = staged(2L -> "b")
     val boom = new java.io.IOException("record read failed")
     val e = intercept[java.io.IOException](
-      log.claimCommit("failing commit", head, Seq(dir),
-        conflicts = None)(_ => throw boom))
+      log.claimCommit("failing commit", head, st, Seq(dir),
+        conflicts = None)((_, _) => throw boom))
     assert(e eq boom)
     assert(!fs.exists(dir), "a throwing build must delete the staged dir")
   }
 
   test("claim loop: a winning claim keeps its staged files readable") {
-    val (tbl, log, fs, dir, head, build) = staged(2L -> "b", 3L -> "c")
+    val (tbl, log, fs, dir, head, st, build) = staged(2L -> "b", 3L -> "c")
     Versioned.append(df(4L -> "d"), tbl) // non-conflicting: lose once, rebase
-    val c = log.claimCommit(s"test commit to $tbl", head,
+    val c = log.claimCommit(s"test commit to $tbl", head, st,
       Seq(dir), Some(_ => false))(build)
     assert(c.version == 3L)
     assert(fs.exists(dir))

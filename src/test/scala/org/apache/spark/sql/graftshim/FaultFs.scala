@@ -13,8 +13,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Test-only local filesystem under the `graftfault` scheme: the raw
   * local filesystem, plus a record of every list/open/create/rename/
-  * delete call and an injected IOException on the first call a
-  * predicate accepts. Register it with [[FaultFs.install]] and address tables as
+  * delete call, an injected IOException on the first call a predicate
+  * accepts, and a one-shot callback run just before the first call
+  * another predicate accepts (to land a concurrent commit at an exact
+  * point of a writer's protocol). Register it with [[FaultFs.install]] and address tables as
   * [[FaultFs.path]]; the engine reaches it through Hadoop's scheme
   * lookup like any other store, so main code carries no hook.
   *
@@ -98,10 +100,20 @@ object FaultFs {
     @volatile var fired = false
   }
   private val fault = new AtomicReference[Fault]
+  private final class Hook(val accept: Call => Boolean, val run: () => Unit) {
+    @volatile var ran = false
+  }
+  private val hook = new AtomicReference[Hook]
 
   private def hit(op: String, p: Path): Unit = {
     val call = Call(op, p)
     Option(recording.get).foreach(_.add(call))
+    Option(hook.get).foreach { h =>
+      if (h.accept(call) && hook.compareAndSet(h, null)) {
+        h.ran = true
+        h.run()
+      }
+    }
     Option(fault.get).foreach { f =>
       if (f.accept(call) && fault.compareAndSet(f, null)) {
         f.fired = true
@@ -118,6 +130,20 @@ object FaultFs {
       val out = body
       (out, q.asScala.toSeq)
     } finally recording.set(null)
+  }
+
+  /** Run `body` with `callback` run once, on the calling thread, just
+    * before the first call that `accept` admits goes ahead (the
+    * callback's own calls never re-trigger it). Returns what `body`
+    * returned and whether the callback ran. */
+  def before[A](accept: Call => Boolean)(callback: => Unit)(body: => A)
+      : (A, Boolean) = {
+    val h = new Hook(accept, () => callback)
+    hook.set(h)
+    try {
+      val out = body
+      (out, h.ran)
+    } finally hook.compareAndSet(h, null)
   }
 
   /** Run `body` with the first call that `accept` admits throwing an
