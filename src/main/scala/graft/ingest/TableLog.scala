@@ -525,11 +525,14 @@ private[graft] final class TableLog private (val fs: FileSystem,
     * rule, so version order and timestamp order always agree and
     * TIMESTAMP AS OF resolution stays well-defined even when writers'
     * clocks skew — and with the reader features its content requires.
-    * Returns the stamped commit iff the claim won (one extra
-    * parent-record read per claim — metadata-scale). `parent` is the
-    * folded state `c` was built against, so a cadence checkpoint is one
-    * more fold step, not a re-listing and re-fold of the log. */
-  private def claimStamped(c: Commit, parent: CkptState): Option[Commit] = {
+    * Returns the stamped commit iff the claim won. `base` is the head
+    * record `c` was built against: when it is the parent its ts
+    * stamps the claim with no read; otherwise (a gap or no head) the
+    * parent record is read. `parent` is the folded state `c` was built
+    * against, so a cadence checkpoint is one more fold step, not a
+    * re-listing and re-fold of the log. */
+  private def claimStamped(c: Commit, base: Option[Commit],
+                           parent: CkptState): Option[Commit] = {
     // Narrow catch (ADVICE r11): only a genuinely-MISSING parent record
     // (a gap-tolerant log after manual surgery) may default to the
     // legacy parentTs=0. A transient IO/parse failure must PROPAGATE —
@@ -538,11 +541,13 @@ private[graft] final class TableLog private (val fs: FileSystem,
     // versionAsOfTimestamp's early exit and vacuumOlderThan rely on.
     // (A parent record WITHOUT a ts field parses fine and reads ts=0 —
     // the legacy-shape case needs no catch at all.)
-    val parentTs =
-      if (c.version <= 1L) 0L
-      else
+    val parentTs = base match {
+      case _ if c.version <= 1L => 0L
+      case Some(b) if b.version == c.version - 1L => b.ts
+      case _ =>
         try readCommit(c.version - 1L).ts
         catch { case _: java.io.FileNotFoundException => 0L }
+    }
     val stamped = c.copy(
       ts = math.max(System.currentTimeMillis(), parentTs + 1L),
       features = featuresOf(c))
@@ -650,7 +655,7 @@ private[graft] final class TableLog private (val fs: FileSystem,
         if (n == Versioned.MaxClaimAttempts)
           throw new IllegalStateException(
             s"$what lost the version race ${Versioned.MaxClaimAttempts} times")
-        else claimStamped(build(base, st), st) match {
+        else claimStamped(build(base, st), base, st) match {
           case Some(won) => won
           case None =>
             val since = list().versions.filter(_ > st.version).map(readCommit)

@@ -1630,11 +1630,11 @@ object Versioned {
   /** A collected min/max value normalized to the zone-map Long domain:
     * integrals as-is, dates as epoch DAYS, timestamps as epoch MICROS
     * (NTZ values anchored at UTC — the same anchoring
-    * [[skipLitLong]] applies to NTZ literals, so the two sides of a
+    * [[Skipping]] applies to NTZ literals, so the two sides of a
     * skipping comparison always share a unit). Both the java.sql and
     * the java.time external forms arrive depending on
     * `spark.sql.datetime.java8API.enabled`. */
-  private def statLongOf(v: Any): Long = v match {
+  private[graft] def statLongOf(v: Any): Long = v match {
     case n: java.lang.Number => n.longValue
     case d: java.sql.Date => d.toLocalDate.toEpochDay
     case d: java.time.LocalDate => d.toEpochDay
@@ -1946,7 +1946,7 @@ object Versioned {
                   case StringType =>
                     Seq(strStatKey(phys) -> (strPrefix8(raw), strPrefix8(raw)))
                   case dt =>
-                    skipPartLong(Some(dt), raw).map(l => phys -> (l, l)).toSeq
+                    Skipping.partLong(Some(dt), raw).map(l => phys -> (l, l)).toSeq
                 }
                 mm ++ (if (f.name.contains('\u0000')) Nil
                        else Seq(nullsStatKey(phys) -> (0L, 0L)))
@@ -2053,47 +2053,6 @@ object Versioned {
 
   // ===================================================== data skipping
 
-  /** The analyzed shape of one skipping-predicate conjunct — shared by
-    * [[readAsOfWhere]] (Column trees), the SQL relation scan
-    * ([[buildPrunedScan]], `sources.Filter`s), and the per-conjunct
-    * [[SkipReport]] diagnostics, so every read surface prunes by the
-    * exact same rules. */
-  private sealed trait SkipConjunct { def text: String }
-  /** One column with an OR of bounds: a plain comparison is one bound;
-    * `col.isin(...)`/SQL `IN` is one equality bound per (all-literal)
-    * member — a file survives the conjunct iff ANY bound is
-    * satisfiable on it. Each bound carries the raw literal value and,
-    * when the source tree declared one, its type. */
-  private final case class SkipBounds(name: String,
-      alts: Seq[(SkipOp, Any, Option[DataType])],
-      text: String) extends SkipConjunct
-  private final case class SkipNull(name: String, isNull: Boolean,
-      text: String) extends SkipConjunct
-  /** `col.startsWith(p)` / SQL `LIKE 'p%'`: prunable against archived
-    * string-prefix stats — the match interval in p8 space is
-    * [p8(p, 0x00), p8(p, 0xFF)]. */
-  private final case class SkipPrefix(name: String, prefix: String,
-      text: String) extends SkipConjunct
-  /** Anything log metadata can't decide — scans conservatively, the
-    * re-applied row filter decides. */
-  private final case class SkipOpaque(text: String) extends SkipConjunct
-
-  /** A DISJUNCTION of conjunction branches (the predicate's OR,
-    * flattened two levels deep): a file survives iff SOME branch's
-    * conjuncts all allow it. A branch containing an opaque shape
-    * keeps every file through that branch — conservative, since the
-    * full predicate is re-applied. */
-  private final case class SkipOr(branches: Seq[Seq[SkipConjunct]],
-      text: String) extends SkipConjunct
-
-  private sealed trait SkipOp
-  private case object SkEq extends SkipOp
-  private case object SkNe extends SkipOp
-  private case object SkLt extends SkipOp
-  private case object SkLe extends SkipOp
-  private case object SkGt extends SkipOp
-  private case object SkGe extends SkipOp
-
   /** What one conjunct of a skipping predicate actually did (VERDICT
     * r13: a caller whose `ts >= X` silently pruned nothing had no way
     * to see why). `skippable=false` means the shape itself can never
@@ -2110,500 +2069,6 @@ object Versioned {
     def filesPruned: Int = filesTotal - filesKept
   }
 
-  /** NOT of an analyzed conjunct, where a sound negation exists:
-    * comparisons flip (`!(a < b)` = `a >= b` — null-safe here because
-    * a null comparison fails BOTH forms, so either way the row is
-    * gone and pruning on the flipped op stays conservative-correct),
-    * null checks flip, and `NOT IN` becomes an AND of `!=` (rendered
-    * as a single-branch [[SkipOr]]). Everything else — negated
-    * prefixes, nested disjunctions — stays opaque for the row
-    * filter. */
-  private def negateConjunct(c: SkipConjunct): SkipConjunct = {
-    val negOp = Map[SkipOp, SkipOp](SkEq -> SkNe, SkNe -> SkEq,
-      SkLt -> SkGe, SkLe -> SkGt, SkGt -> SkLe, SkGe -> SkLt)
-    c match {
-      case SkipBounds(name, Seq((op, v, d)), text) =>
-        SkipBounds(name, Seq((negOp(op), v, d)), s"NOT ($text)")
-      case SkipBounds(name, alts, text) if alts.forall(_._1 == SkEq) =>
-        SkipOr(Seq(alts.map { case (_, v, d) =>
-          SkipBounds(name, Seq((SkNe, v, d)), s"$name != $v") }),
-          s"NOT ($text)")
-      case SkipNull(name, isNull, _) =>
-        SkipNull(name, !isNull,
-          if (isNull) s"$name IS NOT NULL" else s"$name IS NULL")
-      case other => SkipOpaque(s"<NOT (${other.text})>")
-    }
-  }
-
-  /** The conjunct parser for CATALYST expression trees — the path for
-    * predicates written as SQL TEXT (`functions.expr`, the stream
-    * source's `where` option): the text parses with the catalyst SQL
-    * parser and the unanalyzed tree walks here. Parser literals carry
-    * INTERNAL values (UTF8String, epoch days/micros), converted to
-    * their external forms so the same [[skipLitLong]] type gates
-    * apply. `LIKE 'p%'` (one trailing %, no other wildcards, no
-    * escapes) lowers to the prefix conjunct. */
-  private def skipConjunctsOfCatalyst(e0: AnyRef): Seq[SkipConjunct] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute => UAttr}
-    import org.apache.spark.sql.types.{ByteType, DateType, IntegerType,
-      LongType, ShortType, StringType, TimestampNTZType, TimestampType}
-    def flat(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => flat(l) ++ flat(r)
-      case _ => Seq(e)
-    }
-    def attr(e: Expression): Option[String] = e match {
-      case a: UAttr => Some(a.nameParts.mkString("."))
-      case _ => None
-    }
-    def ext(e: Expression): Option[(Any, Option[DataType])] = e match {
-      case Literal(null, _) => None
-      case Literal(v, dt) =>
-        val x: Any = dt match {
-          case StringType => v.toString
-          case DateType => java.time.LocalDate.ofEpochDay(
-            v.asInstanceOf[Number].longValue)
-          case TimestampType =>
-            val us = v.asInstanceOf[Number].longValue
-            java.time.Instant.ofEpochSecond(
-              Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
-          case TimestampNTZType =>
-            val us = v.asInstanceOf[Number].longValue
-            java.time.LocalDateTime.ofEpochSecond(
-              Math.floorDiv(us, 1000000L),
-              (Math.floorMod(us, 1000000L) * 1000L).toInt,
-              java.time.ZoneOffset.UTC)
-          case ByteType | ShortType | IntegerType | LongType => v
-          case _ => return None
-        }
-        Some((x, Some(dt)))
-      case _ => None
-    }
-    val cmp: Map[String, (SkipOp, SkipOp)] = Map( // (op, mirrored)
-      "=" -> (SkEq, SkEq), "<" -> (SkLt, SkGt), "<=" -> (SkLe, SkGe),
-      ">" -> (SkGt, SkLt), ">=" -> (SkGe, SkLe))
-    def one(e: Expression): SkipConjunct = e match {
-      case b: BinaryComparison if cmp.contains(b.symbol) =>
-        val (op, mir) = cmp(b.symbol)
-        (attr(b.left), ext(b.right), ext(b.left), attr(b.right)) match {
-          case (Some(n), Some(l), _, _) =>
-            SkipBounds(n, Seq((op, l._1, l._2)), s"$n ${b.symbol} ${l._1}")
-          case (_, _, Some(l), Some(n)) =>
-            SkipBounds(n, Seq((mir, l._1, l._2)), s"${l._1} ${b.symbol} $n")
-          case _ => SkipOpaque(s"<${b.symbol} over non-(column, literal)>")
-        }
-      case In(a, lits) if lits.nonEmpty =>
-        (attr(a), lits.map(ext)) match {
-          case (Some(n), es) if es.forall(_.isDefined) =>
-            SkipBounds(n, es.map(l => (SkEq: SkipOp, l.get._1, l.get._2)),
-              s"$n IN (${es.map(_.get._1).mkString(", ")})")
-          case _ => SkipOpaque("<IN over non-(column, literals)>")
-        }
-      case IsNull(a) => attr(a)
-        .map(n => SkipNull(n, isNull = true, s"$n IS NULL"): SkipConjunct)
-        .getOrElse(SkipOpaque("<isnull of a non-column>"))
-      case IsNotNull(a) => attr(a)
-        .map(n => SkipNull(n, isNull = false, s"$n IS NOT NULL"): SkipConjunct)
-        .getOrElse(SkipOpaque("<isnotnull of a non-column>"))
-      case StartsWith(a, Literal(v, StringType)) if v != null =>
-        attr(a).map(n =>
-            SkipPrefix(n, v.toString, s"$n LIKE '$v%'"): SkipConjunct)
-          .getOrElse(SkipOpaque("<startswith of a non-column>"))
-      case l @ Like(a, Literal(pat, StringType), esc) if pat != null =>
-        val s = pat.toString
-        val body = s.dropRight(1)
-        if (s.endsWith("%") && !body.exists(c =>
-              c == '%' || c == '_' || c == esc))
-          attr(a).map(n =>
-              SkipPrefix(n, body, s"$n LIKE '$s'"): SkipConjunct)
-            .getOrElse(SkipOpaque("<LIKE of a non-column>"))
-        else SkipOpaque(s"<${l.sql}>")
-      case Not(child) => negateConjunct(one(child))
-      case Or(l, r) =>
-        def orFlat(x: Expression): Seq[Expression] = x match {
-          case Or(a2, b2) => orFlat(a2) ++ orFlat(b2)
-          case other => Seq(other)
-        }
-        val branches = orFlat(e).map(br => flat(br).map(one))
-        SkipOr(branches, branches.map(_.map(_.text).mkString(" AND "))
-          .mkString("(", ") OR (", ")"))
-      case other => SkipOpaque(s"<${other.sql}>")
-    }
-    flat(e0.asInstanceOf[Expression]).map(one)
-  }
-
-  /** Structural conjunct parse of a PUBLIC Column tree — the
-    * comparisons the Column API builds are function-call nodes
-    * ("and", ">=", "isnotnull", …), walked through the graftshim
-    * view: no analysis pass, no session. */
-  private def skipConjunctsOf(predicate: Column): Seq[SkipConjunct] = {
-    import org.apache.spark.sql.graftshim.{ColumnShim => CS}
-    def flat(n: AnyRef): Seq[AnyRef] = CS.asFunction(n) match {
-      case Some(("and", args)) => args.flatMap(flat)
-      case _ => Seq(n)
-    }
-    // mirrored comparisons (literal on the left) normalize by flipping
-    val mirror = Map[SkipOp, SkipOp](SkEq -> SkEq, SkNe -> SkNe,
-      SkLt -> SkGt, SkLe -> SkGe, SkGt -> SkLt, SkGe -> SkLe)
-    val opNames = Map[String, SkipOp]("=" -> SkEq, "==" -> SkEq,
-      "!=" -> SkNe, "<>" -> SkNe,
-      "<" -> SkLt, "<=" -> SkLe, ">" -> SkGt, ">=" -> SkGe)
-    val opSym = Map[SkipOp, String](SkEq -> "=", SkNe -> "!=",
-      SkLt -> "<", SkLe -> "<=", SkGt -> ">", SkGe -> ">=")
-    def one(n: AnyRef): SkipConjunct = CS.asFunction(n) match {
-      case Some((fn, Seq(a, b))) if opNames.contains(fn) =>
-        val op = opNames(fn)
-        (CS.asAttribute(a), CS.asLiteral(b),
-          CS.asLiteral(a), CS.asAttribute(b)) match {
-          case (Some(name), Some(l), _, _) =>
-            SkipBounds(name, Seq((op, l._1, l._2)),
-              s"$name ${opSym(op)} ${l._1}")
-          case (_, _, Some(l), Some(name)) =>
-            val m = mirror(op)
-            SkipBounds(name, Seq((m, l._1, l._2)),
-              s"$name ${opSym(m)} ${l._1}")
-          case _ => SkipOpaque(s"<$fn over non-(column, literal) sides>")
-        }
-      case Some(("in", args)) if args.size >= 2 =>
-        val lits = args.tail.map(CS.asLiteral(_))
-        CS.asAttribute(args.head) match {
-          case Some(name) if lits.forall(_.isDefined) =>
-            SkipBounds(name,
-              lits.map(l => (SkEq: SkipOp, l.get._1, l.get._2)),
-              s"$name IN (${lits.map(_.get._1).mkString(", ")})")
-          case _ => SkipOpaque("<IN over non-(column, literals) args>")
-        }
-      // the Column API spells these camelCase ("isNotNull"), SQL-path
-      // builders lowercase — match case-insensitively
-      case Some((fn, Seq(a))) if fn.equalsIgnoreCase("isnull") =>
-        CS.asAttribute(a)
-          .map(nm => SkipNull(nm, isNull = true, s"$nm IS NULL"): SkipConjunct)
-          .getOrElse(SkipOpaque("<isnull of a non-column>"))
-      case Some((fn, Seq(a))) if fn.equalsIgnoreCase("isnotnull") =>
-        CS.asAttribute(a)
-          .map(nm =>
-            SkipNull(nm, isNull = false, s"$nm IS NOT NULL"): SkipConjunct)
-          .getOrElse(SkipOpaque("<isnotnull of a non-column>"))
-      case Some((fn, Seq(a, b))) if fn.equalsIgnoreCase("startswith") =>
-        (CS.asAttribute(a), CS.asLiteral(b)) match {
-          case (Some(name), Some((v: String, dt)))
-              if dt.forall(_ == org.apache.spark.sql.types.StringType) =>
-            SkipPrefix(name, v, s"$name LIKE '$v%'")
-          case _ => SkipOpaque("<startswith over non-(column, string)>")
-        }
-      case Some(("!", Seq(inner))) => negateConjunct(one(inner))
-      case Some(("not", Seq(inner))) => negateConjunct(one(inner))
-      case Some(("or", args)) =>
-        // OR of conjunction branches: each branch parses recursively
-        // (its own ANDed conjuncts); a file failing EVERY branch is
-        // provably excluded by the whole disjunction
-        def orBranches(x: AnyRef): Seq[AnyRef] = CS.asFunction(x) match {
-          case Some(("or", bs)) => bs.flatMap(orBranches)
-          case _ => Seq(x)
-        }
-        val branches = args.flatMap(orBranches).map(b => flat(b).map(one))
-        SkipOr(branches,
-          branches.map(_.map(_.text).mkString(" AND ")).mkString("(", ") OR (", ")"))
-      case Some((fn, _)) => SkipOpaque(s"<$fn(...)>")
-      case _ => CS.asSqlText(n) match {
-        case Some(sql) =>
-          // parser-deferred text (functions.expr): parse and walk the
-          // catalyst tree; a text that fails to parse here would fail
-          // the query too, but stays conservative regardless
-          try {
-            val parsed = org.apache.spark.sql.catalyst.parser
-              .CatalystSqlParser.parseExpression(sql)
-            skipConjunctsOfCatalyst(parsed) match {
-              case Seq(single) => single
-              case many => SkipOr(Seq(many), sql) // one AND branch
-            }
-          } catch {
-            case scala.util.control.NonFatal(_) => SkipOpaque(s"<$sql>")
-          }
-        case None => SkipOpaque("<non-function predicate node>")
-      }
-    }
-    flat(CS.nodeOf(predicate)).map(one)
-  }
-
-  /** The same conjunct model from a pushed-down V1 `sources.Filter` —
-    * already conjunct-split by Spark, already (column, value) shaped.
-    * A null comparison value never matches any row; it is left opaque
-    * (the re-applied filter yields the empty result) rather than
-    * special-cased. */
-  private def skipConjunctOfFilter(
-      f: org.apache.spark.sql.sources.Filter): SkipConjunct = {
-    import org.apache.spark.sql.sources._
-    def b(a: String, op: SkipOp, sym: String, v: Any): SkipConjunct =
-      if (v == null) SkipOpaque(s"<$a $sym NULL>")
-      else SkipBounds(a, Seq((op, v, None)), s"$a $sym $v")
-    f match {
-      case EqualTo(a, v) => b(a, SkEq, "=", v)
-      case EqualNullSafe(a, null) => SkipNull(a, isNull = true, s"$a <=> NULL")
-      case EqualNullSafe(a, v) => b(a, SkEq, "<=>", v)
-      case GreaterThan(a, v) => b(a, SkGt, ">", v)
-      case GreaterThanOrEqual(a, v) => b(a, SkGe, ">=", v)
-      case LessThan(a, v) => b(a, SkLt, "<", v)
-      case LessThanOrEqual(a, v) => b(a, SkLe, "<=", v)
-      case In(a, vs) if vs.nonEmpty && !vs.contains(null) =>
-        SkipBounds(a, vs.toSeq.map(v => (SkEq: SkipOp, v, None)),
-          s"$a IN (${vs.mkString(", ")})")
-      case IsNull(a) => SkipNull(a, isNull = true, s"$a IS NULL")
-      case IsNotNull(a) => SkipNull(a, isNull = false, s"$a IS NOT NULL")
-      case StringStartsWith(a, v) if v != null =>
-        SkipPrefix(a, v, s"$a LIKE '$v%'")
-      case Not(child) => negateConjunct(skipConjunctOfFilter(child))
-      case Or(l, r) =>
-        def orFlat(x: Filter): Seq[Filter] = x match {
-          case Or(a2, b2) => orFlat(a2) ++ orFlat(b2)
-          case other => Seq(other)
-        }
-        def andFlat(x: Filter): Seq[Filter] = x match {
-          case And(a2, b2) => andFlat(a2) ++ andFlat(b2)
-          case other => Seq(other)
-        }
-        val branches = orFlat(Or(l, r))
-          .map(br => andFlat(br).map(skipConjunctOfFilter))
-        SkipOr(branches,
-          branches.map(_.map(_.text).mkString(" AND "))
-            .mkString("(", ") OR (", ")"))
-      case other => SkipOpaque(s"<${other.toString}>")
-    }
-  }
-
-  /** A predicate literal normalized into the zone-map Long domain of
-    * the column it compares against: integrals as-is, date literals to
-    * epoch days, timestamp literals to epoch micros (NTZ anchored at
-    * UTC, matching [[statLongOf]]). None — conservative, the row
-    * filter decides — when the literal's class or declared type
-    * doesn't match the column's type family, so a cross-type
-    * comparison is never pruned by unit-mismatched math (a date
-    * literal's DAYS against a timestamp column's MICROS, a string
-    * against anything). */
-  private def skipLitLong(colType: Option[DataType], value: Any,
-                          declared: Option[DataType]): Option[Long] = {
-    import org.apache.spark.sql.types.{ByteType, DateType, IntegerType,
-      LongType, ShortType, TimestampNTZType, TimestampType}
-    colType match {
-      case Some(ByteType | ShortType | IntegerType | LongType) =>
-        val integralDecl = declared.forall {
-          case ByteType | ShortType | IntegerType | LongType => true
-          case _ => false
-        }
-        value match {
-          case v: java.lang.Byte if integralDecl => Some(v.longValue)
-          case v: java.lang.Short if integralDecl => Some(v.longValue)
-          case v: java.lang.Integer if integralDecl => Some(v.longValue)
-          case v: java.lang.Long if integralDecl => Some(v.longValue)
-          case _ => None
-        }
-      case Some(DateType) => value match {
-        case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-        case d: java.time.LocalDate => Some(d.toEpochDay)
-        case _ => None
-      }
-      case Some(TimestampType) => value match {
-        case t: java.sql.Timestamp => Some(statLongOf(t))
-        case i: java.time.Instant => Some(statLongOf(i))
-        case _ => None
-      }
-      case Some(TimestampNTZType) => value match {
-        case l: java.time.LocalDateTime => Some(statLongOf(l))
-        case _ => None
-      }
-      case _ => None
-    }
-  }
-
-  /** A path-encoded partition value parsed into the same Long domain
-    * as [[skipLitLong]], gated by the partition COLUMN's declared type
-    * (the literal's type alone is not enough: a date literal against a
-    * string partition column must not compare by rendered text). */
-  private def skipPartLong(colType: Option[DataType], raw: String)
-      : Option[Long] = {
-    import org.apache.spark.sql.types.{ByteType, DateType, IntegerType,
-      LongType, ShortType}
-    colType match {
-      case Some(ByteType | ShortType | IntegerType | LongType) =>
-        raw.toLongOption
-      case Some(DateType) =>
-        try Some(java.time.LocalDate.parse(raw).toEpochDay)
-        catch { case _: java.time.format.DateTimeParseException => None }
-      case _ => None
-    }
-  }
-
-  /** Does active file `f` survive conjunct `c`? Absent metadata always
-    * keeps the file (conservative scan); partition values are EXACT
-    * (constant per file), zone-map ranges prune only what the
-    * archived [min, max] provably excludes, and null counts decide
-    * IS [NOT] NULL plus the all-null-column case (no comparison is
-    * satisfiable on a column with zero non-null values in the
-    * file — SQL three-valued logic). */
-  private def skipFileOk(st: CkptState, f: String,
-                         c: SkipConjunct): Boolean = {
-    import org.apache.spark.sql.types.StringType
-    val stats = st.stats
-    def colType(name: String) =
-      st.schema.fields.find(_.name == name).map(_.dataType)
-    def fileStat(name: String): Option[(Long, Long)] =
-      stats.get(f).flatMap(_.get(st.physOf(name)))
-    def fileNulls(name: String): Option[Long] =
-      stats.get(f).flatMap(_.get(nullsStatKey(st.physOf(name)))).map(_._1)
-    def fileRows: Option[Long] =
-      stats.get(f).flatMap(_.get(RowsStatKey)).map(_._1)
-    def rangeOk(mn: Long, mx: Long, op: SkipOp, v: Long): Boolean = op match {
-      case SkEq => v >= mn && v <= mx
-      // != prunes only a single-point file whose sole value IS v
-      case SkNe => !(mn == mx && mn == v)
-      case SkLt => mn < v
-      case SkLe => mn <= v
-      case SkGt => mx > v
-      case SkGe => mx >= v
-    }
-    def fileStrStat(name: String): Option[(Long, Long)] =
-      stats.get(f).flatMap(_.get(strStatKey(st.physOf(name))))
-    /** provably zero non-null values of `name` in this file — no
-      * comparison or prefix match can be satisfied */
-    def allNullOf(name: String): Boolean =
-      (fileNulls(name), fileRows) match {
-        case (Some(nNull), Some(n)) => n > 0 && nNull == n
-        case _ => false
-      }
-    def strRangeOk(mn8: Long, mx8: Long, op: SkipOp, v: String): Boolean = {
-      import java.lang.Long.{compareUnsigned => cmpU}
-      val p = strPrefix8(v)
-      op match {
-        // p8 is a non-strict projection: equality prunes only when the
-        // literal's prefix falls outside [mn8, mx8]; order bounds
-        // prune only when the prefix PROVES the range empty (ties in
-        // prefix space stay conservative)
-        case SkEq => cmpU(p, mn8) >= 0 && cmpU(p, mx8) <= 0
-        case SkNe => true // a p8 point can hide distinct full strings
-        case SkLt | SkLe => cmpU(mn8, p) <= 0
-        case SkGt | SkGe => cmpU(mx8, p) >= 0
-      }
-    }
-    c match {
-      case SkipOpaque(_) => true
-      case SkipOr(branches, _) =>
-        branches.exists(_.forall(skipFileOk(st, f, _)))
-      case SkipNull(name, isNull, _) =>
-        (fileNulls(name), fileRows) match {
-          case (Some(nNull), Some(n)) => if (isNull) nNull > 0 else nNull < n
-          case _ => true // no archived null counts: conservative
-        }
-      case SkipPrefix(name, prefix, _) =>
-        if (st.partitionCols.contains(name))
-          partitionValuesOf(f, st.partitionCols)(name) match {
-            case None => false
-            case Some(raw) =>
-              // exact when the partition column is a string (the path
-              // renders the value verbatim); conservative otherwise
-              if (colType(name).forall(_ == StringType))
-                raw.startsWith(prefix)
-              else true
-          }
-        else if (colType(name).contains(StringType))
-          !allNullOf(name) && fileStrStat(name).forall { case (mn8, mx8) =>
-            import java.lang.Long.{compareUnsigned => cmpU}
-            cmpU(strPrefix8(prefix, 0xff), mn8) >= 0 &&
-              cmpU(strPrefix8(prefix), mx8) <= 0
-          }
-        else true // prefix over a non-string column: row filter decides
-      case SkipBounds(name, alts, _) =>
-        val allNull = allNullOf(name)
-        def boundOk(op: SkipOp, value: Any,
-                    declared: Option[DataType]): Boolean =
-          if (st.partitionCols.contains(name)) {
-            // the file's path-encoded value: constant per file, EXACT.
-            // A null partition value satisfies no comparison (the row
-            // filter would drop it anyway).
-            partitionValuesOf(f, st.partitionCols)(name) match {
-              case None => false
-              case Some(raw) =>
-                val ct = colType(name)
-                (skipLitLong(ct, value, declared),
-                  skipPartLong(ct, raw)) match {
-                  case (Some(v), Some(pv)) => rangeOk(pv, pv, op, v)
-                  case _ if (op == SkEq || op == SkNe) &&
-                      value.isInstanceOf[String] &&
-                      declared.forall(_ == StringType) &&
-                      ct.forall(_ == StringType) =>
-                    if (op == SkEq) raw == value.toString
-                    else raw != value.toString
-                  case _ => true
-                }
-            }
-          } else colType(name) match {
-            case Some(StringType) if value.isInstanceOf[String] &&
-                declared.forall(_ == StringType) =>
-              fileStrStat(name).forall { case (mn8, mx8) =>
-                strRangeOk(mn8, mx8, op, value.toString) }
-            case ct => skipLitLong(ct, value, declared) match {
-              case Some(v) => fileStat(name)
-                .forall { case (mn, mx) => rangeOk(mn, mx, op, v) }
-              case None => true // unnormalizable literal: row filter decides
-            }
-          }
-        !allNull && alts.exists { case (op, value, declared) =>
-          boundOk(op, value, declared)
-        }
-    }
-  }
-
-  /** Shared pruning pass: the surviving files plus the per-conjunct
-    * report. Each conjunct's `prunedFiles` counts what IT ALONE
-    * excludes (overlaps between conjuncts are expected). */
-  private def skipPlan(st: CkptState, conjs: Seq[SkipConjunct])
-      : (Seq[String], SkipReport) = {
-    val total = st.active.size
-    val stats = st.stats
-    val perConj = conjs.map { c =>
-      val pruned = c match {
-        case SkipOpaque(_) => 0
-        case _ => st.active.count(f => !skipFileOk(st, f, c))
-      }
-      def noStats(name: String): Boolean = {
-        val k = st.physOf(name)
-        !st.active.exists(f => stats.get(f).exists(m =>
-          m.contains(k) || m.contains(strStatKey(k))))
-      }
-      val (skippable, detail) = c match {
-        case SkipOpaque(_) =>
-          (false, "unsupported shape - decided by the row filter only")
-        case SkipBounds(name, _, _) if pruned == 0 &&
-            !st.partitionCols.contains(name) && noStats(name) =>
-          (true, s"no archived min/max stats for `$name` on any active " +
-            "file (legacy commits or a non-stat type) - pruned nothing")
-        case _: SkipBounds =>
-          (true, s"zone-map/partition bounds pruned $pruned/$total files")
-        case SkipPrefix(name, _, _) if pruned == 0 &&
-            !st.partitionCols.contains(name) && noStats(name) =>
-          (true, s"no archived string-prefix stats for `$name` on any " +
-            "active file (legacy commits) - pruned nothing")
-        case _: SkipPrefix =>
-          (true, s"string-prefix bounds pruned $pruned/$total files")
-        case SkipOr(branches, _)
-            if branches.forall(_.forall(_.isInstanceOf[SkipOpaque])) =>
-          (false, "no branch has a skippable shape - row filter only")
-        case _: SkipOr =>
-          (true, s"disjunction (all branches refuted) pruned " +
-            s"$pruned/$total files")
-        case SkipNull(name, _, _) if pruned == 0 &&
-            !st.active.exists(f => stats.get(f)
-              .exists(_.contains(nullsStatKey(st.physOf(name))))) =>
-          (true, s"no archived null counts for `$name` on any active " +
-            "file (legacy commits) - pruned nothing")
-        case _: SkipNull =>
-          (true, s"null-count stats pruned $pruned/$total files")
-      }
-      ConjunctReport(c.text, skippable, pruned, detail)
-    }
-    val kept = st.active.filter(f => conjs.forall(skipFileOk(st, f, _)))
-    (kept, SkipReport(kept.size, total, perConj))
-  }
-
   /** [[readAsOf]] with AUTOMATIC DATA SKIPPING (the reference format's
     * reading-side move, composing everything the log archives): the
     * predicate's simple conjuncts prune files from LOG METADATA alone —
@@ -2612,14 +2077,17 @@ object Versioned {
     * IS [NOT] NULL, path-encoded values for partition columns — and
     * the FULL predicate is still applied to the surviving rows, so
     * pruning is purely an optimization and can never change the
-    * result. Skippable shapes: `col <op> literal` (or mirrored)
-    * conjuncts under AND, op ∈ {=, <, <=, >, >=}, `isin`,
-    * `isNull`/`isNotNull`, and `startsWith` (string prefix); literals
-    * must match the column's type family (integral, date, timestamp
-    * with matching zone, string — strings prune via order-preserving
-    * 8-byte UTF-8 prefixes of the archived min/max). Anything
-    * else (ORs, functions, non-literal sides, uncovered columns) scans
-    * conservatively and is decided by the row filter. Column names
+    * result. Skippable shapes ([[Skipping.conjunctsOf]], the one
+    * parser every read surface shares): `col <op> literal` (or
+    * mirrored) conjuncts under AND, op ∈ {=, <=>, <, <=, >, >=}, `isin`,
+    * `isNull`/`isNotNull`, `<=> NULL`, `startsWith` and `like 'p%'`
+    * (string prefix), their NOTs, and ORs of such conjunctions —
+    * whether written with the Column API or as `expr(...)` text;
+    * literals must match the column's type family (integral, date,
+    * timestamp with matching zone, string — strings prune via
+    * order-preserving 8-byte UTF-8 prefixes of the archived min/max).
+    * Anything else (functions, non-literal sides, uncovered columns)
+    * scans conservatively and is decided by the row filter. Column names
     * translate through the version's column mapping (zone maps are
     * keyed physical); a file whose stats are absent — e.g. adopted by
     * convertInPlace before an OPTIMIZE backfills, or committed before
@@ -2646,7 +2114,8 @@ object Versioned {
                           predicate: Column): (DataFrame, SkipReport) = {
     val log = TableLog(spark, path)
     val st = log.stateAt(version)
-    val (kept, report) = skipPlan(st, skipConjunctsOf(predicate))
+    val (kept, report) =
+      Skipping.plan(st, Skipping.conjunctsOf(spark, predicate))
     (readState(spark, log, st, kept).filter(predicate), report)
   }
 
@@ -2695,7 +2164,7 @@ object Versioned {
     * here, so the SQL surface (a [[registerViewAsOfSkipping]] view, or
     * `spark.read.format("graft-table")`) gets log-metadata file
     * skipping and column pruning with no Versioned-specific API in the
-    * query — the same [[skipPlan]] the Scala path uses. The relation
+    * query — the same [[Skipping.plan]] the Scala path uses. The relation
     * reports every filter unhandled, so Spark re-applies the full
     * predicate on top: pruning is result-neutral by construction. The
     * supported conjuncts are ALSO applied inside the scan frame, so
@@ -2710,48 +2179,21 @@ object Versioned {
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
     val log = TableLog(spark, path)
     val st = log.stateAt(version)
-    val (kept, rep) = skipPlan(st, filters.toSeq.map(skipConjunctOfFilter))
+    // re-expressible filters parse as skipping conjuncts and go into
+    // the frame for parquet row-group pushdown; Spark re-applies
+    // everything above, so a filter we can't translate is only a
+    // missed optimization
+    val pushed = filters.toSeq.flatMap(Skipping.filterToColumn)
+    val (kept, rep) =
+      Skipping.plan(st, pushed.flatMap(Skipping.conjunctsOf(spark, _)))
     relationFilesKept.addAndGet(rep.filesKept.toLong)
     relationFilesTotal.addAndGet(rep.filesTotal.toLong)
-    val base = readState(spark, log, st, kept)
-    // re-expressible filters go into the frame for parquet row-group
-    // pushdown; Spark re-applies everything above, so a filter we
-    // can't translate is only a missed optimization
-    val filtered = filters.flatMap(filterToColumn)
-      .foldLeft(base)((df, p) => df.filter(p))
+    val filtered = pushed.foldLeft(readState(spark, log, st, kept))(_.filter(_))
     val pruned =
       if (requiredColumns.isEmpty) filtered.select()
       else filtered.select(requiredColumns.toSeq.map(col): _*)
     pruned.queryExecution.toRdd
       .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-  }
-
-  /** A pushed `sources.Filter` re-expressed as a Column for in-scan
-    * parquet pushdown — None when the shape has no direct Column
-    * form (then only the post-scan re-application filters it). */
-  private def filterToColumn(
-      f: org.apache.spark.sql.sources.Filter): Option[Column] = {
-    import org.apache.spark.sql.sources._
-    f match {
-      case EqualTo(a, v) => Some(col(a) === lit(v))
-      case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-      case GreaterThan(a, v) => Some(col(a) > lit(v))
-      case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-      case LessThan(a, v) => Some(col(a) < lit(v))
-      case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-      case In(a, vs) => Some(col(a).isin(vs.toSeq.map(lit): _*))
-      case IsNull(a) => Some(col(a).isNull)
-      case IsNotNull(a) => Some(col(a).isNotNull)
-      case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-      case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-      case StringContains(a, v) => Some(col(a).contains(v))
-      case And(l, r) =>
-        for (lc <- filterToColumn(l); rc <- filterToColumn(r)) yield lc && rc
-      case Or(l, r) =>
-        for (lc <- filterToColumn(l); rc <- filterToColumn(r)) yield lc || rc
-      case Not(child) => filterToColumn(child).map(!_)
-      case _ => None
-    }
   }
 
   /** Register `viewName` as a temp view over the V1 SKIPPING relation
@@ -2983,8 +2425,7 @@ object Versioned {
     // the commit's own files, stats and layout as a state to prune over
     val st = CkptState(c.version, c.add, c.schemaJson, c.partitionCols, Nil,
       c.colMap, Nil, stats = c.stats)
-    val conjs = skipConjunctsOf(predicate)
-    val kept = c.add.filter(f => conjs.forall(skipFileOk(st, f, _)))
+    val kept = Skipping.keptFiles(st, Skipping.conjunctsOf(spark, predicate))
     streamFilesKept.addAndGet(kept.size.toLong)
     streamFilesTotal.addAndGet(c.add.size.toLong)
     (readState(spark, log, st, kept).filter(predicate), kept.size, c.add.size)

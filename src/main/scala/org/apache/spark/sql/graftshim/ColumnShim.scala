@@ -1,51 +1,23 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge to the `private[sql]` Column↔Expression converters —
   * the supported way for external libraries to hand a custom Catalyst
-  * `Expression` to the public Column API in Spark 4's classic runtime —
-  * plus a STRUCTURAL view of a Column's node tree (functions,
-  * attributes, literals) for metadata-only predicate analysis
-  * (Versioned.readAsOfWhere's file skipping). Nothing else reaches
-  * into internals.
+  * `Expression` to the public Column API in Spark 4's classic runtime,
+  * and to read a Column back as the unanalyzed Catalyst tree the
+  * session itself would plan (data skipping's one predicate parser,
+  * `graft.ingest.Skipping`). Nothing else reaches into internals.
   */
 object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  def nodeOf(c: Column): AnyRef = c.node
-
-  /** (functionName, argument nodes) when the node is a function call —
-    * the public Column operators (`&&`, `===`, `>=`, …) all build
-    * these. */
-  def asFunction(n: AnyRef): Option[(String, Seq[AnyRef])] = n match {
-    case f: org.apache.spark.sql.internal.UnresolvedFunction =>
-      Some((f.functionName, f.arguments))
-    case _ => None
-  }
-
-  /** Dotted column name when the node is an unresolved attribute. */
-  def asAttribute(n: AnyRef): Option[String] = n match {
-    case a: org.apache.spark.sql.internal.UnresolvedAttribute =>
-      Some(a.nameParts.mkString("."))
-    case _ => None
-  }
-
-  /** Deferred SQL text when the node is a parser-deferred expression
-    * (`functions.expr` / `selectExpr` / option strings). */
-  def asSqlText(n: AnyRef): Option[String] = n match {
-    case s: org.apache.spark.sql.internal.SqlExpression => Some(s.expression)
-    case _ => None
-  }
-
-  /** (value, declared type if any) when the node is a literal. */
-  def asLiteral(n: AnyRef): Option[(Any, Option[org.apache.spark.sql.types.DataType])] =
-    n match {
-      case l: org.apache.spark.sql.internal.Literal =>
-        Some((l.value, l.dataType))
-      case _ => None
-    }
+  /** `c` converted by `spark`'s own converter into the Catalyst tree —
+    * its SQL parser turns `functions.expr` text into nodes inline. (The
+    * one-argument form wraps the unconverted node for the analyzer.) */
+  def expression(spark: SparkSession, c: Column): Expression =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
 }

@@ -84,12 +84,13 @@ class TableLogSpec extends SparkTestBase {
     assert((3L to 5L).forall(_ % Versioned.autoCheckpointInterval != 0L))
     assert(Versioned.latestVersion(spark, tbl) == 5L)
     // no checkpoint yet, so a commit at head vH pays: one listing; one
-    // nonce-prefix read (memo hit) for the head record, one per record
-    // of the vH-record fold and one for the claim's parent record; one
-    // temp-record create and one publishing rename
-    assert(append == ((1, 4, 1, 1)), s"append at v2 $append")
-    assert(overwrite == ((1, 5, 1, 1)), s"overwrite at v3 $overwrite")
-    assert(tagged == ((1, 6, 1, 1)), s"idempotentAppend at v4 $tagged")
+    // nonce-prefix read (memo hit) for the head record and one per
+    // record of the vH-record fold (the claim stamps its ts from the
+    // head record it built against); one temp-record create and one
+    // publishing rename
+    assert(append == ((1, 3, 1, 1)), s"append at v2 $append")
+    assert(overwrite == ((1, 4, 1, 1)), s"overwrite at v3 $overwrite")
+    assert(tagged == ((1, 5, 1, 1)), s"idempotentAppend at v4 $tagged")
     // a replayed batch stops at the watermark: no stage, no claim
     assert(replay == ((1, 6, 0, 0)), s"replayed idempotentAppend $replay")
     // a read folds the v5 state: no head read, no claim
@@ -123,8 +124,8 @@ class TableLogSpec extends SparkTestBase {
     Versioned.append(df(3L -> "c"), tbl)
     val r0 = Versioned.commitRecordReads.get()
     Versioned.idempotentAppend(df(4L -> "d"), tbl, "app", 1L)
-    // head read + the three-record fold + the claim's parent read
-    assert(Versioned.commitRecordReads.get() - r0 == 5L)
+    // head read + the three-record fold; the claim reads no parent
+    assert(Versioned.commitRecordReads.get() - r0 == 4L)
   }
 
   test("a failed horizon publish keeps the old horizon and every unswept file") {

@@ -243,6 +243,51 @@ class VersionedSkipSpec extends SparkTestBase {
       "SQL OR must prune to two files via the pushed sources.Or")
   }
 
+  test("Column, expr text and SQL WHERE keep the same files and rows") {
+    // five single-file commits: k spans [1,2], {7, null}, [9,10], all
+    // null and [5,6]; w spans [apple,pear], [peach,plum], {zeta, null},
+    // [fig,kiwi] and [grape,prune]; x is a double (no zone map)
+    val tbl = tmp("parity") + "/tbl"
+    Seq(
+      Seq((1L, "apple", Option(1L)), (2L, "pear", Option(2L))),
+      Seq((3L, "plum", Option(7L)), (4L, "peach", None)),
+      Seq((5L, "zeta", Option(9L)), (6L, null, Option(10L))),
+      Seq((7L, "kiwi", None), (8L, "fig", None)),
+      Seq((9L, "prune", Option(5L)), (10L, "grape", Option(6L)))
+    ).zipWithIndex.foreach { case (rs, i) =>
+      val frame = rs.toDF("id", "w", "k")
+        .withColumn("x", col("id") * 0.5d).coalesce(1)
+      if (i == 0) Versioned.overwrite(frame, tbl) else Versioned.append(frame, tbl)
+    }
+    Versioned.registerViewAsOfSkipping(spark, tbl, 5L, "skip_parity")
+    // (Column, the same predicate as SQL text, files every path keeps)
+    val table = Seq[(org.apache.spark.sql.Column, String, Int)](
+      (col("k") <=> lit(null), "k <=> NULL", 2),
+      (col("k") <=> 7L, "k <=> 7", 1),
+      (col("w").like("p%"), "w LIKE 'p%'", 3),
+      (lit(5L) < col("k"), "5 < k", 3),
+      (!col("k").isin(7L, 8L), "k NOT IN (7, 8)", 3),
+      ((col("k") >= 1L && col("k") < 3L) ||
+        (col("w") === "zeta" && col("k").isNotNull),
+        "(k >= 1 AND k < 3) OR (w = 'zeta' AND k IS NOT NULL)", 2),
+      (col("x") > lit(1.0d), "x > 1.0D", 5),
+      // NOT (k <=> 7) holds on k's nulls: the {7, null} file must stay
+      (!(col("k") <=> 7L), "NOT (k <=> 7)", 5))
+    table.foreach { case (pred, text, want) =>
+      val (cdf, cKept, total) = Versioned.readAsOfWhere(spark, tbl, 5L, pred)
+      val (edf, eKept, _) = Versioned.readAsOfWhere(spark, tbl, 5L, expr(text))
+      val k0 = Versioned.relationFilesKept.get()
+      val sqlRows = rows(spark.sql(s"SELECT * FROM skip_parity WHERE $text"))
+      val sKept = Versioned.relationFilesKept.get() - k0
+      assert(total == 5)
+      assert((cKept, eKept, sKept) == ((want, want, want.toLong)),
+        s"$text: Column kept $cKept, expr kept $eKept, SQL kept $sKept, want $want")
+      val full = rows(Versioned.read(spark, tbl).filter(pred))
+      assert(rows(cdf) == full && rows(edf) == full && sqlRows == full,
+        s"$text: the three surfaces must return the full filtered scan's rows")
+    }
+  }
+
   test("FUZZ: random predicates over random tables are always result-neutral") {
     // the adversarial form of the q261 invariant: for ANY predicate —
     // matched or MISmatched literal types, nulls, opaque shapes —
@@ -286,7 +331,7 @@ class VersionedSkipSpec extends SparkTestBase {
           Date.valueOf(f"2024-${1 + rnd.nextInt(6)}%02d-15")
         case _ => ts(f"2024-${1 + rnd.nextInt(6)}%02d-15 12:00:00")
       }
-      rnd.nextInt(8) match {
+      rnd.nextInt(12) match {
         case 0 => c === lit(v0())
         case 1 => c < lit(v0())
         case 2 => c >= lit(v0())
@@ -294,7 +339,12 @@ class VersionedSkipSpec extends SparkTestBase {
         case 4 => c.isNull
         case 5 => c.isNotNull
         case 6 => c.isin(v0(), v0())
-        case _ if name == "s" => c.startsWith("pre")
+        case 7 => c <=> lit(v0())
+        case 8 => c <=> lit(null)
+        case 9 => lit(v0()) <= c // mirrored
+        case 10 => lit(v0()) === c // mirrored
+        case _ if name == "s" =>
+          if (rnd.nextBoolean()) c.startsWith("pre") else c.like("p%")
         case _ => length(c.cast("string")) > lit(3) // opaque shape
       }
     }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * assert an operator released every internal `cache()` before returning
   * (a leaked entry is pinned by the CacheManager for the whole session).
   * Lives in test sources — the library itself reaches into no internals
-  * beyond [[ColumnShim]]'s two forwarders.
+  * beyond [[ColumnShim]]'s Column↔Expression converters.
   */
 object CacheProbe {
   def cacheManagerEmpty(spark: SparkSession): Boolean =
