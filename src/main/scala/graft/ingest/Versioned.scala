@@ -46,6 +46,9 @@ import TableLog.{CkptState, LogListing, foldState}
   * ([[TableLog.CkptState]], resolved by [[TableLog.stateAt]]) is the
   * one state value its planning, staging, claim and rebuild all read,
   * and a lost claim folds it forward over the records that beat it.
+  * The row-level writers (DELETE, UPSERT and MERGE, copy-on-write and
+  * merge-on-read, and schema evolution) are [[Rewrite]]; their public
+  * entry points stay here.
   *
   * Each record carries the ADDED files plus the running snapshot totals
   * (`snapshotRows`, `snapshotFp`): because the content fingerprint
@@ -146,75 +149,6 @@ object Versioned {
     Set("deletion-vectors", "column-mapping", "type-widening",
       "multipart-checkpoint")
 
-  /** The TYPE-WIDENING lattice (the Delta type-widening feature's safe
-    * core): promotions the parquet vectorized reader performs natively
-    * at scan time (declared wide read schema over a narrow physical
-    * column — SPARK-40876) AND that are value-lossless, so a widened
-    * table's old files never rewrite and old values never change.
-    * Narrowing, and lossy widenings (int -> float, long -> double),
-    * refuse. */
-  private val widensTo: Map[DataType, Set[DataType]] = {
-    import org.apache.spark.sql.types._
-    Map(
-      ByteType -> Set[DataType](ShortType, IntegerType, LongType),
-      ShortType -> Set[DataType](IntegerType, LongType),
-      IntegerType -> Set[DataType](LongType),
-      FloatType -> Set[DataType](DoubleType))
-  }
-
-  private def isWidening(from: DataType, to: DataType): Boolean =
-    widensTo.get(from).exists(_.contains(to))
-
-  /** Schema evolution a merge source implies against the table schema:
-    * (NEW source columns to add, existing columns the source LOSSLESSLY
-    * WIDENS). Any other type change refuses loudly. Shared by the CoW
-    * and MoR merge surfaces so the two can never drift. */
-  private def evolutionOf(headSchema: StructType, source: DataFrame,
-                          evolveSchema: Boolean, ctx: String)
-      : (Seq[StructField], Seq[String]) =
-    if (!evolveSchema) (Nil, Nil)
-    else {
-      val w = source.schema.toSeq
-        .filter(f => headSchema.fieldNames.contains(f.name))
-        .flatMap { f =>
-          val t = headSchema(f.name).dataType
-          if (f.dataType == t) None
-          else if (isWidening(t, f.dataType)) Some(f.name)
-          else throw new IllegalArgumentException(
-            s"$ctx: existing column `${f.name}` changed type " +
-              s"(${t.simpleString} -> ${f.dataType.simpleString}) — only " +
-              "lossless widenings (byte->short->int->long, float->double) " +
-              "are supported")
-        }
-      (source.schema.filterNot(f =>
-        headSchema.fieldNames.contains(f.name)).toSeq, w)
-    }
-
-  /** The table schema after [[evolutionOf]]'s changes apply. */
-  private def evolvedSchema(headSchema: StructType, source: DataFrame,
-                            newCols: Seq[StructField],
-                            widened: Seq[String]): StructType =
-    if (newCols.isEmpty && widened.isEmpty) headSchema
-    else {
-      val widenedSet = widened.toSet
-      StructType(headSchema.fields.map(f =>
-        if (widenedSet(f.name)) f.copy(dataType = source.schema(f.name).dataType)
-        else f) ++ newCols)
-    }
-
-  /** Fresh physical names for evolution-added columns (the appendEvolve
-    * rule: never reuse a dropped or already-claimed physical name). */
-  private def evolvedColMap(head: Commit, headSchema: StructType,
-                            newCols: Seq[StructField]): Seq[(String, String)] = {
-    val takenPhys = head.droppedPhys.toSet ++
-      headSchema.fieldNames.map(n => head.colMap.toMap.getOrElse(n, n))
-    head.colMap ++ newCols.flatMap { f =>
-      if (takenPhys.contains(f.name))
-        Some(f.name -> s"${f.name}__p${head.version + 1L}")
-      else None
-    }
-  }
-
   // ---------- public write surface ----------
 
   /** Append `df` as a new version; schema must match the current head
@@ -227,8 +161,10 @@ object Versioned {
     * snapshot digest stay stable. On a PARTITIONED table the append
     * inherits the table's partition layout automatically. Returns the
     * commit. */
-  def append(df: DataFrame, path: String): Commit =
-    commit(df, TableLog(df.sparkSession, path), "append").get
+  def append(df: DataFrame, path: String): Commit = {
+    val log = TableLog(df.sparkSession, path)
+    commit(df, log, headOption(log), "append").get
+  }
 
   /** Replace the table content as a new version (readers of older
     * versions are unaffected — old files are never touched).
@@ -246,7 +182,8 @@ object Versioned {
   def overwrite(df: DataFrame, path: String,
                 partitionBy: Seq[String] = Nil): Commit = {
     validatePartitionCols(df.schema, partitionBy)
-    commit(df, TableLog(df.sparkSession, path), "overwrite",
+    val log = TableLog(df.sparkSession, path)
+    commit(df, log, headOption(log), "overwrite",
       partitionBy = partitionBy).get
   }
 
@@ -269,606 +206,72 @@ object Versioned {
     require(pcols.distinct == pcols, s"duplicate partition columns: $pcols")
   }
 
+  // ------------------------------------------ row-level writes (Rewrite)
+
   /** SCHEMA-EVOLVING append (the `mergeSchema=true` counterpart of the
-    * pinned [[append]]): existing columns must keep their exact types,
-    * NEW columns are allowed and appended after them — the evolved
-    * schema becomes the commit's schema, and every later read fills
-    * the old files' missing columns with null (declared-schema parquet
-    * reads do this natively, and the fingerprint's injective null
-    * sentinel keeps the digest well-defined). Because old rows' digests
-    * change under the evolved field list, the additive snapshot rollup
-    * cannot extend across the epoch boundary: an evolving commit
-    * RECOMPUTES the snapshot totals with one full scan under the new
-    * schema — the documented price of a schema change (rare by
-    * construction), after which appends are additive again. With no
-    * new columns this is exactly [[append]]. */
-  def appendEvolve(df: DataFrame, path: String): Commit = {
-    val spark = df.sparkSession
-    val log = TableLog(spark, path)
-    val listing = log.list()
-    val headOpt = listing.versions.lastOption.map(log.readCommit)
-    if (headOpt.isEmpty)
-      return commit(df, log, "overwrite", listed = Some(listing)).get
-    val head = headOpt.get
-    val headSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-    val incomingTypes = df.schema.map(f => f.name -> f.dataType).toMap
-    // existing columns: exact type, or a LOSSLESS WIDENING (int->long,
-    // float->double, ... — see widensTo). A widened column evolves the
-    // schema like a new column does: old files keep the narrow physical
-    // type (the scan promotes natively), and the commit pays the same
-    // epoch recompute because old rows' digests change under the wide
-    // rendering. Anything else refuses.
-    val widened = headSchema.flatMap { f =>
-      val in = incomingTypes.getOrElse(f.name, throw new IllegalStateException(
-        s"appendEvolve at $path: evolution may only ADD columns — " +
-          s"existing column `${f.name}` is missing from the incoming frame"))
-      if (in == f.dataType) None
-      else if (isWidening(f.dataType, in)) Some(f.name)
-      else throw new IllegalArgumentException(
-        s"appendEvolve at $path: existing column `${f.name}` changed type " +
-          s"(${f.dataType.simpleString} -> ${in.simpleString}) — only " +
-          "lossless widenings (byte->short->int->long, float->double) " +
-          "are supported")
-    }
-    val newCols = df.schema.filterNot(f => headSchema.fieldNames.contains(f.name))
-    if (newCols.isEmpty && widened.isEmpty)
-      return commit(df, log, "append", listed = Some(listing)).get
-    val widenedSet = widened.toSet
-    val evolved = StructType(headSchema.fields.map(f =>
-      if (widenedSet(f.name)) f.copy(dataType = incomingTypes(f.name))
-      else f) ++ newCols)
-    val ordered = df.select(evolved.fieldNames.toSeq.map(col): _*)
-    val pcols = head.partitionCols
+    * pinned [[append]]): NEW columns are appended after the existing
+    * ones, existing columns keep their type or LOSSLESSLY WIDEN
+    * (byte->short->int->long, float->double — old files promote at
+    * scan time); anything else, or a frame missing an existing column,
+    * refuses. An evolving commit RECOMPUTES the snapshot totals with
+    * one scan under the new schema (old rows' digests change with the
+    * field list); with no change this is exactly [[append]]. */
+  def appendEvolve(df: DataFrame, path: String): Commit =
+    Rewrite.appendEvolve(df, path)
 
-    // physical names for the NEW columns: the logical name, unless a
-    // DROPPED column once used it (old files still carry values under
-    // it — re-reading them would resurrect stale data) or another
-    // column's physical name claims it; then a fresh epoch-suffixed one
-    val evolvedMap = evolvedColMap(head, headSchema, newCols.toSeq)
+  /** Row-level DELETE as a COPY-ON-WRITE commit: only the files holding
+    * matching rows are rewritten (survivors into new files, the
+    * affected files into `remove`); untouched files stay shared with
+    * older versions, so a delete costs O(affected files). Returns None
+    * when nothing matches. Concurrency: WRITE-SERIALIZABLE with the
+    * disjoint-file retry ([[Rewrite.rewriteCommit]]) — a concurrent
+    * append or rewrite of OTHER files retries through; one touching
+    * these files, an overwrite or a schema/layout change aborts
+    * (ConcurrentModificationException). */
+  def deleteWhere(spark: SparkSession, path: String, pred: Column): Option[Commit] =
+    Rewrite.deleteWhere(spark, path, pred)
 
-    val st = log.stateAt(head.version, listing)
-    val cons = checksFrom(st)
-    log.staging { stage =>
-      val (sized, nRows, addFp, stats) = stageAndDigest(ordered, log,
-        stage.dir("d"), evolved, pcols, cons, evolvedMap)
-      val files = sized.map(_._1)
+  /** Row-level DELETE as a MERGE-ON-READ commit, the write-cheap twin
+    * of [[deleteWhere]]: the matching rows' POSITIONS land in a
+    * deletion vector (`dv-<uuid>/`, rows of (file_rel, pos), the Delta
+    * and Iceberg v2 design) that every read anti-joins in the same
+    * scan — O(matched rows) written until OPTIMIZE rewrites the files
+    * clean. Returns None when nothing matches. Conflicts with an
+    * intervening overwrite/schema/layout/constraint change or a commit
+    * touching a covered file; disjoint commits retry through. */
+  def deleteWhereMoR(spark: SparkSession, path: String, pred: Column): Option[Commit] =
+    Rewrite.deleteWhereMoR(spark, path, pred)
 
-      stage.claim(s"appendEvolve at $path", headOpt, st, conflicts = None) { (b, prev) =>
-        val h = b.get
-        // a CONCURRENT evolution (or constraint change) would make this
-        // commit's precomputed schema / validation stale — fail loudly
-        // like the COW rewrites do
-        if (h.version != head.version && checksFrom(prev) != cons)
-          throw new java.util.ConcurrentModificationException(
-            s"appendEvolve at $path: constraints changed concurrently — restage")
-        if (h.schemaJson != head.schemaJson || h.colMap != head.colMap)
-          throw new java.util.ConcurrentModificationException(
-            s"appendEvolve at $path: the table schema changed concurrently " +
-              s"(planned against v${head.version}, head is v${h.version}) — re-plan")
-        // the epoch recompute: prior content digested under the EVOLVED
-        // schema (missing columns read as null -> the 'N' sentinel)
-        val pr = digestFiles(spark, log, prev.active, evolved, pcols,
-          prev.dvs, evolvedMap)
-        Commit(h.version + 1L, "append", files, evolved.json, nRows,
-          addFp, pr._1 + nRows, pr._2 + addFp, Nil, None, stats, pcols,
-          colMap = evolvedMap, droppedPhys = head.droppedPhys,
-          widenedCols = widened, addSizes = sized.map(_._2))
-      }
-    }
-  }
-
-  /** Row-level DELETE as a COPY-ON-WRITE commit: only the files that
-    * actually hold matching rows are rewritten (their survivors become
-    * new files; the affected files land in the record's `remove` list),
-    * untouched files stay shared with every older version — at 100 TB
-    * a delete of one user's rows costs O(files containing that user),
-    * not a table rewrite. Snapshot totals stay exactly certified: the
-    * commit subtracts the removed files' digests and adds the
-    * survivors' (both O(affected) scans). Returns None when nothing
-    * matches (no empty commit). Concurrency: WRITE-SERIALIZABLE with
-    * the disjoint-file retry (see [[rewriteCommit]]) — a concurrent
-    * append or a rewrite of OTHER files is absorbed by retrying the
-    * claim; a commit touching this delete's files, an overwrite, or a
-    * schema/layout change aborts (ConcurrentModificationException). */
-  def deleteWhere(spark: SparkSession, path: String,
-                  pred: org.apache.spark.sql.Column): Option[Commit] = {
-    val (head, st, cur, log) = currentWithFiles(spark, path)
-    val affected = cur.filter(pred).select(col("__file")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    if (affected.isEmpty) return None
-    val survivors =
-      restrictToFiles(cur, affected).filter(!pred).drop("__file")
-    Some(rewriteCommit(spark, log, head, st, survivors, affected))
-  }
-
-  /** COW planning threshold: up to this many affected files the
-    * survivor scan filters with an In-literal (cheap, codegen-friendly);
-    * above it, a broad-predicate rewrite touching tens of thousands of
-    * files would bloat the plan's analysis/codegen with an O(files)
-    * literal list, so the restriction becomes a BROADCAST SEMI-JOIN
-    * against the affected-file list instead (VERDICT r10). Var, not
-    * val, so the plan-shape spec can exercise the join path without
-    * staging thousands of files. */
-  private[graft] var isinFileThreshold: Int = 1000
-
-  /** Merge/upsert planning broadcast guard (VERDICT r11 #1, the twin of
-    * [[isinFileThreshold]]): the planning semi-joins hint
-    * `broadcast(distinct source keys)` — right for CDC-sized batches,
-    * where it keeps the table scan shuffle-free — but a fat backfill
-    * batch (say 10⁸ distinct keys) would OOM the driver on the FORCED
-    * broadcast before AQE could save it. Above this optimizer size
-    * estimate the hint is dropped and the join strategy is left to
-    * Catalyst/AQE, which can still pick a broadcast at runtime from the
-    * ACTUAL build-side size, or fall back to a shuffled join that
-    * scales arbitrarily. Estimate, not a count: reading
-    * `optimizedPlan.stats.sizeInBytes` costs no job, while a count()
-    * would pay an extra distinct shuffle per merge. Var so the
-    * plan-shape spec can exercise the unhinted path without staging
-    * gigabytes. */
-  private[graft] var broadcastKeyBytesThreshold: Long = 128L << 20
-
-  /** Is `df` small enough (by the optimizer's size estimate) to hint a
-    * broadcast? Costs one driver-side optimization of df's plan — call
-    * it ONCE per merge on the SOURCE-derived keys frame and REUSE the
-    * answer for the subset frames (dup keys, matched keys): a subset of
-    * a broadcast-safe key set is itself broadcast-safe, and re-deriving
-    * the estimate on a table-scan-derived subtree would pay a second
-    * full optimizer pass for a strictly weaker answer.
-    *
-    * STRUCTURAL SHORT-CIRCUIT (VERDICT r12 #5): the ANALYZED plan's
-    * LEAF size statistics bound the frame from above — but ONLY when
-    * every node between the leaves and the root is row-bounded
-    * (projections, filters, aggregates, distinct, unions, limits,
-    * sorts…). A merge/upsert SOURCE is an arbitrary user DataFrame: a
-    * join or explode inside it can multiply two under-threshold leaves
-    * into a multi-GB frame (ADVICE r13), so any cardinality-increasing
-    * or UNRECOGNIZED node falls through to the guarded optimizer
-    * estimate instead of short-circuiting. When the whitelist holds
-    * and the leaves already sum under the threshold (an in-memory CDC
-    * micro-batch: LocalRelation rows × width; a small parquet source:
-    * the file index's byte size) the ~0.3 s optimizer pass is skipped
-    * entirely and a sub-second merge stops spending a third of its
-    * wall in the estimator. Leaf stats on the analyzed plan are a
-    * field read — no optimization, no job. */
-  private def rowBounded(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    // WHITELIST, not a blacklist: an unknown operator (new Spark
-    // version, Generate, Expand, lateral join, flatMap-style
-    // user functions…) must never be presumed row-bounded
-    plan.find {
-      case _: Project | _: Filter | _: Aggregate | _: Distinct |
-           _: Deduplicate | _: Union | _: GlobalLimit | _: LocalLimit |
-           _: Sort | _: SubqueryAlias | _: Repartition |
-           _: RepartitionByExpression | _: LeafNode => false
-      case _ => true
-    }.isEmpty
-  }
-
-  private[graft] def broadcastOk(df: DataFrame): Boolean = {
-    val analyzed = df.queryExecution.analyzed
-    val leaves = analyzed.collectLeaves()
-    if (leaves.nonEmpty && rowBounded(analyzed) &&
-        leaves.map(_.stats.sizeInBytes).sum <= broadcastKeyBytesThreshold)
-      true
-    else {
-      broadcastEstimatorPasses.incrementAndGet()
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        broadcastKeyBytesThreshold
-    }
-  }
-
-  /** Full optimizer-pass size estimates paid by [[broadcastOk]] (test
-    * hook): stays zero for LocalRelation-rooted merge sources — the
-    * short-circuit spec's counter. */
-  private[graft] val broadcastEstimatorPasses = new java.util.concurrent.atomic.AtomicLong
-
-  /** `broadcast(df)` iff the optimizer's size estimate is under
-    * [[broadcastKeyBytesThreshold]]; otherwise `df` unhinted. */
-  private[graft] def maybeBroadcast(df: DataFrame): DataFrame =
-    if (broadcastOk(df)) broadcast(df) else df
-
-  /** Hint carrier for a frame whose broadcast-safety was already
-    * decided by [[broadcastOk]] on a superset key frame. */
-  private def hinted(df: DataFrame, ok: Boolean): DataFrame =
-    if (ok) broadcast(df) else df
-
-  /** `cur` restricted to rows whose `__file` is in `affected` —
-    * In-literal below [[isinFileThreshold]], broadcast semi-join above. */
-  private def restrictToFiles(cur: DataFrame, affected: Seq[String]): DataFrame =
-    if (affected.size <= isinFileThreshold)
-      cur.filter(col("__file").isin(affected: _*))
-    else {
-      val spark = cur.sparkSession
-      import spark.implicits._
-      cur.join(broadcast(affected.toDF("__affected_file")),
-        col("__file") === col("__affected_file"), "left_semi")
-    }
-
-  /** Does an intervening commit invalidate a staged commit planned
-    * against `headSchemaJson`/`headColMap`/`pcols` that tombstones or
-    * removes rows in `touched` files? The claim-loop conflict
-    * predicate of the MoR commits and [[rewriteCommit]] —
-    * WRITE-SERIALIZABLE with the DISJOINT-FILE rule
-    * extended to MoR commits: an intervening MoR delete/upsert
-    * conflicts only when its archived `dvCovered` set intersects this
-    * commit's touched files (two MoR deletes on disjoint files both
-    * land; unknown coverage — a record without the field — aborts
-    * conservatively). Schema, layout, column-mapping and rule-set
-    * changes always abort: the staged data was validated/written under
-    * the old ones. */
-  private def commitConflicts(ic: Commit, touched: Set[String],
-                              headSchemaJson: String,
-                              headColMap: Seq[(String, String)],
-                              pcols: Seq[String]): Boolean =
-    ic.action == "overwrite" ||
-      ic.schemaJson != headSchemaJson || ic.colMap != headColMap ||
-      ic.partitionCols != pcols ||
-      ic.constraintAdd.nonEmpty || ic.constraintDrop.nonEmpty ||
-      ic.generatedAdd.nonEmpty || ic.generatedDrop.nonEmpty ||
-      (ic.dv.nonEmpty &&
-        (ic.dvCovered.isEmpty || ic.dvCovered.exists(touched.contains))) ||
-      ic.remove.exists(touched.contains)
-
-  /** Most claims one commit makes before giving up on the race
-    * ([[TableLog.Stage.claim]]). */
-  private[graft] final val MaxClaimAttempts = 20
-
-  /** Stage the position deletes of `rows` (its `__rel`, `__pos`) as a
-    * deletion-vector dir of `stage`; returns the vector's files. */
-  private def stageVector(log: TableLog, stage: TableLog#Stage,
-                          rows: DataFrame): Seq[String] = {
-    val dvDir = stage.dir("dv")
-    rows.select(col("__rel").as("file_rel"), col("__pos").as("pos"))
-      .write.parquet(dvDir.toString)
-    log.listDataFiles(dvDir).map(_._1)
-  }
-
-  /** Row-level DELETE as a MERGE-ON-READ commit — the write-cheap
-    * twin of the copy-on-write [[deleteWhere]]: instead of rewriting
-    * every affected file, the matching rows' POSITIONS land in a
-    * position-delete file (`dv-<uuid>/`, rows of (file_rel, pos) —
-    * the deletion-vector design the reference's table format and
-    * Iceberg v2 use) and every reader anti-joins them inside the same
-    * scan. At 100 TB this turns "delete one user from 10k hot files"
-    * from a 10k-file rewrite into an O(matched rows) write — the read
-    * side pays one (usually broadcast) anti-join until a later
-    * OPTIMIZE/compaction rewrites the files clean. Snapshot totals
-    * stay exactly certified: the commit subtracts the deleted rows'
-    * digests (computed on the same planning scan). Returns None when
-    * nothing matches. Concurrency: conflicts with any intervening
-    * overwrite/schema/layout/constraint change, or a rewrite or MoR
-    * commit touching a covered file ([[commitConflicts]]); disjoint
-    * appends, rewrites and MoR commits retry through. */
-  def deleteWhereMoR(spark: SparkSession, path: String,
-                     pred: org.apache.spark.sql.Column): Option[Commit] = {
-    val log = TableLog(spark, path)
-    val (head, st) = headOf(log)
-    val schema = st.schema
-    val pcols = st.partitionCols
-    // the LIVE view (existing DVs already applied), keyed by (file, pos)
-    val matched = readState(spark, log, st, st.active, withRelCol = true,
-      withPosCol = true).filter(pred)
-    matched.cache()
-    try {
-      val r = matched.agg(count(lit(1)).as("n"),
-        coalesce(sum(Fingerprint.rowDigest(
-          schema.fieldNames.toSeq.map(col))), lit(0L)).as("fp")).head()
-      val (delRows, delFp) = (r.getLong(0), r.getLong(1))
-      if (delRows == 0L) return None
-      val covered = matched.select(col("__rel")).distinct()
-        .collect().map(_.getString(0)).toSet
-      Some(log.staging { stage =>
-        val dvFiles = stageVector(log, stage, matched)
-        stage.claim(s"MoR delete at $path", Some(head), st,
-            Some(commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))) { (b, _) =>
-          val base = b.get
-          Commit(base.version + 1L, "delete_mor", Nil, head.schemaJson,
-            0L, 0L, base.snapshotRows - delRows, base.snapshotFp - delFp,
-            Nil, None, Map.empty, pcols, None, None, dvFiles,
-            dvCovered = covered.toSeq.sorted,
-            colMap = head.colMap, droppedPhys = head.droppedPhys)
-        }
-      })
-    } finally matched.unpersist()
-  }
-
-  /** Row-level UPSERT as a MERGE-ON-READ commit — [[deleteWhereMoR]]'s
-    * twin for [[upsert]]: matched current rows are tombstoned by a
-    * position-delete vector and ALL of `updates` lands as ordinary
-    * appended files, in ONE commit (action `upsert_mor`, carrying both
-    * `add` and `dv`). Cost is O(updates + matched rows) regardless of
-    * how many files the matched keys touch — the steady-state CDC-apply
-    * path at 100 TB, where a COW merge would rewrite every hot file on
-    * every batch; readers pay the same in-scan anti-join until OPTIMIZE
-    * purges. Totals stay digest-certified (subtract matched, add
-    * staged). Same conflict rules as [[deleteWhereMoR]]. */
+  /** Row-level UPSERT as a MERGE-ON-READ commit: matched rows are
+    * tombstoned by a deletion vector and ALL of `updates` (pinned to the
+    * table schema) lands as appended files, in ONE `upsert_mor` commit —
+    * O(updates + matched rows), the steady-state CDC-apply path. Same
+    * conflict rules as [[deleteWhereMoR]]. */
   def upsertMoR(spark: SparkSession, path: String, updates: DataFrame,
-                keyCols: Seq[String]): Commit = {
-    require(keyCols.nonEmpty, "upsertMoR needs at least one key column")
-    val log = TableLog(spark, path)
-    val (head, st) = headOf(log)
-    val schema = st.schema
-    require(orderedFields(schema).toMap == orderedFields(updates.schema).toMap,
-      s"upsertMoR schema mismatch at $path v${head.version}")
-    val upd = updates.select(schema.fieldNames.toSeq.map(col): _*)
-    val pcols = st.partitionCols
-    val cons = checksFrom(st)
-    val keys = upd.select(keyCols.map(col): _*).distinct()
-    val matched = readState(spark, log, st, st.active, withRelCol = true,
-        withPosCol = true)
-      .join(maybeBroadcast(keys), keyCols, "left_semi")
-    matched.cache()
-    try {
-      val r = matched.agg(count(lit(1)).as("n"),
-        coalesce(sum(Fingerprint.rowDigest(
-          schema.fieldNames.toSeq.map(col))), lit(0L)).as("fp")).head()
-      val (delRows, delFp) = (r.getLong(0), r.getLong(1))
-      val covered = matched.select(col("__rel")).distinct()
-        .collect().map(_.getString(0)).toSet
-      // stage the tombstones and the new rows
-      log.staging { stage =>
-        val dvFiles = if (delRows == 0L) Nil else stageVector(log, stage, matched)
-        val (sized, addRows, addFp, stats) = stageAndDigest(upd, log,
-          stage.dir("d"), schema, pcols, cons, st.colMap)
-        stage.claim(s"MoR upsert at $path", Some(head), st,
-            Some(commitConflicts(_, covered, head.schemaJson, head.colMap, pcols))) { (b, _) =>
-          val base = b.get
-          Commit(base.version + 1L, "upsert_mor", sized.map(_._1),
-            head.schemaJson, addRows, addFp,
-            base.snapshotRows - delRows + addRows,
-            base.snapshotFp - delFp + addFp,
-            Nil, None, stats, pcols, None, None, dvFiles,
-            dvCovered = covered.toSeq.sorted,
-            colMap = head.colMap, droppedPhys = head.droppedPhys,
-            addSizes = sized.map(_._2))
-        }
-      }
-    } finally matched.unpersist()
-  }
+                keyCols: Seq[String]): Commit =
+    Rewrite.upsertMoR(spark, path, updates, keyCols)
 
-  /** [[merge]]'s MERGE-ON-READ twin — conditional MERGE as ONE
-    * `merge_mor` commit that rewrites NOTHING: matched rows a clause
-    * claims are tombstoned by a position-delete vector, their updated
-    * versions (for UPDATE clauses) and the conditional inserts land as
-    * appended files. Cost is O(matched + inserted rows) regardless of
-    * how many files the keys touch — the steady-state conditional-CDC
-    * path at 100 TB. Matched rows NO clause claims are untouched (no
-    * tombstone, no append — zero write amplification for them, where
-    * even the CoW merge re-writes their whole file).
-    *
-    * NOT MATCHED BY SOURCE clauses are REFUSED: they touch the
-    * complement of the source keys — a full-table shape where MoR
-    * buys nothing over [[merge]]; use the CoW form and pay the honest
-    * cost. Same first-match-wins semantics, multi-match refusal and
-    * conflict rules as [[merge]]/[[upsertMoR]].
-    *
-    * SCHEMA EVOLUTION (`evolveSchema = true`): same rule set as
-    * [[merge]] — new source columns evolve in, lossless widenings
-    * widen, anything else refuses — and the DATA cost stays
-    * O(matched + inserted): untouched files are never rewritten (old
-    * rows read null for new columns and promote for widened ones).
-    * The commit still pays the documented epoch recompute for its
-    * snapshot TOTALS (one digest scan — metadata certification, not
-    * data movement) and aborts on any concurrent commit. */
+  /** [[merge]] as ONE `merge_mor` commit that rewrites NOTHING: claimed
+    * matched rows are tombstoned by a deletion vector, their updated
+    * versions and the inserts land as appended files — O(matched +
+    * inserted rows); matched rows no clause claims stay untouched. NOT
+    * MATCHED BY SOURCE clauses are REFUSED (a full-table shape; use
+    * [[merge]]). Same clause compiler and multi-match refusal as
+    * [[merge]], same conflict rules as [[upsertMoR]]; with
+    * `evolveSchema` the same evolution rule, paying the epoch recompute
+    * of the TOTALS only and aborting on any concurrent commit. */
   def mergeMoR(spark: SparkSession, path: String, source: DataFrame,
                keyCols: Seq[String], clauses: Seq[MergeClause],
-               evolveSchema: Boolean = false): Commit = {
-    require(keyCols.nonEmpty, "mergeMoR needs at least one key column")
-    require(clauses.nonEmpty, "mergeMoR needs at least one WHEN clause")
-    clauses.foreach {
-      case _: WhenNotMatchedBySourceUpdate | _: WhenNotMatchedBySourceDelete =>
-        throw new IllegalArgumentException(
-          "mergeMoR refuses NOT MATCHED BY SOURCE clauses: they touch " +
-            "every target row without a source match — a full-table " +
-            "rewrite shape where merge-on-read buys nothing; use merge()")
-      case _ => ()
-    }
-    val log = TableLog(spark, path)
-    val (head, st) = headOf(log)
-    val schema = st.schema
-    val cols = schema.fieldNames.toSeq
-    val pcols = st.partitionCols
-    val cons = checksFrom(st)
-    val (newCols, widened) = evolutionOf(schema, source, evolveSchema,
-      s"mergeMoR evolveSchema at $path")
-    val outSchema = evolvedSchema(schema, source, newCols, widened)
-    val isNewCol = newCols.map(_.name).toSet
-    val evolving = newCols.nonEmpty || widened.nonEmpty
-    val outMap = if (evolving) evolvedColMap(head, schema, newCols)
-                 else st.colMap
-    require(keyCols.forall(cols.contains),
-      s"mergeMoR keys $keyCols not all in table schema $cols")
-    require(keyCols.forall(source.columns.contains),
-      s"mergeMoR keys $keyCols not all in source ${source.columns.toSeq}")
-    clauses.collect { case WhenNotMatchedInsert(v, _) if v.isEmpty => () }
-      .headOption.foreach { _ =>
-        require(cols.forall(source.columns.contains),
-          "INSERT * needs every target column in the source: missing " +
-            cols.filterNot(source.columns.contains).mkString(", "))
-      }
-    val matchedClauses = clauses.collect {
-      case c: WhenMatchedUpdate => c: MergeClause
-      case c: WhenMatchedDelete => c: MergeClause }
-    val srcKeys = source.select(keyCols.map(col): _*).distinct()
-    // ONE size estimate, on the cheap source-derived frame; dup keys
-    // and matched keys are SUBSETS of the source keys, so the decision
-    // transfers (broadcastOk's doc) without re-optimizing table subtrees
-    val srcKeysOk = broadcastOk(srcKeys)
-    if (matchedClauses.nonEmpty) {
-      val dupKeys = source.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
-        .select(keyCols.map(col): _*)
-      lazy val probe = readState(spark, log, st, st.active)
-      if (!dupKeys.isEmpty &&
-          !probe.join(hinted(dupKeys, srcKeysOk), keyCols, "left_semi").isEmpty)
-        throw new IllegalStateException(
-          s"mergeMoR into $path: multiple source rows match the same " +
-            "target row with MATCHED clauses present — nondeterministic; " +
-            s"de-duplicate the source on ${keyCols.mkString(", ")}")
-    }
-    val src = source
-      .select(source.columns.toSeq.map(c => col(c).as(s"__src_$c")): _*)
-    // ONE pass over the table: matched target rows with file+position
-    val tgtMatched = readState(spark, log, st, st.active, withRelCol = true,
-        withPosCol = true)
-      .join(hinted(srcKeys, srcKeysOk), keyCols, "left_semi")
-    val joinCond = keyCols.map(k => col(k) === col(s"__src_$k"))
-      .reduce(_ && _)
-    // matched pairs (inner: multi-match already refused, keys distinct)
-    val pairs = tgtMatched.join(src, joinCond, "inner")
-    val actionCol = matchedClauses.map {
-        case WhenMatchedUpdate(_, c) => c.getOrElse(lit(true))
-        case WhenMatchedDelete(c) => c.getOrElse(lit(true))
-        case other => throw new IllegalStateException(
-          s"unreachable: $other filtered out above")
-      }.zipWithIndex
-      .foldLeft(when(lit(false), lit(0))) { case (acc, (g, i)) =>
-        acc.when(g, lit(i + 1)) }
-      .otherwise(lit(0))
-    val claimed = pairs.withColumn("__action", actionCol)
-      .filter(col("__action") =!= 0)
-    claimed.cache()
-    try {
-      val r = claimed.agg(count(lit(1)).as("n"),
-        coalesce(sum(Fingerprint.rowDigest(cols.map(col))), lit(0L)).as("fp"))
-        .head()
-      val (delRows, delFp) = (r.getLong(0), r.getLong(1))
-      val covered = claimed.select(col("__rel")).distinct()
-        .collect().map(_.getString(0)).toSet
-      // appended rows: updated versions of update-claimed matches...
-      // (an evolution-added column has no target value — unset it
-      // defaults to null, the same keep-the-target rule merge() uses)
-      def keepCol(f: StructField): Column =
-        if (isNewCol(f.name)) lit(null) else col(f.name)
-      def updOut(f: StructField): Column =
-        matchedClauses.zipWithIndex
-          .foldLeft(when(lit(false), lit(null))) { case (acc, (cl, i)) =>
-            cl match {
-              case WhenMatchedUpdate(set, _) => acc.when(
-                col("__action") === i + 1, set.getOrElse(f.name, keepCol(f)))
-              case _ => acc // delete-claimed rows append nothing
-            }
-          }
-          .otherwise(keepCol(f)).cast(f.dataType).as(f.name)
-      val updateIdx = matchedClauses.zipWithIndex.collect {
-        case (_: WhenMatchedUpdate, i) => i + 1 }
-      val updated =
-        if (updateIdx.isEmpty) spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-        else claimed
-          .filter(col("__action").isin(updateIdx.map(Integer.valueOf): _*))
-          .select(outSchema.fields.toSeq.map(updOut): _*)
-      // ...plus the conditional inserts (source keys matching nothing).
-      // Target columns are added as TYPED NULLS so an insert condition/
-      // assignment referencing a target column by plain name resolves
-      // to null — exactly what it is on merge()'s full-outer frame for
-      // a source-only row — instead of throwing an unresolved-column
-      // error only on the MoR surface (ADVICE r11: the two merge
-      // surfaces must accept the same clause lists).
-      val srcOnly = outSchema.fields.foldLeft(src.join(
-          hinted(tgtMatched.select(keyCols.map(col): _*).distinct()
-            .select(keyCols.map(k => col(k).as(s"__src_$k")): _*), srcKeysOk),
-          keyCols.map(k => s"__src_$k"), "left_anti")) { (d, f) =>
-        d.withColumn(f.name, lit(null).cast(f.dataType))
-      }
-      val insActionCol = clauses.zipWithIndex.collect {
-          case (WhenNotMatchedInsert(_, c), i) => (c.getOrElse(lit(true)), i + 1)
-        }
-        .foldLeft(when(lit(false), lit(0))) { case (acc, (g, i)) =>
-          acc.when(g, lit(i)) }
-        .otherwise(lit(0))
-      def insOut(f: StructField): Column =
-        clauses.zipWithIndex
-          .foldLeft(when(lit(false), lit(null))) { case (acc, (cl, i)) =>
-            cl match {
-              case WhenNotMatchedInsert(values, _) => acc.when(
-                col("__action") === i + 1,
-                if (values.isEmpty) col(s"__src_${f.name}")
-                else values.getOrElse(f.name, lit(null)))
-              case _ => acc
-            }
-          }
-          .otherwise(lit(null)).cast(f.dataType).as(f.name)
-      val inserted = srcOnly.withColumn("__action", insActionCol)
-        .filter(col("__action") =!= 0)
-        .select(outSchema.fields.toSeq.map(insOut): _*)
-      val appends = updated.unionByName(inserted)
+               evolveSchema: Boolean = false): Commit =
+    Rewrite.mergeMoR(spark, path, source, keyCols, clauses, evolveSchema)
 
-      // a schema-evolving merge pays the epoch recompute of its TOTALS
-      // only (data movement stays O(matched + inserted)) — the live
-      // contribution of every active file under the evolved schema with
-      // the in-force vectors PLUS this merge's new tombstones applied,
-      // then the appends — and aborts on any race (evolution commits
-      // never merge with concurrent writes)
-      val conflicts: Commit => Boolean =
-        if (evolving) _ => true
-        else commitConflicts(_, covered, head.schemaJson, head.colMap, pcols)
-      log.staging { stage =>
-        val dvFiles = if (delRows == 0L) Nil else stageVector(log, stage, claimed)
-        // a delete-only merge appends NOTHING — no empty-file litter
-        val (sized, addRows, addFp, stats) =
-          if (appends.isEmpty)
-            (Nil, 0L, 0L, Map.empty[String, Map[String, (Long, Long)]])
-          else stageAndDigest(appends, log, stage.dir("d"), outSchema, pcols,
-            cons, outMap)
-        stage.claim(s"${if (evolving) "schema-evolving " else ""}MoR merge at $path",
-            Some(head), st, Some(conflicts)) { (b, _) =>
-          val base = b.get
-          val (snapRows, snapFp) =
-            if (evolving) {
-              val (liveRows, liveFp) = digestFiles(spark, log, st.active,
-                outSchema, pcols, st.dvs ++ dvFiles, outMap)
-              (liveRows + addRows, liveFp + addFp)
-            } else (base.snapshotRows - delRows + addRows,
-              base.snapshotFp - delFp + addFp)
-          Commit(base.version + 1L, "merge_mor", sized.map(_._1),
-            if (evolving) outSchema.json else head.schemaJson,
-            addRows, addFp, snapRows, snapFp,
-            Nil, None, stats, pcols, None, None, dvFiles,
-            dvCovered = covered.toSeq.sorted,
-            colMap = if (evolving) outMap else head.colMap,
-            droppedPhys = head.droppedPhys,
-            widenedCols = widened, addSizes = sized.map(_._2))
-        }
-      }
-    } finally claimed.unpersist()
-  }
-
-  /** Row-level UPSERT (merge) as a copy-on-write commit: rows of
-    * `updates` REPLACE current rows sharing their `keyCols` and the
-    * rest INSERT. Only files holding a matched key are rewritten (their
-    * unmatched rows survive into new files); `updates` must match the
-    * table schema (the append pin). Same conflict semantics as
-    * [[deleteWhere]]. */
+  /** Row-level UPSERT as a copy-on-write commit: rows of `updates`
+    * (pinned to the table schema) REPLACE current rows sharing their
+    * `keyCols` and the rest INSERT; only files holding a matched key
+    * are rewritten. Same conflict semantics as [[deleteWhere]]. */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
-             keyCols: Seq[String]): Commit = {
-    require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val (head, st, cur, log) = currentWithFiles(spark, path)
-    val headSchema = st.schema
-    val headMap = orderedFields(headSchema).toMap
-    val incoming = orderedFields(updates.schema).toMap
-    require(headMap == incoming,
-      s"upsert schema mismatch at $path v${head.version}:\n" +
-        s"  table:    ${headMap.toSeq.sorted.mkString(", ")}\n" +
-        s"  incoming: ${incoming.toSeq.sorted.mkString(", ")}")
-    // align a column-permuted updates frame to the head's field order
-    // (the same pin the append path applies)
-    val upd = updates.select(headSchema.fieldNames.toSeq.map(col): _*)
-    val keys = upd.select(keyCols.map(col): _*).distinct()
-    val keysOk = broadcastOk(keys) // one estimate, reused for both joins
-    val affected = cur.join(hinted(keys, keysOk), keyCols, "left_semi")
-      .select(col("__file")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    val survivors =
-      if (affected.isEmpty) upd // pure insert; nothing rewritten
-      else restrictToFiles(cur, affected)
-        .join(hinted(keys, keysOk), keyCols, "left_anti").drop("__file")
-        .unionByName(upd)
-    rewriteCommit(spark, log, head, st, survivors, affected)
-  }
-
-  // --------------------------------------------------------------- MERGE
+             keyCols: Seq[String]): Commit =
+    Rewrite.upsert(spark, path, updates, keyCols)
 
   /** Reference a SOURCE column inside a [[merge]] clause condition or
     * assignment. Target columns are referenced by their plain names;
@@ -906,326 +309,59 @@ object Versioned {
     extends MergeClause
 
   /** Full conditional MERGE INTO as one copy-on-write commit — the
-    * complete Delta MERGE surface the reference's `MERGE UPDATE SET *`
-    * pattern grows into (reference: pyspark_jobs/
-    * process_recommendation_events.py's upsert landing; [[upsert]] and
-    * [[applyChanges]] are the fixed-shape fast paths of this):
-    * WHEN MATCHED [AND cond] THEN UPDATE/DELETE, WHEN NOT MATCHED
-    * [AND cond] THEN INSERT, WHEN NOT MATCHED BY SOURCE [AND cond]
-    * THEN UPDATE/DELETE, any number of each, first-match-wins within
-    * each population; rows no clause claims pass through unchanged
-    * (targets) or are ignored (sources).
+    * Delta MERGE surface the reference's `MERGE UPDATE SET *` pattern
+    * grows into (pyspark_jobs/process_recommendation_events.py's upsert
+    * landing; [[upsert]] is its fixed-shape special case, while
+    * `operators.Merge.applyChanges` is a separate CDC apply over plain
+    * frames, not a path of this one): WHEN MATCHED [AND cond] THEN
+    * UPDATE/DELETE, WHEN NOT MATCHED [AND cond] THEN INSERT, WHEN NOT
+    * MATCHED BY SOURCE [AND cond] THEN UPDATE/DELETE, any number of
+    * each, first-match-wins within each population; rows no clause
+    * claims pass through unchanged (targets) or are ignored (sources).
+    * A target row matching MULTIPLE source rows with matched clauses
+    * present is REFUSED (the Delta error).
     *
-    * Scale: planning is ONE semi-join of the CoW scan against the
-    * (broadcast) distinct source keys — only files actually holding
-    * matched keys are rewritten, everything else stays shared with
-    * prior versions. The exception is a NOT MATCHED BY SOURCE clause,
-    * which by definition can touch any target row: its presence makes
-    * every active file affected (the same full-table-rewrite shape the
-    * clause has in Delta — document the cost at the call site). The
-    * clause dispatch is a single codegen'd CASE chain, no UDFs, one
-    * shuffle-free pass over the joined frame. A target row matching
-    * MULTIPLE source rows with matched clauses present is REFUSED
-    * (nondeterministic update — the Delta error), detected with one
-    * aggregation on the source's matched key set.
+    * Scale: ONE semi-join of the CoW scan against the (broadcast)
+    * distinct source keys plans the affected files; everything else
+    * stays shared. A NOT MATCHED BY SOURCE clause can touch any row, so
+    * it makes every active file affected (its Delta cost too). The
+    * dispatch is one codegen'd CASE chain ([[Rewrite.compile]], shared
+    * with [[mergeMoR]]). Concurrency: the disjoint-file retry of
+    * [[deleteWhere]].
     *
-    * Concurrency: write-serializable with the disjoint-file retry rule
-    * ([[rewriteCommit]]). Returns the commit.
-    *
-    * SCHEMA EVOLUTION (`evolveSchema = true`, the Delta
-    * `withSchemaEvolution` counterpart of [[appendEvolve]]): every
-    * source column the target lacks is ADDED to the table schema —
-    * pre-existing rows read null for it, INSERT * carries it, UPDATE
-    * clauses may SET it. (Deliberately coarser than Delta's
-    * assignment-driven evolution — ALL new source columns evolve, a
-    * predictable rule documented here.) An evolving merge pays the
-    * epoch recompute ([[appendEvolve]]'s documented price) and aborts
-    * on ANY concurrent commit instead of retrying; it refuses tables
-    * with in-force deletion vectors (OPTIMIZE first) so the epoch
-    * totals never have to re-derive vector coverage mid-evolution. */
+    * SCHEMA EVOLUTION (`evolveSchema = true`, Delta's
+    * `withSchemaEvolution`; the [[appendEvolve]] rule): every source
+    * column the target lacks is ADDED (old rows read null; INSERT *
+    * carries it, UPDATE may SET it — ALL new source columns evolve, a
+    * coarser rule than Delta's) and lossless widenings widen. An
+    * evolving merge recomputes the totals over the untouched files
+    * (in-force deletion vectors applied) and aborts on ANY concurrent
+    * commit instead of retrying. */
   def merge(spark: SparkSession, path: String, source: DataFrame,
             keyCols: Seq[String], clauses: Seq[MergeClause],
-            evolveSchema: Boolean = false): Commit = {
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    require(clauses.nonEmpty, "merge needs at least one WHEN clause")
-    val (head, st, cur, log) = currentWithFiles(spark, path)
-    val headSchema = st.schema
-    val (newCols, widened) =
-      evolutionOf(headSchema, source, evolveSchema, s"merge evolveSchema at $path")
-    val outSchema = evolvedSchema(headSchema, source, newCols, widened)
-    val isNewCol = newCols.map(_.name).toSet
-    val cols = headSchema.fieldNames.toSeq
-    require(keyCols.forall(cols.contains),
-      s"merge keys $keyCols not all in table schema $cols")
-    require(keyCols.forall(source.columns.contains),
-      s"merge keys $keyCols not all in source columns ${source.columns.toSeq}")
-    val hasMatched = clauses.exists {
-      case _: WhenMatchedUpdate | _: WhenMatchedDelete => true; case _ => false }
-    val hasBySource = clauses.exists {
-      case _: WhenNotMatchedBySourceUpdate | _: WhenNotMatchedBySourceDelete =>
-        true
-      case _ => false }
-    clauses.collect { case WhenNotMatchedInsert(v, _) if v.isEmpty => () }
-      .headOption.foreach { _ =>
-        require(cols.forall(source.columns.contains),
-          "INSERT * needs every target column in the source: missing " +
-            cols.filterNot(source.columns.contains).mkString(", "))
-      }
+            evolveSchema: Boolean = false): Commit =
+    Rewrite.merge(spark, path, source, keyCols, clauses, evolveSchema)
 
-    // ONE size estimate on the source keys, reused for the dup-key
-    // subset (broadcastOk's doc); lazy — the BY SOURCE path never plans
-    // a key join at all
-    lazy val srcKeysOk =
-      broadcastOk(source.select(keyCols.map(col): _*).distinct())
-
-    // refuse the nondeterministic update: a target row matching more
-    // than one source row while matched clauses exist (Delta's
-    // DELTA_MULTIPLE_SOURCE_ROW_MATCHING error)
-    if (hasMatched) {
-      val dupKeys = source.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
-        .select(keyCols.map(col): _*)
-      // the target-side probe only runs when the source actually has
-      // duplicate keys — the common distinct-source merge never scans
-      if (!dupKeys.isEmpty &&
-          !cur.join(hinted(dupKeys, srcKeysOk), keyCols, "left_semi").isEmpty)
-        throw new IllegalStateException(
-          s"merge into $path: multiple source rows match the same target " +
-            "row with MATCHED clauses present — the update would be " +
-            "nondeterministic; de-duplicate the source on " +
-            keyCols.mkString(", "))
-    }
-
-    // CoW planning: only files holding matched keys — unless a BY
-    // SOURCE clause can touch any row, which makes every file affected
-    val affected: Seq[String] =
-      if (hasBySource)
-        cur.select(col("__file")).distinct()
-          .collect().map(_.getString(0)).sorted.toSeq
-      else {
-        val keys = source.select(keyCols.map(col): _*).distinct()
-        cur.join(hinted(keys, srcKeysOk), keyCols, "left_semi")
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0)).sorted.toSeq
-      }
-
-    val t = (if (affected.isEmpty) cur.filter(lit(false))
-             else restrictToFiles(cur, affected))
-      .drop("__file").withColumn("__t_exists", lit(true))
-    val src = source
-      .select(source.columns.toSeq.map(c => col(c).as(s"__src_$c")): _*)
-      .withColumn("__s_exists", lit(true))
-    val joinCond = keyCols.map(k => col(k) === col(s"__src_$k"))
-      .reduce(_ && _)
-    val joined = t.join(src, joinCond, "full_outer")
-
-    val isMatched = col("__t_exists").isNotNull && col("__s_exists").isNotNull
-    val isSrcOnly = col("__t_exists").isNull
-    val isTgtOnly = col("__s_exists").isNull
-    def gateOf(cl: MergeClause): Column = cl match {
-      case WhenMatchedUpdate(_, c) => isMatched && c.getOrElse(lit(true))
-      case WhenMatchedDelete(c) => isMatched && c.getOrElse(lit(true))
-      case WhenNotMatchedInsert(_, c) => isSrcOnly && c.getOrElse(lit(true))
-      case WhenNotMatchedBySourceUpdate(_, c) =>
-        isTgtOnly && c.getOrElse(lit(true))
-      case WhenNotMatchedBySourceDelete(c) =>
-        isTgtOnly && c.getOrElse(lit(true))
-    }
-    // first-match-wins: one CASE chain over all clauses (populations
-    // are disjoint, so cross-category order is immaterial; in-category
-    // order is the declared one). Action 0 = no clause claimed the row.
-    val actionCol = clauses.zipWithIndex
-      .foldLeft(when(lit(false), lit(0))) { case (acc, (cl, i)) =>
-        acc.when(gateOf(cl), lit(i + 1)) }
-      .otherwise(lit(0))
-    val deleteIdx = clauses.zipWithIndex.collect {
-      case (_: WhenMatchedDelete, i) => i + 1
-      case (_: WhenNotMatchedBySourceDelete, i) => i + 1 }
-    val withAction = joined.withColumn("__action", actionCol)
-    val dropCond = (if (deleteIdx.isEmpty) lit(false)
-                    else col("__action").isin(deleteIdx.map(Integer.valueOf): _*)) ||
-      (isSrcOnly && col("__action") === 0)
-    // the "keep the target value" default: a column the table is only
-    // now gaining has no target value — pre-existing rows read null
-    def keepCol(f: StructField): Column =
-      if (isNewCol(f.name)) lit(null) else col(f.name)
-    def outCol(f: StructField): Column =
-      clauses.zipWithIndex
-        .foldLeft(when(lit(false), lit(null))) { case (acc, (cl, i)) =>
-          cl match {
-            case WhenMatchedUpdate(set, _) => acc.when(
-              col("__action") === i + 1, set.getOrElse(f.name, keepCol(f)))
-            case WhenNotMatchedInsert(values, _) => acc.when(
-              col("__action") === i + 1,
-              if (values.isEmpty) col(s"__src_${f.name}")
-              else values.getOrElse(f.name, lit(null)))
-            case WhenNotMatchedBySourceUpdate(set, _) => acc.when(
-              col("__action") === i + 1, set.getOrElse(f.name, keepCol(f)))
-            case _ => acc // delete rows are filtered out before this
-          }
-        }
-        .otherwise(keepCol(f))
-        .cast(f.dataType).as(f.name)
-    val survivors = withAction.filter(!dropCond)
-      .select(outSchema.fields.toSeq.map(outCol): _*)
-    if (newCols.isEmpty && widened.isEmpty)
-      return rewriteCommit(spark, log, head, st, survivors, affected,
-        action = "merge")
-
-    // ---- schema-evolving commit: epoch recompute, abort on any race
-    val evolvedMap = evolvedColMap(head, headSchema, newCols)
-    val pcols = head.partitionCols
-    val cons = checksFrom(st)
-    val removedSet = affected.toSet
-    log.staging { stage =>
-      val (sized, addRows, addFp, stats) = stageAndDigest(survivors, log,
-        stage.dir("d"), outSchema, pcols, cons, evolvedMap)
-      val files = sized.map(_._1)
-      // evolution commits never merge with concurrent writes: any
-      // intervening commit aborts
-      stage.claim(s"schema-evolving merge at $path", Some(head), st,
-          Some(_ => true)) { (b, stH) =>
-        val h = b.get
-        // the epoch recompute: untouched files digested under the
-        // EVOLVED schema (missing columns read null -> the 'N' sentinel;
-        // widened columns promote natively), with IN-FORCE DELETION
-        // VECTORS applied — the recompute digests each remaining file's
-        // LIVE contribution, so evolving over a table with live DVs
-        // needs no OPTIMIZE-first rewrite (VERDICT r11 #5)
-        val remaining = stH.active.filterNot(removedSet)
-        val (remRows, remFp) = digestFiles(spark, log, remaining, outSchema,
-          pcols, stH.dvs, evolvedMap)
-        // vectors stranded by this merge's rewrite are purged, same rule
-        // as rewriteCommit
-        Commit(h.version + 1L, "merge", files, outSchema.json,
-          addRows, addFp, remRows + addRows, remFp + addFp, affected, None,
-          stats, pcols, dvRemove = stranded(stH, (remaining ++ files).toSet),
-          colMap = evolvedMap, droppedPhys = head.droppedPhys,
-          widenedCols = widened, addSizes = sized.map(_._2))
-      }
-    }
+  /** The head record and its folded state (None: no commits), from one
+    * listing of the log and one read of the head record. */
+  private[ingest] def headOption(log: TableLog): Option[(Commit, CkptState)] = {
+    val listing = log.list()
+    listing.versions.lastOption.map(log.commitAt(_, listing))
   }
 
-  /** Head commit and state + the current table frame tagged with each
-    * row's RELATIVE file path (the copy-on-write planning scan). */
-  private def currentWithFiles(spark: SparkSession, path: String)
-      : (Commit, CkptState, DataFrame, TableLog) = {
-    val log = TableLog(spark, path)
-    val (head, st) = headOf(log)
-    val cur = readState(spark, log, st, st.active, withRelCol = true)
-      .withColumnRenamed("__rel", "__file")
-    (head, st, cur, log)
-  }
+  /** [[headOption]] of a table that must have commits. */
+  private[ingest] def headOf(log: TableLog): (Commit, CkptState) =
+    headOption(log).getOrElse(throw new IllegalStateException(s"no commits at ${log.path}"))
 
-  /** The head record and its folded state, from one listing of the log. */
-  private def headOf(log: TableLog): (Commit, CkptState) =
-    headStateOf(log).map(st => (log.readCommit(st.version), st)).getOrElse(
-      throw new IllegalStateException(s"no commits at ${log.path}"))
+  /** Most claims one commit makes before giving up on the race
+    * ([[TableLog.Stage.claim]]). */
+  private[graft] final val MaxClaimAttempts = 20
 
-  /** Deletion vectors in force in `st` that none of `active` needs: a
-    * vector none of whose covered data files stays active is dead
-    * weight — every read pays its anti-join and retention must keep it.
-    * Decided from log metadata alone (archived dvCovered); unknown
-    * coverage is kept conservatively (stale entries match nothing). */
-  private def stranded(st: CkptState, active: Set[String]): Seq[String] =
-    st.dvs.filter(d => st.dvCoverage.get(d)
-      .exists(s => s.nonEmpty && !s.exists(active.contains)))
-
-  /** Digest scans actually launched (test hook): the certify-from-log
-    * spec asserts a full-set rewrite consults the archived totals
-    * instead of paying a second read of everything it just rewrote. */
+  /** Digest scans actually launched (test hook, read by name by the
+    * benchmark's trace): the certify-from-log spec asserts a full-set
+    * rewrite consults the archived totals instead of paying a second
+    * read of everything it just rewrote. */
   private[graft] val digestScans = new java.util.concurrent.atomic.AtomicLong
-
-  /** (row count, additive digest) of a root-relative file set under
-    * `schema` — one scan. */
-  private def digestFiles(spark: SparkSession, log: TableLog, files: Seq[String],
-                          schema: StructType, partitionCols: Seq[String],
-                          dvFiles: Seq[String] = Nil,
-                          colMap: Seq[(String, String)] = Nil): (Long, Long) =
-    if (files.isEmpty) (0L, 0L)
-    else {
-      digestScans.incrementAndGet()
-      // dvFiles: the files' LIVE contribution (raw minus position
-      // deletes) — what the snapshot totals actually carry for them
-      val r = readFilesDF(spark, log, files, schema, partitionCols,
-          dvFiles = dvFiles, colMap = colMap)
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(Fingerprint.rowDigest(
-            schema.fieldNames.toSeq.map(col))), lit(0L)).as("fp")).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-  /** Shared copy-on-write commit bookkeeping: write the rebuilt rows
-    * (preserving the table's partition layout), digest both sides, and
-    * claim the next version. Conflict semantics are WRITE-SERIALIZABLE
-    * with the DISJOINT-FILE rule the reference format implements: on a
-    * lost claim the intervening commits are re-read, and the rewrite
-    * RETRIES against the new head iff none of them overwrote the
-    * table, changed the schema or layout, or touched any file in this
-    * rewrite's remove set — a concurrent append (or a rewrite of other
-    * files) cannot invalidate the planned file rewrite, only shift the
-    * snapshot totals it folds into. Anything that could make the plan
-    * stale aborts with ConcurrentModificationException. (Rows added by
-    * a concurrent append are NOT re-examined against the upsert keys /
-    * delete predicate — the documented WriteSerializable trade, not
-    * full Serializable.) */
-  private def rewriteCommit(spark: SparkSession, log: TableLog,
-                            head: Commit, st: CkptState, rebuilt: DataFrame,
-                            removed: Seq[String], action: String = "rewrite",
-                            requireContentPreserved: Boolean = false): Commit = {
-    val pcols = head.partitionCols
-    val cons = checksFrom(st)
-    val schema = st.schema
-    val removedSet = removed.toSet
-    log.staging { stage =>
-      val (sized, addRows, addFp, stats) = stageAndDigest(rebuilt, log,
-        stage.dir("d"), schema, pcols, cons, head.colMap)
-      val files = sized.map(_._1)
-      // CERTIFY FROM THE LOG where it is exact (r15, VERDICT r14 #4): a
-      // rewrite that replaces the ENTIRE active set (optimize / full
-      // compaction — the common maintenance shape) needs the removed
-      // files' LIVE (rows, fp), and for the full set those are precisely
-      // the archived snapshot totals at head — certified transitively by
-      // every earlier commit (and re-checked by every read-side
-      // certification). Skips the full second read of everything the
-      // rewrite just read: at 100 TB, OPTIMIZE pays one pass, not two.
-      // It is also the STRONGER check: the staged digest is compared
-      // against the log's additive history instead of a fresh read that
-      // shares the staging's own read path. Partial rewrites
-      // (compactSmallFiles, optimize-where, CoW upsert/delete) still
-      // digest exactly their removed subset — O(removed), never O(table).
-      val (remRows, remFp) =
-        if (removed.nonEmpty && removedSet == st.active.toSet)
-          (head.snapshotRows, head.snapshotFp)
-        else
-          digestFiles(spark, log, removed, schema, pcols, st.dvs, head.colMap)
-      if (requireContentPreserved && (addRows != remRows || addFp != remFp))
-        throw new IllegalStateException(
-          s"content-preserving rewrite of ${log.path} is NOT content-identical: " +
-            s"staged ($addRows rows, fp $addFp) vs removed ($remRows rows, " +
-            s"fp $remFp) — the additive fingerprint certifies layout " +
-            "maintenance must never change table content; staging deleted")
-      // a lost claim runs the disjoint-file recheck: an intervening MoR
-      // delete/upsert conflicts only when its archived coverage touches
-      // this rewrite's removed files (the survivors were computed before
-      // it and would resurrect its deleted rows)
-      stage.claim(s"rewrite of ${log.path}", Some(head), st,
-          Some(commitConflicts(_, removedSet, head.schemaJson, head.colMap,
-            pcols))) { (b, baseSt) =>
-        val base = b.get
-        // PURGE the deletion vectors this rewrite strands
-        val purgedDvs = stranded(baseSt,
-          (baseSt.active.filterNot(removedSet) ++ files).toSet)
-        Commit(base.version + 1L, action, files, head.schemaJson,
-          addRows, addFp,
-          base.snapshotRows - remRows + addRows,
-          base.snapshotFp - remFp + addFp, removed, None, stats, pcols,
-          dvRemove = purgedDvs,
-          colMap = head.colMap, droppedPhys = head.droppedPhys,
-          addSizes = sized.map(_._2))
-      }
-    }
-  }
 
   /** Transactionally-tagged append for exactly-once streaming sinks:
     * if batch `txnBatch` (or a later one) is already committed for
@@ -1243,8 +379,10 @@ object Versioned {
     * model — a batch is retried only after failure, never
     * concurrently). */
   def idempotentAppend(df: DataFrame, path: String, txnApp: String,
-                       txnBatch: Long): Option[Commit] =
-    commit(df, TableLog(df.sparkSession, path), "append", Some((txnApp, txnBatch)))
+                       txnBatch: Long): Option[Commit] = {
+    val log = TableLog(df.sparkSession, path)
+    commit(df, log, headOption(log), "append", Some((txnApp, txnBatch)))
+  }
 
   /** Exactly-once STREAMING SINK into a versioned table: every
     * micro-batch lands as one idempotent tagged append, so the commit
@@ -1274,28 +412,26 @@ object Versioned {
     * digests fields in that order: accepting a column-reordered append
     * would silently break the additive snapshotFp rollup for every
     * later version. */
-  private def orderedFields(s: StructType): Seq[(String, String)] =
+  private[ingest] def orderedFields(s: StructType): Seq[(String, String)] =
     s.map(f => f.name -> f.dataType.simpleString)
 
-  /** Stage `df1` and claim it as an `append` or `overwrite` version.
-    * `listed` is a log listing the caller already holds (a stale one
-    * only costs a lost claim); an append inherits the head's partition
-    * layout, an overwrite takes `partitionBy`. A `txn`-tagged append
-    * whose batch the head state already records is a no-op (None). */
-  private def commit(df1: DataFrame, log: TableLog, action: String,
-                     txn: Option[(String, Long)] = None,
-                     partitionBy: Seq[String] = Nil,
-                     listed: Option[LogListing] = None): Option[Commit] = {
+  /** Stage `df1` and claim it as an `append` or `overwrite` version
+    * against `at`, the head record and state the caller resolved
+    * ([[headOption]]; a stale one only costs a lost claim). An append
+    * inherits the head's partition layout, an overwrite takes
+    * `partitionBy`. A `txn`-tagged append whose batch the head state
+    * already records is a no-op (None). */
+  private[ingest] def commit(df1: DataFrame, log: TableLog,
+                             at: Option[(Commit, CkptState)], action: String,
+                             txn: Option[(String, Long)] = None,
+                             partitionBy: Seq[String] = Nil): Option[Commit] = {
     val path = log.path
 
-    // ONE log listing, ONE stage-time read of the head record and ONE
-    // state fold feed everything below (r14: these were four
-    // latestCommit reads and three stateAt folds — the dominant
-    // metadata cost of a small commit); only a lost claim re-reads and
+    // ONE log listing and ONE state fold, whose last read is the head
+    // record, feed everything below; only a lost claim re-reads and
     // re-validates against the head it then serializes after
-    val listing = listed.getOrElse(log.list())
-    val head0 = listing.versions.lastOption.map(log.readCommit)
-    val st0 = head0.fold(CkptState.Empty)(h => log.stateAt(h.version, listing))
+    val head0 = at.map(_._1)
+    val st0 = at.fold(CkptState.Empty)(_._2)
     // the exactly-once sink's dedup, on the same fold: this app already
     // committed this batch or a later one
     if (txn.exists { case (app, batch) => st0.txns.get(app).exists(_ >= batch) })
@@ -1437,7 +573,7 @@ object Versioned {
     * restore carries the target version's accumulated list, so
     * rolled-back MoR deletes stay applied — and a rewrite that left
     * none of a vector's covered files active PURGES it via dvRemove). */
-  private def readState(spark: SparkSession, log: TableLog, st: CkptState,
+  private[ingest] def readState(spark: SparkSession, log: TableLog, st: CkptState,
                         files: Seq[String], withRelCol: Boolean = false,
                         withPosCol: Boolean = false): DataFrame =
     readFilesDF(spark, log, files, st.schema, st.partitionCols, withRelCol,
@@ -1506,7 +642,7 @@ object Versioned {
       : org.apache.spark.sql.Column =
     regexp_replace(fpCol, "^[a-z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
 
-  private def readFilesDF(spark: SparkSession, log: TableLog, files: Seq[String],
+  private[ingest] def readFilesDF(spark: SparkSession, log: TableLog, files: Seq[String],
                           schema: StructType, partitionCols: Seq[String],
                           withRelCol: Boolean = false,
                           dvFiles: Seq[String] = Nil,
@@ -2359,7 +1495,7 @@ object Versioned {
     beforeSchema.foreach { pf =>
       afterSchema.find(_.name == pf.name).foreach { af =>
         if (af.dataType != pf.dataType &&
-            !isWidening(pf.dataType, af.dataType))
+            !Rewrite.isWidening(pf.dataType, af.dataType))
           throw new IllegalStateException(
             s"change feed cannot span v$v: column `${pf.name}` " +
               s"changed type (${pf.dataType.simpleString} -> " +
@@ -2590,7 +1726,7 @@ object Versioned {
     * PROVIDED generated value must equal its expression — the Delta
     * generated-column contract). One state fold, not one per rule
     * family (r14: stateAt is the dominant metadata cost of a commit). */
-  private def checksFrom(st: CkptState): Seq[(String, String)] =
+  private[ingest] def checksFrom(st: CkptState): Seq[(String, String)] =
     st.constraints ++ st.generated.map { case (n, e) =>
       (s"generated_$n", s"`$n` <=> ($e)") }
 
@@ -2796,7 +1932,7 @@ object Versioned {
       val newDropped = (head.droppedPhys :+ physical).distinct
       // the epoch recompute: current content digested under the
       // narrowed schema (one scan; deletion vectors stay in force)
-      val (rows, fp) = digestFiles(spark, log, st.active, newSchema,
+      val (rows, fp) = Rewrite.digestFiles(spark, log, st.active, newSchema,
         st.partitionCols, st.dvs, newMap)
       Commit(head.version + 1L, "alter", Nil, newSchema.json,
         0L, 0L, rows, fp, Nil, None, Map.empty,
@@ -2817,9 +1953,8 @@ object Versioned {
   def restore(spark: SparkSession, path: String, toVersion: Long): Commit = {
     val log = TableLog(spark, path)
     val listing = log.list()
-    val target = log.stateAt(toVersion, listing)
+    val (tc, target) = log.commitAt(toVersion, listing)
     val active = target.active
-    val tc = log.readCommit(toVersion)
     // the head's state: the target's folded forward unless a newer
     // checkpoint lies between them, so no record folds twice
     val hv = listing.versions.last
@@ -3087,136 +2222,8 @@ object Versioned {
                zorderBy: Seq[String] = Nil,
                zBits: Int = 16,
                where: Option[Map[String, Option[String]] => Boolean] = None)
-      : Option[Commit] = {
-    require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    require(sortBy.isEmpty || zorderBy.isEmpty,
-      "give sortBy OR a z-order column list, not both")
-    require(zorderBy.isEmpty || zorderBy.size >= 2,
-      s"z-ordering needs >= 2 columns, got $zorderBy (use sortBy for 1-d)")
-    require(zorderBy.distinct == zorderBy, s"duplicate z-order columns: $zorderBy")
-    require(zorderBy.isEmpty || zorderBy.size * zBits <= 63,
-      s"${zorderBy.size} z-order dims x $zBits bits exceed a positive long " +
-        "(n*bits <= 63) — lower zBits")
-    require(zorderBy.isEmpty || numFiles <= MaxZOrderFiles,
-      s"z-order optimize of $path into $numFiles files exceeds the " +
-        s"$MaxZOrderFiles-file bound of its bucket probe table — lower numFiles")
-    val log = TableLog(spark, path)
-    val (head, st) = headOf(log)
-    val pcols = st.partitionCols
-    val active = where match {
-      case None => st.active
-      case Some(keep) =>
-        require(pcols.nonEmpty,
-          s"optimize(where=...) needs a partitioned table; $path is not")
-        st.active.filter(f => keep(partitionValuesOf(f, pcols)))
-    }
-    if (active.isEmpty) return None
-    val cur = readState(spark, log, st, active)
-    val laid =
-      if (zorderBy.nonEmpty) {
-        // domain-checked like Ingest.checkedZ: an out-of-range value
-        // would silently collapse onto an unrelated z-code and quietly
-        // void the skipping contract (the r5 lesson)
-        val lim = 1L << zBits
-        def checked(c: String): org.apache.spark.sql.Column = {
-          val v = col(c).cast("long")
-          when(v < 0 || v >= lim, raise_error(concat(
-            lit(s"optimize z-order: `$c` value "), v.cast("string"),
-            lit(s" outside [0, 2^$zBits) — scale the dimension into " +
-              "range or raise zBits")))).otherwise(v)
-        }
-        // DETERMINISTIC bucket boundaries (r14): files split at fixed
-        // equal-width z-buckets over the table's OCCUPIED z envelope
-        // instead of repartitionByRange directly on __z — range
-        // sampling seeds from the global rdd-id counter, so the
-        // boundary files (and with them which dimensions could prune)
-        // used to shift with whatever ran earlier in the session, and
-        // the bounds-sampling pass itself is an extra job over the
-        // rewrite input. The envelope comes from LOG METADATA: fold
-        // each z column's archived per-file min/max over the active set
-        // (z interleaving is monotone per coordinate, so
-        // [z(mins), z(maxs)] bounds every live row); only a file with
-        // no archived stats for some dimension forces the one-pass
-        // min/max fallback. Each bucket covers a fixed z interval, so
-        // per-dimension value ranges narrow with the bucket — the
-        // archived per-file min/max stats the rewrite lays down are
-        // what the reader prunes on (span boundaries are width-based,
-        // not power-of-two aligned — the stats, not the spans, carry
-        // the per-dimension guarantee).
-        val zMax = 1L << (zorderBy.size * zBits)
-        val envFromStats: Option[Seq[(Long, Long)]] = {
-          val per = zorderBy.map { c =>
-            val p = st.physOf(c)
-            val perFile = active.map(f => st.stats.get(f).flatMap(_.get(p)))
-            if (perFile.exists(_.isEmpty)) None
-            else Some((perFile.flatten.map(_._1).min,
-                       perFile.flatten.map(_._2).max))
-          }
-          if (per.exists(_.isEmpty)) None else Some(per.map(_.get))
-        }
-        val env = envFromStats.getOrElse {
-          val aggs = zorderBy.flatMap(c =>
-            Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
-          val r = cur.agg(aggs.head, aggs.tail: _*).head()
-          // an all-null dimension nulls every z anyway — any envelope works
-          zorderBy.indices.map(i =>
-            if (r.isNullAt(2 * i)) (0L, 0L)
-            else (r.getLong(2 * i), r.getLong(2 * i + 1)))
-        }
-        def zOf(vals: Seq[Long]): Long = {
-          var z = 0L
-          for ((x, d) <- vals.zipWithIndex; i <- 0 until zBits)
-            z |= ((x >> i) & 1L) << (i * vals.size + d)
-          z
-        }
-        // DV caveat: archived stats cover RAW file content, so the
-        // envelope can only be wider than the live rows — clamp keeps
-        // domain-guard violations on the checked() path, not here
-        val zLo = math.max(0L, zOf(env.map(_._1)))
-        val zHi = math.min(zMax - 1L, zOf(env.map(_._2)))
-        val bucketWidth = math.max(1L, (zHi - zLo + numFiles) / numFiles)
-        // EXACT bucket->partition routing (r15, ADVICE r14): __zb is
-        // already a dense id in [0, numFiles), but repartitionByRange
-        // on it still ran RangePartitioner's sampling job (an extra
-        // pass over the rewrite input) whose rdd-id-seeded sample could
-        // merge rare buckets differently across sessions. Instead,
-        // hash-partition on a PROBE long chosen per bucket so that
-        // Spark's HashPartitioning (Murmur3, seed 42) sends bucket b to
-        // partition b — same file content and order as a perfect range
-        // partition, zero sampling pass, and the assignment is exactly
-        // deterministic. (Bucket spans are NOT power-of-two aligned;
-        // per-dimension pruning is delivered by the archived per-file
-        // min/max stats the rewrite lays down, not by span alignment.)
-        val probes: Seq[Long] = {
-          val out = new Array[Long](numFiles)
-          val found = new Array[Boolean](numFiles)
-          var x = 0L
-          var left = numFiles
-          while (left > 0) {
-            val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(x, 42)
-            val b = ((h % numFiles) + numFiles) % numFiles
-            if (!found(b)) { found(b) = true; out(b) = x; left -= 1 }
-            x += 1L
-          }
-          out.toSeq
-        }
-        cur.withColumn("__z",
-            graft.functions.z_value_n(zorderBy.map(checked), zBits))
-          .withColumn("__zb",
-            expr(s"least(greatest((__z - $zLo) div $bucketWidth, 0), " +
-              s"${numFiles - 1})"))
-          .withColumn("__zp",
-            element_at(typedlit(probes), col("__zb").cast("int") + 1))
-          .repartition(numFiles, col("__zp"))
-          .sortWithinPartitions(col("__z"))
-          .drop("__z", "__zb", "__zp")
-      } else if (sortBy.nonEmpty)
-        cur.repartitionByRange(numFiles, sortBy.map(col): _*)
-          .sortWithinPartitions(sortBy.map(col): _*)
-      else cur.coalesce(numFiles)
-    Some(rewriteCommit(spark, log, head, st, laid, active,
-      requireContentPreserved = true))
-  }
+      : Option[Commit] =
+    Rewrite.optimize(spark, path, numFiles, sortBy, zorderBy, zBits, where)
 
   /** Most output files a z-ordered [[optimize]] may request: its probe
     * table holds one long per file and rides every task's plan. */
@@ -3303,7 +2310,7 @@ object Versioned {
         s"layout-inferred trailing columns of ${schema.fieldNames.toSeq}")
     if (pcols.nonEmpty)
       files.foreach(f => partitionValuesOf(f, pcols)) // fail-loud
-    val (nRows, fp) = digestFiles(spark, log, files, schema, pcols)
+    val (nRows, fp) = Rewrite.digestFiles(spark, log, files, schema, pcols)
     val c = Commit(1L, "overwrite", files, schema.json, nRows, fp,
       nRows, fp, partitionCols = pcols, addSizes = sized.map(_._2))
     log.claimCommit(s"convertInPlace at $path", None, CkptState.Empty, Nil,
@@ -3330,24 +2337,8 @@ object Versioned {
     * commits: compacting one file buys nothing). */
   def compactSmallFiles(spark: SparkSession, path: String,
                         maxFileBytes: Long, targetNumFiles: Int = 1,
-                        minInputFiles: Int = 2): Option[Commit] = {
-    require(maxFileBytes > 0L, s"maxFileBytes must be > 0, got $maxFileBytes")
-    require(targetNumFiles >= 1 && minInputFiles >= 2,
-      s"need targetNumFiles >= 1 and minInputFiles >= 2")
-    val log = TableLog(spark, path)
-    val (head, st) = headOf(log)
-    val small = st.active.filter { f =>
-      st.sizes.getOrElse(f, {
-        fileStatusProbes.incrementAndGet()
-        val p = if (f.startsWith("/")) new Path(f) else new Path(log.root, f)
-        log.fs.getFileStatus(p).getLen
-      }) < maxFileBytes
-    }
-    if (small.size < minInputFiles) return None
-    val rebuilt = readState(spark, log, st, small).coalesce(targetNumFiles)
-    Some(rewriteCommit(spark, log, head, st, rebuilt, small,
-      requireContentPreserved = true))
-  }
+                        minInputFiles: Int = 2): Option[Commit] =
+    Rewrite.compactSmallFiles(spark, path, maxFileBytes, targetNumFiles, minInputFiles)
 
   // ---------- log counters (the log layer itself is TableLog) ----------
 

@@ -9,7 +9,7 @@ import graft.ingest.{Fingerprint, Versioned}
 /** Round-11 storage-layer hardening: shallow clones of MoR tables
   * (deletion vectors re-keyed, never resurrected), DV purging by
   * rewrites, disjoint-coverage MoR concurrency, the authority-aware
-  * foreign-path fallback, and scale-safe COW file planning. */
+  * foreign-path fallback. */
 class VersionedR11Spec extends SparkTestBase {
   import spark.implicits._
 
@@ -184,46 +184,5 @@ class VersionedR11Spec extends SparkTestBase {
     val got = cases.map(_._1).toDF("p")
       .select(Versioned.foreignRel(col("p"))).as[String].collect().toSeq
     assert(got == cases.map(_._2), got.toString)
-  }
-
-  // ------------------------------------------------- COW file planning
-
-  test("COW planning above the isin threshold switches to a broadcast semi-join") {
-    val tbl = tmp("cowjoin") + "/tbl"
-    // 6 single-row files
-    Versioned.overwrite(df(1L -> "a").coalesce(1), tbl)
-    (2L to 6L).foreach(i => Versioned.append(df(i -> s"v$i").coalesce(1), tbl))
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    val saved = Versioned.isinFileThreshold
-    Versioned.isinFileThreshold = 2
-    spark.listenerManager.register(listener)
-    try {
-      val c = Versioned.deleteWhere(spark, tbl, col("id") % 2 === 0L).get
-      assert(c.remove.size == 3)
-      // listener events post asynchronously — poll with a deadline
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      def seen(): Boolean =
-        plans.synchronized(plans.exists(_.contains("__affected_file")))
-      while (!seen() && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(seen(),
-        "above the threshold the survivor scan must semi-join the " +
-          "affected-file list, not inline an In-literal")
-    } finally {
-      Versioned.isinFileThreshold = saved
-      spark.listenerManager.unregister(listener)
-    }
-    assert(rowSet(Versioned.read(spark, tbl)).map(_.head) ==
-      Set[Any](1L, 3L, 5L))
-    val headV = Versioned.latestVersion(spark, tbl)
-    (1L to headV).foreach(v => assert(certified(tbl, v), s"v$v"))
   }
 }

@@ -6,11 +6,11 @@ import org.apache.spark.sql.types._
 import graft.ingest.{Fingerprint, Versioned}
 import graft.ingest.Versioned._
 
-/** Round-12 storage-layer work: threshold-guarded merge planning
-  * broadcasts, automatic checkpoint cadence, type widening in schema
-  * evolution (appendEvolve + merge), schema evolution over live
-  * deletion vectors, n-dimensional Z-order, stamped shallow clones,
-  * and the MoR/CoW merge clause-surface parity fix. */
+/** Round-12 storage-layer work: automatic checkpoint cadence,
+  * n-dimensional Z-order, stamped shallow clones, small-file
+  * compaction, the change feed across widening epochs, in-place
+  * conversion and the timestamp walk. (Its merge-planning and schema-
+  * evolution cases live in VersionedMergeSpec.) */
 class VersionedR12Spec extends SparkTestBase {
   import spark.implicits._
 
@@ -77,78 +77,6 @@ class VersionedR12Spec extends SparkTestBase {
       Set(Seq[Any](1L, "a"), Seq[Any](2L, "b"), Seq[Any](3L, "c")))
   }
 
-  // ------------------------------------------- merge clause-surface parity
-
-  test("mergeMoR accepts insert clauses referencing target columns") {
-    val base = tmp("morparity")
-    val cow = s"$base/cow"
-    val mor = s"$base/mor"
-    val seed = df(1L -> "a", 2L -> "b")
-    Versioned.overwrite(seed, cow)
-    Versioned.overwrite(seed, mor)
-    val src = df(2L -> "B2", 3L -> "C", 4L -> "D")
-    // the insert condition and assignment reference target columns by
-    // PLAIN NAME — null for a source-only row on merge()'s full-outer
-    // frame, and (since r12) the same typed null on mergeMoR's srcOnly
-    // frame instead of an unresolved-column error (ADVICE r11 low)
-    val clauses = Seq(
-      WhenMatchedUpdate(Map("t" -> srcCol("t"))),
-      WhenNotMatchedInsert(
-        Map("id" -> srcCol("id"),
-          "t" -> when(col("t").isNull, concat(srcCol("t"), lit("!")))
-            .otherwise(lit("IMPOSSIBLE"))),
-        cond = Some(col("id").isNull && srcCol("id") % 2 === 1)))
-    Versioned.merge(spark, cow, src, Seq("id"), clauses)
-    Versioned.mergeMoR(spark, mor, src, Seq("id"), clauses)
-    val want = Set(Seq[Any](1L, "a"), Seq[Any](2L, "B2"), Seq[Any](3L, "C!"))
-    assert(rowSet(Versioned.read(spark, cow)) == want)
-    assert(rowSet(Versioned.read(spark, mor)) == want,
-      "mergeMoR must accept and evaluate the same clause list as merge()")
-    assert(certified(mor, 2L))
-  }
-
-  // ------------------------------------------- threshold-guarded broadcast
-
-  test("merge planning drops the broadcast hint above the size threshold") {
-    val keys = (1L to 64L).toDF("id")
-    // below the threshold: the planning frame carries the hint
-    val hinted = Versioned.maybeBroadcast(keys)
-      .queryExecution.analyzed.toString
-    assert(hinted.contains("ResolvedHint"),
-      s"small key set must keep the broadcast hint, plan was:\n$hinted")
-    val saved = Versioned.broadcastKeyBytesThreshold
-    try {
-      Versioned.broadcastKeyBytesThreshold = 0L
-      val unhinted = Versioned.maybeBroadcast(keys)
-        .queryExecution.analyzed.toString
-      assert(!unhinted.contains("ResolvedHint"),
-        "above the threshold the hint must be dropped (AQE decides)")
-    } finally Versioned.broadcastKeyBytesThreshold = saved
-  }
-
-  test("merge family stays correct with the broadcast hint disabled") {
-    val saved = Versioned.broadcastKeyBytesThreshold
-    try {
-      Versioned.broadcastKeyBytesThreshold = 0L // every planning join unhinted
-      val base = tmp("nohint")
-      val t1 = s"$base/t1"
-      Versioned.overwrite(df(1L -> "a", 2L -> "b", 3L -> "c"), t1)
-      Versioned.upsert(spark, t1, df(2L -> "B", 4L -> "D"), Seq("id"))
-      Versioned.merge(spark, t1, df(3L -> "C3", 5L -> "E"), Seq("id"), Seq(
-        WhenMatchedUpdate(Map("t" -> srcCol("t"))),
-        WhenNotMatchedInsert()))
-      Versioned.upsertMoR(spark, t1, df(1L -> "A1"), Seq("id"))
-      Versioned.mergeMoR(spark, t1, df(4L -> "D4", 6L -> "F"), Seq("id"), Seq(
-        WhenMatchedDelete(Some(srcCol("id") === 4L)),
-        WhenNotMatchedInsert()))
-      assert(rowSet(Versioned.read(spark, t1)) == Set(
-        Seq[Any](1L, "A1"), Seq[Any](2L, "B"), Seq[Any](3L, "C3"),
-        Seq[Any](5L, "E"), Seq[Any](6L, "F")))
-      (1L to Versioned.latestVersion(spark, t1)).foreach(v =>
-        assert(certified(t1, v), s"v$v certified without the hint"))
-    } finally Versioned.broadcastKeyBytesThreshold = saved
-  }
-
   // ------------------------------------------------ automatic checkpoints
 
   test("commits auto-checkpoint every N versions and reads are O(tail)") {
@@ -201,87 +129,6 @@ class VersionedR12Spec extends SparkTestBase {
       assert(rowSet(Versioned.read(spark, tbl)).map(_.head.asInstanceOf[Long])
         == Set(1L, 3L, 4L, 5L, 6L, 7L))
     } finally Versioned.autoCheckpointInterval = saved
-  }
-
-  // ------------------------------------------------------- type widening
-
-  test("appendEvolve widens int->long and float->double losslessly") {
-    val tbl = tmp("widen")
-    val narrow = Seq((1L, 10, 1.5f), (2L, 20, 0.1f))
-      .toDF("id", "n", "f")
-    Versioned.overwrite(narrow.coalesce(1), tbl)
-    val wide = Seq((3L, 2147483648L, 0.25d)).toDF("id", "n", "f")
-    val c = Versioned.appendEvolve(wide.coalesce(1), tbl)
-    assert(c.widenedCols.toSet == Set("n", "f"))
-    assert(c.features.contains("type-widening"),
-      "widening must be reader-feature flagged (old readers refuse)")
-    val head = Versioned.read(spark, tbl)
-    assert(head.schema("n").dataType == LongType)
-    assert(head.schema("f").dataType == DoubleType)
-    // old file values promote natively (int32/float physical columns
-    // under the wide declared schema) — including the value the narrow
-    // type could not hold arriving in the new file
-    assert(rowSet(head.select(col("id"), col("n"))) ==
-      Set(Seq[Any](1L, 10L), Seq[Any](2L, 20L), Seq[Any](3L, 2147483648L)))
-    // float->double promotion is the IEEE widening, not a re-parse:
-    // 0.1f promotes to 0.10000000149011612, never 0.1
-    val f2 = head.filter(col("id") === 2L).select(col("f")).head().getDouble(0)
-    assert(f2 == 0.1f.toDouble && f2 != 0.1d)
-    // the narrow history stays narrow, both epochs certified
-    val v1 = Versioned.readAsOf(spark, tbl, 1L)
-    assert(v1.schema("n").dataType == IntegerType)
-    assert(v1.schema("f").dataType == FloatType)
-    assert(certified(tbl, 1L) && certified(tbl, 2L))
-    // appends after the widening pin to the WIDE schema
-    Versioned.append(Seq((4L, 40L, 4.0d)).toDF("id", "n", "f").coalesce(1), tbl)
-    assert(certified(tbl, 3L))
-  }
-
-  test("narrowing and lossy type changes refuse loudly") {
-    val tbl = tmp("narrow")
-    Versioned.overwrite(Seq((1L, 10L)).toDF("id", "n").coalesce(1), tbl)
-    val eN = intercept[IllegalArgumentException] {
-      Versioned.appendEvolve(Seq((2L, 20)).toDF("id", "n"), tbl)
-    }
-    assert(eN.getMessage.contains("lossless widenings"))
-    val tbl2 = tmp("lossy")
-    Versioned.overwrite(Seq((1L, 10)).toDF("id", "n").coalesce(1), tbl2)
-    val eL = intercept[IllegalArgumentException] {
-      Versioned.appendEvolve(Seq((2L, 2.0f)).toDF("id", "n"), tbl2)
-    }
-    assert(eL.getMessage.contains("lossless widenings"))
-    // plain append NEVER widens — the mergeSchema=false pin holds
-    val eA = intercept[IllegalStateException] {
-      Versioned.append(Seq((2L, 20)).toDF("id", "n"), tbl)
-    }
-    assert(eA.getMessage.contains("schema mismatch"))
-  }
-
-  test("merge evolveSchema widens types over live deletion vectors") {
-    val tbl = tmp("mergewide")
-    Versioned.overwrite(Seq((1L, 10, "a"), (2L, 20, "b"), (3L, 30, "c"))
-      .toDF("id", "n", "t").coalesce(1), tbl)
-    // live DVs when the evolution lands — r11 refused this shape and
-    // demanded an OPTIMIZE-first full rewrite; the epoch recompute now
-    // digests each remaining file's LIVE contribution instead
-    Versioned.deleteWhereMoR(spark, tbl, col("id") === 2L)
-    val src = Seq((3L, 3000000000L, "C", 7L), (4L, 40L, "D", 8L))
-      .toDF("id", "n", "t", "extra") // n widened int->long, extra new
-    val c = Versioned.merge(spark, tbl, src, Seq("id"), Seq(
-      WhenMatchedUpdate(Map("n" -> srcCol("n"), "t" -> srcCol("t"),
-        "extra" -> srcCol("extra"))),
-      WhenNotMatchedInsert()), evolveSchema = true)
-    assert(c.widenedCols == Seq("n"))
-    assert(c.features.contains("type-widening"))
-    val head = Versioned.read(spark, tbl)
-    assert(head.schema("n").dataType == LongType)
-    assert(rowSet(head) == Set(
-      Seq[Any](1L, 10L, "a", null), // untouched, narrow file, null extra
-      Seq[Any](3L, 3000000000L, "C", 7L),
-      Seq[Any](4L, 40L, "D", 8L)), rowSet(head).toString)
-    // the MoR-deleted row 2 stays dead through the epoch boundary
-    (1L to Versioned.latestVersion(spark, tbl)).foreach(v =>
-      assert(certified(tbl, v), s"v$v certified across the widened epoch"))
   }
 
   // ---------------------------------------------------- n-dim Z-order
@@ -353,49 +200,6 @@ class VersionedR12Spec extends SparkTestBase {
     // no-churn guard: nothing small left -> None, and a 1-file set
     // never compacts (minInputFiles)
     assert(Versioned.compactSmallFiles(spark, tbl, 2L).isEmpty)
-  }
-
-  // ------------------------------------------------ MoR schema evolution
-
-  test("mergeMoR evolveSchema adds and widens without rewriting") {
-    val tbl = tmp("morevolve")
-    Versioned.overwrite(Seq((1L, 10, "a"), (2L, 20, "b"), (3L, 30, "c"))
-      .toDF("id", "n", "t").coalesce(1), tbl) // n is INT
-    val src = Seq((2L, 3000000000L, "B", 7L), (4L, 40L, "D", 8L))
-      .toDF("id", "n", "t", "extra") // n widened, extra new
-    val c = Versioned.mergeMoR(spark, tbl, src, Seq("id"), Seq(
-      WhenMatchedUpdate(Map("n" -> srcCol("n"), "t" -> srcCol("t"),
-        "extra" -> srcCol("extra"))),
-      WhenNotMatchedInsert()), evolveSchema = true)
-    assert(c.remove.isEmpty && c.dv.nonEmpty,
-      "MoR evolution must tombstone+append, never rewrite")
-    assert(c.widenedCols == Seq("n") && c.features.contains("type-widening"))
-    val head = Versioned.read(spark, tbl)
-    assert(head.schema("n").dataType == LongType)
-    assert(rowSet(head) == Set(
-      Seq[Any](1L, 10L, "a", null), // untouched narrow row, null extra
-      Seq[Any](2L, 3000000000L, "B", 7L),
-      Seq[Any](3L, 30L, "c", null),
-      Seq[Any](4L, 40L, "D", 8L)), rowSet(head).toString)
-    assert(Versioned.readAsOf(spark, tbl, 1L)
-      .schema("n").dataType == IntegerType)
-    assert(certified(tbl, 1L) && certified(tbl, 2L))
-    // the evolved epoch keeps composing: a later plain MoR delete works
-    Versioned.deleteWhereMoR(spark, tbl, col("id") === 3L)
-    assert(rowSet(Versioned.read(spark, tbl)).map(_.head) ==
-      Set[Any](1L, 2L, 4L))
-    assert(certified(tbl, 3L))
-  }
-
-  test("mergeMoR evolveSchema refuses lossy retypes like merge does") {
-    val tbl = tmp("morevguard")
-    Versioned.overwrite(Seq((1L, 10L)).toDF("id", "n").coalesce(1), tbl)
-    val e = intercept[IllegalArgumentException] {
-      Versioned.mergeMoR(spark, tbl, Seq((1L, 1.5)).toDF("id", "n"),
-        Seq("id"), Seq(WhenMatchedUpdate(Map("n" -> srcCol("n")))),
-        evolveSchema = true)
-    }
-    assert(e.getMessage.contains("lossless widenings"))
   }
 
   // ------------------------------------------- CDF across widening epochs

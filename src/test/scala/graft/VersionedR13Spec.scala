@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ingest.{Fingerprint, Versioned}
+import graft.ingest.{Fingerprint, Rewrite, Versioned}
 import graft.ingest.Versioned._
 
 /** Round-13 storage-layer work: the checkpoint carries the COMPLETE
@@ -315,11 +315,11 @@ class VersionedR13Spec extends SparkTestBase {
       tbl)
     val src = Seq((1L, "open", 11L), (3L, "new", 30L))
       .toDF("id", "status", "amount")
-    val before = Versioned.broadcastEstimatorPasses.get()
+    val before = Rewrite.broadcastEstimatorPasses.get()
     Versioned.merge(spark, tbl, src, Seq("id"), Seq(
       WhenMatchedUpdate(Map("amount" -> srcCol("amount"))),
       WhenNotMatchedInsert()))
-    assert(Versioned.broadcastEstimatorPasses.get() == before,
+    assert(Rewrite.broadcastEstimatorPasses.get() == before,
       "a LocalRelation-rooted CDC source must not pay the optimizer pass")
     assert(Versioned.read(spark, tbl).count() == 3L)
     // a small scan-rooted source short-circuits on the file index's
@@ -329,23 +329,23 @@ class VersionedR13Spec extends SparkTestBase {
       .write.parquet(ext)
     Versioned.merge(spark, tbl, spark.read.parquet(ext), Seq("id"),
       Seq(WhenMatchedUpdate(Map("amount" -> srcCol("amount")))))
-    assert(Versioned.broadcastEstimatorPasses.get() == before,
+    assert(Rewrite.broadcastEstimatorPasses.get() == before,
       "a under-threshold scan-rooted source must skip the estimator too")
     assert(Versioned.read(spark, tbl).filter(col("id") === 2L)
       .head().getLong(2) == 99L)
     // leaves ABOVE the threshold cannot be bounded structurally: the
     // guarded estimate still runs (the r11 OOM guard is intact) and,
     // refusing the hint, the merge stays correct unhinted
-    val oldT = Versioned.broadcastKeyBytesThreshold
-    Versioned.broadcastKeyBytesThreshold = 1L
+    val oldT = Rewrite.broadcastKeyBytesThreshold
+    Rewrite.broadcastKeyBytesThreshold = 1L
     try {
       Versioned.merge(spark, tbl, spark.read.parquet(ext), Seq("id"),
         Seq(WhenMatchedUpdate(Map("amount" -> lit(77L)))))
-      assert(Versioned.broadcastEstimatorPasses.get() > before,
+      assert(Rewrite.broadcastEstimatorPasses.get() > before,
         "an over-threshold source must still pay the guarded size estimate")
       assert(Versioned.read(spark, tbl).filter(col("id") === 2L)
         .head().getLong(2) == 77L)
-    } finally Versioned.broadcastKeyBytesThreshold = oldT
+    } finally Rewrite.broadcastKeyBytesThreshold = oldT
   }
 
   // ----------------------------------------------- automatic data skipping

@@ -8,8 +8,7 @@ import graft.ingest.{Fingerprint, Versioned}
   * the checkpoint-cache nonce): legacy (pre-complete-state)
   * checkpoints are rejected by the reader and the fold falls back to
   * the raw log instead of silently dropping constraints / generated
-  * columns / txn watermarks; the merge-planning estimator
-  * short-circuit refuses row-multiplying source plans; convertInPlace
+  * columns / txn watermarks; convertInPlace
   * never parses a file NAME's `=` as a hive layout segment; and the
   * checkpoint parse memo validates on a random write nonce, closing
   * the same-length-same-mtime staleness window. */
@@ -73,30 +72,6 @@ class VersionedR14Spec extends SparkTestBase {
       new java.io.File(tbl, f"_graft_log/ckpt-$v2%08d.json").toPath))
     assert(fresh.contains("\"stateV\"") && fresh.contains("\"constraints\""))
     assert(certified(tbl, Versioned.latestVersion(spark, tbl)))
-  }
-
-  // ---------------- estimator short-circuit refusal (ADVICE r13, medium)
-
-  test("broadcastOk never leaf-sums a row-multiplying source plan") {
-    val a = (1L to 64L).map(i => (i, s"a$i")).toDF("id", "t")
-    val b = (1L to 64L).map(i => (i % 4, s"b$i")).toDF("id", "u")
-    // bounded shapes take the short-circuit: no estimator pass
-    val p0 = Versioned.broadcastEstimatorPasses.get()
-    assert(Versioned.broadcastOk(a.select("id").distinct()))
-    assert(Versioned.broadcastOk(a.filter(col("id") > 3L)
-      .select("id").unionByName(b.select("id")).limit(10)))
-    assert(Versioned.broadcastEstimatorPasses.get() == p0,
-      "row-bounded plans over tiny leaves must skip the estimator")
-    // a join (fan-out) and an explode must fall through to the
-    // guarded optimizer estimate even though the LEAVES are tiny
-    val joined = a.join(b, "id").select(col("id"))
-    Versioned.broadcastOk(joined)
-    assert(Versioned.broadcastEstimatorPasses.get() == p0 + 1,
-      "a join inside the source must pay the guarded estimate")
-    val exploded = a.select(explode(array(col("id"), col("id"))).as("id"))
-    Versioned.broadcastOk(exploded)
-    assert(Versioned.broadcastEstimatorPasses.get() == p0 + 2,
-      "a generator inside the source must pay the guarded estimate")
   }
 
   // --------------------- file names with '=' (ADVICE r13, low)
