@@ -358,7 +358,7 @@ object SparkEntry {
     // (Trigger.AvailableNow), and the SINK is read back and aggregated —
     // so the oracle checks the full source→parse→persist path.
     "q21_stream_ingest" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_stream").toString
+      val base = scratch("q21")
       Tables.events(s, dir).select(to_json(struct(
           col("user_id").as("requestedUserId"),
           array((col("event_id") % 100).cast("int"),
@@ -382,12 +382,12 @@ object SparkEntry {
 
     // S1+S3+S4: batch ingest round-trip — orders → landing CSV →
     // schema-enforced scan (FAILFAST, declared schema, assertSchema) →
-    // partitioned overwrite + pinned-schema append → read back →
-    // partition-pruned aggregate. The oracle runs over the ORIGINAL
+    // partitioned versioned overwrite + pinned-schema append → read back
+    // → partition-filtered aggregate. The oracle runs over the ORIGINAL
     // parquet, so any corruption in the CSV/partition round-trip fails
     // the gate.
     "q22_ingest_roundtrip" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+      val base = scratch("q22")
       Ingest.writeCsv(Tables.orders(s, dir), s"$base/landing")
       val raw = Tables.assertSchema(
         Ingest.readCsv(s, s"$base/landing", Tables.schemas("orders")), "orders")
@@ -396,12 +396,12 @@ object SparkEntry {
         .withColumn("o_year", year(col("o_orderdate")))
         .withColumn("o_month", month(col("o_orderdate")))
       // deterministic initial/incremental split exercising both writers
-      Ingest.writePartitioned(loaded.filter(col("o_orderkey") % 10 =!= 0),
-        s"$base/bronze", Seq("o_year", "o_month"))
-      Ingest.append(loaded.filter(col("o_orderkey") % 10 === 0),
-        s"$base/bronze", Seq("o_year", "o_month"))
-      s.read.parquet(s"$base/bronze")
-        .filter(col("o_year") >= 1996) // prunes partition directories
+      graft.ingest.Versioned.overwrite(loaded.filter(col("o_orderkey") % 10 =!= 0),
+        s"$base/bronze", partitionBy = Seq("o_year", "o_month"))
+      graft.ingest.Versioned.append(loaded.filter(col("o_orderkey") % 10 === 0),
+        s"$base/bronze")
+      graft.ingest.Versioned.read(s, s"$base/bronze")
+        .filter(col("o_year") >= 1996)
         .groupBy(col("o_year").cast("long").as("o_year"),
           col("o_month").cast("long").as("o_month"))
         .agg(count(lit(1)).as("n_orders"),
@@ -741,7 +741,7 @@ object SparkEntry {
     // emitted — deterministic despite append-mode semantics. Timestamps
     // travel as epoch-µs longs to dodge JSON millisecond truncation.
     "q32_stream_window" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_streamw").toString
+      val base = scratch("q32")
       val ev = Tables.events(s, dir)
       val sentinel = ev.agg(max(col("ts")).as("mx"))
         .select(lit(0L).as("user_id"), lit("__sentinel").as("event_type"),
@@ -775,7 +775,7 @@ object SparkEntry {
     // one copy survived. Money-style exact integer sums keep the value
     // aggregation order-independent.
     "q50_stream_dedup" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_streamd").toString
+      val base = scratch("q50")
       stageEventsJson(s, dir, base, doubled = true)
       StreamAgg.runDedupToCompletion(s, s"$base/in", s"$base/sink",
           s"$base/ckpt", statePartitions = Some(8))
@@ -849,7 +849,7 @@ object SparkEntry {
     // is the equivalent batch join — stream-static semantics ARE batch
     // semantics per micro-batch, which this checks end-to-end.
     "q58_stream_enrich" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_streame").toString
+      val base = scratch("q58")
       stageEventsJson(s, dir, base)
       val dim = T(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_nationkey"))
@@ -1001,7 +1001,7 @@ object SparkEntry {
     // exactly the matched pairs, so the oracle is the equivalent batch
     // range join over the same µs timestamps.
     "q64_stream_interval_join" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_streamj").toString
+      val base = scratch("q64")
       stageEventsJson(s, dir, base)
       StreamAgg.runIntervalJoinToCompletion(s, s"$base/in", s"$base/sink",
           s"$base/ckpt", intervalSeconds = 3600, statePartitions = Some(8))
@@ -1016,7 +1016,7 @@ object SparkEntry {
     // watermark past every real click so the bounded run emits the
     // complete outer result the batch oracle computes.
     "q97_stream_outer_interval" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_streamoj").toString
+      val base = scratch("q97")
       stageEventsJson(s, dir, base, sentinels = true)
       StreamAgg.runOuterIntervalJoinToCompletion(s, s"$base/in", s"$base/sink",
           s"$base/ckpt", intervalSeconds = 3600, statePartitions = Some(8))
@@ -1378,14 +1378,15 @@ object SparkEntry {
           "stack(2, 'size', CAST(p_size AS DOUBLE), 'retailprice', p_retailprice) AS (attr, val)")
         .orderBy(col("p_partkey"), col("attr"))),
 
-    // §2.9: streaming upsert through foreachBatch + Merge.upsert — the
-    // staged payload carries EVERY event twice (at-least-once delivery),
-    // and the keyed MERGE collapses the duplicates, so the final table
-    // equals the distinct batch table the oracle aggregates.
+    // §2.9: streaming upsert through foreachBatch into a versioned table
+    // — the staged payload carries EVERY event twice (at-least-once
+    // delivery); each batch collapses to one row per key (Merge.upsert)
+    // and lands as a keyed Versioned.upsert, so the final table equals
+    // the distinct batch table the oracle aggregates.
     "q88_stream_upsert" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+      val base = scratch("q88")
       stageEventsJson(s, dir, base, doubled = true)
-      StreamAgg.runUpsertToCompletion(s, s"$base/in", s"$base/table", s"$base/ckpt")
+      StreamAgg.runVersionedUpsert(s, s"$base/in", s"$base/table", s"$base/ckpt")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           (sum(round(col("value") * 10000, 0).cast("long")) / 10000.0).as("sum_value"))
@@ -1404,22 +1405,27 @@ object SparkEntry {
         .select(col("id").as("user_id"), col("dist"))
         .orderBy(col("dist"), col("user_id"))),
 
-    // Manifest-tracked incremental ingest (the Airflow-parity path, §3.2):
-    // batch 1 lands, a REPLAYED batch 1 is a no-op (the manifest gate),
-    // batch 2 lands from a second landing dir into the same table — the
-    // final table must hold every customer exactly once, which is
-    // exactly what the oracle aggregate checks.
+    // Incremental landing-zone ingest (the Airflow-parity path, §3.2):
+    // a CSV file stream over the landing zone lands each week's files
+    // as one exactly-once versioned append, the stream checkpoint's file
+    // log standing in for a processed-file manifest. Week 1 lands, a
+    // REPLAYED run is a no-op (no new file, no commit), week 2 lands
+    // from a second landing dir into the same table — the final table
+    // must hold every customer exactly once, which is exactly what the
+    // oracle aggregate checks.
     "q83_incremental_ingest" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_incr").toString
+      import graft.ingest.Versioned
+      val base = scratch("q83")
       val c = Tables.customer(s, dir)
-      val schema = Tables.schemas("customer")
-      Ingest.writeCsv(c.filter(col("c_custkey") % 3 =!= 0), s"$base/landing1")
-      Ingest.incrementalAppend(s, s"$base/landing1", schema, s"$base/t", s"$base/manifest.txt")
-      // replay: every file already in the manifest — must append nothing
-      Ingest.incrementalAppend(s, s"$base/landing1", schema, s"$base/t", s"$base/manifest.txt")
-      Ingest.writeCsv(c.filter(col("c_custkey") % 3 === 0), s"$base/landing2")
-      Ingest.incrementalAppend(s, s"$base/landing2", schema, s"$base/t", s"$base/manifest.txt")
-      s.read.schema(schema).parquet(s"$base/t")
+      def land(): Long = Versioned.runStreamAppend(s,
+        Ingest.readCsvStream(s, s"$base/landing/*", Tables.schemas("customer")),
+        s"$base/t", s"$base/ckpt", "q83")
+      Ingest.writeCsv(c.filter(col("c_custkey") % 3 =!= 0), s"$base/landing/week1")
+      val week1 = land()
+      require(land() == week1, "replayed landing committed again")
+      Ingest.writeCsv(c.filter(col("c_custkey") % 3 === 0), s"$base/landing/week2")
+      land()
+      Versioned.read(s, s"$base/t")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
           (sum(round(col("c_acctbal") * 100, 0).cast("long")) / 100.0).as("sum_bal"))
@@ -1564,7 +1570,7 @@ object SparkEntry {
     // agrees on both.
     "q98_zorder_write" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+      val base = scratch("q98")
       val ev = Tables.events(s, dir).select(
         col("user_id").cast("long").as("user_id"),
         floor(col("value")).cast("long").as("val"))
@@ -1590,7 +1596,7 @@ object SparkEntry {
     // n_files is exactly ceil(rows / cap) because each shard's rows are
     // routed into one task, and files_capped pins the per-file bound TRUE.
     "q101_shard_export" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_shards").toString
+      val base = scratch("q101")
       val ev = Tables.events(s, dir).select(
         col("user_id").cast("long").as("user_id"), col("event_id"))
       Shards.writeSharded(ev, s"$base/shards", "user_id",
@@ -1635,7 +1641,7 @@ object SparkEntry {
     // oracle recomputes from the parquet events table — format-neutral
     // values prove the ORC path loses nothing.
     "q103_orc_roundtrip" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_orc").toString
+      val base = scratch("q103")
       val ev = Tables.events(s, dir).select(
         col("user_id").cast("long").as("user_id"), col("event_type"),
         round(col("value") * 10000).cast("long").as("v4"))
@@ -1655,7 +1661,7 @@ object SparkEntry {
     // any value (CSV-quoted, so one row ≠ one line) flips the boolean
     // false and fails the gate loudly — the audit's exact job.
     "q104_landing_audit" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_landing").toString
+      val base = scratch("q104")
       Ingest.writeCsv(Tables.orders(s, dir), s"$base/landing")
       val audit = Ingest.landingAudit(s, s"$base/landing",
         Tables.schemas("orders"))
@@ -1988,24 +1994,26 @@ object SparkEntry {
         .orderBy(col("user_id"), col("event_type"))
     }),
 
-    // Small-file compaction roundtrip (ingest/Ingest.compact): fragment
-    // the events table into 16 files per partition leaf, compact leaves
-    // in place (atomic rename swap, crash-recoverable), and read the
-    // table back through the compacted layout. The oracle recomputes the
-    // same per-type summary from the source parquet — compaction must be
-    // value-invisible; the file-count collapse itself is asserted in
-    // IngestSpec and via the returned count here (fail-loud require).
+    // Small-file compaction roundtrip (Versioned.compactSmallFiles):
+    // fragment the events table into up to 16 files per partition of a
+    // versioned table, compact them as one claimed rewrite commit, and
+    // read the head back through the compacted layout. The oracle
+    // recomputes the same per-type summary from the source parquet —
+    // compaction must be value-invisible; the file-count collapse is
+    // asserted on the head's active files (fail-loud require).
     "q133_compact_roundtrip" -> ((s, dir) => {
-      val base = scratch("q133")
+      import graft.ingest.Versioned
+      val tbl = scratch("q133") + "/t"
       val ev = Tables.events(s, dir).select(
         col("event_id"), col("user_id"), col("event_type"),
         round(col("value") * 10000).cast("long").as("v4"))
-      ev.repartition(16)
-        .write.partitionBy("event_type").mode("overwrite").parquet(s"$base/t")
-      val nAfter = graft.ingest.Ingest.compact(s, s"$base/t")
-      // 5 leaves × 16 files before; compaction must have collapsed them
-      require(nAfter <= 5, s"compact left $nAfter files across 5 leaves")
-      s.read.parquet(s"$base/t")
+      Versioned.overwrite(ev.repartition(16), tbl, partitionBy = Seq("event_type"))
+      Versioned.compactSmallFiles(s, tbl, maxFileBytes = 128L * 1024 * 1024)
+      val head = Versioned.read(s, tbl)
+      // 5 partitions × 16 files before; compaction must have collapsed them
+      val nAfter = head.inputFiles.length
+      require(nAfter <= 5, s"compaction left $nAfter files across 5 partitions")
+      head
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"), sum(col("v4")).as("sum_v4"),
           sum(col("event_id")).as("sum_eid"),
@@ -2633,7 +2641,7 @@ object SparkEntry {
     // (streaming/StreamAgg.windowedHistogram +
     // analytics/Drift.psiVsFirstWindow).
     "q191_stream_drift" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_streamd").toString
+      val base = scratch("q191")
       val ev = Tables.events(s, dir)
       val sentinel = ev.agg(max(col("ts")).as("mx"))
         .select(lit(0L).as("user_id"), lit("__sentinel").as("event_type"),
@@ -2741,7 +2749,7 @@ object SparkEntry {
     // gate asserts per closed window
     // (streaming/StreamAgg.windowedHeavyHitters).
     "q195_stream_heavy_hitters" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_streamhh").toString
+      val base = scratch("q195")
       val ev = Tables.events(s, dir)
       val sentinel = ev.agg(max(col("ts")).as("mx"))
         .select(lit(0L).as("user_id"), lit("__sentinel").as("event_type"),
@@ -2801,7 +2809,7 @@ object SparkEntry {
     // (streaming/StreamAgg.windowedDistinctSketch).
     "q198_stream_distinct_sketch" -> ((s, dir) => {
       import graft.functions.{hll_count, hll_sketch, hll_union}
-      val base = java.nio.file.Files.createTempDirectory("graft_streamds").toString
+      val base = scratch("q198")
       val ev = Tables.events(s, dir)
       val sentinel = ev.agg(max(col("ts")).as("mx"))
         .select(lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
@@ -2905,7 +2913,7 @@ object SparkEntry {
     // where the HLL register max would absorb it)
     // (streaming/StreamAgg.windowedFingerprint).
     "q205_stream_fingerprint" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_streamfp").toString
+      val base = scratch("q205")
       val ev = Tables.events(s, dir)
       val sentinel = ev.agg(max(col("ts")).as("mx"))
         .select(lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
@@ -3555,13 +3563,13 @@ object SparkEntry {
     }),
 
     // STREAMING change-feed consumption (ingest/ChangeFeed): the
-    // read-side twin of q219's exactly-once sink. A consumer tails
-    // changesBetween in one-version triggers with the last-consumed
-    // version checkpointed (temp-then-rename), mirroring each window
+    // read-side twin of q219's exactly-once sink. A readChangeFeed
+    // stream over the table tails it in one-version triggers, its
+    // offsets in the stream checkpoint, mirroring each source version
     // into a DOWNSTREAM versioned table as a txn-tagged idempotent
-    // append keyed by the window's upper version. The gate then
-    // re-runs the whole mirror from a FRESH checkpoint — total
-    // re-delivery — and every window is absorbed at the downstream
+    // append keyed by that version. The gate then re-runs the whole
+    // mirror from a FRESH checkpoint — total re-delivery — and every
+    // version is absorbed at the downstream
     // commit log: same rows, same commit count. Output: the q218
     // change multiset read back FROM THE MIRROR, plus the absorption
     // invariants.

@@ -1,136 +1,76 @@
 package graft.ingest
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.Trigger
 
 /** STREAMING CONSUMPTION of a versioned table's change feed — the
   * read-side twin of [[Versioned.runStreamAppend]]'s exactly-once sink,
-  * and the incremental form of [[Versioned.changesBetween]]: a consumer
-  * tails the commit log in version-window micro-batches, with the
-  * last-consumed version CHECKPOINTED (temp-then-rename, torn-write
-  * safe) after every processed window. The reference consumes its
-  * table format's change data feed the same way — `readChangeFeed`
-  * from a starting version with streaming offsets tracked per consumer
-  * (spark_utils.py:51–66 ships the writes whose CDF downstream DAGs
-  * tail).
+  * and the incremental form of [[Versioned.changesBetween]]. The
+  * consumer is the `graft-versioned` stream source
+  * ([[graft.sources.VersionedSource]]) with `readChangeFeed=true`: its
+  * offsets are commit versions, held in the stream's own checkpoint,
+  * and a replayed window re-materializes the same rows. The reference
+  * consumes its table format's change data feed the same way —
+  * `readChangeFeed` from a starting version with streaming offsets
+  * tracked per consumer (spark_utils.py:51–66 ships the writes whose
+  * CDF downstream DAGs tail).
   *
-  * Delivery contract: AT-LEAST-ONCE at this layer (a crash between
-  * `process` and the offset write re-delivers that window), upgraded
-  * to EXACTLY-ONCE end-to-end by [[mirrorTo]], which lands every
-  * window as a transactionally-tagged idempotent append keyed by the
-  * window's upper version — re-delivery of a processed window is a
-  * no-op at the downstream commit log, the same absorption q219 gates
-  * for the sink side.
+  * Delivery contract: the source re-delivers an uncommitted window
+  * after a crash (at-least-once); [[mirrorTo]] makes it exactly-once
+  * end to end by landing every source version as a transactionally
+  * tagged idempotent append, so a re-delivered version is a no-op at
+  * the downstream commit log — the same absorption q219 gates for the
+  * sink side.
   *
   * 100 TB posture: a trigger costs one log listing plus
   * `changesBetween` over ONLY the window's commits (appends scan their
   * added files; rewrites diff only the rewritten files) — never a
-  * snapshot diff; the offset file is O(1).
+  * snapshot diff.
   */
 object ChangeFeed {
 
-  private val mapper = new ObjectMapper()
-
-  /** Last version this checkpoint has fully consumed (0 = nothing). */
-  def lastConsumed(spark: SparkSession, checkpointDir: String): Long = {
-    val p = offsetPath(checkpointDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(
-        new java.io.DataInputStream(in)) finally in.close()
-      mapper.readTree(bytes).get("lastVersion").asLong()
-    }
-  }
-
-  /** Tail every change committed after this checkpoint's last-consumed
-    * version, in micro-batches of at most `maxVersionsPerTrigger` log
-    * versions: per trigger, `process(window, fromExclusive, to)` runs
-    * on the window's change rows (the [[Versioned.changesBetween]]
-    * frame: data columns + `_change_type` + `_version`), then the
-    * offset advances ATOMICALLY to `to`. Runs until the head observed
-    * at start is consumed (the bounded AvailableNow shape — callers
-    * loop for continuous tailing). Returns the number of triggers that
-    * fired. */
-  def run(spark: SparkSession, tablePath: String, checkpointDir: String,
-          maxVersionsPerTrigger: Int = Int.MaxValue)
-         (process: (DataFrame, Long, Long) => Unit): Long = {
-    require(maxVersionsPerTrigger >= 1,
-      s"maxVersionsPerTrigger must be >= 1, got $maxVersionsPerTrigger")
-    val head = Versioned.latestVersion(spark, tablePath)
-    var from = lastConsumed(spark, checkpointDir)
-    require(from <= head,
-      s"checkpoint at $checkpointDir is ahead of the table " +
-        s"($from > head $head) — wrong table or truncated log")
-    var triggers = 0L
-    while (from < head) {
-      val to = math.min(from + maxVersionsPerTrigger, head)
-      val window = Versioned.changesBetween(spark, tablePath, from, to)
-      process(window, from, to)
-      writeOffset(spark, checkpointDir, to)
-      from = to
-      triggers += 1
-    }
-    triggers
-  }
-
   /** Exactly-once MIRROR of the change feed into a downstream
-    * versioned table: each SOURCE VERSION's changes land as one
+    * versioned table: one `readChangeFeed` stream over `tablePath`
+    * (checkpointed at `checkpointDir`, at most `maxVersionsPerTrigger`
+    * source versions per micro-batch, run until the head seen at start
+    * is consumed), whose every SOURCE VERSION lands as one
     * transactionally-tagged append (`txnApp = appId`, `txnBatch` = the
-    * source version), so ANY re-delivery is absorbed at the downstream
+    * source version). ANY re-delivery is absorbed at the downstream
     * commit log — including a fresh checkpoint replaying the feed with
     * a DIFFERENT `maxVersionsPerTrigger`: window boundaries then shift,
     * but the per-version row sets are identical by construction, which
     * window-keyed idempotence could not absorb (a width-2 first run
     * commits batches keyed 2,4; a width-1 rerun would produce
     * never-seen keys 1,3 and duplicate every row — ADVICE r10). The
-    * trigger width now only batches OFFSET advances, not idempotence
-    * granularity. Versions whose diff is empty (e.g. an OPTIMIZE
-    * rewrite, which cancels) are skipped: no empty commits. Returns
-    * the downstream head version after the run. */
+    * trigger width only batches offset advances, not idempotence
+    * granularity. A version whose diff is empty (e.g. an OPTIMIZE
+    * rewrite, which cancels) has no rows in the batch and so no
+    * commit. Returns the downstream head version after the run. */
   def mirrorTo(spark: SparkSession, tablePath: String, downstreamPath: String,
                checkpointDir: String, appId: String,
                maxVersionsPerTrigger: Int = Int.MaxValue): Long = {
-    run(spark, tablePath, checkpointDir, maxVersionsPerTrigger) {
-      (_, from, to) =>
-        // per-version frames, not the window frame: changesBetween
-        // computes per-commit parts anyway, so this re-derives the same
-        // scans the window union would have run
-        (from + 1L to to).foreach { v =>
-          val changes = Versioned.changesBetween(spark, tablePath, v - 1L, v)
-          if (!changes.isEmpty)
-            Versioned.idempotentAppend(changes, downstreamPath, appId, v)
-        }
-    }
+    require(maxVersionsPerTrigger >= 1,
+      s"maxVersionsPerTrigger must be >= 1, got $maxVersionsPerTrigger")
+    val q = spark.readStream
+      .format("graft.sources.VersionedSource")
+      .option("readChangeFeed", "true")
+      .option("maxVersionsPerTrigger", maxVersionsPerTrigger.toLong)
+      .load(tablePath)
+      .writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        // ascending: the downstream txn watermark skips a version at or
+        // below the last one committed for this app
+        batch.select("_version").distinct().collect().map(_.getLong(0)).sorted
+          .foreach { v =>
+            Versioned.idempotentAppend(batch.filter(col("_version") === v),
+              downstreamPath, appId, v)
+          }
+      }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
     Versioned.latestVersion(spark, downstreamPath)
-  }
-
-  private def offsetPath(checkpointDir: String): Path =
-    new Path(checkpointDir, "offset.json")
-
-  /** Atomic offset advance: full write to a temp name, then rename
-    * over the old offset — a reader (or a crashed consumer's restart)
-    * sees either the previous offset or the new one, never a torn
-    * record. */
-  private def writeOffset(spark: SparkSession, checkpointDir: String,
-                          version: Long): Unit = {
-    val p = offsetPath(checkpointDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val node = mapper.createObjectNode()
-    node.put("lastVersion", version)
-    val tmp = new Path(p.getParent,
-      s".tmp-offset-${java.util.UUID.randomUUID().toString.take(8)}.json")
-    val out = fs.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
-    // rename-over-existing: delete the old offset first on filesystems
-    // that refuse an existing destination; the temp file is complete
-    // either way, so the worst crash outcome is the PREVIOUS offset
-    // surviving -> re-delivery, which the idempotent sink absorbs
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"could not advance offset at $p")
   }
 }

@@ -5,18 +5,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Batch ingest: landing-zone CSV → schema-enforced scan → partitioned
-  * columnar write, plus incremental append — the reference's
-  * table-driven historical load and weekly append re-derived
-  * (process_historical_data.py:17–78; process_weekly_trends.py:33–39).
+  * columnar write — the reference's table-driven historical load
+  * re-derived (process_historical_data.py:17–78). Durable appends
+  * (the weekly append, process_weekly_trends.py:33–39, with its
+  * `mergeSchema=false` pin) and compaction go through the versioned
+  * table format ([[Versioned.append]], [[Versioned.runStreamAppend]]
+  * over [[readCsvStream]], [[Versioned.compactSmallFiles]]); the
+  * writers here are whole-path overwrites and layouts.
   *
   * Scale posture: this module owns the engine's partition-pruning story.
   * Fact tables are written `partitionBy(year, month)` exactly like the
   * reference bronze layout (process_historical_data.py:53, :75), so every
   * downstream query with a time predicate prunes whole directories
-  * instead of scanning 100 TB. Appends pin the schema
-  * (`mergeSchema=false`, process_weekly_trends.py:39); overwrites are
-  * full-table replacement (offline parquet has no Delta
-  * `overwriteSchema`, SURVEY §7.3 — same query semantics).
+  * instead of scanning 100 TB.
   */
 object Ingest {
 
@@ -30,23 +31,34 @@ object Ingest {
       derive: Map[String, org.apache.spark.sql.Column] = Map.empty,
       partitionCols: Seq[String] = Nil)
 
-  /** S1: header CSV scan with a declared schema — never inferred
-    * (process_historical_data.py:66). FAILFAST surfaces malformed rows as
-    * job failures instead of silent nulls (the quality-gate stance).
+  /** S1: header CSV scan options, shared by the batch and streaming
+    * scans; both take a declared schema — never inferred
+    * (process_historical_data.py:66). FAILFAST surfaces malformed rows
+    * as job failures instead of silent nulls (the quality-gate stance).
     */
-  private def csvReader(spark: SparkSession, schema: StructType) =
-    spark.read
-      .option("header", "true")
-      .option("mode", "FAILFAST")
-      // explicit µs-precision timestamps: the default formats drop
-      // sub-millisecond digits on write, breaking value round-trips.
-      // NTZ columns (parquet isAdjustedToUTC=false) use the NTZ option.
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-      .option("timestampNTZFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-      .schema(schema)
+  private val CsvReadOptions = Map(
+    "header" -> "true",
+    "mode" -> "FAILFAST",
+    // explicit µs-precision timestamps: the default formats drop
+    // sub-millisecond digits on write, breaking value round-trips.
+    // NTZ columns (parquet isAdjustedToUTC=false) use the NTZ option.
+    "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
 
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    csvReader(spark, schema).csv(path)
+    spark.read.options(CsvReadOptions).schema(schema).csv(path)
+
+  /** [[readCsv]] as a FILE STREAM source over a landing zone (a
+    * directory or glob): each trigger scans only the files not yet
+    * seen, and the stream checkpoint's file log records which files a
+    * committed batch consumed — the processed-file manifest of the
+    * reference's weekly ingest DAG (dag_weekly_trends_ingestion.py:31–41
+    * tracks loaded files in an Airflow Variable). Landed through
+    * [[Versioned.runStreamAppend]], a replayed batch is absorbed by its
+    * txn tag, so each landing file is appended exactly once. */
+  def readCsvStream(spark: SparkSession, path: String,
+                    schema: StructType): DataFrame =
+    spark.readStream.options(CsvReadOptions).schema(schema).csv(path)
 
   /** JSON-lines batch scan with the same discipline as [[readCsv]]:
     * declared schema, FAILFAST, explicit µs timestamp formats. The batch
@@ -171,77 +183,6 @@ object Ingest {
                     schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).option("mode", "FAILFAST").json(path)
 
-  /** S4: incremental append with the schema pinned
-    * (process_weekly_trends.py:39 sets `mergeSchema=false`, which Delta
-    * enforces at WRITE time; for plain parquet that option only affects
-    * reads, so a divergent append would silently land mixed-schema files
-    * — the worst kind of lake corruption. We enforce the pin explicitly:
-    * if the table exists, the incoming frame must match its column
-    * names and types, or the append is refused before any file lands.)
-    */
-  def append(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = df.sparkSession
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty) {
-      val existing = spark.read.parquet(path).schema
-        .map(f => f.name -> f.dataType.simpleString).toMap
-      val incoming = df.schema.map(f => f.name -> f.dataType.simpleString).toMap
-      if (existing != incoming)
-        throw new IllegalStateException(
-          s"append schema mismatch for $path (mergeSchema is pinned false):\n" +
-            s"  table:    ${existing.toSeq.sorted.mkString(", ")}\n" +
-            s"  incoming: ${incoming.toSeq.sorted.mkString(", ")}")
-    }
-    val w = df.write.mode(SaveMode.Append).option("mergeSchema", "false")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-  }
-
-  /** Incremental landing-zone ingest with an idempotent processed-file
-    * manifest — the engine-side equivalent of the reference's Airflow
-    * Variable that tracks which weekly files were already loaded
-    * (dag_weekly_trends_ingestion.py:31–41, :65 expands one Spark job per
-    * NEW file). Lists the landing directory through the Hadoop FS API (so
-    * the same code addresses HDFS/S3 at scale), skips files the manifest
-    * records, appends only the new ones with the pinned schema, then
-    * rewrites the manifest. Re-running after success is a no-op;
-    * re-running after a crash between append and manifest write re-appends
-    * at most the crashed batch (at-least-once, like the reference's DAG).
-    *
-    * Returns the newly processed file paths.
-    */
-  def incrementalAppend(spark: SparkSession, landingDir: String,
-                        schema: StructType, tablePath: String,
-                        manifestPath: String,
-                        partitionCols: Seq[String] = Nil,
-                        derive: Map[String, org.apache.spark.sql.Column] = Map.empty): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(landingDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val landed = fs.listStatus(new Path(landingDir)).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .map(_.getPath.toString).sorted
-    val mPath = new Path(manifestPath)
-    val processed: Set[String] =
-      if (fs.exists(mPath)) {
-        val in = fs.open(mPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSet
-        finally in.close()
-      } else Set.empty
-    val fresh = landed.filterNot(processed)
-    if (fresh.nonEmpty) {
-      val df = derive.foldLeft(csvReader(spark, schema).csv(fresh: _*)) {
-        case (d, (n, e)) => d.withColumn(n, e)
-      }
-      append(df, tablePath, partitionCols)
-      val out = fs.create(mPath, true)
-      try out.write((processed ++ fresh).toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-    fresh
-  }
-
   /** Bucketed table write: pre-shuffles rows into `numBuckets` by
     * `bucketCol` at write time so equi-joins and aggregations on that key
     * read co-located data and plan with NO exchange — the standing answer
@@ -358,105 +299,4 @@ object Ingest {
     "event_date" -> to_date(col(tsCol)),
     "year" -> year(col(tsCol)),
     "month" -> month(col(tsCol)))
-
-  /** Small-file compaction: rewrite a parquet table into files of
-    * ~`targetFileBytes`, preserving content exactly. Streaming sinks and
-    * frequent small appends leave thousands of KB-sized files per
-    * directory; at 100 TB the resulting scan-task explosion (one task per
-    * tiny file) and namenode pressure dominate query cost long before
-    * CPU does — periodic compaction is the standing fix.
-    *
-    * Hive-partitioned tables (the module's own primary layout) are
-    * compacted PER LEAF PARTITION DIRECTORY, preserving the directory
-    * structure — and with it partition pruning and the append contract; a
-    * whole-table rewrite would flatten `year=/month=` into loose files.
-    * Each leaf rewrite goes to a sibling temp directory first, then swaps
-    * in with two renames. The swap is NOT atomic — a crash between the
-    * two renames leaves that leaf at `<leaf>_compact_old` (true atomicity
-    * needs a metastore/table-format pointer swap, out of scope for bare
-    * paths) — so every run begins with a recovery sweep: an orphaned
-    * `<leaf>_compact_old` whose `<leaf>` is missing is renamed back into
-    * place (it holds the original data), one whose `<leaf>` exists is a
-    * completed swap's leftover and is deleted, and stale `_compact_tmp`
-    * staging dirs are always deleted. Staging dirs are never treated as
-    * partition leaves themselves (their names contain `=` only because
-    * the leaf's does). The rewrite
-    * uses `repartition` (one shuffle) rather than `coalesce`, which would
-    * collapse the SCAN's parallelism to the output file count and
-    * serialize the whole rewrite on a large cluster. Returns the actual
-    * new data-file count.
-    */
-  def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val TmpSuffix = "_compact_tmp"
-    val OldSuffix = "_compact_old"
-
-    // Root-level recovery FIRST, before the existence check: for an
-    // UNPARTITIONED table the leaf is the root itself, so its staging
-    // dirs are SIBLINGS of the root — outside any sweep that only lists
-    // the root's children — and a crash between the two renames leaves
-    // the root missing entirely. Restore it from `<path>_compact_old`
-    // (which holds the original data) or the orphaned sweep below can
-    // never run and the data sits stranded.
-    locally {
-      val rootOld = new Path(root.toString + OldSuffix)
-      val rootTmp = new Path(root.toString + TmpSuffix)
-      if (!fs.exists(root) && fs.exists(rootOld))
-        require(fs.rename(rootOld, root), s"compact: could not restore $root from $rootOld")
-      else if (fs.exists(root) && fs.exists(rootOld))
-        fs.delete(rootOld, true) // completed swap's leftover
-      if (fs.exists(rootTmp)) fs.delete(rootTmp, true)
-    }
-    require(fs.exists(root), s"compact: $path does not exist")
-    def isStaging(p: Path): Boolean =
-      p.getName.endsWith(TmpSuffix) || p.getName.endsWith(OldSuffix)
-
-    // Recovery sweep for a crashed earlier run (see scaladoc): restore
-    // orphaned `_compact_old` dirs whose real leaf is gone, drop the
-    // leftovers of completed swaps, and clear all `_compact_tmp` staging.
-    def recover(p: Path): Unit = {
-      val dirs = fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-      dirs.filter(_.getName.endsWith(OldSuffix)).foreach { dead =>
-        val leaf = new Path(dead.getParent, dead.getName.stripSuffix(OldSuffix))
-        if (!fs.exists(leaf))
-          require(fs.rename(dead, leaf), s"compact: could not restore $leaf from $dead")
-        else fs.delete(dead, true)
-      }
-      dirs.filter(_.getName.endsWith(TmpSuffix)).foreach(t => fs.delete(t, true))
-      fs.listStatus(p)
-        .filter(s => s.isDirectory && s.getPath.getName.contains("=") && !isStaging(s.getPath))
-        .foreach(s => recover(s.getPath))
-    }
-    recover(root)
-
-    // leaf data dirs: recurse through partition (`col=value`) directories,
-    // never descending into compaction staging dirs (their names contain
-    // `=` only because the leaf's does)
-    def leaves(p: Path): Seq[Path] = {
-      val parts = fs.listStatus(p).filter(s =>
-        s.isDirectory && s.getPath.getName.contains("=") && !isStaging(s.getPath))
-      if (parts.isEmpty) Seq(p) else parts.toSeq.flatMap(s => leaves(s.getPath))
-    }
-
-    def compactLeaf(leaf: Path): Int = {
-      val tmp = new Path(leaf.toString + TmpSuffix)
-      val dead = new Path(leaf.toString + OldSuffix)
-      fs.delete(tmp, true)
-      fs.delete(dead, true)
-      val totalBytes = fs.getContentSummary(leaf).getLength
-      val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      spark.read.parquet(leaf.toString).repartition(nFiles)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      require(fs.rename(leaf, dead), s"compact: could not retire $leaf")
-      require(fs.rename(tmp, leaf), s"compact: could not install $tmp")
-      fs.delete(dead, true)
-      fs.listStatus(leaf).count(_.getPath.getName.endsWith(".parquet"))
-    }
-
-    leaves(root).map(compactLeaf).sum
-  }
 }

@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
 import graft.ingest.Versioned
 
 /** A REAL Structured Streaming SOURCE over a versioned table — the
-  * `spark.readStream` form of the poll-loop consumer
-  * (ingest/ChangeFeed): the reference's downstream DAGs tail its table
-  * format's streams the same way (spark_utils.py:51–66 writes the
-  * tables those streams read). Usage:
+  * consumer behind [[graft.ingest.ChangeFeed.mirrorTo]]: the
+  * reference's downstream DAGs tail its table format's streams the
+  * same way (spark_utils.py:51–66 writes the tables those streams
+  * read). Usage:
   *
   * {{{
   *   spark.readStream
@@ -246,11 +246,10 @@ private[sources] class VersionedStreamSource(
   private def bytesOf(c: Versioned.Commit): Long =
     if (c.addSizes.size == c.add.size) c.addSizes.sum
     else {
-      lazy val fs = new Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      lazy val log = graft.ingest.TableLog(spark, path)
       c.add.map(rel => lenCache.getOrElseUpdate(rel, {
         Versioned.fileStatusProbes.incrementAndGet()
-        fs.getFileStatus(new Path(new Path(path), rel)).getLen
+        log.fs.getFileStatus(new Path(log.root, rel)).getLen
       })).sum
     }
 
@@ -272,9 +271,16 @@ private[sources] class VersionedStreamSource(
 
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
     // the engine passes null (not initialOffset()) before the first batch
-    val from = math.max(
-      Option(start).map(versionOf).getOrElse(startingVersion), startingVersion)
+    val committed = Option(start).map(versionOf)
+    val from = math.max(committed.getOrElse(startingVersion), startingVersion)
     val headNow = Versioned.latestVersion(spark, path)
+    // a committed offset past the head means this checkpoint was made
+    // against another table (or the log lost commits): waiting for the
+    // head to catch up would stall forever, so refuse
+    for (c <- committed if c > headNow)
+      throw new IllegalStateException(
+        s"checkpoint at $metadataPath is ahead of the table $path " +
+          s"($c > head $headNow) — wrong table or truncated log")
     val head = availableNowCap.fold(headNow)(math.min(headNow, _))
     if (head <= from) return LongOffset(from)
     val (fileCap, byteCap, rowCap) = capsOf(limit)

@@ -6,6 +6,7 @@ import java.time.Duration
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.types.StructType
 
 /** First-seen streaming dedup on the `transformWithState` ARBITRARY-STATE
   * API (Spark 4.x's successor to mapGroupsWithState): one explicit
@@ -96,8 +97,8 @@ object StatefulDedup {
                                statePartitions: Option[Int] = None): DataFrame = {
     runBounded(spark, firstSeen(eventSource(spark, inPath), ttl), outPath,
       checkpointPath, statePartitions, wallClockMode = ttl.isDefined)
-    readSinkOrEmpty(spark, outPath,
-      "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")
+    StreamIngest.readSink(spark, outPath, StructType.fromDDL(
+      "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP"))
   }
 
   /** Bounded run of a transformWithState stream to a parquet sink with
@@ -153,16 +154,5 @@ object StatefulDedup {
         case None => spark.conf.unset(provider)
       }
     }
-  }
-
-  /** Read a bounded run's sink; a zero-record source commits no batch
-    * and never creates the path — return an empty typed frame instead. */
-  private[streaming] def readSinkOrEmpty(spark: SparkSession, outPath: String,
-                                         ddl: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    else spark.read.parquet(outPath)
   }
 }

@@ -75,7 +75,8 @@ object StatefulProfile {
     StatefulDedup.runBounded(spark,
       categoryProfile(StatefulDedup.eventSource(spark, inPath)),
       outPath, checkpointPath, statePartitions, wallClockMode = false)
-    StatefulDedup.readSinkOrEmpty(spark, outPath,
-      "user_id LONG, event_type STRING, n LONG, cents LONG")
+    StreamIngest.readSink(spark, outPath,
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id LONG, event_type STRING, n LONG, cents LONG"))
   }
 }

@@ -113,7 +113,8 @@ object StatefulSession {
     StatefulDedup.runBounded(spark,
       sessionize(StatefulDedup.eventSource(spark, inPath), gapSeconds),
       outPath, checkpointPath, statePartitions, wallClockMode = false)
-    StatefulDedup.readSinkOrEmpty(spark, outPath,
-      "user_id LONG, start_us LONG, last_us LONG, n_events LONG")
+    StreamIngest.readSink(spark, outPath,
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id LONG, start_us LONG, last_us LONG, n_events LONG"))
   }
 }

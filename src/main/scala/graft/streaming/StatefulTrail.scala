@@ -67,8 +67,9 @@ object StatefulTrail {
                                k: Int = 3,
                                statePartitions: Option[Int] = None): DataFrame = {
     runBoundedTrail(spark, inPath, outPath, checkpointPath, k, statePartitions)
-    StatefulDedup.readSinkOrEmpty(spark, outPath,
-      "user_id LONG, n_trail INT, last_event_id LONG, trail_cents LONG")
+    StreamIngest.readSink(spark, outPath,
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id LONG, n_trail INT, last_event_id LONG, trail_cents LONG"))
   }
 
   private def runBoundedTrail(spark: SparkSession, inPath: String,

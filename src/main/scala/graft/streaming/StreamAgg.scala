@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.ingest.Versioned
+
 /** Stateful streaming operators beyond the reference's stateless
   * parse-and-persist job: event-time tumbling-window aggregation with a
   * watermark, and gap-based sessionization via flatMapGroupsWithState.
@@ -163,17 +165,6 @@ object StreamAgg {
       .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us")
   }
 
-  /** Read a bounded run's sink with the expected schema; a run whose
-    * source held zero records commits no batch and never creates the
-    * sink path — return an empty frame instead of throwing. */
-  private def readSink(spark: SparkSession, outPath: String,
-                       schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(outPath)
-  }
-
   private def runToParquet(spark: SparkSession, df: DataFrame, outPath: String,
                            checkpointPath: String,
                            statePartitions: Option[Int])
@@ -212,7 +203,7 @@ object StreamAgg {
     val src = jsonEventSource(spark, inPath, EventWithIdSchema)
     runToParquet(spark, dedupedEvents(src, keyCol, watermarkDelay),
       outPath, checkpointPath, statePartitions)
-    readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
+    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
       "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP"))
   }
 
@@ -241,7 +232,7 @@ object StreamAgg {
       maxFilesPerTrigger = Some(maxFilesPerTrigger))
     val progress = runToParquet(spark, dedupedEvents(src, keyCol, watermarkDelay),
       outPath, checkpointPath, statePartitions)
-    (readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
+    (StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
       "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")),
       progress)
   }
@@ -268,36 +259,37 @@ object StreamAgg {
     runToParquet(spark, joined, outPath, checkpointPath, statePartitions = None)
     // explicit schema from the streaming plan: an all-miss join writes
     // zero files and schema inference on the bare sink would throw
-    readSink(spark, outPath, joined.schema)
+    StreamIngest.readSink(spark, outPath, joined.schema)
   }
 
-  /** Streaming upsert sink: each micro-batch is MERGEd into a keyed
-    * parquet table through foreachBatch + [[graft.operators.Merge.upsert]]
-    * — the Delta-MERGE landing pattern of the reference
-    * (process_recommendation_events.py's sink lineage) on bare paths.
-    * Re-delivered rows (at-least-once sources, doubled payloads)
-    * collapse to one row per key; the current table is eagerly
-    * localCheckpoint'd before the overwrite so the read and the rewrite
-    * of the same path never interleave. Returns the final table.
-    */
-  def runUpsertToCompletion(spark: SparkSession, inPath: String,
-                            tablePath: String, checkpointPath: String,
-                            keyCol: String = "event_id"): DataFrame = {
+  /** Streaming upsert sink into a VERSIONED table — the Delta-MERGE
+    * landing of the reference (process_recommendation_events.py's sink
+    * lineage) on the table format's log. Each micro-batch first
+    * collapses to one row per key, latest `ts` wins
+    * ([[graft.operators.Merge.upsert]] over an empty base — at-least-once
+    * sources and doubled payloads deliver a key more than once), then
+    * lands as one [[Versioned.upsert]] commit (the first batch, on an
+    * empty path, as the creating [[Versioned.overwrite]]); a later batch
+    * replaces the rows of the keys it carries. Every batch is a claimed
+    * commit over immutable files, so a crash mid-write leaves the
+    * previous version whole, and a batch replayed after checkpoint
+    * recovery re-applies the same rows — a content no-op. Returns the
+    * table at its head. */
+  def runVersionedUpsert(spark: SparkSession, inPath: String,
+                         tablePath: String, checkpointPath: String,
+                         keyCol: String = "event_id"): DataFrame = {
     val src = jsonEventSource(spark, inPath, EventWithIdSchema)
     val q = StreamIngest.startForeachBatchSink(src, checkpointPath) { (batch, _) =>
       val s = batch.sparkSession
-      val p = new org.apache.hadoop.fs.Path(tablePath)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val base =
-        if (fs.exists(p)) s.read.schema(batch.schema).parquet(tablePath).localCheckpoint()
-        else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-      graft.operators.Merge.upsert(base, batch, Seq(keyCol), Seq("ts"))
-        .localCheckpoint() // materialize BEFORE overwriting the path just read
-        .write.mode("overwrite").parquet(tablePath)
+      val latest = graft.operators.Merge.upsert(batch.limit(0), batch,
+        Seq(keyCol), Seq("ts"))
+      if (Versioned.latestVersion(s, tablePath) == 0L)
+        Versioned.overwrite(latest, tablePath)
+      else Versioned.upsert(s, tablePath, latest, Seq(keyCol))
+      ()
     }
     q.awaitTermination()
-    readSink(spark, tablePath, org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP"))
+    Versioned.read(spark, tablePath)
   }
 
   /** Stream-stream interval join: views attributed to the click they
@@ -363,7 +355,7 @@ object StreamAgg {
     runToParquet(spark, joined, outPath, checkpointPath, statePartitions)
     // explicit schema: a no-match interval join writes zero files and
     // schema inference on the bare sink would throw
-    readSink(spark, outPath, joined.schema)
+    StreamIngest.readSink(spark, outPath, joined.schema)
   }
 
   /** [[runIntervalJoinToCompletion]]'s left-outer sibling. */
@@ -374,7 +366,7 @@ object StreamAgg {
     val (clicks, views) = intervalSides(spark, inPath)
     val joined = intervalJoinedOuter(clicks, views, intervalSeconds)
     runToParquet(spark, joined, outPath, checkpointPath, statePartitions)
-    readSink(spark, outPath, joined.schema)
+    StreamIngest.readSink(spark, outPath, joined.schema)
   }
 
   /** Run a windowed aggregation over a bounded file source to completion
@@ -395,7 +387,7 @@ object StreamAgg {
       "user_id LONG, event_type STRING, ts_us LONG, value DOUBLE")
     runToParquet(spark, windowedCounts(src, windowLength, watermarkDelay),
       outPath, checkpointPath, statePartitions)
-    readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
+    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
       "window_start TIMESTAMP, event_type STRING, n LONG, sum_value DOUBLE"))
   }
 
@@ -488,7 +480,7 @@ object StreamAgg {
     runToParquet(spark,
       windowedFingerprint(src, windowLength, watermarkDelay),
       outPath, checkpointPath, statePartitions)
-    readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
+    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
       "window_start TIMESTAMP, fp BIGINT, n_rows BIGINT"))
   }
 
@@ -505,7 +497,7 @@ object StreamAgg {
     runToParquet(spark,
       windowedDistinctSketch(src, keyCol, p, windowLength, watermarkDelay),
       outPath, checkpointPath, statePartitions)
-    readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
+    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
       "window_start TIMESTAMP, sk BINARY, n_rows BIGINT"))
   }
 
@@ -522,7 +514,7 @@ object StreamAgg {
     runToParquet(spark,
       windowedHeavyHitters(src, itemCol, k, windowLength, watermarkDelay),
       outPath, checkpointPath, statePartitions)
-    readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
+    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
       "window_start TIMESTAMP, mg MAP<STRING, BIGINT>, n BIGINT"))
   }
 
@@ -538,7 +530,7 @@ object StreamAgg {
     runToParquet(spark,
       windowedHistogram(src, windowLength, watermarkDelay, binWidth),
       outPath, checkpointPath, statePartitions)
-    readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
+    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
       "window_start TIMESTAMP, bin LONG, n LONG"))
   }
 }

@@ -177,9 +177,15 @@ object StreamIngest {
     val tap = if (consoleTap) Some(startConsoleTap(parsed)) else None
     sink.awaitTermination()
     tap.foreach(_.awaitTermination())
-    val schema = payloadSchema.add("event_date", StringType)
-    // a bounded source with ZERO records commits no batch, so the parquet
-    // sink never creates outPath — return an empty frame, don't throw
+    readSink(spark, outPath, payloadSchema.add("event_date", StringType))
+  }
+
+  /** Read a bounded run's parquet sink with its expected schema; a run
+    * whose source held zero records commits no batch and never creates
+    * the sink path — that reads as an empty frame instead of throwing.
+    * The one sink reader of every bounded `run*` driver here. */
+  private[streaming] def readSink(spark: SparkSession, outPath: String,
+                                  schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(outPath)
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

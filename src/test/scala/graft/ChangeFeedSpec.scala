@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.{ChangeFeed, Fingerprint, Versioned}
 
-/** Streaming change-feed consumption: version-window triggers, atomic
-  * offset checkpointing, and the exactly-once mirror (idempotent
-  * tagged appends keyed by window upper version). */
+/** The exactly-once change-feed mirror: one idempotent tagged append
+  * per source version, absorbed under total re-delivery and under a
+  * different trigger width. The stream source it runs on (offsets,
+  * restart, refusals) is covered by [[VersionedSourceSpec]]. */
 class ChangeFeedSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -14,46 +15,6 @@ class ChangeFeedSpec extends SparkTestBase {
     java.nio.file.Files.createTempDirectory(s"graft_cf_$name").toString
 
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
-
-  test("run tails only new versions per call; offset advances atomically") {
-    val base = tmp("tail")
-    val tbl = s"$base/tbl"
-    val ckpt = s"$base/ckpt"
-    Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl) // v1
-    Versioned.append(df(3L -> "c"), tbl)               // v2
-    var seen = Vector.empty[(Long, Long, Long)]
-    val t1 = ChangeFeed.run(spark, tbl, ckpt, maxVersionsPerTrigger = 1) {
-      (w, from, to) => seen :+= ((from, to, w.count()))
-    }
-    assert(t1 == 2 && seen == Vector((0L, 1L, 2L), (1L, 2L, 1L)))
-    assert(ChangeFeed.lastConsumed(spark, ckpt) == 2L)
-    // caught up: no triggers, no process calls
-    assert(ChangeFeed.run(spark, tbl, ckpt)((_, _, _) =>
-      fail("no new versions — must not fire")) == 0L)
-    // new commits resume from the checkpoint, not from zero
-    Versioned.upsert(spark, tbl, df(1L -> "A"), Seq("id"))  // v3
-    seen = Vector.empty
-    val t2 = ChangeFeed.run(spark, tbl, ckpt)((w, from, to) =>
-      seen :+= ((from, to, w.count())))
-    assert(t2 == 1 && seen.head._1 == 2L && seen.head._2 == 3L)
-    // the upsert window carries the delete+insert pair for id=1
-    assert(seen.head._3 == 2L)
-  }
-
-  test("a failed trigger does not advance the offset; retry re-delivers") {
-    val base = tmp("crash")
-    val tbl = s"$base/tbl"
-    val ckpt = s"$base/ckpt"
-    Versioned.overwrite(df(1L -> "a"), tbl)
-    intercept[RuntimeException] {
-      ChangeFeed.run(spark, tbl, ckpt)((_, _, _) =>
-        throw new RuntimeException("sink down"))
-    }
-    assert(ChangeFeed.lastConsumed(spark, ckpt) == 0L)
-    var n = 0L
-    ChangeFeed.run(spark, tbl, ckpt)((w, _, _) => n = w.count())
-    assert(n == 1L && ChangeFeed.lastConsumed(spark, ckpt) == 1L)
-  }
 
   test("mirrorTo is exactly-once under total re-delivery from a fresh checkpoint") {
     val base = tmp("mirror")
@@ -119,21 +80,7 @@ class ChangeFeedSpec extends SparkTestBase {
       maxVersionsPerTrigger = 1)
     // v1+v2 mirrored; v3 (optimize) produced an empty window -> skipped
     assert(downHead == 2L)
-    assert(ChangeFeed.lastConsumed(spark, s"$base/ckpt") == 3L)
+    assert(committedOffset(s"$base/ckpt").contains("3"))
     assert(Versioned.read(spark, down).count() == 2L)
-  }
-
-  test("a checkpoint ahead of the table fails loudly") {
-    val base = tmp("ahead")
-    val tbl = s"$base/tbl"
-    Versioned.overwrite(df(1L -> "a"), tbl)
-    val other = s"$base/other"
-    Versioned.overwrite(df(1L -> "a"), other)
-    Versioned.append(df(2L -> "b"), other)
-    ChangeFeed.run(spark, other, s"$base/ckpt")((_, _, _) => ())
-    val e = intercept[IllegalArgumentException] {
-      ChangeFeed.run(spark, tbl, s"$base/ckpt")((_, _, _) => ())
-    }
-    assert(messages(e).exists(_.contains("ahead of the table")))
   }
 }

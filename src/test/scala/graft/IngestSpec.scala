@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.ingest.Ingest
+import graft.ingest.{Ingest, Versioned}
 
 class IngestSpec extends SparkTestBase {
   import spark.implicits._
@@ -169,126 +169,72 @@ class IngestSpec extends SparkTestBase {
     assert(salted == plain)
   }
 
-  test("incrementalAppend processes each landing file exactly once") {
+  test("a CSV file stream lands each landing file exactly once into a versioned table") {
     val dir = tmp()
     val schema = new org.apache.spark.sql.types.StructType()
       .add("id", "long").add("v", "string")
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/landing"))
     def drop(name: String, rows: String): Unit =
       Files.writeString(java.nio.file.Paths.get(s"$dir/landing/$name"), s"id,v\n$rows")
+    def land(): Long = Versioned.runStreamAppend(spark,
+      Ingest.readCsvStream(spark, s"$dir/landing", schema),
+      s"$dir/table", s"$dir/ckpt", "landing")
     drop("week1.csv", "1,a\n2,b")
     drop("week2.csv", "3,c")
-    val first = Ingest.incrementalAppend(spark, s"$dir/landing", schema,
-      s"$dir/table", s"$dir/manifest.txt")
-    assert(first.map(f => f.substring(f.lastIndexOf('/') + 1)) == Seq("week1.csv", "week2.csv"))
-    assert(spark.read.parquet(s"$dir/table").count() == 3)
-    // idempotent re-run: nothing new
-    assert(Ingest.incrementalAppend(spark, s"$dir/landing", schema,
-      s"$dir/table", s"$dir/manifest.txt").isEmpty)
-    assert(spark.read.parquet(s"$dir/table").count() == 3)
+    assert(land() == 1L)
+    assert(Versioned.read(spark, s"$dir/table").count() == 3)
+    // idempotent re-run: nothing new, no commit
+    assert(land() == 1L)
+    assert(Versioned.read(spark, s"$dir/table").count() == 3)
     // a late-arriving file is picked up alone
     drop("week3.csv", "4,d\n5,e")
-    val third = Ingest.incrementalAppend(spark, s"$dir/landing", schema,
-      s"$dir/table", s"$dir/manifest.txt")
-    assert(third.map(f => f.substring(f.lastIndexOf('/') + 1)) == Seq("week3.csv"))
-    assert(spark.read.parquet(s"$dir/table").count() == 5)
+    assert(land() == 2L)
+    assert(Versioned.commitsBetween(spark, s"$dir/table", 1L, 2L).map(_.nRows) == Seq(2L))
+    assert(rowSet(Versioned.read(spark, s"$dir/table")) ==
+      Set(Seq(1L, "a"), Seq(2L, "b"), Seq(3L, "c"), Seq(4L, "d"), Seq(5L, "e")))
   }
 
   test("append adds rows without rewriting existing partitions") {
     val dir = tmp()
     val a = List((1L, 2023, 1)).toDF("id", "year", "month")
     val b = List((2L, 2023, 2)).toDF("id", "year", "month")
-    Ingest.writePartitioned(a, s"$dir/t", Seq("year", "month"))
-    Ingest.append(b, s"$dir/t", Seq("year", "month"))
-    assert(spark.read.parquet(s"$dir/t").count() == 2)
+    val v1 = Versioned.overwrite(a, s"$dir/t", partitionBy = Seq("year", "month"))
+    val v2 = Versioned.append(b, s"$dir/t")
+    assert(Versioned.read(spark, s"$dir/t").count() == 2)
+    assert(v2.remove.isEmpty && v2.add.forall(_.contains("month=2")), v2.add)
+    val (_, kept, total) = Versioned.readAsOfPartitions(spark, s"$dir/t", v2.version)(_ => true)
+    assert(kept == total && total == v1.add.size + v2.add.size)
   }
 
   test("compact collapses a sprayed table into few files with identical content") {
     val dir = tmp()
     val d = (1L to 2000L).map(i => (i, s"row_$i")).toDF("id", "v")
-    d.repartition(64).write.parquet(s"$dir/t") // the small-files spray
-    def files() = new java.io.File(s"$dir/t").listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    Versioned.overwrite(d.repartition(64), s"$dir/t") // the small-files spray
+    def files() = Versioned.read(spark, s"$dir/t").inputFiles.length
     assert(files() == 64)
-    val before = spark.read.parquet(s"$dir/t").collect().map(_.toSeq).toSet
-    val n = Ingest.compact(spark, s"$dir/t", targetFileBytes = 10L * 1024 * 1024)
-    assert(files() == n && n < 8, s"still ${files()} files (reported $n)")
-    assert(spark.read.parquet(s"$dir/t").collect().map(_.toSeq).toSet == before)
-    assert(!new java.io.File(s"$dir/t_compact_tmp").exists())
-    assert(!new java.io.File(s"$dir/t_compact_old").exists())
+    val before = rowSet(Versioned.read(spark, s"$dir/t"))
+    assert(Versioned.compactSmallFiles(spark, s"$dir/t",
+      maxFileBytes = 10L * 1024 * 1024).isDefined)
+    assert(files() < 8, s"still ${files()} files")
+    assert(rowSet(Versioned.read(spark, s"$dir/t")) == before)
   }
 
   test("compact preserves a Hive-partitioned layout and its pruning") {
     val dir = tmp()
     val d = (1L to 1200L).map(i => (i, s"r$i", 2020 + (i % 3).toInt)).toDF("id", "v", "year")
-    d.repartition(16).write.partitionBy("year").parquet(s"$dir/t") // 16 files per leaf
-    val before = spark.read.parquet(s"$dir/t").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    Ingest.compact(spark, s"$dir/t", targetFileBytes = 10L * 1024 * 1024)
-    val root = new java.io.File(s"$dir/t")
-    val leafDirs = root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("year="))
-    assert(leafDirs.length == 3, s"partition dirs lost: ${root.listFiles().map(_.getName).toSeq}")
-    assert(!root.listFiles().exists(f => f.getName.endsWith(".parquet")),
-      "data files leaked into the table root — layout flattened")
-    leafDirs.foreach { leaf =>
-      assert(leaf.listFiles().count(_.getName.endsWith(".parquet")) < 4,
-        s"${leaf.getName} still sprayed")
-    }
-    val after = spark.read.parquet(s"$dir/t").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    assert(after == before)
-  }
-
-  test("compact recovers an UNPARTITIONED table whose root vanished mid-swap") {
-    val dir = tmp()
-    val d = (1L to 400L).map(i => (i, s"v$i")).toDF("id", "v")
-    d.repartition(8).write.parquet(s"$dir/t")
-    val before = spark.read.parquet(s"$dir/t").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-
-    // worst crash point for the root-as-leaf case: the TABLE ITSELF is
-    // retired to <path>_compact_old and the compacted tmp never landed —
-    // the root is gone and the staging dirs are SIBLINGS of it
-    val root = new java.io.File(s"$dir/t")
-    val dead = new java.io.File(s"$dir/t_compact_old")
-    val tmpStage = new java.io.File(s"$dir/t_compact_tmp")
-    assert(root.renameTo(dead))
-    tmpStage.mkdir()
-
-    val n = Ingest.compact(spark, s"$dir/t", targetFileBytes = 10L * 1024 * 1024)
-    assert(n > 0)
-    assert(root.exists() && !dead.exists() && !tmpStage.exists(),
-      "root-level recovery must restore the table and clear sibling staging")
-    val after = spark.read.parquet(s"$dir/t").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(after == before, "crash recovery lost or duplicated rows")
-  }
-
-  test("compact recovers a partitioned table from a crash between the two renames") {
-    val dir = tmp()
-    val d = (1L to 600L).map(i => (i, s"r$i", 2020 + (i % 2).toInt)).toDF("id", "v", "year")
-    d.repartition(8).write.partitionBy("year").parquet(s"$dir/t")
-    val before = spark.read.parquet(s"$dir/t").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-
-    // simulate the worst crash point: leaf retired to _compact_old, the
-    // compacted tmp not yet installed — the real leaf is GONE
-    val root = new java.io.File(s"$dir/t")
-    val leaf = new java.io.File(root, "year=2020")
-    val dead = new java.io.File(root, "year=2020_compact_old")
-    val tmpStage = new java.io.File(root, "year=2021_compact_tmp")
-    assert(leaf.renameTo(dead))
-    tmpStage.mkdir() // stale staging from the same crashed run
-
-    val n = Ingest.compact(spark, s"$dir/t", targetFileBytes = 10L * 1024 * 1024)
-    assert(n > 0)
-    // recovery restored the retired leaf, cleared all staging, and the
-    // staging dirs were never compacted as if they were partition leaves
-    val dirs = root.listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs == Set("year=2020", "year=2021"), s"unexpected table dirs: $dirs")
-    val after = spark.read.parquet(s"$dir/t").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    assert(after == before, "crash recovery lost or duplicated rows")
+    Versioned.overwrite(d.repartition(16), s"$dir/t", partitionBy = Seq("year")) // 16 files per partition
+    val before = rowSet(Versioned.read(spark, s"$dir/t"))
+    val c = Versioned.compactSmallFiles(spark, s"$dir/t",
+      maxFileBytes = 10L * 1024 * 1024).get
+    val byYear = c.add.groupBy(f => "year=\\d+".r.findFirstIn(f))
+    assert(byYear.keySet == Set(Some("year=2020"), Some("year=2021"), Some("year=2022")),
+      s"partition dirs lost: ${c.add}")
+    byYear.values.foreach(fs => assert(fs.size < 4, s"still sprayed: $fs"))
+    assert(rowSet(Versioned.read(spark, s"$dir/t")) == before)
+    // pruning from log metadata still sees the layout
+    val (y21, kept, total) = Versioned.readAsOfPartitions(spark, s"$dir/t", c.version)(
+      _("year").contains("2021"))
+    assert(kept < total && y21.count() == 400L)
   }
 
   test("z-ordered write: disjoint ascending z-ranges; a 2-d box touches few files") {
@@ -390,13 +336,14 @@ class IngestSpec extends SparkTestBase {
   test("append refuses a divergent schema instead of landing mixed files") {
     val dir = tmp()
     val a = List((1L, "x")).toDF("id", "v")
-    Ingest.writePartitioned(a, s"$dir/t", Nil)
+    Versioned.overwrite(a, s"$dir/t")
     val widened = List((2L, "y", 3.5)).toDF("id", "v", "extra")
     val e = intercept[IllegalStateException] {
-      Ingest.append(widened, s"$dir/t")
+      Versioned.append(widened, s"$dir/t")
     }
     assert(e.getMessage.contains("schema mismatch"))
     // table untouched by the refused append
-    assert(spark.read.parquet(s"$dir/t").count() == 1)
+    assert(Versioned.latestVersion(spark, s"$dir/t") == 1L)
+    assert(Versioned.read(spark, s"$dir/t").count() == 1)
   }
 }

@@ -30,6 +30,19 @@ abstract class SparkTestBase extends AnyFunSuite {
   def messages(t: Throwable): Seq[String] =
     Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
 
+  /** The source offset of the last batch a single-source stream
+    * COMMITTED under checkpoint `ckpt` (None before the first commit):
+    * the highest `commits/<id>` entry, read from the last line of its
+    * `offsets/<id>` record. */
+  def committedOffset(ckpt: String): Option[String] = {
+    val commits = Option(new java.io.File(s"$ckpt/commits").list()).toSeq.flatten
+      .filter(_.forall(_.isDigit)).map(_.toLong)
+    commits.maxOption.map { id =>
+      java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(s"$ckpt/offsets/$id")).toArray.last.toString.trim
+    }
+  }
+
   /** Collect to a sorted seq of plain tuples for order-free comparison. */
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.ingest.Versioned
 import graft.streaming.StreamAgg
 import graft.streaming.StreamAgg.Event
 
@@ -14,14 +15,25 @@ class StreamAggSpec extends SparkTestBase {
         (2L, 11L, "view", 200L, 2.5))
       .toDF("event_id", "user_id", "event_type", "ts_us", "value")
       .toJSON.coalesce(1).write.mode("overwrite").text(s"$base/in")
-    val t1 = StreamAgg.runUpsertToCompletion(spark, s"$base/in", s"$base/t", s"$base/ckpt")
+    val t1 = StreamAgg.runVersionedUpsert(spark, s"$base/in", s"$base/t", s"$base/ckpt")
       .collect().map(r => (r.getLong(0), r.getDouble(3))).toSet
     assert(t1 == Set((1L, 1.5), (2L, 2.5)), s"got $t1")
+    val head = Versioned.latestVersion(spark, s"$base/t")
     // re-run against the SAME checkpoint: the batch is already committed,
     // so foreachBatch must not fire again and the table stays identical
-    val t2 = StreamAgg.runUpsertToCompletion(spark, s"$base/in", s"$base/t", s"$base/ckpt")
+    val t2 = StreamAgg.runVersionedUpsert(spark, s"$base/in", s"$base/t", s"$base/ckpt")
       .collect().map(r => (r.getLong(0), r.getDouble(3))).toSet
     assert(t2 == t1)
+    assert(Versioned.latestVersion(spark, s"$base/t") == head)
+    // a later batch replaces the rows of the keys it carries
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/in/late.json"),
+      Seq((2L, 11L, "view", 300L, 9.5), (3L, 12L, "click", 300L, 3.5))
+        .toDF("event_id", "user_id", "event_type", "ts_us", "value")
+        .toJSON.collect().mkString("\n"))
+    val t3 = StreamAgg.runVersionedUpsert(spark, s"$base/in", s"$base/t", s"$base/ckpt")
+      .collect().map(r => (r.getLong(0), r.getDouble(3))).toSet
+    assert(t3 == Set((1L, 1.5), (2L, 9.5), (3L, 3.5)), s"got $t3")
+    assert(Versioned.latestVersion(spark, s"$base/t") == head + 1L)
   }
 
   private def ts(sec: Long) = new Timestamp(sec * 1000)

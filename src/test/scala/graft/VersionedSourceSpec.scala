@@ -6,7 +6,8 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.ingest.Versioned
 
 /** The graft-versioned Structured Streaming source: version-window
-  * offsets, exactly-once through a checkpointed file sink, append-only
+  * offsets, exactly-once through a checkpointed file sink, restart
+  * after a failed batch, the checkpoint-ahead refusal, append-only
   * refusals, ignoreChanges re-delivery, CDF mode, and the mid-stream
   * evolution guard. */
 class VersionedSourceSpec extends SparkTestBase {
@@ -30,6 +31,80 @@ class VersionedSourceSpec extends SparkTestBase {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+  }
+
+  /** One AvailableNow run of the change-feed stream into `sink`, which
+    * sees each micro-batch with its id. */
+  private def runFeed(tbl: String, ckpt: String, maxVersions: Int = Int.MaxValue)
+                     (sink: (org.apache.spark.sql.DataFrame, Long) => Unit): Unit = {
+    val q = spark.readStream.format(Fmt)
+      .option("readChangeFeed", "true")
+      .option("maxVersionsPerTrigger", maxVersions.toLong)
+      .load(tbl).writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        sink(b, id) }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+  }
+
+  /** (rows, min _version, max _version) of a change-feed batch. */
+  private def window(b: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
+    val r = b.agg(count(lit(1)), min("_version"), max("_version")).head()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
+  test("change-feed stream tails only new versions per run; the checkpoint resumes it") {
+    val base = tmp("tail")
+    val tbl = s"$base/tbl"
+    val ckpt = s"$base/ckpt"
+    Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl) // v1
+    Versioned.append(df(3L -> "c"), tbl)               // v2
+    var seen = Vector.empty[(Long, Long, Long)]
+    runFeed(tbl, ckpt, maxVersions = 1)((b, _) => seen :+= window(b))
+    assert(seen == Vector((2L, 1L, 1L), (1L, 2L, 2L)), seen)
+    assert(committedOffset(ckpt).contains("2"))
+    // caught up: no batch fires
+    runFeed(tbl, ckpt)((_, _) => fail("no new versions — must not fire"))
+    // new commits resume from the checkpoint, not from zero
+    Versioned.upsert(spark, tbl, df(1L -> "A"), Seq("id"))  // v3
+    seen = Vector.empty
+    runFeed(tbl, ckpt)((b, _) => seen :+= window(b))
+    // the upsert window carries the delete+insert pair for id=1
+    assert(seen == Vector((2L, 3L, 3L)), seen)
+    assert(committedOffset(ckpt).contains("3"))
+  }
+
+  test("a failed change-feed batch does not advance the offset; a restart re-delivers it") {
+    val base = tmp("crash")
+    val tbl = s"$base/tbl"
+    val ckpt = s"$base/ckpt"
+    Versioned.overwrite(df(1L -> "a"), tbl)
+    val e = intercept[Exception] {
+      runFeed(tbl, ckpt)((_, _) => throw new RuntimeException("sink down"))
+    }
+    assert(messages(e).exists(_.contains("sink down")))
+    assert(committedOffset(ckpt).isEmpty)
+    var seen = Vector.empty[(Long, Long, Long)]
+    runFeed(tbl, ckpt)((b, _) => seen :+= window(b))
+    assert(seen == Vector((1L, 1L, 1L)), seen)
+    assert(committedOffset(ckpt).contains("1"))
+  }
+
+  test("a checkpoint ahead of the table fails loudly") {
+    val base = tmp("ahead")
+    val tbl = s"$base/tbl"
+    Versioned.append(df(1L -> "a"), tbl)
+    val other = s"$base/other"
+    Versioned.append(df(1L -> "a"), other)
+    Versioned.append(df(2L -> "b"), other)
+    runOnce(other, s"$base/ckpt", s"$base/out")
+    assert(committedOffset(s"$base/ckpt").contains("2"))
+    val e = intercept[Exception] {
+      runOnce(tbl, s"$base/ckpt", s"$base/out")
+    }
+    assert(messages(e).exists(_.contains("ahead of the table")), messages(e))
   }
 
   test("append-only stream: incremental batches, exactly-once across restarts") {
