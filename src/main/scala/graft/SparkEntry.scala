@@ -757,11 +757,13 @@ object SparkEntry {
         // watermark drops them as late (see stageEventsJson)
         .coalesce(1)
         .write.mode("overwrite").text(s"$base/in")
-      StreamAgg.runWindowedToCompletion(s, s"$base/in", s"$base/sink",
-          s"$base/ckpt", windowLength = "1 day", watermarkDelay = "1 minute",
+      StreamIngest.runBounded(
+          StreamAgg.windowedCounts(StreamIngest.events(s, s"$base/in"),
+            windowLength = "1 day", watermarkDelay = "1 minute"),
+          s"$base/sink", s"$base/ckpt",
           // ~600 (day, type) windows: 8 state stores, not the batch
           // shuffle default of 32 — each store commits files per batch
-          statePartitions = Some(8))
+          statePartitions = Some(8)).sink
         .select(date_format(col("window_start"), "yyyy-MM-dd").as("window_day"),
           col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
         .orderBy(col("window_day"), col("event_type"))
@@ -777,8 +779,8 @@ object SparkEntry {
     "q50_stream_dedup" -> ((s, dir) => {
       val base = scratch("q50")
       stageEventsJson(s, dir, base, doubled = true)
-      StreamAgg.runDedupToCompletion(s, s"$base/in", s"$base/sink",
-          s"$base/ckpt", statePartitions = Some(8))
+      StreamIngest.runBounded(StreamAgg.dedupedEvents(StreamIngest.events(s, s"$base/in")),
+          s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           countDistinct(col("event_id")).as("n_distinct"),
@@ -853,8 +855,9 @@ object SparkEntry {
       stageEventsJson(s, dir, base)
       val dim = T(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_nationkey"))
-      StreamAgg.runEnrichToCompletion(s, s"$base/in", dim, "user_id",
-          s"$base/sink", s"$base/ckpt")
+      StreamIngest.runBounded(
+          StreamAgg.enrichedEvents(StreamIngest.events(s, s"$base/in"), dim, "user_id"),
+          s"$base/sink", s"$base/ckpt").sink
         .groupBy(col("c_nationkey").cast("long").as("nation"))
         .agg(count(lit(1)).as("n"),
           (sum(round(col("value") * 10000, 0).cast("long")) / 10000.0).as("sum_value"))
@@ -1003,8 +1006,10 @@ object SparkEntry {
     "q64_stream_interval_join" -> ((s, dir) => {
       val base = scratch("q64")
       stageEventsJson(s, dir, base)
-      StreamAgg.runIntervalJoinToCompletion(s, s"$base/in", s"$base/sink",
-          s"$base/ckpt", intervalSeconds = 3600, statePartitions = Some(8))
+      val (clicks, views) = StreamAgg.intervalSides(StreamIngest.events(s, s"$base/in"))
+      StreamIngest.runBounded(
+          StreamAgg.intervalJoined(clicks, views, intervalSeconds = 3600),
+          s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
         .agg(count(lit(1)).as("n_pairs"),
           sum(col("click_id")).as("sum_click_id"),
           sum(col("view_id")).as("sum_view_id"))
@@ -1018,8 +1023,10 @@ object SparkEntry {
     "q97_stream_outer_interval" -> ((s, dir) => {
       val base = scratch("q97")
       stageEventsJson(s, dir, base, sentinels = true)
-      StreamAgg.runOuterIntervalJoinToCompletion(s, s"$base/in", s"$base/sink",
-          s"$base/ckpt", intervalSeconds = 3600, statePartitions = Some(8))
+      val (clicks, views) = StreamAgg.intervalSides(StreamIngest.events(s, s"$base/in"))
+      StreamIngest.runBounded(
+          StreamAgg.intervalJoinedOuter(clicks, views, intervalSeconds = 3600),
+          s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
         .filter(col("user_id") >= 0)
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("view_id").isNull, 1L).otherwise(0L)).as("n_unmatched"),
@@ -2293,8 +2300,9 @@ object SparkEntry {
     "q159_stateful_dedup" -> ((s, dir) => {
       val base = scratch("q159")
       stageEventsJson(s, dir, base, doubled = true)
-      graft.streaming.StatefulDedup.runFirstSeenToCompletion(s, s"$base/in",
-          s"$base/sink", s"$base/ckpt", statePartitions = Some(8))
+      StreamIngest.runBounded(
+          graft.streaming.StatefulDedup.firstSeen(StreamIngest.events(s, s"$base/in")),
+          s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           countDistinct(col("event_id")).as("n_distinct"),
@@ -2350,8 +2358,9 @@ object SparkEntry {
     "q163_trailing_digest" -> ((s, dir) => {
       val base = scratch("q163")
       stageEventsJson(s, dir, base)
-      graft.streaming.StatefulTrail.runTrailingKToCompletion(s, s"$base/in",
-          s"$base/sink", s"$base/ckpt", k = 3, statePartitions = Some(8))
+      StreamIngest.runBounded(
+          graft.streaming.StatefulTrail.trailingK(StreamIngest.events(s, s"$base/in"), k = 3),
+          s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
         .orderBy(col("user_id"))
     }),
 
@@ -2362,9 +2371,10 @@ object SparkEntry {
     "q164_timer_sessions" -> ((s, dir) => {
       val base = scratch("q164")
       stageEventsJson(s, dir, base, sentinels = true)
-      graft.streaming.StatefulSession.runSessionizeToCompletion(s, s"$base/in",
-          s"$base/sink", s"$base/ckpt", gapSeconds = 1800,
-          statePartitions = Some(8))
+      StreamIngest.runBounded(
+          graft.streaming.StatefulSession.sessionize(StreamIngest.events(s, s"$base/in"),
+            gapSeconds = 1800),
+          s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
         .where(col("user_id") >= 0)
         .orderBy(col("user_id"), col("start_us"))
     }),
@@ -2376,8 +2386,9 @@ object SparkEntry {
     "q165_category_profile" -> ((s, dir) => {
       val base = scratch("q165")
       stageEventsJson(s, dir, base)
-      graft.streaming.StatefulProfile.runProfileToCompletion(s, s"$base/in",
-          s"$base/sink", s"$base/ckpt", statePartitions = Some(8))
+      StreamIngest.runBounded(
+          graft.streaming.StatefulProfile.categoryProfile(StreamIngest.events(s, s"$base/in")),
+          s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
         .orderBy(col("user_id"), col("event_type"))
     }),
 
@@ -2656,9 +2667,10 @@ object SparkEntry {
         .coalesce(1)
         .write.mode("overwrite").text(s"$base/in")
       graft.analytics.Drift.psiVsFirstWindow(
-        StreamAgg.runHistogramToCompletion(s, s"$base/in", s"$base/sink",
-          s"$base/ckpt", windowLength = "1 day", watermarkDelay = "1 minute",
-          binWidth = 25.0, statePartitions = Some(8)))
+        StreamIngest.runBounded(
+          StreamAgg.windowedHistogram(StreamIngest.events(s, s"$base/in"),
+            windowLength = "1 day", watermarkDelay = "1 minute", binWidth = 25.0),
+          s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink)
         .select(date_format(col("window_start"), "yyyy-MM-dd").as("window_day"),
           col("n_ref"), col("n_win"), col("n_bins"), col("psi_nano"))
         .orderBy(col("window_day"))
@@ -2763,10 +2775,11 @@ object SparkEntry {
         .coalesce(1)
         .write.mode("overwrite").text(s"$base/in")
       val k = 8
-      val ests = StreamAgg.runHeavyHittersToCompletion(s, s"$base/in",
-          s"$base/sink", s"$base/ckpt", itemCol = "event_type", k = k,
-          windowLength = "1 day", watermarkDelay = "1 minute",
-          statePartitions = Some(8))
+      val ests = StreamIngest.runBounded(
+          StreamAgg.windowedHeavyHitters(StreamIngest.events(s, s"$base/in"),
+            itemCol = "event_type", k = k,
+            windowLength = "1 day", watermarkDelay = "1 minute"),
+          s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
         .select(date_format(col("window_start"), "yyyy-MM-dd").as("window_day"),
           col("n"), explode(col("mg")).as(Seq("item", "est")))
       val exact = ev.groupBy(
@@ -2822,10 +2835,11 @@ object SparkEntry {
           col("ts_us"), col("value"))).as("value"))
         .coalesce(1)
         .write.mode("overwrite").text(s"$base/in")
-      val sink = StreamAgg.runDistinctSketchToCompletion(s, s"$base/in",
-        s"$base/sink", s"$base/ckpt", keyCol = "user_id", p = 12,
-        windowLength = "1 day", watermarkDelay = "1 minute",
-        statePartitions = Some(8))
+      val sink = StreamIngest.runBounded(
+        StreamAgg.windowedDistinctSketch(StreamIngest.events(s, s"$base/in"),
+          keyCol = "user_id", p = 12,
+          windowLength = "1 day", watermarkDelay = "1 minute"),
+        s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
       val exact = ev.groupBy(
           date_format(col("ts"), "yyyy-MM-dd").as("window_day"))
         .agg(countDistinct(col("user_id")).as("exact_users"))
@@ -2926,10 +2940,10 @@ object SparkEntry {
           col("ts_us"), col("value"))).as("value"))
         .coalesce(1)
         .write.mode("overwrite").text(s"$base/in")
-      val sink = StreamAgg.runFingerprintToCompletion(s, s"$base/in",
-        s"$base/sink", s"$base/ckpt",
-        windowLength = "1 day", watermarkDelay = "1 minute",
-        statePartitions = Some(8))
+      val sink = StreamIngest.runBounded(
+        StreamAgg.windowedFingerprint(StreamIngest.events(s, s"$base/in"),
+          windowLength = "1 day", watermarkDelay = "1 minute"),
+        s"$base/sink", s"$base/ckpt", statePartitions = Some(8)).sink
       val batch = ev.groupBy(
           date_format(col("ts"), "yyyy-MM-dd").as("window_day"))
         .agg(count(lit(1)).as("n_rows"),

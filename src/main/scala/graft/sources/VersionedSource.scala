@@ -315,6 +315,10 @@ private[sources] class VersionedStreamSource(
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
     val from = start.map(versionOf).getOrElse(startingVersion)
     val to = versionOf(end)
+    // `start` is the last committed offset: an AvailableNow run ends
+    // before its last batch is committed through [[commit]], so the next
+    // run reclaims that batch's window here
+    start.foreach(s => dropWindowsThrough(versionOf(s)))
     val out =
       if (from >= to) emptyBatch()
       else if (cdf) whereCol.foldLeft(cdfBatch(from, to))(_.filter(_))
@@ -346,7 +350,8 @@ private[sources] class VersionedStreamSource(
     * shape, deferred from commit time to first read), with the bonus
     * that checkpoint recovery re-delivers byte-identical rows from the
     * cached window instead of recomputing the diff. Cost: O(changes)
-    * written once per window, reclaimed with the checkpoint. */
+    * written once per window, deleted once a later offset commits
+    * ([[dropWindowsThrough]]) — only the newest window stays on disk. */
   private def cdfBatch(from: Long, to: Long): DataFrame = {
     val dir = new Path(metadataPath, s"cdf-$from-$to")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -381,6 +386,21 @@ private[sources] class VersionedStreamSource(
     }.reduce(_.unionByName(_))
   }
 
-  override def commit(end: V1Offset): Unit = ()
+  /** Delete the materialized CDF windows `cdf-<from>-<to>` whose `to` is
+    * at or below a committed offset: recovery re-delivers only the batch
+    * after the last commit, so no later batch reads them again. */
+  private def dropWindowsThrough(committed: Long): Unit = if (cdf) {
+    val root = new Path(metadataPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val Window = """cdf-(\d+)-(\d+)""".r
+    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
+      st.getPath.getName match {
+        case Window(_, to) if to.toLong <= committed => fs.delete(st.getPath, true)
+        case _ =>
+      }
+    }
+  }
+
+  override def commit(end: V1Offset): Unit = dropWindowsThrough(versionOf(end))
   override def stop(): Unit = ()
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
 import StatefulDedup.EventRow
@@ -66,17 +66,5 @@ object StatefulProfile {
       .transformWithState(new CategoryProfileProcessor, TimeMode.None(),
         OutputMode.Append())
       .toDF()
-  }
-
-  /** Bounded run ([[StatefulDedup.runBounded]] contract). */
-  def runProfileToCompletion(spark: SparkSession, inPath: String,
-                             outPath: String, checkpointPath: String,
-                             statePartitions: Option[Int] = None): DataFrame = {
-    StatefulDedup.runBounded(spark,
-      categoryProfile(StatefulDedup.eventSource(spark, inPath)),
-      outPath, checkpointPath, statePartitions, wallClockMode = false)
-    StreamIngest.readSink(spark, outPath,
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id LONG, event_type STRING, n LONG, cents LONG"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import StatefulDedup.EventRow
@@ -90,7 +90,9 @@ object StatefulSession {
 
   /** The session stream: watermarked events keyed by user through
     * [[TimerSessionProcessor]] (TimeMode.EventTime — timers fire when
-    * the watermark passes last + gap). */
+    * the watermark passes last + gap). A bounded run flushes every real
+    * session only when its staging carries a far-future sentinel row, so
+    * the final watermark passes every session's expiry. */
   def sessionize(events: DataFrame, gapSeconds: Long = 1800,
                  watermarkDelay: String = "1 minute"): DataFrame = {
     val spark = events.sparkSession
@@ -101,20 +103,5 @@ object StatefulSession {
       .transformWithState(new TimerSessionProcessor(gapSeconds),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF()
-  }
-
-  /** Bounded run: requires far-future sentinel rows in the staging (the
-    * established two-stream watermark trick) so the final watermark
-    * passes every real session's expiry and the timers flush them. */
-  def runSessionizeToCompletion(spark: SparkSession, inPath: String,
-                                outPath: String, checkpointPath: String,
-                                gapSeconds: Long = 1800,
-                                statePartitions: Option[Int] = None): DataFrame = {
-    StatefulDedup.runBounded(spark,
-      sessionize(StatefulDedup.eventSource(spark, inPath), gapSeconds),
-      outPath, checkpointPath, statePartitions, wallClockMode = false)
-    StreamIngest.readSink(spark, outPath,
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id LONG, start_us LONG, last_us LONG, n_events LONG"))
   }
 }

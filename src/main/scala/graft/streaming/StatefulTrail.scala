@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
 import StatefulDedup.EventRow
@@ -59,23 +59,4 @@ object StatefulTrail {
         OutputMode.Append())
       .toDF()
   }
-
-  /** Bounded run (AvailableNow + RocksDB pin, [[StatefulDedup.runBounded]]),
-    * returning the accumulated sink. */
-  def runTrailingKToCompletion(spark: SparkSession, inPath: String,
-                               outPath: String, checkpointPath: String,
-                               k: Int = 3,
-                               statePartitions: Option[Int] = None): DataFrame = {
-    runBoundedTrail(spark, inPath, outPath, checkpointPath, k, statePartitions)
-    StreamIngest.readSink(spark, outPath,
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id LONG, n_trail INT, last_event_id LONG, trail_cents LONG"))
-  }
-
-  private def runBoundedTrail(spark: SparkSession, inPath: String,
-                              outPath: String, checkpointPath: String,
-                              k: Int, statePartitions: Option[Int]): Unit =
-    StatefulDedup.runBounded(spark,
-      trailingK(StatefulDedup.eventSource(spark, inPath), k),
-      outPath, checkpointPath, statePartitions, wallClockMode = false)
 }

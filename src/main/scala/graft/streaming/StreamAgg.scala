@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.ingest.Versioned
 
@@ -18,6 +18,10 @@ import graft.ingest.Versioned
   * closed windows from the state store; session state holds one small
   * record per open (user) key and times out on the event-time watermark —
   * no unbounded key accumulation.
+  *
+  * Every operator here is a stream → stream function: a bounded run
+  * feeds it [[StreamIngest.events]] and runs it through
+  * [[StreamIngest.runBounded]].
   */
 object StreamAgg {
 
@@ -144,99 +148,6 @@ object StreamAgg {
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCol)
 
-  /** Shared bounded-run plumbing for the three `run*ToCompletion`
-    * drivers: the epoch-µs JSON event source (timestamps travel as longs
-    * — JSON timestamp parsing is millisecond-bounded and would shift
-    * µs-precision boundary events) and the checkpointed parquet
-    * AvailableNow sink, with the state-store sizing conf scoped around
-    * query start (the running query keeps the value it started with;
-    * the count is pinned into the checkpoint).
-    */
-  private def jsonEventSource(spark: SparkSession, inPath: String,
-                              schema: String,
-                              maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    // source-side backpressure: AvailableNow honors the file source's
-    // rate limit, so a large backlog drains as bounded micro-batches
-    // instead of one giant batch (the incremental-progress contract
-    // runDedupIncremental exposes)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.json(inPath)
-      .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us")
-  }
-
-  private def runToParquet(spark: SparkSession, df: DataFrame, outPath: String,
-                           checkpointPath: String,
-                           statePartitions: Option[Int])
-      : Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    val q = try {
-      df.writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("checkpointLocation", checkpointPath)
-        .option("path", outPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    } finally spark.conf.set(key, prev)
-    q.awaitTermination()
-    // the per-batch progress log (state rows, eviction counts, input
-    // rates) — the observability surface the bounded-run drivers return
-    // to callers that monitor state growth
-    q.recentProgress.toSeq
-  }
-
-  private val EventWithIdSchema =
-    "event_id LONG, user_id LONG, event_type STRING, ts_us LONG, value DOUBLE"
-
-  /** Run [[dedupedEvents]] over a bounded file source to completion and
-    * return the deduplicated rows read back from the sink. Same
-    * epoch-µs-long timestamp transport and state-sizing contract as
-    * [[runWindowedToCompletion]].
-    */
-  def runDedupToCompletion(spark: SparkSession, inPath: String, outPath: String,
-                           checkpointPath: String, keyCol: String = "event_id",
-                           watermarkDelay: String = "1 minute",
-                           statePartitions: Option[Int] = None): DataFrame = {
-    val src = jsonEventSource(spark, inPath, EventWithIdSchema)
-    runToParquet(spark, dedupedEvents(src, keyCol, watermarkDelay),
-      outPath, checkpointPath, statePartitions)
-    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP"))
-  }
-
-  /** [[runDedupToCompletion]] with source-side backpressure and the
-    * per-batch progress log returned alongside the sink: the backlog
-    * drains `maxFilesPerTrigger` files per micro-batch (AvailableNow
-    * honors the source rate limit) instead of one giant batch.
-    *
-    * This is the observability surface for THE 100 TB streaming failure
-    * mode — state growth: each `StreamingQueryProgress.stateOperators`
-    * entry reports `numRowsTotal` / `numRowsRemoved` after its batch,
-    * so a caller (or StreamBackpressureSpec) can assert that watermark
-    * eviction keeps state bounded while the backlog drains, rather than
-    * trusting the state layout alone. A production deploy feeds the
-    * same progress objects to its metrics sink via a
-    * StreamingQueryListener; the bounded-run driver returns them
-    * directly because the query is finite.
-    */
-  def runDedupIncremental(spark: SparkSession, inPath: String, outPath: String,
-                          checkpointPath: String, keyCol: String = "event_id",
-                          watermarkDelay: String = "1 minute",
-                          statePartitions: Option[Int] = None,
-                          maxFilesPerTrigger: Int = 1)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val src = jsonEventSource(spark, inPath, EventWithIdSchema,
-      maxFilesPerTrigger = Some(maxFilesPerTrigger))
-    val progress = runToParquet(spark, dedupedEvents(src, keyCol, watermarkDelay),
-      outPath, checkpointPath, statePartitions)
-    (StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")),
-      progress)
-  }
-
   /** Stream-static enrichment: join a streaming fact against a static
     * dimension frame — stateless (no watermark, no state store; the dim
     * is re-planned per micro-batch, so a dim refresh between batches is
@@ -247,20 +158,6 @@ object StreamAgg {
   def enrichedEvents(events: DataFrame, dim: DataFrame,
                      joinKey: String): DataFrame =
     events.join(broadcast(dim), Seq(joinKey))
-
-  /** Run [[enrichedEvents]] over a bounded file source to completion and
-    * return the enriched rows read back from the sink (stateless — no
-    * state store, so no statePartitions knob). */
-  def runEnrichToCompletion(spark: SparkSession, inPath: String, dim: DataFrame,
-                            joinKey: String, outPath: String,
-                            checkpointPath: String): DataFrame = {
-    val src = jsonEventSource(spark, inPath, EventWithIdSchema)
-    val joined = enrichedEvents(src, dim, joinKey)
-    runToParquet(spark, joined, outPath, checkpointPath, statePartitions = None)
-    // explicit schema from the streaming plan: an all-miss join writes
-    // zero files and schema inference on the bare sink would throw
-    StreamIngest.readSink(spark, outPath, joined.schema)
-  }
 
   /** Streaming upsert sink into a VERSIONED table — the Delta-MERGE
     * landing of the reference (process_recommendation_events.py's sink
@@ -278,7 +175,7 @@ object StreamAgg {
   def runVersionedUpsert(spark: SparkSession, inPath: String,
                          tablePath: String, checkpointPath: String,
                          keyCol: String = "event_id"): DataFrame = {
-    val src = jsonEventSource(spark, inPath, EventWithIdSchema)
+    val src = StreamIngest.events(spark, inPath)
     val q = StreamIngest.startForeachBatchSink(src, checkpointPath) { (batch, _) =>
       val s = batch.sparkSession
       val latest = graft.operators.Merge.upsert(batch.limit(0), batch,
@@ -330,65 +227,17 @@ object StreamAgg {
           col("view_ts") <= col("click_ts"),
         "leftOuter")
 
-  private def intervalSides(spark: SparkSession, inPath: String):
-      (DataFrame, DataFrame) = {
-    def side(eventType: String) =
-      jsonEventSource(spark, inPath, EventWithIdSchema)
-        .filter(col("event_type") === eventType)
+  /** The event stream as the two sides of an interval join: clicks
+    * `(click_id, user_id, click_ts)` and views `(view_id, v_user_id,
+    * view_ts)`. */
+  def intervalSides(events: DataFrame): (DataFrame, DataFrame) = {
+    def side(eventType: String) = events.filter(col("event_type") === eventType)
     (side("click")
        .select(col("event_id").as("click_id"), col("user_id"),
          col("ts").as("click_ts")),
      side("view")
        .select(col("event_id").as("view_id"), col("user_id").as("v_user_id"),
          col("ts").as("view_ts")))
-  }
-
-  /** Run [[intervalJoined]] over a bounded file source to completion:
-    * the event file is read as TWO streams (clicks and views) from the
-    * same source, joined, persisted, and read back. */
-  def runIntervalJoinToCompletion(spark: SparkSession, inPath: String,
-                                  outPath: String, checkpointPath: String,
-                                  intervalSeconds: Long = 3600,
-                                  statePartitions: Option[Int] = None): DataFrame = {
-    val (clicks, views) = intervalSides(spark, inPath)
-    val joined = intervalJoined(clicks, views, intervalSeconds)
-    runToParquet(spark, joined, outPath, checkpointPath, statePartitions)
-    // explicit schema: a no-match interval join writes zero files and
-    // schema inference on the bare sink would throw
-    StreamIngest.readSink(spark, outPath, joined.schema)
-  }
-
-  /** [[runIntervalJoinToCompletion]]'s left-outer sibling. */
-  def runOuterIntervalJoinToCompletion(spark: SparkSession, inPath: String,
-                                       outPath: String, checkpointPath: String,
-                                       intervalSeconds: Long = 3600,
-                                       statePartitions: Option[Int] = None): DataFrame = {
-    val (clicks, views) = intervalSides(spark, inPath)
-    val joined = intervalJoinedOuter(clicks, views, intervalSeconds)
-    runToParquet(spark, joined, outPath, checkpointPath, statePartitions)
-    StreamIngest.readSink(spark, outPath, joined.schema)
-  }
-
-  /** Run a windowed aggregation over a bounded file source to completion
-    * and return the emitted (closed) windows read back from the sink.
-    *
-    * `statePartitions` sizes the state store (a per-stream deploy
-    * decision: the partition count is PINNED into the checkpoint at first
-    * start, and every micro-batch commits one store file per partition —
-    * size it to key cardinality, not to the batch shuffle default). The
-    * session conf is set only for the duration of query start and
-    * restored after; the running query keeps the value it started with.
-    */
-  def runWindowedToCompletion(spark: SparkSession, inPath: String, outPath: String,
-                              checkpointPath: String, windowLength: String = "1 hour",
-                              watermarkDelay: String = "1 minute",
-                              statePartitions: Option[Int] = None): DataFrame = {
-    val src = jsonEventSource(spark, inPath,
-      "user_id LONG, event_type STRING, ts_us LONG, value DOUBLE")
-    runToParquet(spark, windowedCounts(src, windowLength, watermarkDelay),
-      outPath, checkpointPath, statePartitions)
-    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
-      "window_start TIMESTAMP, event_type STRING, n LONG, sum_value DOUBLE"))
   }
 
   /** Per-window fixed-width value histogram — the streaming input of a
@@ -467,70 +316,4 @@ object StreamAgg {
           unix_micros(col("ts")).cast("string")))).as("fp"),
         count(lit(1)).as("n_rows"))
       .select(col("window.start").as("window_start"), col("fp"), col("n_rows"))
-
-  /** Bounded run of [[windowedFingerprint]] over staged JSON events →
-    * checkpointed parquet sink, read back. */
-  def runFingerprintToCompletion(spark: SparkSession, inPath: String,
-                                 outPath: String, checkpointPath: String,
-                                 windowLength: String = "1 day",
-                                 watermarkDelay: String = "1 minute",
-                                 statePartitions: Option[Int] = None): DataFrame = {
-    val src = jsonEventSource(spark, inPath,
-      "user_id LONG, event_type STRING, ts_us LONG, value DOUBLE")
-    runToParquet(spark,
-      windowedFingerprint(src, windowLength, watermarkDelay),
-      outPath, checkpointPath, statePartitions)
-    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
-      "window_start TIMESTAMP, fp BIGINT, n_rows BIGINT"))
-  }
-
-  /** Bounded run of [[windowedDistinctSketch]] over staged JSON events →
-    * checkpointed parquet sink, read back. */
-  def runDistinctSketchToCompletion(spark: SparkSession, inPath: String,
-                                    outPath: String, checkpointPath: String,
-                                    keyCol: String, p: Int = 12,
-                                    windowLength: String = "1 day",
-                                    watermarkDelay: String = "1 minute",
-                                    statePartitions: Option[Int] = None): DataFrame = {
-    val src = jsonEventSource(spark, inPath,
-      "user_id LONG, event_type STRING, ts_us LONG, value DOUBLE")
-    runToParquet(spark,
-      windowedDistinctSketch(src, keyCol, p, windowLength, watermarkDelay),
-      outPath, checkpointPath, statePartitions)
-    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
-      "window_start TIMESTAMP, sk BINARY, n_rows BIGINT"))
-  }
-
-  /** Bounded run of [[windowedHeavyHitters]] over staged JSON events →
-    * checkpointed parquet sink, read back. */
-  def runHeavyHittersToCompletion(spark: SparkSession, inPath: String,
-                                  outPath: String, checkpointPath: String,
-                                  itemCol: String, k: Int,
-                                  windowLength: String = "1 day",
-                                  watermarkDelay: String = "1 minute",
-                                  statePartitions: Option[Int] = None): DataFrame = {
-    val src = jsonEventSource(spark, inPath,
-      "user_id LONG, event_type STRING, ts_us LONG, value DOUBLE")
-    runToParquet(spark,
-      windowedHeavyHitters(src, itemCol, k, windowLength, watermarkDelay),
-      outPath, checkpointPath, statePartitions)
-    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
-      "window_start TIMESTAMP, mg MAP<STRING, BIGINT>, n BIGINT"))
-  }
-
-  /** Bounded run of [[windowedHistogram]] over staged JSON events →
-    * checkpointed parquet sink, read back (the q32 harness shape). */
-  def runHistogramToCompletion(spark: SparkSession, inPath: String, outPath: String,
-                               checkpointPath: String, windowLength: String = "1 day",
-                               watermarkDelay: String = "1 minute",
-                               binWidth: Double = 25.0,
-                               statePartitions: Option[Int] = None): DataFrame = {
-    val src = jsonEventSource(spark, inPath,
-      "user_id LONG, event_type STRING, ts_us LONG, value DOUBLE")
-    runToParquet(spark,
-      windowedHistogram(src, windowLength, watermarkDelay, binWidth),
-      outPath, checkpointPath, statePartitions)
-    StreamIngest.readSink(spark, outPath, org.apache.spark.sql.types.StructType.fromDDL(
-      "window_start TIMESTAMP, bin LONG, n LONG"))
-  }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, TimeMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** The reference's one always-on job re-derived as Structured Streaming:
@@ -180,10 +181,104 @@ object StreamIngest {
     readSink(spark, outPath, payloadSchema.add("event_date", StringType))
   }
 
+  /** The JSON event transport of every bounded streaming operator: one
+    * line per event `{event_id, user_id, event_type, ts_us, value}`,
+    * read as `(event_id, user_id, event_type, value, ts)` — the
+    * [[StatefulDedup.EventRow]] column order. Timestamps travel as
+    * epoch-µs longs: JSON timestamp parsing is millisecond-bounded and
+    * would shift µs-precision boundary events. A staging without ids
+    * reads `event_id` as null; the windowed operators never reference
+    * it, so column pruning drops it.
+    *
+    * `maxFilesPerTrigger` is source-side backpressure: AvailableNow
+    * honors the file source's rate limit, so a large backlog drains as
+    * bounded micro-batches instead of one giant batch. */
+  def events(spark: SparkSession, inPath: String,
+             maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream
+      .schema("event_id LONG, user_id LONG, event_type STRING, ts_us LONG, value DOUBLE")
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader.json(inPath)
+      .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us")
+  }
+
+  /** A finished bounded run: the sink read back, and the query's
+    * per-batch progress log. */
+  final case class BoundedRun(sink: DataFrame, progress: Seq[StreamingQueryProgress])
+
+  /** The one bounded run of a streaming operator: `stream` → checkpointed
+    * parquet append sink, run to completion, the sink read back under
+    * `stream.schema` (so a run that wrote nothing is still typed).
+    *
+    * `statePartitions` sizes the state store. The count is PINNED into
+    * the checkpoint at first start and every micro-batch commits one
+    * store file per partition — size it to key cardinality, not to the
+    * batch shuffle default. It is a session conf, set for the run and
+    * restored after; a restart keeps the checkpoint's count.
+    *
+    * A `transformWithState` node needs the RocksDB state-store provider,
+    * pinned for the run and restored after. When that node runs in
+    * TimeMode.ProcessingTime (TTL state), AvailableNow NEVER terminates
+    * and processAllAvailable never settles — the engine keeps scheduling
+    * maintenance micro-batches forever — so that run is bounded
+    * explicitly: the staging contract is one json file = one data batch;
+    * stop once a committed batch has consumed input rows. Every other
+    * stream drains under AvailableNow.
+    *
+    * The progress log (state rows, evictions, input rates per batch) is
+    * the state-growth observability surface: a caller can assert that
+    * watermark eviction keeps state bounded while a backlog drains. A
+    * long-running deploy feeds the same progress objects to its metrics
+    * sink through a StreamingQueryListener; a finite run returns them. */
+  def runBounded(stream: DataFrame, outPath: String, checkpointPath: String,
+                 statePartitions: Option[Int] = None): BoundedRun = {
+    val spark = stream.sparkSession
+    val stateful = stream.queryExecution.analyzed.collectFirst {
+      case t: TransformWithState => t.timeMode
+    }
+    val wallClock = stateful.contains(TimeMode.ProcessingTime())
+    val parts = "spark.sql.shuffle.partitions"
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val prevParts = spark.conf.get(parts)
+    val prevProvider = spark.conf.getOption(provider)
+    statePartitions.foreach(n => spark.conf.set(parts, n.toString))
+    if (stateful.isDefined) spark.conf.set(provider,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val q = try {
+      val writer = stream.writeStream
+        .format("parquet")
+        .outputMode("append")
+        .option("checkpointLocation", checkpointPath)
+        .option("path", outPath)
+      val q = (if (wallClock) writer else writer.trigger(Trigger.AvailableNow())).start()
+      if (wallClock) {
+        val deadline = System.nanoTime() + 120L * 1000000000L
+        while (!q.recentProgress.exists(_.numInputRows > 0)) {
+          if (System.nanoTime() > deadline) {
+            q.stop()
+            throw new IllegalStateException("runBounded: no data micro-batch " +
+              "committed within the 120 s processing-time deadline")
+          }
+          Thread.sleep(100)
+        }
+        q.stop()
+      }
+      q.awaitTermination()
+      q
+    } finally {
+      spark.conf.set(parts, prevParts)
+      prevProvider match {
+        case Some(p) => spark.conf.set(provider, p)
+        case None => spark.conf.unset(provider)
+      }
+    }
+    BoundedRun(readSink(spark, outPath, stream.schema), q.recentProgress.toSeq)
+  }
+
   /** Read a bounded run's parquet sink with its expected schema; a run
     * whose source held zero records commits no batch and never creates
     * the sink path — that reads as an empty frame instead of throwing.
-    * The one sink reader of every bounded `run*` driver here. */
+    * The one sink reader of [[runBounded]] and [[runToCompletion]]. */
   private[streaming] def readSink(spark: SparkSession, outPath: String,
                                   schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(outPath)

@@ -20,7 +20,7 @@ class CatalogSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshDb(): (String, String) = {
-    val loc = Files.createTempDirectory("graft_catalog_test").toString
+    val loc = tmp("catalog")
     val db = s"graft_cat_${System.nanoTime()}"
     Catalog.ensureDatabase(spark, db, loc)
     (db, loc)

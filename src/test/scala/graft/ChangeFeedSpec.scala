@@ -11,9 +11,6 @@ import graft.ingest.{ChangeFeed, Fingerprint, Versioned}
 class ChangeFeedSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_cf_$name").toString
-
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
 
   test("mirrorTo is exactly-once under total re-delivery from a fresh checkpoint") {

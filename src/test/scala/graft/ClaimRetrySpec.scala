@@ -38,8 +38,7 @@ class ClaimRetrySpec extends SparkTestBase {
     * deletion vector (v3) on id 1's file — stranded by any rewrite of
     * p=1. Returns the path and that vector's files. */
   private def table(name: String): (String, Seq[String]) = {
-    val tbl = FaultFs.path(java.nio.file.Files
-      .createTempDirectory(s"graft_claimretry_$name").toString + "/t")
+    val tbl = FaultFs.path(tmp(name) + "/t")
     Versioned.overwrite(frame((1000L to 2999L).map(i => (i, s"row-$i-" * 4, 2)) ++
       Seq((1L, "a", 1), (2L, "b", 1))), tbl, partitionBy = Seq("p"))
     Versioned.append(frame(Seq((3L, "c", 1), (4L, "d", 1))), tbl)

@@ -7,14 +7,12 @@ import graft.ingest.{Ingest, Versioned}
 class IngestSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft_ingest_test").toString
-
   test("CSV round-trip preserves values including microsecond timestamps") {
     val df = List(
       (1L, "a", 1.5, java.time.LocalDateTime.parse("2024-03-01T10:20:30.123456")),
       (2L, "b", -0.25, java.time.LocalDateTime.parse("1999-12-31T23:59:59.000001")))
       .toDF("id", "name", "v", "ts")
-    val dir = tmp()
+    val dir = tmp("ingest")
     Ingest.writeCsv(df, s"$dir/csv")
     val back = Ingest.readCsv(spark, s"$dir/csv", df.schema)
     assert(rows(back) == rows(df))
@@ -22,14 +20,14 @@ class IngestSpec extends SparkTestBase {
 
   test("JSON-lines round-trip preserves values with declared schema") {
     val df = List((1L, "a", 2.5), (2L, "b", -1.0)).toDF("id", "name", "v")
-    val dir = tmp()
+    val dir = tmp("ingest")
     df.write.json(s"$dir/j")
     val back = Ingest.readJson(spark, s"$dir/j", df.schema)
     assert(rows(back) == rows(df))
   }
 
   test("FAILFAST surfaces malformed rows instead of nulling them") {
-    val dir = tmp()
+    val dir = tmp("ingest")
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/bad"))
     Files.writeString(java.nio.file.Paths.get(s"$dir/bad/x.csv"),
       "id,v\n1,notanumber\n")
@@ -47,7 +45,7 @@ class IngestSpec extends SparkTestBase {
       (3L, java.time.LocalDateTime.parse("2024-01-05T00:00:00")))
       .toDF("id", "ts")
       .withColumn("year", year(col("ts"))).withColumn("month", month(col("ts")))
-    val dir = tmp()
+    val dir = tmp("ingest")
     Ingest.writePartitioned(df, s"$dir/t", Seq("year", "month"))
     val dirs = new java.io.File(s"$dir/t").listFiles().map(_.getName).filter(_.startsWith("year=")).sorted
     assert(dirs.toSeq == Seq("year=2023", "year=2024"))
@@ -61,7 +59,7 @@ class IngestSpec extends SparkTestBase {
   test("ORC partitioned write round-trips values, prunes partitions, and pushes predicates") {
     val df = List((1L, "a", 10.5), (2L, "a", -3.25), (3L, "b", 7.0))
       .toDF("id", "kind", "value")
-    val dir = tmp()
+    val dir = tmp("ingest")
     Ingest.writeOrcPartitioned(df, s"$dir/orc", Seq("kind"))
     val dirs = new java.io.File(s"$dir/orc").listFiles()
       .map(_.getName).filter(_.startsWith("kind=")).sorted
@@ -82,7 +80,7 @@ class IngestSpec extends SparkTestBase {
     import org.apache.spark.sql.types._
     val df = List((1L, "a", 10.5), (2L, "a", -3.25), (3L, "b", 7.0))
       .toDF("id", "kind", "value")
-    val dir = tmp()
+    val dir = tmp("ingest")
     Ingest.writeJsonLines(df, s"$dir/json", Seq("kind"))
     val dirs = new java.io.File(s"$dir/json").listFiles()
       .map(_.getName).filter(_.startsWith("kind=")).sorted
@@ -117,7 +115,7 @@ class IngestSpec extends SparkTestBase {
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("name", StringType)))
     val df = List((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name")
-    val dir = tmp()
+    val dir = tmp("ingest")
     Ingest.writeCsv(df, s"$dir/landing")
     def audit() = Ingest.landingAudit(spark, s"$dir/landing", schema)
       .select("parsed_rows", "lines_match").collect().head
@@ -145,7 +143,7 @@ class IngestSpec extends SparkTestBase {
     val a = (1L to 100L).map(i => (i, s"a$i")).toDF("k", "va")
     val b = (1L to 100L).map(i => (i, i * 2.0)).toDF("k", "vb")
     try {
-      graft.ingest.Catalog.ensureDatabase(spark, db, tmp())
+      graft.ingest.Catalog.ensureDatabase(spark, db, tmp("ingest"))
       Ingest.writeBucketed(a, db, "ta", "k", 4)
       Ingest.writeBucketed(b, db, "tb", "k", 4)
       val joined = spark.table(s"$db.ta").join(spark.table(s"$db.tb"), "k")
@@ -170,7 +168,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("a CSV file stream lands each landing file exactly once into a versioned table") {
-    val dir = tmp()
+    val dir = tmp("ingest")
     val schema = new org.apache.spark.sql.types.StructType()
       .add("id", "long").add("v", "string")
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/landing"))
@@ -195,7 +193,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("append adds rows without rewriting existing partitions") {
-    val dir = tmp()
+    val dir = tmp("ingest")
     val a = List((1L, 2023, 1)).toDF("id", "year", "month")
     val b = List((2L, 2023, 2)).toDF("id", "year", "month")
     val v1 = Versioned.overwrite(a, s"$dir/t", partitionBy = Seq("year", "month"))
@@ -207,7 +205,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("compact collapses a sprayed table into few files with identical content") {
-    val dir = tmp()
+    val dir = tmp("ingest")
     val d = (1L to 2000L).map(i => (i, s"row_$i")).toDF("id", "v")
     Versioned.overwrite(d.repartition(64), s"$dir/t") // the small-files spray
     def files() = Versioned.read(spark, s"$dir/t").inputFiles.length
@@ -220,7 +218,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("compact preserves a Hive-partitioned layout and its pruning") {
-    val dir = tmp()
+    val dir = tmp("ingest")
     val d = (1L to 1200L).map(i => (i, s"r$i", 2020 + (i % 3).toInt)).toDF("id", "v", "year")
     Versioned.overwrite(d.repartition(16), s"$dir/t", partitionBy = Seq("year")) // 16 files per partition
     val before = rowSet(Versioned.read(spark, s"$dir/t"))
@@ -238,7 +236,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("z-ordered write: disjoint ascending z-ranges; a 2-d box touches few files") {
-    val dir = tmp()
+    val dir = tmp("ingest")
     // every (x, y) pair of the 256×256 grid exactly once, in scattered
     // input order so nothing is pre-clustered
     val grid = (0 until 65536).map(i => (i.toLong * 40503L) % 65536L)
@@ -276,7 +274,7 @@ class IngestSpec extends SparkTestBase {
     // >= 2^bits value would silently COLLAPSE onto an unrelated z-code —
     // layout looks valid, per-file stats go domain-wide, skipping
     // contract quietly void (ADVICE r5). Both ends must error instead.
-    val dir = tmp()
+    val dir = tmp("ingest")
     val neg = Seq((-1L, 3L), (2L, 4L)).toDF("x", "y")
     val exNeg = intercept[Exception] {
       Ingest.writeZOrdered(neg, s"$dir/zneg", "x", "y", numFiles = 2, bits = 8)
@@ -307,7 +305,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("writeWithBloom lands parquet bloom filters that the scan can use") {
-    val dir = tmp()
+    val dir = tmp("ingest")
     val d = (1L to 5000L).map(i => (i, s"v$i")).toDF("id", "v")
     Ingest.writeWithBloom(d, s"$dir/t", Seq("id"), expectedDistinct = 5000L)
     // content survives the roundtrip and equality probes stay correct
@@ -334,7 +332,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("append refuses a divergent schema instead of landing mixed files") {
-    val dir = tmp()
+    val dir = tmp("ingest")
     val a = List((1L, "x")).toDF("id", "v")
     Versioned.overwrite(a, s"$dir/t")
     val widened = List((2L, "y", 3.5)).toDF("id", "v", "extra")

@@ -130,7 +130,7 @@ class PlanShapeSpec extends SparkTestBase {
     // written-to-parquet roundtrip so the scan is a real FileSourceScan;
     // the table carries an UNCONSUMED column so pruning has something to
     // actually prune (otherwise the assertion is vacuous)
-    val dir = java.nio.file.Files.createTempDirectory("planshape").toString
+    val dir = tmp("planshape")
     (1L to 50L).map(i => (i, if (i % 2 == 0) "complete_listen" else "skip", s"extra$i"))
       .toDF("track_id", "event_type", "unused_payload")
       .write.mode("overwrite").parquet(s"$dir/e")
@@ -365,7 +365,7 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("ANN serving reads ONLY the stored index, with cell partition pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_serveidx").toString
+    val dir = tmp("serveidx")
     val corpusPath = s"$dir/corpus"
     val idx = s"$dir/idx"
     val emb = (1L to 60L).map { i =>
@@ -419,8 +419,7 @@ class PlanShapeSpec extends SparkTestBase {
   }
   test("versioned readAsOf prunes the metadata columns it did not ask for") {
     import graft.ingest.Versioned
-    val tbl = java.nio.file.Files.createTempDirectory("graft_plan_vread")
-      .toString + "/tbl"
+    val tbl = tmp("vread") + "/tbl"
     Versioned.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "t"), tbl)
     // a plain read computes __rel/__pos internally and drops them — the
     // FINAL scan must not materialize row_index or file_path per row
@@ -471,8 +470,7 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("merge-on-read scan anti-joins the deletion vector as the BROADCAST side") {
     import graft.ingest.Versioned
-    val tbl = java.nio.file.Files.createTempDirectory("graft_plan_mor")
-      .toString + "/tbl"
+    val tbl = tmp("mor") + "/tbl"
     Versioned.overwrite((1L to 64L).map(i => (i, s"v$i")).toDF("id", "t"), tbl)
     Versioned.deleteWhereMoR(spark, tbl, col("id") % 7 === 0L)
     val df = Versioned.read(spark, tbl)

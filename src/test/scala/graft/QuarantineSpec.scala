@@ -8,7 +8,7 @@ class QuarantineSpec extends SparkTestBase {
   private val ddl = "event_id LONG, user_id LONG, value DOUBLE"
 
   private def stage(lines: Seq[String]): String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_quar").toString
+    val base = tmp("quar")
     lines.toDF("value").coalesce(1).write.mode("overwrite").text(s"$base/in")
     s"$base/in"
   }

@@ -8,9 +8,6 @@ import graft.ingest.Shards
 class RangeShardsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_rangeshards").toString
-
   /** Driver-side transcription: boundaries = ceil-bp order statistics,
     * shard = count of boundaries strictly below the key. */
   private def bruteShard(keys: Seq[Long], n: Int): Map[Long, Int] = {
@@ -25,7 +22,7 @@ class RangeShardsSpec extends SparkTestBase {
     val gen = Gen.chooseNum(20, 200).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(-1000L, 1000L)))
     for (keys <- samples(gen, n = 4); n <- Seq(2, 5)) {
-      val dir = tmp()
+      val dir = tmp("shards")
       val df = keys.zipWithIndex.map { case (k, i) => (i.toLong, k) }
         .toDF("row_id", "key")
       Shards.writeRangeSharded(df, dir, "key", n, maxRecordsPerFile = 17L)
@@ -45,7 +42,7 @@ class RangeShardsSpec extends SparkTestBase {
     // 12 rows, 6 of them the same value; with N=2 the median IS that value
     val df = (Seq.fill(6)(5L) ++ Seq(1L, 2L, 3L, 7L, 8L, 9L))
       .zipWithIndex.map { case (k, i) => (i.toLong, k) }.toDF("row_id", "key")
-    val dir = tmp()
+    val dir = tmp("shards")
     Shards.writeRangeSharded(df, dir, "key", 2)
     val byShard = spark.read.parquet(dir)
       .groupBy("shard_id").agg(collect_list("key"))
@@ -56,7 +53,7 @@ class RangeShardsSpec extends SparkTestBase {
 
   test("per-shard file counts are exact ceil(rows / cap)") {
     val df = (1L to 100L).map(k => (k, k)).toDF("row_id", "key")
-    val dir = tmp()
+    val dir = tmp("shards")
     Shards.writeRangeSharded(df, dir, "key", 4, maxRecordsPerFile = 10L)
     val audit = Shards.rangeShardAudit(spark, dir, "key", 10L)
       .select("shard_id", "n_rows", "n_files").as[(Long, Long, Long)]
@@ -69,15 +66,15 @@ class RangeShardsSpec extends SparkTestBase {
     val df = Seq(Some(1L), None, Some(3L)).zipWithIndex
       .map { case (k, i) => (i.toLong, k) }.toDF("row_id", "key")
     val e = intercept[Exception](
-      Shards.writeRangeSharded(df, tmp(), "key", 2))
+      Shards.writeRangeSharded(df, tmp("shards"), "key", 2))
     assert(messages(e).exists(_.contains("null shard key")))
   }
 
   test("arguments are validated") {
     val df = Seq((1L, 1L)).toDF("row_id", "key")
     intercept[IllegalArgumentException](
-      Shards.writeRangeSharded(df, tmp(), "key", 1))
+      Shards.writeRangeSharded(df, tmp("shards"), "key", 1))
     intercept[IllegalArgumentException](
-      Shards.writeRangeSharded(df, tmp(), "key", 2, maxRecordsPerFile = 0L))
+      Shards.writeRangeSharded(df, tmp("shards"), "key", 2, maxRecordsPerFile = 0L))
   }
 }

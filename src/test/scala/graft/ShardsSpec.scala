@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,13 +9,11 @@ import graft.text.Splits
 class ShardsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft_shards_test").toString
-
   private def sample(): DataFrame =
     (1 to 200).map(i => (i.toLong % 37, i.toLong)).toDF("user_id", "event_id")
 
   test("writeSharded: assignment is a pure function of the key — stable under input partitioning") {
-    val d1 = tmp(); val d2 = tmp()
+    val d1 = tmp("shards"); val d2 = tmp("shards")
     Shards.writeSharded(sample(), d1, "user_id", nShards = 4, maxRecordsPerFile = 7)
     Shards.writeSharded(sample().repartition(13), d2, "user_id", nShards = 4, maxRecordsPerFile = 7)
     val a1 = rows(Shards.shardAudit(spark, d1, "user_id", 7))
@@ -26,7 +22,7 @@ class ShardsSpec extends SparkTestBase {
   }
 
   test("writeSharded: group cohesion — every key's rows land in exactly one shard") {
-    val d = tmp()
+    val d = tmp("shards")
     Shards.writeSharded(sample(), d, "user_id", nShards = 4, maxRecordsPerFile = 1000)
     val straddlers = spark.read.parquet(d)
       .groupBy("user_id").agg(count_distinct(col("shard_id")).as("n"))
@@ -40,7 +36,7 @@ class ShardsSpec extends SparkTestBase {
   }
 
   test("writeSharded: per-shard file count is exactly ceil(rows / cap) and every file respects the cap") {
-    val d = tmp()
+    val d = tmp("shards")
     Shards.writeSharded(sample(), d, "user_id", nShards = 3, maxRecordsPerFile = 9)
     val audit = Shards.shardAudit(spark, d, "user_id", 9)
     val got = audit.select("shard_id", "n_rows", "n_files", "files_capped")
@@ -53,7 +49,7 @@ class ShardsSpec extends SparkTestBase {
   }
 
   test("shardAudit: rows/keys/extents match a direct computation from the input") {
-    val d = tmp()
+    val d = tmp("shards")
     val in = sample()
     Shards.writeSharded(in, d, "user_id", nShards = 5, maxRecordsPerFile = 1000)
     val expected = rows(
@@ -74,7 +70,7 @@ class ShardsSpec extends SparkTestBase {
       cap <- Gen.chooseNum(1L, 10L)
     } yield (keys, nShards, cap)
     samples(gen, n = 3, size = 40).foreach { case (keys, nShards, cap) =>
-      val d = tmp()
+      val d = tmp("shards")
       val in = keys.zipWithIndex.map { case (k, i) => (k, i.toLong) }
         .toDF("user_id", "event_id")
       Shards.writeSharded(in, d, "user_id", nShards, cap)
@@ -95,7 +91,7 @@ class ShardsSpec extends SparkTestBase {
   }
 
   test("writeSharded: rows inside every file are key-sorted (reproducible, range-sliced files)") {
-    val d = tmp()
+    val d = tmp("shards")
     // scramble input order to prove the in-task sort, not luck, orders rows
     Shards.writeSharded(sample().orderBy(rand(7)), d, "user_id",
       nShards = 3, maxRecordsPerFile = 9)
@@ -110,7 +106,7 @@ class ShardsSpec extends SparkTestBase {
   }
 
   test("writeManifest: JSON manifest matches the audit and stays invisible to data reads") {
-    val d = tmp()
+    val d = tmp("shards")
     Shards.writeSharded(sample(), d, "user_id", nShards = 3, maxRecordsPerFile = 9)
     Shards.writeManifest(spark, d, "user_id", maxRecordsPerFile = 9)
     val manifest = rows(spark.read.json(s"$d/_manifest")
@@ -126,17 +122,17 @@ class ShardsSpec extends SparkTestBase {
     val withNull = Seq((java.lang.Long.valueOf(1L), 1L),
       (null.asInstanceOf[java.lang.Long], 2L)).toDF("user_id", "event_id")
     val ex = intercept[Exception] {
-      Shards.writeSharded(withNull, tmp(), "user_id", nShards = 4)
+      Shards.writeSharded(withNull, tmp("shards"), "user_id", nShards = 4)
     }
     assert(messages(ex).exists(m => m != null && m.contains("null shard key")))
   }
 
   test("writeSharded rejects non-positive nShards and file caps") {
     intercept[IllegalArgumentException] {
-      Shards.writeSharded(sample(), tmp(), "user_id", nShards = 0)
+      Shards.writeSharded(sample(), tmp("shards"), "user_id", nShards = 0)
     }
     intercept[IllegalArgumentException] {
-      Shards.writeSharded(sample(), tmp(), "user_id", nShards = 2, maxRecordsPerFile = 0)
+      Shards.writeSharded(sample(), tmp("shards"), "user_id", nShards = 2, maxRecordsPerFile = 0)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM. */
@@ -22,8 +23,22 @@ object TestSpark {
   }
 }
 
-abstract class SparkTestBase extends AnyFunSuite {
+abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  private val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A fresh temp dir `graft_<suite>_<name>…`, deleted with everything
+    * under it once the suite has run. */
+  def tmp(name: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft_${suiteName}_$name").toFile
+    tmpDirs.synchronized(tmpDirs += d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.synchronized(tmpDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly))
+    finally super.afterAll()
 
   /** Flatten an exception chain into its messages — the fail-loud
     * assertion helper (guards survive wrapping in Spark task failures). */

@@ -19,9 +19,6 @@ import graft.ingest.Versioned
 class StageDigestParitySpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_parity_$name").toString
-
   private def logOf(dir: String) = graft.ingest.TableLog(spark, dir)
 
   /** Stage with the one-pass path AND re-digest the same staged dir with

@@ -20,8 +20,7 @@ class StagingCleanupSpec extends SparkTestBase {
   FaultFs.install(spark)
 
   private def table(name: String): (String, java.io.File) = {
-    val local = java.nio.file.Files.createTempDirectory(s"graft_stage_$name")
-      .toFile.getAbsolutePath + "/t"
+    val local = tmp(name) + "/t"
     (FaultFs.path(local), new java.io.File(local))
   }
 

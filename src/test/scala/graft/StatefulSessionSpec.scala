@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StatefulSession
+import graft.streaming.{StatefulSession, StreamIngest}
 
 class StatefulSessionSpec extends SparkTestBase {
   import spark.implicits._
@@ -20,14 +20,15 @@ class StatefulSessionSpec extends SparkTestBase {
     df.where("user_id >= 0").as[(Long, Long, Long, Long)].collect().toSeq.sorted
 
   test("gap split rule: exactly-gap pause stays joined, over-gap splits; timers flush open sessions") {
-    val base = java.nio.file.Files.createTempDirectory("graft_tses").toString
+    val base = tmp("tses")
     val gap = 100L
     val in = stage(base, Seq(
       (1L, 10L, 1000L), (2L, 10L, 1100L),  // exactly gap apart -> one session
       (3L, 10L, 1201L),                    // 101 > gap -> new session
       (4L, 20L, 5000L)))
-    val out = StatefulSession.runSessionizeToCompletion(spark, in,
-      s"$base/out", s"$base/ckpt", gapSeconds = gap, statePartitions = Some(4))
+    val out = StreamIngest.runBounded(
+      StatefulSession.sessionize(StreamIngest.events(spark, in), gapSeconds = gap),
+      s"$base/out", s"$base/ckpt", statePartitions = Some(4)).sink
     assert(sessions(out) == Seq(
       (10L, 1000000000L, 1100000000L, 2L),
       (10L, 1201000000L, 1201000000L, 1L),
@@ -35,13 +36,14 @@ class StatefulSessionSpec extends SparkTestBase {
   }
 
   test("matches the batch gaps-and-islands sessionizer on the same events") {
-    val base = java.nio.file.Files.createTempDirectory("graft_tses2").toString
+    val base = tmp("tses2")
     val evs = (1 to 60).map { i =>
       (i.toLong, (i % 4).toLong + 1, (i * 700 + (i % 7) * 1300).toLong)
     }
     val in = stage(base, evs)
-    val got = sessions(StatefulSession.runSessionizeToCompletion(spark, in,
-      s"$base/out", s"$base/ckpt", gapSeconds = 1800))
+    val got = sessions(StreamIngest.runBounded(
+      StatefulSession.sessionize(StreamIngest.events(spark, in), gapSeconds = 1800),
+      s"$base/out", s"$base/ckpt").sink)
     val want = rows(graft.operators.Sessionize.stats(
       evs.map { case (id, uid, sec) => (uid, id, sec * 1000000L) }
         .toDF("user_id", "event_id", "us"),
@@ -51,22 +53,25 @@ class StatefulSessionSpec extends SparkTestBase {
   }
 
   test("an open session carried across a checkpointed restart merges with later events") {
-    val base = java.nio.file.Files.createTempDirectory("graft_tses3").toString
+    val base = tmp("tses3")
     // batch 1: no sentinel far enough to close user 5's session? stage()
     // always sentinels — use a gap so large the session stays open
     val in = stage(base, Seq((1L, 5L, 1000L)))
-    val first = StatefulSession.runSessionizeToCompletion(spark, in,
-      s"$base/out", s"$base/ckpt", gapSeconds = 1000000L)
+    val first = StreamIngest.runBounded(
+      StatefulSession.sessionize(StreamIngest.events(spark, in), gapSeconds = 1000000L),
+      s"$base/out", s"$base/ckpt").sink
     assert(sessions(first).isEmpty, "session must still be open after batch 1")
     // batch 2: a second event within the gap, then nothing — still open
     stage(base, Seq((2L, 5L, 500000L)))
-    val second = StatefulSession.runSessionizeToCompletion(spark, in,
-      s"$base/out", s"$base/ckpt", gapSeconds = 1000000L)
+    val second = StreamIngest.runBounded(
+      StatefulSession.sessionize(StreamIngest.events(spark, in), gapSeconds = 1000000L),
+      s"$base/out", s"$base/ckpt").sink
     assert(sessions(second).isEmpty)
     // batch 3: an event far past the gap closes the merged 2-event session
     stage(base, Seq((3L, 5L, 2000000L)))
-    val third = StatefulSession.runSessionizeToCompletion(spark, in,
-      s"$base/out", s"$base/ckpt", gapSeconds = 1000000L)
+    val third = StreamIngest.runBounded(
+      StatefulSession.sessionize(StreamIngest.events(spark, in), gapSeconds = 1000000L),
+      s"$base/out", s"$base/ckpt").sink
     assert(sessions(third).contains((5L, 1000000000L, 500000000000L, 2L)))
   }
 }

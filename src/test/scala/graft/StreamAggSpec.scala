@@ -3,14 +3,14 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ingest.Versioned
-import graft.streaming.StreamAgg
+import graft.streaming.{StreamAgg, StreamIngest}
 import graft.streaming.StreamAgg.Event
 
 class StreamAggSpec extends SparkTestBase {
 
   test("streaming upsert: doubled delivery collapses; checkpointed re-run re-merges nothing") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_upsert_spec").toString
+    val base = tmp("upsert_spec")
     Seq((1L, 10L, "click", 100L, 1.5), (1L, 10L, "click", 100L, 1.5), // same event twice
         (2L, 11L, "view", 200L, 2.5))
       .toDF("event_id", "user_id", "event_type", "ts_us", "value")
@@ -50,33 +50,36 @@ class StreamAggSpec extends SparkTestBase {
 
   test("stream-static enrichment joins the broadcast dim and drops misses") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_enrich_spec").toString
+    val base = tmp("enrich_spec")
     val in = stageEvents(base, Seq(
       (1L, 10L, "click", 1000L, 1.0), (2L, 11L, "view", 1001L, 2.0),
       (3L, 99L, "click", 1002L, 3.0))) // user 99 not in dim → dropped
     val dim = Seq((10L, "alice"), (11L, "bob")).toDF("user_id", "name")
-    val out = StreamAgg.runEnrichToCompletion(spark, in, dim, "user_id",
-        s"$base/out", s"$base/ckpt")
+    val out = StreamIngest.runBounded(
+        StreamAgg.enrichedEvents(StreamIngest.events(spark, in), dim, "user_id"),
+        s"$base/out", s"$base/ckpt").sink
       .select("event_id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(out == Set((1L, "alice"), (2L, "bob")))
   }
 
   test("inner interval join attributes a view only within its click's window") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ijoin_spec").toString
+    val base = tmp("ijoin_spec")
     val in = stageEvents(base, Seq(
       (1L, 1L, "click", 5000L, 0.0),
       (2L, 1L, "view", 4000L, 0.0),   // 1000s before the click → attributed
       (3L, 1L, "view", 6000L, 0.0),   // after the click → no
       (4L, 2L, "view", 4900L, 0.0))) // other user → no
-    val out = StreamAgg.runIntervalJoinToCompletion(spark, in,
-        s"$base/out", s"$base/ckpt", intervalSeconds = 3600)
+    val (clicks, views) = StreamAgg.intervalSides(StreamIngest.events(spark, in))
+    val out = StreamIngest.runBounded(
+        StreamAgg.intervalJoined(clicks, views, intervalSeconds = 3600),
+        s"$base/out", s"$base/ckpt").sink
       .select("click_id", "view_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out == Set((1L, 2L)))
   }
 
   test("outer interval join null-pads a viewless click once its window closes") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ojoin_spec").toString
+    val base = tmp("ojoin_spec")
     // far-future sentinels on BOTH event types: the global watermark is
     // the min across inputs, and only its advance flushes unmatched state
     val in = stageEvents(base, Seq(
@@ -85,8 +88,10 @@ class StreamAggSpec extends SparkTestBase {
       (3L, 3L, "click", 5000L, 0.0),  // no view for user 3 → null-padded
       (-1L, -1L, "click", 10000000L, 0.0),
       (-2L, -1L, "view", 10000000L, 0.0)))
-    val out = StreamAgg.runOuterIntervalJoinToCompletion(spark, in,
-        s"$base/out", s"$base/ckpt", intervalSeconds = 3600)
+    val (clicks, views) = StreamAgg.intervalSides(StreamIngest.events(spark, in))
+    val out = StreamIngest.runBounded(
+        StreamAgg.intervalJoinedOuter(clicks, views, intervalSeconds = 3600),
+        s"$base/out", s"$base/ckpt").sink
       .filter("user_id >= 0")
       .collect().map(r => (r.getAs[Long]("click_id"),
         Option(r.getAs[java.lang.Long]("view_id")).map(_.toLong))).toSet
@@ -155,7 +160,7 @@ class StreamAggSpec extends SparkTestBase {
 
   test("streaming dedup keeps one copy per key, including across micro-batches") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_streamdd").toString
+    val base = tmp("streamdd")
     def line(id: Long, us: Long, v: Double) =
       s"""{"event_id": $id, "user_id": 1, "event_type": "click", "ts_us": $us, "value": $v}"""
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
@@ -166,8 +171,10 @@ class StreamAggSpec extends SparkTestBase {
         line(2, 1001000000L, 2.0)).mkString("\n"))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/in/b.json"),
       Seq(line(2, 1001000000L, 2.0), line(3, 1002000000L, 4.0)).mkString("\n"))
-    val out = StreamAgg.runDedupToCompletion(spark, s"$base/in", s"$base/sink",
-      s"$base/ckpt", watermarkDelay = "10 minutes")
+    val out = StreamIngest.runBounded(
+      StreamAgg.dedupedEvents(StreamIngest.events(spark, s"$base/in"),
+        watermarkDelay = "10 minutes"),
+      s"$base/sink", s"$base/ckpt").sink
     val got = rows(out.select(col("event_id"), col("value")).orderBy(col("event_id")))
     assert(got == Seq(Seq(1L, 1.0), Seq(2L, 2.0), Seq(3L, 4.0)), s"got $got")
   }
@@ -178,7 +185,7 @@ class StreamAggSpec extends SparkTestBase {
     // this pins that our stateful operators don't depend on provider
     // internals, and that the provider actually engaged (state layout)
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_streamdd_rdb").toString
+    val base = tmp("streamdd_rdb")
     def line(id: Long, us: Long, v: Double) =
       s"""{"event_id": $id, "user_id": 1, "event_type": "click", "ts_us": $us, "value": $v}"""
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
@@ -192,8 +199,10 @@ class StreamAggSpec extends SparkTestBase {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val out = StreamAgg.runDedupToCompletion(spark, s"$base/in", s"$base/sink",
-        s"$base/ckpt", watermarkDelay = "10 minutes")
+      val out = StreamIngest.runBounded(
+        StreamAgg.dedupedEvents(StreamIngest.events(spark, s"$base/in"),
+          watermarkDelay = "10 minutes"),
+        s"$base/sink", s"$base/ckpt").sink
       val got = rows(out.select(col("event_id"), col("value")).orderBy(col("event_id")))
       assert(got == Seq(Seq(1L, 1.0), Seq(2L, 2.0), Seq(3L, 4.0)), s"got $got")
       // provider engaged: RocksDB checkpoints upload .zip/.changelog
@@ -221,7 +230,7 @@ class StreamAggSpec extends SparkTestBase {
   test("windowed counts emit exactly the closed windows (sentinel advances watermark)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_streamagg").toString
+    val base = tmp("streamagg")
     val lines = Seq(
       """{"user_id": 1, "event_type": "click", "ts_us": 0, "value": 1.0}""",
       """{"user_id": 2, "event_type": "click", "ts_us": 1800000000, "value": 2.0}""",
@@ -230,8 +239,10 @@ class StreamAggSpec extends SparkTestBase {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/in/a.json"),
       lines.mkString("\n"))
-    val out = StreamAgg.runWindowedToCompletion(spark, s"$base/in", s"$base/sink",
-      s"$base/ckpt", windowLength = "1 hour", watermarkDelay = "1 minute")
+    val out = StreamIngest.runBounded(
+      StreamAgg.windowedCounts(StreamIngest.events(spark, s"$base/in"),
+        windowLength = "1 hour", watermarkDelay = "1 minute"),
+      s"$base/sink", s"$base/ckpt").sink
     val got = rows(out.select(col("event_type"), col("n"), col("sum_value")))
     // hour 0: two clicks (v=3.0); hour 1: one view (v=4.0); sentinel window unclosed
     assert(got == Seq(Seq("click", 2L, 3.0), Seq("view", 1L, 4.0)))

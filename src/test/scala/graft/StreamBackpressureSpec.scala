@@ -5,7 +5,7 @@ import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamAgg
+import graft.streaming.{StreamAgg, StreamIngest}
 
 /** Incremental-drain observability for q50's dedup path (VERDICT r6 #4):
   * the 100 TB streaming failure mode is STATE GROWTH, and until now the
@@ -47,12 +47,13 @@ class StreamBackpressureSpec extends SparkTestBase {
   }
 
   test("dedup state stays bounded across >=3 incremental triggers (eviction keeps up)") {
-    val base = Files.createTempDirectory("graft_backpressure")
+    val base = Paths.get(tmp("backpressure"))
     stageSlicedBacklog(base.resolve("in"))
-    val (sink, progress) = StreamAgg.runDedupIncremental(spark,
-      base.resolve("in").toString, base.resolve("sink").toString,
-      base.resolve("ckpt").toString, statePartitions = Some(4),
-      maxFilesPerTrigger = 1)
+    val StreamIngest.BoundedRun(sink, progress) = StreamIngest.runBounded(
+      StreamAgg.dedupedEvents(StreamIngest.events(spark,
+        base.resolve("in").toString, maxFilesPerTrigger = Some(1))),
+      base.resolve("sink").toString, base.resolve("ckpt").toString,
+      statePartitions = Some(4))
 
     // correctness of the drain itself: one copy per key survived
     assert(sink.count() == (Slices * SliceKeys).toLong)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Drift
-import graft.streaming.StreamAgg
+import graft.streaming.{StreamAgg, StreamIngest}
 
 class StreamDriftSpec extends SparkTestBase {
   import spark.implicits._
@@ -56,7 +56,7 @@ class StreamDriftSpec extends SparkTestBase {
   }
 
   test("windowedHistogram bins and windows a bounded stream end-to-end") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sdrift").toString
+    val base = tmp("sdrift")
     val evs = Seq(
       (1L, "a", "2024-01-01 01:00:00", 10.0), // day1 bin0
       (2L, "a", "2024-01-01 02:00:00", 30.0), // day1 bin1
@@ -69,9 +69,10 @@ class StreamDriftSpec extends SparkTestBase {
         (unix_timestamp(col("tss"), "yyyy-MM-dd HH:mm:ss") * 1000000L).as("ts_us"),
         col("value"))).as("value"))
       .coalesce(1).write.mode("overwrite").text(s"$base/in")
-    val sink = StreamAgg.runHistogramToCompletion(spark, s"$base/in",
-      s"$base/sink", s"$base/ckpt", windowLength = "1 day",
-      watermarkDelay = "1 minute", binWidth = 25.0)
+    val sink = StreamIngest.runBounded(
+      StreamAgg.windowedHistogram(StreamIngest.events(spark, s"$base/in"),
+        windowLength = "1 day", watermarkDelay = "1 minute", binWidth = 25.0),
+      s"$base/sink", s"$base/ckpt").sink
     val got = sink.select(date_format(col("window_start"), "yyyy-MM-dd"),
       col("bin"), col("n")).collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2))).toSet

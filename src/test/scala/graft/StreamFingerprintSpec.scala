@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamAgg
+import graft.streaming.{StreamAgg, StreamIngest}
 
 class StreamFingerprintSpec extends SparkTestBase {
   import spark.implicits._
@@ -19,7 +19,7 @@ class StreamFingerprintSpec extends SparkTestBase {
     java.sql.Timestamp.valueOf(tss).getTime * 1000L
 
   test("windowed fingerprints equal the driver digest replay per day") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sfp").toString
+    val base = tmp("sfp")
     val evs = Seq(
       (1L, "play", "2024-01-01 01:00:00", 1.0),
       (2L, "like", "2024-01-01 02:00:00", 1.0),
@@ -31,9 +31,10 @@ class StreamFingerprintSpec extends SparkTestBase {
         (unix_timestamp(col("tss"), "yyyy-MM-dd HH:mm:ss") * 1000000L).as("ts_us"),
         col("value"))).as("value"))
       .coalesce(1).write.mode("overwrite").text(s"$base/in")
-    val sink = StreamAgg.runFingerprintToCompletion(spark, s"$base/in",
-      s"$base/sink", s"$base/ckpt",
-      windowLength = "1 day", watermarkDelay = "1 minute")
+    val sink = StreamIngest.runBounded(
+      StreamAgg.windowedFingerprint(StreamIngest.events(spark, s"$base/in"),
+        windowLength = "1 day", watermarkDelay = "1 minute"),
+      s"$base/sink", s"$base/ckpt").sink
     val got = sink.select(date_format(col("window_start"), "yyyy-MM-dd"),
       col("fp"), col("n_rows")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -47,7 +48,7 @@ class StreamFingerprintSpec extends SparkTestBase {
 
   test("a duplicated source row moves the day fingerprint (sums don't absorb replays)") {
     def runWith(dup: Boolean): (Long, Long) = {
-      val base = java.nio.file.Files.createTempDirectory("graft_sfp2").toString
+      val base = tmp("sfp2")
       val rows = Seq((1L, "play", "2024-01-01 01:00:00", 1.0)) ++
         (if (dup) Seq((1L, "play", "2024-01-01 01:00:00", 1.0)) else Nil) ++
         Seq((0L, "__sentinel", "2024-03-01 00:00:00", 0.0))
@@ -56,9 +57,10 @@ class StreamFingerprintSpec extends SparkTestBase {
           (unix_timestamp(col("tss"), "yyyy-MM-dd HH:mm:ss") * 1000000L).as("ts_us"),
           col("value"))).as("value"))
         .coalesce(1).write.mode("overwrite").text(s"$base/in")
-      val r = StreamAgg.runFingerprintToCompletion(spark, s"$base/in",
-        s"$base/sink", s"$base/ckpt",
-        windowLength = "1 day", watermarkDelay = "1 minute")
+      val r = StreamIngest.runBounded(
+        StreamAgg.windowedFingerprint(StreamIngest.events(spark, s"$base/in"),
+          windowLength = "1 day", watermarkDelay = "1 minute"),
+        s"$base/sink", s"$base/ckpt").sink
         .collect().head
       (r.getAs[Long]("fp"), r.getAs[Long]("n_rows"))
     }

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamAgg
+import graft.streaming.{StreamAgg, StreamIngest}
 
 class StreamHeavyHittersSpec extends SparkTestBase {
   import spark.implicits._
 
   test("Misra-Gries guarantees hold in streaming window state") {
-    val base = java.nio.file.Files.createTempDirectory("graft_shh").toString
+    val base = tmp("shh")
     // day 1: heavy item 'a' (6 of 9 = 2/3 > 1/(k+1)); day 2: all distinct
     val evs =
       (1 to 6).map(i => (i.toLong, "a", s"2024-01-01 0$i:00:00", 1.0)) ++
@@ -24,9 +24,11 @@ class StreamHeavyHittersSpec extends SparkTestBase {
         col("value"))).as("value"))
       .coalesce(1).write.mode("overwrite").text(s"$base/in")
     val k = 2
-    val sink = StreamAgg.runHeavyHittersToCompletion(spark, s"$base/in",
-      s"$base/sink", s"$base/ckpt", itemCol = "event_type", k = k,
-      windowLength = "1 day", watermarkDelay = "1 minute")
+    val sink = StreamIngest.runBounded(
+      StreamAgg.windowedHeavyHitters(StreamIngest.events(spark, s"$base/in"),
+        itemCol = "event_type", k = k,
+        windowLength = "1 day", watermarkDelay = "1 minute"),
+      s"$base/sink", s"$base/ckpt").sink
     val day1 = sink.filter(date_format(col("window_start"), "yyyy-MM-dd") === "2024-01-01")
       .select(col("n"), col("mg")).head()
     val n1 = day1.getLong(0)

@@ -11,7 +11,7 @@ class StreamIngestSpec extends SparkTestBase {
   }
 
   test("file-source stream parses Kafka-shaped payloads into flat rows") {
-    val base = Files.createTempDirectory("graft_stream_test").toString
+    val base = tmp("ingest")
     writeLines(s"$base/in", Seq(
       """{"requestedUserId": 7, "recommendations": [1, 2, 3], "timestamp": "2024-05-01T10:00:00.000001"}""",
       """{"requestedUserId": 9, "recommendations": [], "timestamp": "2024-05-02T11:30:00.999999"}"""))
@@ -25,7 +25,7 @@ class StreamIngestSpec extends SparkTestBase {
   }
 
   test("malformed JSON yields null fields, not a crashed stream") {
-    val base = Files.createTempDirectory("graft_stream_test").toString
+    val base = tmp("ingest")
     writeLines(s"$base/in", Seq("""not json at all"""))
     val out = StreamIngest.runToCompletion(spark,
       StreamIngest.EventSource.Files(s"$base/in"), s"$base/sink", s"$base/ckpt")
@@ -34,7 +34,7 @@ class StreamIngestSpec extends SparkTestBase {
   }
 
   test("checkpoint makes re-runs exactly-once: no duplicate rows on restart") {
-    val base = Files.createTempDirectory("graft_stream_test").toString
+    val base = tmp("ingest")
     writeLines(s"$base/in", Seq(
       """{"requestedUserId": 1, "recommendations": [5], "timestamp": "2024-01-01T00:00:00.000000"}"""))
     StreamIngest.runToCompletion(spark,
@@ -46,7 +46,7 @@ class StreamIngestSpec extends SparkTestBase {
   }
 
   test("console tap + sink run concurrently to completion (multi-query await)") {
-    val base = Files.createTempDirectory("graft_stream_test").toString
+    val base = tmp("ingest")
     writeLines(s"$base/in", Seq(
       """{"requestedUserId": 2, "recommendations": [8, 9], "timestamp": "2024-02-02T00:00:00.000000"}"""))
     val out = StreamIngest.runToCompletion(spark,
@@ -56,7 +56,7 @@ class StreamIngestSpec extends SparkTestBase {
   }
 
   test("foreachBatch sink receives each batch once with its id") {
-    val base = Files.createTempDirectory("graft_stream_test").toString
+    val base = tmp("ingest")
     writeLines(s"$base/in", Seq(
       """{"requestedUserId": 3, "recommendations": [1], "timestamp": "2024-03-03T00:00:00.000000"}"""))
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()

@@ -17,8 +17,7 @@ class TableLogSpec extends SparkTestBase {
   FaultFs.install(spark)
 
   private def table(name: String): (String, java.io.File) = {
-    val local = java.nio.file.Files.createTempDirectory(s"graft_tlog_$name")
-      .toFile.getAbsolutePath + "/t"
+    val local = tmp(name) + "/t"
     (FaultFs.path(local), new java.io.File(local))
   }
 

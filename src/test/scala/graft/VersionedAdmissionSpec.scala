@@ -14,9 +14,6 @@ class VersionedAdmissionSpec extends SparkTestBase {
 
   private val Fmt = "graft.sources.VersionedSource"
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_vadm_$name").toString
-
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
 
   private def runOnce(tbl: String, ckpt: String, out: String,

@@ -12,9 +12,6 @@ import graft.ingest.{Fingerprint, Versioned}
 class VersionedColMapSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_cmap_$name").toString + "/tbl"
-
   private def certified(tbl: String, v: Long): Boolean = {
     val (n, fp) = Versioned.archivedFingerprint(spark, tbl, v)
     val asOf = Versioned.readAsOf(spark, tbl, v)
@@ -25,7 +22,7 @@ class VersionedColMapSpec extends SparkTestBase {
   }
 
   test("rename is metadata-only; every version reads under its own names") {
-    val tbl = tmp("ren")
+    val tbl = tmp("ren") + "/tbl"
     Versioned.overwrite(Seq((1L, 10L), (2L, 20L)).toDF("id", "amt"), tbl)
     val v1fp = Versioned.archivedFingerprint(spark, tbl, 1L)
     val c = Versioned.renameColumn(spark, tbl, "amt", "amount")
@@ -43,7 +40,7 @@ class VersionedColMapSpec extends SparkTestBase {
   }
 
   test("rename chains compose; a rename back to the original name works") {
-    val tbl = tmp("chain")
+    val tbl = tmp("chain") + "/tbl"
     Versioned.overwrite(Seq((1L, 10L)).toDF("id", "amt"), tbl)
     Versioned.renameColumn(spark, tbl, "amt", "x")
     Versioned.renameColumn(spark, tbl, "x", "amt")
@@ -55,7 +52,7 @@ class VersionedColMapSpec extends SparkTestBase {
   }
 
   test("drop is metadata-only; old versions keep the column; totals recompute") {
-    val tbl = tmp("drop")
+    val tbl = tmp("drop") + "/tbl"
     Versioned.overwrite(Seq((1L, 10L, "a"), (2L, 20L, "b"))
       .toDF("id", "amt", "tag"), tbl)
     val c = Versioned.dropColumn(spark, tbl, "amt")
@@ -68,7 +65,7 @@ class VersionedColMapSpec extends SparkTestBase {
   }
 
   test("re-adding a dropped logical name never resurrects stale values") {
-    val tbl = tmp("readd")
+    val tbl = tmp("readd") + "/tbl"
     Versioned.overwrite(Seq((1L, 999L), (2L, 888L)).toDF("id", "amt"), tbl)
     Versioned.dropColumn(spark, tbl, "amt")
     // re-add the SAME logical name via schema evolution with new rows
@@ -81,7 +78,7 @@ class VersionedColMapSpec extends SparkTestBase {
   }
 
   test("rename/drop refuse partition, generated, referenced and last columns") {
-    val tbl = tmp("refuse")
+    val tbl = tmp("refuse") + "/tbl"
     Versioned.overwrite(Seq((1L, 10L, 0L)).toDF("id", "amt", "p")
       .repartition(col("p")), tbl, partitionBy = Seq("p"))
     intercept[IllegalArgumentException] {
@@ -95,13 +92,13 @@ class VersionedColMapSpec extends SparkTestBase {
       Versioned.renameColumn(spark, tbl, "amt", "amount")
     }
     intercept[IllegalArgumentException] { Versioned.dropColumn(spark, tbl, "amt") }
-    val tbl2 = tmp("last")
+    val tbl2 = tmp("last") + "/tbl"
     Versioned.overwrite(Seq(Tuple1(1L)).toDF("id"), tbl2)
     intercept[IllegalArgumentException] { Versioned.dropColumn(spark, tbl2, "id") }
   }
 
   test("merge and CoW paths work across a rename epoch") {
-    val tbl = tmp("cowren")
+    val tbl = tmp("cowren") + "/tbl"
     Versioned.overwrite(Seq((1L, 10L), (2L, 20L)).toDF("id", "amt"), tbl)
     Versioned.renameColumn(spark, tbl, "amt", "amount")
     Versioned.upsert(spark, tbl,
@@ -113,7 +110,7 @@ class VersionedColMapSpec extends SparkTestBase {
 
   test("mergeMoR works across a rename epoch (tombstones + appends map names)") {
     import graft.ingest.Versioned._
-    val tbl = tmp("morren")
+    val tbl = tmp("morren") + "/tbl"
     Versioned.overwrite(Seq((1L, 10L), (2L, 20L)).toDF("id", "amt"), tbl)
     Versioned.renameColumn(spark, tbl, "amt", "amount")
     val src = Seq((2L, 21L), (3L, 30L)).toDF("id", "amount")

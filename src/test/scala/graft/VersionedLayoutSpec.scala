@@ -14,9 +14,6 @@ import graft.ingest.{Fingerprint, Versioned}
 class VersionedLayoutSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_vlayout").toString + "/tbl"
-
   private def orders(rows: (Long, Long, Long, String)*) =
     rows.toDF("id", "yr", "mo", "t")
 
@@ -27,7 +24,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("partitioned overwrite+append: hive layout, reconstruction, time travel") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     val c1 = Versioned.overwrite(
       orders((1L, 2024L, 1L, "a"), (2L, 2024L, 2L, "b"), (3L, 2025L, 1L, "c")),
       tbl, partitionBy = Seq("yr", "mo"))
@@ -55,7 +52,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("partition pruning from log metadata: excluded files never open") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     Versioned.overwrite(
       orders((1L, 2024L, 1L, "a"), (2L, 2024L, 2L, "b"),
         (3L, 2025L, 1L, "c"), (4L, 2025L, 2L, "d")).coalesce(1),
@@ -72,7 +69,7 @@ class VersionedLayoutSpec extends SparkTestBase {
     }.flatten
     assert(scanned.nonEmpty && scanned.forall(_.contains("yr=2025")), scanned)
     // unpartitioned table refuses partition reads loudly
-    val flat = tmp()
+    val flat = tmp("layout") + "/tbl"
     Versioned.overwrite(orders((1L, 1L, 1L, "x")), flat)
     val e = intercept[IllegalArgumentException] {
       Versioned.readAsOfPartitions(spark, flat, 1L)(_ => true)
@@ -81,7 +78,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("null partition values round-trip through the hive default sentinel") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     val in = Seq((1L, Some("us"), "a"), (2L, None, "b"))
       .toDF("id", "region", "t")
     Versioned.overwrite(in, tbl, partitionBy = Seq("region"))
@@ -93,7 +90,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("partition layout survives COW upsert/delete and schema evolution") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     Versioned.overwrite(
       orders((1L, 2024L, 1L, "a"), (2L, 2024L, 2L, "b"), (3L, 2025L, 1L, "c")),
       tbl, partitionBy = Seq("yr"))
@@ -117,7 +114,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("column-permuted append is aligned to the head order, digest stable") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     Versioned.overwrite(orders((1L, 2024L, 1L, "a")), tbl)
     // same columns, permuted — accepted and REORDERED before digesting
     val permuted = orders((2L, 2025L, 2L, "b"))
@@ -137,7 +134,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("optimize compacts as a certified rewrite: content identical, travel intact") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     Versioned.overwrite(orders((1L, 2024L, 1L, "a"), (2L, 2024L, 2L, "b")), tbl)
     Versioned.append(orders((3L, 2025L, 1L, "c")), tbl)
     Versioned.append(orders((4L, 2025L, 2L, "d")), tbl)
@@ -159,7 +156,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("optimize zorderBy tightens zone maps; sortBy gives 1-d clustering") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     val wide = (0L until 256L).map(i => (i, i % 16L, i / 16L, s"r$i"))
     // interleaved arrival: every file spans the whole x/y domain
     Versioned.overwrite(wide.filter(_._1 % 2 == 0).toDF("id", "x", "y", "t")
@@ -187,7 +184,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("z-order optimize refuses more files than its probe bound, before any job") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     Versioned.overwrite(Seq((1L, 2L, 3L, "a")).toDF("id", "x", "y", "t"), tbl)
     val head = Versioned.latestVersion(spark, tbl)
     val (err, jobs) = org.apache.spark.sql.graftshim.JobProbe.jobsStarted(spark) {
@@ -201,7 +198,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("disjoint-file retry: upserts absorb concurrent appends, never abort") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     Versioned.overwrite(df16(tbl), tbl)
     (1 to 3).foreach { round =>
       val start = new CountDownLatch(1)
@@ -240,7 +237,7 @@ class VersionedLayoutSpec extends SparkTestBase {
     (1L to 16L).map(i => (i, s"v$i")).toDF("id", "t")
 
   test("overlapping rewrites still abort: one of two same-file upserts loses") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     Versioned.overwrite(Seq((1L, "a")).toDF("id", "t").coalesce(1), tbl)
     // deterministic overlap: both plan against v1's single file; the
     // loser's disjoint-file recheck sees its file in the winner's
@@ -271,7 +268,7 @@ class VersionedLayoutSpec extends SparkTestBase {
   }
 
   test("change feed spans an overwrite that changed the schema (by-name align)") {
-    val tbl = tmp()
+    val tbl = tmp("layout") + "/tbl"
     Versioned.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "t"), tbl)
     // arity + order change: drops nothing, adds `x`, reorders
     Versioned.overwrite(Seq(("b", 2L, 9L), ("c", 3L, 8L)).toDF("t", "id", "x"),
@@ -287,7 +284,7 @@ class VersionedLayoutSpec extends SparkTestBase {
       .select("id", "t", "x").collect().map(_.toSeq).toSet
     assert(ins == Set(Seq(2L, "b", 9L), Seq(3L, "c", 8L)))
     // a same-name RETYPE cannot be aligned — explicit refusal
-    val tbl2 = tmp()
+    val tbl2 = tmp("layout") + "/tbl"
     Versioned.overwrite(Seq((1L, "a")).toDF("id", "t"), tbl2)
     Versioned.overwrite(Seq((1L, 2.5)).toDF("id", "t"), tbl2)
     val e = intercept[Exception] {

@@ -19,9 +19,6 @@ import graft.ingest.Versioned._
 class VersionedMergeSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_merge_$name").toString
-
   private def base(rows: (Long, String, Long)*) =
     rows.toDF("id", "status", "amount")
 

@@ -33,9 +33,6 @@ import graft.ingest.Versioned._
 class VersionedModelSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_model_$name").toString
-
   private type Model = Map[Long, (Long, String)]
 
   private def certified(tbl: String, v: Long): Boolean = {

@@ -10,9 +10,6 @@ import graft.ingest.{Fingerprint, Versioned}
 class VersionedMorSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_mor_$name").toString + "/tbl"
-
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
 
   private def certified(tbl: String, v: Long): Boolean = {
@@ -31,7 +28,7 @@ class VersionedMorSpec extends SparkTestBase {
   }
 
   test("MoR delete removes rows without rewriting any data file") {
-    val tbl = tmp("basic")
+    val tbl = tmp("basic") + "/tbl"
     Versioned.overwrite(df((1L to 8L).map(i => (i, s"v$i")): _*), tbl)
     Versioned.append(df(9L -> "v9"), tbl)
     val dirsBefore = dataDirs(tbl)
@@ -53,7 +50,7 @@ class VersionedMorSpec extends SparkTestBase {
   }
 
   test("COW rewrites over a MoR table never resurrect deleted rows") {
-    val tbl = tmp("cow")
+    val tbl = tmp("cow") + "/tbl"
     Versioned.overwrite(df((1L to 6L).map(i => (i, s"v$i")): _*).coalesce(1), tbl)
     Versioned.deleteWhereMoR(spark, tbl, col("id") === 2L)
     // upsert touches the (only) file holding id=2's position
@@ -65,7 +62,7 @@ class VersionedMorSpec extends SparkTestBase {
   }
 
   test("OPTIMIZE purges deletion vectors into clean files, content preserved") {
-    val tbl = tmp("opt")
+    val tbl = tmp("opt") + "/tbl"
     Versioned.overwrite(df((1L to 8L).map(i => (i, s"v$i")): _*), tbl)
     Versioned.deleteWhereMoR(spark, tbl, col("id") > 6L)
     val c = Versioned.optimize(spark, tbl, numFiles = 1).get
@@ -77,7 +74,7 @@ class VersionedMorSpec extends SparkTestBase {
   }
 
   test("CDF: the MoR window emits exactly the deleted rows as deletes") {
-    val tbl = tmp("cdf")
+    val tbl = tmp("cdf") + "/tbl"
     Versioned.overwrite(df(1L -> "a", 2L -> "b", 3L -> "c"), tbl) // v1
     Versioned.deleteWhereMoR(spark, tbl, col("id") <= 2L)          // v2
     val ch = Versioned.changesBetween(spark, tbl, 1L, 2L)
@@ -91,7 +88,7 @@ class VersionedMorSpec extends SparkTestBase {
   }
 
   test("restore spans MoR deletes in both directions") {
-    val tbl = tmp("restore")
+    val tbl = tmp("restore") + "/tbl"
     Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl)   // v1
     Versioned.deleteWhereMoR(spark, tbl, col("id") === 1L) // v2
     Versioned.append(df(3L -> "c"), tbl)                  // v3
@@ -108,7 +105,7 @@ class VersionedMorSpec extends SparkTestBase {
   }
 
   test("checkpoints carry the accumulated deletion vectors") {
-    val tbl = tmp("ckpt")
+    val tbl = tmp("ckpt") + "/tbl"
     Versioned.overwrite(df(1L -> "a", 2L -> "b", 3L -> "c"), tbl)
     Versioned.deleteWhereMoR(spark, tbl, col("id") === 2L)
     Versioned.checkpoint(spark, tbl)
@@ -120,7 +117,7 @@ class VersionedMorSpec extends SparkTestBase {
   }
 
   test("streaming: append-only refuses a MoR delete; CDF streams it") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mor_src").toString
+    val base = tmp("src")
     val tbl = s"$base/tbl"
     Versioned.append(df(1L -> "a", 2L -> "b"), tbl)
     Versioned.deleteWhereMoR(spark, tbl, col("id") === 1L)
@@ -144,7 +141,7 @@ class VersionedMorSpec extends SparkTestBase {
   }
 
   test("MoR upsert tombstones matched rows and appends updates in one commit") {
-    val tbl = tmp("ups")
+    val tbl = tmp("ups") + "/tbl"
     Versioned.overwrite(df((1L to 6L).map(i => (i, s"v$i")): _*).coalesce(2), tbl)
     val dirsBefore = dataDirs(tbl)
     val c = Versioned.upsertMoR(spark, tbl,
@@ -173,7 +170,7 @@ class VersionedMorSpec extends SparkTestBase {
   }
 
   test("vacuum reclaims orphan dv dirs; retention keeps in-force dvs") {
-    val tbl = tmp("vac")
+    val tbl = tmp("vac") + "/tbl"
     Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl)
     Versioned.deleteWhereMoR(spark, tbl, col("id") === 1L)
     // fake a crashed MoR writer: an unreferenced dv dir

@@ -9,9 +9,6 @@ import graft.ingest.{Fingerprint, Versioned}
 class VersionedOpsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_vops_$name").toString
-
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
 
   private def certified(tbl: String, v: Long, cols: Seq[String]): Boolean = {

@@ -13,13 +13,10 @@ import graft.ingest.Versioned
 class VersionedProtocolSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_proto_$name").toString + "/tbl"
-
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
 
   test("commit timestamps are strictly increasing and archived in history") {
-    val tbl = tmp("mono")
+    val tbl = tmp("mono") + "/tbl"
     (1 to 4).foreach(i => Versioned.append(df(i.toLong -> s"r$i"), tbl))
     val ts = Versioned.history(spark, tbl).orderBy("version")
       .select("ts").collect().map(_.getLong(0)).toSeq
@@ -29,7 +26,7 @@ class VersionedProtocolSpec extends SparkTestBase {
   }
 
   test("TIMESTAMP AS OF resolves to the greatest version at or before the moment") {
-    val tbl = tmp("asof")
+    val tbl = tmp("asof") + "/tbl"
     Versioned.append(df(1L -> "a"), tbl)
     Versioned.append(df(2L -> "b"), tbl)
     Versioned.deleteWhere(spark, tbl, col("id") === 1L)
@@ -49,7 +46,7 @@ class VersionedProtocolSpec extends SparkTestBase {
   }
 
   test("features are stamped from record content; plain appends carry none") {
-    val tbl = tmp("stamp")
+    val tbl = tmp("stamp") + "/tbl"
     Versioned.append(df(1L -> "a", 2L -> "b"), tbl)
     Versioned.deleteWhereMoR(spark, tbl, col("id") === 1L)
     Versioned.renameColumn(spark, tbl, "t", "txt")
@@ -60,7 +57,7 @@ class VersionedProtocolSpec extends SparkTestBase {
   }
 
   test("an unknown reader feature refuses the whole log loudly") {
-    val tbl = tmp("future")
+    val tbl = tmp("future") + "/tbl"
     Versioned.append(df(1L -> "a"), tbl)
     // hand-craft v2 claiming a feature from the future
     val log = new java.io.File(s"$tbl/_graft_log")
@@ -88,7 +85,7 @@ class VersionedProtocolSpec extends SparkTestBase {
   }
 
   test("supported features round-trip: a DV+colmap table reads fine") {
-    val tbl = tmp("ok")
+    val tbl = tmp("ok") + "/tbl"
     Versioned.append(df(1L -> "a", 2L -> "b", 3L -> "c"), tbl)
     Versioned.deleteWhereMoR(spark, tbl, col("id") === 2L)
     Versioned.renameColumn(spark, tbl, "t", "txt")
@@ -97,7 +94,7 @@ class VersionedProtocolSpec extends SparkTestBase {
   }
 
   test("checkpoints carry the feature union and refuse unknown ones") {
-    val tbl = tmp("ckpt")
+    val tbl = tmp("ckpt") + "/tbl"
     Versioned.append(df(1L -> "a", 2L -> "b"), tbl)
     Versioned.deleteWhereMoR(spark, tbl, col("id") === 1L)
     val v = Versioned.checkpoint(spark, tbl)
@@ -129,7 +126,7 @@ class VersionedProtocolSpec extends SparkTestBase {
   }
 
   test("age-based vacuum retains the trailing window and always the head") {
-    val tbl = tmp("age")
+    val tbl = tmp("age") + "/tbl"
     Versioned.overwrite(df(1L -> "a").coalesce(1), tbl)   // v1
     Versioned.append(df(2L -> "b").coalesce(1), tbl)      // v2
     Versioned.overwrite(df(9L -> "z").coalesce(1), tbl)   // v3: v1/v2 files dead
@@ -145,7 +142,7 @@ class VersionedProtocolSpec extends SparkTestBase {
   }
 
   test("age-based vacuum refuses legacy unstamped records below the horizon") {
-    val tbl = tmp("agelegacy")
+    val tbl = tmp("agelegacy") + "/tbl"
     Versioned.overwrite(df(1L -> "a").coalesce(1), tbl)
     Versioned.overwrite(df(2L -> "b").coalesce(1), tbl)
     val log = new java.io.File(s"$tbl/_graft_log")
@@ -164,7 +161,7 @@ class VersionedProtocolSpec extends SparkTestBase {
   }
 
   test("registerViewAsOfTimestamp serves SQL TIMESTAMP AS OF") {
-    val tbl = tmp("sqlts")
+    val tbl = tmp("sqlts") + "/tbl"
     Versioned.append(df(1L -> "a"), tbl)
     Versioned.append(df(2L -> "b"), tbl)
     val t1 = Versioned.commitTimestamp(spark, tbl, 1L)
@@ -174,7 +171,7 @@ class VersionedProtocolSpec extends SparkTestBase {
   }
 
   test("a legacy unstamped record refuses TIMESTAMP travel, not version travel") {
-    val tbl = tmp("legacy")
+    val tbl = tmp("legacy") + "/tbl"
     Versioned.append(df(1L -> "a"), tbl)
     // strip the timestamp, simulating a pre-timestamp record
     val log = new java.io.File(s"$tbl/_graft_log")

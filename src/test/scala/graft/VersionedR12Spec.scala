@@ -14,9 +14,6 @@ import graft.ingest.Versioned._
 class VersionedR12Spec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_r12_$name").toString
-
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
 
   private def certified(tbl: String, v: Long): Boolean = {

@@ -15,9 +15,6 @@ import graft.ingest.{Fingerprint, Versioned}
 class VersionedR14Spec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_r14_$name").toString
-
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
 
   private def certified(tbl: String, v: Long): Boolean = {

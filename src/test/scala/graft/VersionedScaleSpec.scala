@@ -26,7 +26,7 @@ class VersionedScaleSpec extends SparkTestBase {
   private val Records = 10
 
   test("head-state fold at 100k active files stays in budget, ckpt-accelerated") {
-    val tbl = java.nio.file.Files.createTempDirectory("graft_scale").toString + "/t"
+    val tbl = tmp("scale") + "/t"
     Versioned.overwrite(Seq((1L, "a")).toDF("id", "t").coalesce(1), tbl)
     val log = new java.io.File(tbl, "_graft_log")
     val m = new ObjectMapper()

@@ -18,9 +18,6 @@ import graft.ingest.Versioned
 class VersionedSkipSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_skip_$name").toString
-
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   /** Five commits of ten rows each, disjoint one-day timestamp ranges

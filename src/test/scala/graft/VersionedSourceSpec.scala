@@ -15,9 +15,6 @@ class VersionedSourceSpec extends SparkTestBase {
 
   private val Fmt = "graft.sources.VersionedSource"
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_vsrc_$name").toString
-
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
 
   private def runOnce(tbl: String, ckpt: String, out: String,
@@ -55,6 +52,11 @@ class VersionedSourceSpec extends SparkTestBase {
     (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
+  /** The change-feed windows materialized under a consumer checkpoint. */
+  private def cdfWindows(ckpt: String): Seq[String] =
+    Option(new java.io.File(s"$ckpt/sources/0").list()).toSeq.flatten
+      .filter(_.startsWith("cdf-")).sorted
+
   test("change-feed stream tails only new versions per run; the checkpoint resumes it") {
     val base = tmp("tail")
     val tbl = s"$base/tbl"
@@ -65,8 +67,11 @@ class VersionedSourceSpec extends SparkTestBase {
     runFeed(tbl, ckpt, maxVersions = 1)((b, _) => seen :+= window(b))
     assert(seen == Vector((2L, 1L, 1L), (1L, 2L, 2L)), seen)
     assert(committedOffset(ckpt).contains("2"))
+    // the committed window (0, 1] is reclaimed; only the newest stays
+    assert(cdfWindows(ckpt) == Seq("cdf-1-2"), cdfWindows(ckpt))
     // caught up: no batch fires
     runFeed(tbl, ckpt)((_, _) => fail("no new versions — must not fire"))
+    assert(cdfWindows(ckpt) == Seq("cdf-1-2"), cdfWindows(ckpt))
     // new commits resume from the checkpoint, not from zero
     Versioned.upsert(spark, tbl, df(1L -> "A"), Seq("id"))  // v3
     seen = Vector.empty
@@ -74,6 +79,7 @@ class VersionedSourceSpec extends SparkTestBase {
     // the upsert window carries the delete+insert pair for id=1
     assert(seen == Vector((2L, 3L, 3L)), seen)
     assert(committedOffset(ckpt).contains("3"))
+    assert(cdfWindows(ckpt) == Seq("cdf-2-3"), cdfWindows(ckpt))
   }
 
   test("a failed change-feed batch does not advance the offset; a restart re-delivers it") {
@@ -168,6 +174,7 @@ class VersionedSourceSpec extends SparkTestBase {
       Seq(1L, "a", "insert", 1L), Seq(2L, "b", "insert", 1L),
       Seq(1L, "a", "delete", 2L), Seq(1L, "A", "insert", 2L),
       Seq(2L, "b", "delete", 3L)))
+    assert(cdfWindows(s"$base/ckpt") == Seq("cdf-0-3"), cdfWindows(s"$base/ckpt"))
   }
 
   test("mid-stream schema evolution fails loudly instead of widening") {

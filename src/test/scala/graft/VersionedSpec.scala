@@ -9,13 +9,10 @@ import graft.ingest.{Fingerprint, Versioned}
 class VersionedSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_versioned").toString + "/tbl"
-
   private def df(rows: (Long, String)*) = rows.toDF("id", "t")
 
   test("overwrite + appends replay to each version; head read sees all") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     val c1 = Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl)
     val c2 = Versioned.append(df(3L -> "c"), tbl)
     val c3 = Versioned.append(df(4L -> "d", 5L -> "e"), tbl)
@@ -34,7 +31,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("archived snapshot fingerprints certify every readAsOf replay") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl)
     Versioned.append(df(3L -> "c"), tbl)
     Versioned.overwrite(df(7L -> "q", 8L -> "r"), tbl)
@@ -55,7 +52,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("append schema drift is refused loudly") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df(1L -> "a"), tbl)
     val bad = Seq((1L, 2.5)).toDF("id", "t") // t: string -> double
     val e = intercept[IllegalStateException](Versioned.append(bad, tbl))
@@ -64,7 +61,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("two concurrent appends both land; versions serialize") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df(0L -> "seed"), tbl)
     val pool = Executors.newFixedThreadPool(2)
     val gate = new CountDownLatch(1)
@@ -98,7 +95,7 @@ class VersionedSpec extends SparkTestBase {
   test("a claimed version file can never be claimed again") {
     // direct protocol check: 16 threads race 4 commits each — every
     // version number is won exactly once and the log is gapless
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df(0L -> "seed"), tbl)
     val pool = Executors.newFixedThreadPool(8)
     try {
@@ -119,7 +116,7 @@ class VersionedSpec extends SparkTestBase {
     * fresh data dir, and a `build` that appends the staged files on top
     * of any head. */
   private def staged(rows: (Long, String)*) = {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     val head = Some(Versioned.overwrite(df(1L -> "a"), tbl))
     val log = graft.ingest.TableLog(spark, tbl)
     val fs = log.fs
@@ -185,7 +182,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("vacuum removes only unreferenced (crashed-writer) data dirs") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df(1L -> "a"), tbl)
     Versioned.append(df(2L -> "b"), tbl)
     // simulate a crash: data staged, claim never made
@@ -198,7 +195,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("log checkpoints compact replay without changing any read") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl)
     Versioned.append(df(3L -> "c"), tbl)
     val before = (1L to 2L).map(v => rowSet(Versioned.readAsOf(spark, tbl, v)))
@@ -216,11 +213,11 @@ class VersionedSpec extends SparkTestBase {
     assert(rowSet(Versioned.read(spark, tbl)) == Set(Seq(9L, "z")))
     assert(rowSet(Versioned.readAsOf(spark, tbl, 3)).size == 4)
     // checkpointing an empty table is a no-op
-    assert(Versioned.checkpoint(spark, tmp()) == 0L)
+    assert(Versioned.checkpoint(spark, tmp("tbl") + "/tbl") == 0L)
   }
 
   test("copy-on-write delete rewrites ONLY the affected files") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     val c1 = Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl) // dir A
     val c2 = Versioned.append(df(7L -> "x", 8L -> "y"), tbl)    // dir B
     val c3 = Versioned.deleteWhere(spark, tbl, col("id") === 7L).get
@@ -244,7 +241,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("upsert replaces matched keys, inserts the rest, prunes untouched files") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     val c1 = Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl)
     val c2 = Versioned.append(df(3L -> "c"), tbl)
     val up = df(3L -> "C2", 9L -> "new")
@@ -270,7 +267,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("rewrites racing other commits never corrupt the table") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df((1L to 8L).map(i => (i, s"v$i")): _*), tbl)
     val pool = Executors.newFixedThreadPool(2)
     try {
@@ -298,7 +295,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("change feed: appends insert, updates pair up, carried-over rows cancel") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl)          // v1
     Versioned.append(df(3L -> "c"), tbl)                        // v2
     Versioned.upsert(spark, tbl, df(2L -> "B2"), Seq("id"))     // v3
@@ -322,7 +319,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("idempotent txn appends: a re-delivered batch is absorbed") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     assert(Versioned.idempotentAppend(df(1L -> "a"), tbl, "app", 0L).isDefined)
     assert(Versioned.idempotentAppend(df(1L -> "a"), tbl, "app", 0L).isEmpty)
     // a different batch id, and a different app with the same id, land
@@ -333,7 +330,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("streaming sink survives a full re-delivery exactly once") {
-    val base = java.nio.file.Files.createTempDirectory("graft_vstream").toString
+    val base = tmp("vstream")
     val tbl = s"$base/tbl"
     (1 to 3).foreach { i =>
       java.nio.file.Files.writeString(
@@ -352,7 +349,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("zone-map skipping: excluded files never open; results match the full scan") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     def band(rows: (Long, String)*) = rows.toDF("id", "t").coalesce(1)
     Versioned.overwrite(band(1L -> "a", 5L -> "b"), tbl)      // ids [1, 5]
     Versioned.append(band(10L -> "c", 19L -> "d"), tbl)       // ids [10, 19]
@@ -375,7 +372,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("schema evolution: new columns land, old rows read null, certification holds") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df(1L -> "a", 2L -> "b"), tbl)
     val wide = Seq((3L, "c", 30L), (4L, "d", 40L)).toDF("id", "t", "extra")
     val c2 = Versioned.appendEvolve(wide, tbl)
@@ -406,7 +403,7 @@ class VersionedSpec extends SparkTestBase {
   }
 
   test("empty-table edge: overwrite with zero rows is a real version") {
-    val tbl = tmp()
+    val tbl = tmp("tbl") + "/tbl"
     Versioned.overwrite(df(1L -> "a"), tbl)
     Versioned.overwrite(df().filter(lit(false)), tbl)
     assert(Versioned.read(spark, tbl).count() == 0)
